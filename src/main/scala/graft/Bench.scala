@@ -2,6 +2,17 @@ package graft
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
 object Bench {
+  /** SPARK_GRAFT_BENCH_FORCE: unset or `1` drives every output row, `0`
+    * drives `count()`. Anything else fails before a session starts — a
+    * typo must not silently pick the measurement semantics.
+    */
+  def rowDrive(v: Option[String]): Boolean = v match {
+    case None | Some("1") => true
+    case Some("0") => false
+    case Some(other) => throw new IllegalArgumentException(
+      s"SPARK_GRAFT_BENCH_FORCE must be 0 or 1, got '$other'")
+  }
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
@@ -12,6 +23,7 @@ object Bench {
     // two runs bounds host-noise outliers and excludes one-time
     // codegen/JIT/cache-fill cost.
     val runs = sys.env.getOrElse("SPARK_GRAFT_BENCH_RUNS", "2").toInt.max(1)
+    val force = rowDrive(sys.env.get("SPARK_GRAFT_BENCH_FORCE"))
     val spark = SparkSession.builder()
       .master(s"local[$cpus]")
       .config("spark.sql.shuffle.partitions", cpus)
@@ -85,8 +97,8 @@ object Bench {
     // deliberate measurement-semantics break, re-baselined at every armed
     // scale in the same commit (OPTIMIZATION_r13.md records both old- and
     // new-semantics totals on the same host). SPARK_GRAFT_BENCH_FORCE=0
-    // restores the old count() drive for cross-round comparison.
-    val force = !sys.env.get("SPARK_GRAFT_BENCH_FORCE").contains("0")
+    // restores the old count() drive for cross-round comparison (parsed
+    // at start-up by [[rowDrive]]).
     def drive(df: org.apache.spark.sql.DataFrame): Unit =
       if (force) df.queryExecution.toRdd.foreachPartition { it =>
         while (it.hasNext) it.next()

@@ -146,29 +146,10 @@ class ShardpackCatalog extends TableCatalog with FunctionCatalog with ProcedureC
         // sidecar-first (one read covers counts AND envelopes); footer
         // probes only for shards the index misses — same policy as scans
         val idx = ShardpackIndex.load(fs, dir).getOrElse(Map.empty)
-        var records = 0L
-        var lo: String = null
-        var hi: String = null
-        shards.foreach { st =>
-          val (n, range) = idx.get(st.getPath.getName)
-            .filter(_.len == st.getLen)
-            .map(e => (e.nRecords, e.range))
-            .getOrElse {
-              val in = fs.open(st.getPath)
-              val footer =
-                try ShardpackFormat.readFooter(st.getLen, (pos, k) => {
-                  val b = new Array[Byte](k); in.readFully(pos, b); b
-                })
-                finally in.close()
-              (footer.offsets.length.toLong,
-                ShardpackFormat.ShardStats.unwrap(footer.shardMetadata)._1)
-            }
-          records += n
-          range.foreach { case (mn, mx) =>
-            if (lo == null || ShardpackFormat.KeyOrd.lt(mn, lo)) lo = mn
-            if (hi == null || ShardpackFormat.KeyOrd.gt(mx, hi)) hi = mx
-          }
-        }
+        val entries = ShardpackIndex.resolve(fs, idx, shards)
+        val ranges = entries.flatMap(_.range)
+        val lo = ranges.map(_._1).minOption(ShardpackFormat.KeyOrd).orNull
+        val hi = ranges.map(_._2).maxOption(ShardpackFormat.KeyOrd).orNull
         oneRowScan(
           StructType(Seq(
             StructField("n_shards", IntegerType),
@@ -177,7 +158,7 @@ class ShardpackCatalog extends TableCatalog with FunctionCatalog with ProcedureC
             StructField("min_key", StringType),
             StructField("max_key", StringType),
             StructField("indexed", BooleanType))),
-          Array(shards.size, records, shards.map(_.getLen).sum,
+          Array(shards.size, entries.map(_.nRecords).sum, shards.map(_.getLen).sum,
             if (lo == null) null else org.apache.spark.unsafe.types.UTF8String.fromString(lo),
             if (hi == null) null else org.apache.spark.unsafe.types.UTF8String.fromString(hi),
             idx.nonEmpty))

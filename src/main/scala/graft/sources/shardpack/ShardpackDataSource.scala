@@ -537,10 +537,7 @@ final class ShardpackScan(paths: Seq[String], required: StructType,
     * the broadcast side.
     */
   override def estimateStatistics(): org.apache.spark.sql.connector.read.Statistics = {
-    val totalBytes = paths.map { p =>
-      val dir = new Path(p)
-      listShards(dir.getFileSystem(HadoopConfs.session()), dir).map(_.getLen).sum
-    }.sum
+    val totalBytes = shardList.map(_.getLen).sum
     new org.apache.spark.sql.connector.read.Statistics {
       override def sizeInBytes(): java.util.OptionalLong =
         java.util.OptionalLong.of(effectiveKeys match {
@@ -564,8 +561,8 @@ final class ShardpackScan(paths: Seq[String], required: StructType,
     s"shardpack ${paths.mkString(",")} keys=${effectiveKeys.fold("*")(_.mkString(","))} " +
       s"cols=${required.fieldNames.mkString(",")}${limit.fold("")(l => s" limit=$l")}"
 
-  // one listing (across all paths) shared by planInputPartitions +
-  // outputPartitioning
+  // one listing (across all paths) shared by estimateStatistics,
+  // planInputPartitions and outputPartitioning
   private lazy val shardList: Seq[org.apache.hadoop.fs.FileStatus] =
     paths.flatMap { p =>
       val dir = new Path(p)
@@ -1238,9 +1235,13 @@ final class ShardpackRewriteScanBuilder(paths: Seq[String],
 /** Write side of a row-level command: the normal append write (staged
   * temps, checked renames, distribution/ordering preserved for bucketed
   * tables), plus — after the new generation is visible — deletion of the
-  * replaced shards and sidecar invalidation. Same crash-safe order as
-  * [[ShardpackOps.deleteKeys]]: a crash mid-commit leaves transient
-  * duplicates (old + new visible), never a window with neither.
+  * replaced shards and [[ShardpackIndex.carry]]: an indexed table stays
+  * indexed (replacement shards probed in, replaced ones dropped), so the
+  * next keyed read still plans one shard. The pre-swap listing is taken
+  * when the job starts, before any task can publish a shard. Same
+  * crash-safe order as [[ShardpackOps.deleteKeys]]: a crash mid-commit
+  * leaves transient duplicates (old + new visible), never a window with
+  * neither.
   */
 final class ShardpackReplaceWrite(base: Write, path: String,
     replaced: () => Set[String]) extends Write
@@ -1255,15 +1256,18 @@ final class ShardpackReplaceWrite(base: Write, path: String,
 
   override def toBatch: BatchWrite = {
     val inner = base.toBatch
+    val dir = new Path(path)
+    val fs = dir.getFileSystem(HadoopConfs.session())
     new BatchWrite {
-      override def createBatchWriterFactory(info: PhysicalWriteInfo): DataWriterFactory =
+      @volatile private var listed = Set.empty[String]
+      override def createBatchWriterFactory(info: PhysicalWriteInfo): DataWriterFactory = {
+        listed = ShardpackDataSource.listShards(fs, dir).map(_.getPath.getName).toSet
         inner.createBatchWriterFactory(info)
+      }
       override def commit(messages: Array[WriterCommitMessage]): Unit = {
         inner.commit(messages) // replacement shards renamed IN first
-        val dir = new Path(path)
-        val fs = dir.getFileSystem(HadoopConfs.session())
         replaced().foreach(f => fs.delete(new Path(f), false))
-        ShardpackIndex.invalidate(fs, dir) // sidecar is per-generation
+        ShardpackIndex.carry(fs, dir, listed)
       }
       override def abort(messages: Array[WriterCommitMessage]): Unit =
         inner.abort(messages)

@@ -28,9 +28,15 @@ import org.apache.spark.sql.SparkSession
   * Staleness is SAFE by construction: an entry is honored only if a shard
   * with the same (name, length) is present in the fresh directory listing.
   * New/changed/vanished shards simply miss the index and are handled
-  * conservatively (included in scans, footer-probed by ops). Mutating ops
-  * drop the sidecar after their generation swap; rebuilding is an explicit
-  * maintenance step, like the reference's index build.
+  * conservatively (included in scans, footer-probed by ops). Building is an
+  * explicit maintenance step, like the reference's index build; after
+  * that, every generation swap (the rewrites in [[ShardpackOps]] and SQL
+  * UPDATE/DELETE/MERGE) CARRIES the inline sidecar to the new generation
+  * ([[carry]]): retired shards' entries go, the swap's own new shards are
+  * footer-probed in, so keyed access stays one-shard after an upsert.
+  * Carrying never creates a sidecar, never indexes a shard some other
+  * writer appended, and drops a partitioned root instead; truncate drops
+  * the sidecar too ([[invalidate]]).
   */
 object ShardpackIndex {
 
@@ -131,6 +137,25 @@ object ShardpackIndex {
       throw new java.io.IOException(s"shardpack index publish failed: $tmp -> $dst")
   }
 
+  /** Footer probe of one shard: its envelope and record count. */
+  private def probeEntry(fs: FileSystem, path: Path, len: Long): Entry = {
+    val in = fs.open(path)
+    val footer =
+      try ShardpackFormat.readFooter(len, (pos, n) => {
+        val b = new Array[Byte](n); in.readFully(pos, b); b
+      })
+      finally in.close()
+    Entry(path.getName, len, ShardpackFormat.ShardStats.unwrap(footer.shardMetadata)._1,
+      footer.offsets.length.toLong)
+  }
+
+  /** One inline sidecar file holding `entries`, name-sorted. */
+  private def publishInline(fs: FileSystem, dirPath: Path, entries: Seq[Entry]): Unit = {
+    val bos = new ByteArrayOutputStream()
+    writeEntries(new DataOutputStream(bos), entries.sortBy(_.name))
+    atomicPublish(fs, dirPath, bos.toByteArray)
+  }
+
   /** Build (or rebuild) the sidecar with distributed footer reads.
     * Returns the number of shards indexed. ≤ [[PartTarget]] shards: one
     * inline file (driver collects the bounded entry list). Above it: the
@@ -150,24 +175,12 @@ object ShardpackIndex {
       .parallelize(shards, math.max(1, math.min(shards.size, 64)))
       .map { case (p, len) =>
         val path = new Path(p)
-        val f = path.getFileSystem(hconf.value)
-        val in = f.open(path)
-        val footer =
-          try ShardpackFormat.readFooter(len, (pos, n) => {
-            val b = new Array[Byte](n); in.readFully(pos, b); b
-          })
-          finally in.close()
-        Entry(path.getName, len,
-          ShardpackFormat.ShardStats.unwrap(footer.shardMetadata)._1,
-          footer.offsets.length.toLong)
+        probeEntry(path.getFileSystem(hconf.value), path, len)
       }
     if (shards.size <= PartTarget) {
-      val sorted =
-        (if (shards.isEmpty) Array.empty[Entry] else entryRdd.collect()).sortBy(_.name)
-      val bos = new ByteArrayOutputStream()
-      writeEntries(new DataOutputStream(bos), sorted.toSeq)
-      atomicPublish(fs, dirPath, bos.toByteArray)
-      sorted.length
+      val entries = if (shards.isEmpty) Array.empty[Entry] else entryRdd.collect()
+      publishInline(fs, dirPath, entries.toSeq)
+      entries.length
     } else {
       val gen = java.util.UUID.randomUUID().toString.take(8)
       val partsDirName = s"$FileName.d-$gen"
@@ -345,30 +358,59 @@ object ShardpackIndex {
         new PartPrunedIndex(loaded, verified, touched.size)
     }
 
-  /** Drop the sidecar (mutating ops call this after a generation swap). */
+  /** Drop the sidecar. Only truncate calls this directly: it empties the
+    * bucket, so there is nothing to carry. Generation swaps go through
+    * [[carry]].
+    */
   def invalidate(fs: FileSystem, dir: Path): Unit =
     fs.delete(new Path(dir, FileName), false)
 
+  /** Carry the sidecar across a generation swap. Called once the new
+    * generation is visible and the retired shards are gone; `before` is
+    * the names of the op's pre-swap listing.
+    *
+    * An inline sidecar is re-published (atomically, like [[build]]) for
+    * the fresh listing: entries that no longer match it by (name, len)
+    * are dropped, and the shards this swap added — listed now, absent
+    * from `before` — are footer-probed in. A shard that was unindexed
+    * before the swap stays unindexed, and a bucket without a sidecar
+    * still has none: carrying never creates. A partitioned root, or an
+    * inline one the swap would grow past [[PartTarget]], is dropped (a
+    * rebuild re-partitions it), as is an unreadable one.
+    *
+    * Safe under races for the same reason appends are: readers honor an
+    * entry only on a (name, len) match against their own fresh listing,
+    * and shard names are task-unique. A concurrent writer's shard is at
+    * worst left unindexed (conservatively scanned), never hidden.
+    */
+  def carry(fs: FileSystem, dir: Path, before: Set[String]): Unit =
+    readRoot(fs, dir) match {
+      case Some(Left(entries)) =>
+        val kept = ShardpackDataSource.listShards(fs, dir).filter { st =>
+          val name = st.getPath.getName
+          entries.get(name).exists(_.len == st.getLen) || !before.contains(name)
+        }
+        if (kept.size > PartTarget) invalidate(fs, dir)
+        else publishInline(fs, dir, resolve(fs, entries, kept))
+      case _ => invalidate(fs, dir)
+    }
+
+  /** Sidecar entry per shard where one matches by (name, len), a footer
+    * probe otherwise.
+    */
+  private[shardpack] def resolve(fs: FileSystem, idx: Map[String, Entry],
+      shards: Seq[org.apache.hadoop.fs.FileStatus]): Seq[Entry] =
+    shards.map { st =>
+      idx.get(st.getPath.getName).filter(_.len == st.getLen)
+        .getOrElse(probeEntry(fs, st.getPath, st.getLen))
+    }
+
   /** Envelope per listed shard, sidecar-first: a shard matching a sidecar
     * entry by (name, len) uses the indexed range; anything else gets its
-    * footer probed directly (`probe`). The unit callers build on.
+    * footer probed directly. The unit callers build on.
     */
   def envelopes(fs: FileSystem, dir: Path,
       shards: Seq[org.apache.hadoop.fs.FileStatus])
-      : Seq[(org.apache.hadoop.fs.FileStatus, Option[(String, String)])] = {
-    val idx = load(fs, dir).getOrElse(Map.empty)
-    shards.map { st =>
-      idx.get(st.getPath.getName) match {
-        case Some(e) if e.len == st.getLen => st -> e.range
-        case _ =>
-          val in = fs.open(st.getPath)
-          val footer =
-            try ShardpackFormat.readFooter(st.getLen, (pos, n) => {
-              val b = new Array[Byte](n); in.readFully(pos, b); b
-            })
-            finally in.close()
-          st -> ShardpackFormat.ShardStats.unwrap(footer.shardMetadata)._1
-      }
-    }
-  }
+      : Seq[(org.apache.hadoop.fs.FileStatus, Option[(String, String)])] =
+    shards.zip(resolve(fs, load(fs, dir).getOrElse(Map.empty), shards).map(_.range))
 }

@@ -104,12 +104,18 @@ object ShardpackOps {
     * counts the same ranges would come from a sidecar summary built once.
     */
   /** Publish a rewritten generation over `dir`: run `write` to produce the
-    * replacement shards, make them visible, then drop `old` and invalidate
-    * the sidecar. On object-store schemes the write goes DIRECTLY into the
-    * live dir — batch writers conditional-put to final task-unique names
-    * (never clashing with live shards), so the swap performs zero
-    * per-shard copies; elsewhere it stages in a sibling dir and renames in
-    * (one metadata op per shard on a real filesystem). Both orders are
+    * replacement shards, make them visible, drop `old`, then carry the
+    * sidecar to the new generation ([[ShardpackIndex.carry]]; `listed` is
+    * the op's pre-swap listing). An indexed bucket stays indexed: the
+    * replacement shards are probed in and the retired ones leave, so keyed
+    * reads after the swap still plan only the shards a key can be in. A
+    * bucket without a sidecar still has none.
+    *
+    * On object-store schemes the write goes DIRECTLY into the live dir —
+    * batch writers conditional-put to final task-unique names (never
+    * clashing with live shards), so the swap performs zero per-shard
+    * copies; elsewhere it stages in a sibling dir and renames in (one
+    * metadata op per shard on a real filesystem). Both orders are
     * crash-safe the same way: new rows become visible before old ones
     * disappear, so a crash mid-swap leaves transient duplicates, never
     * data loss or emptiness.
@@ -120,8 +126,8 @@ object ShardpackOps {
     * [[vacuum]] reclaims the space once the grace deadline passes. Size the
     * grace to the longest query a cluster runs against the bucket.
     */
-  private def swapIn(fs: FileSystem, dir: String, old: Seq[FileStatus], tag: String,
-      graceMs: Long = 0L)(
+  private def swapIn(fs: FileSystem, dir: String, listed: Seq[FileStatus],
+      old: Seq[FileStatus], tag: String, graceMs: Long = 0L)(
       write: String => Unit): Unit = {
     val scheme = Option(new Path(dir).toUri.getScheme).getOrElse("")
     if (ShardpackDataSource.ObjectStoreSchemes.contains(scheme)) {
@@ -143,7 +149,7 @@ object ShardpackOps {
         ShardpackDataSource.readTombstones(fs, d) ++
           old.map(_.getPath.getName -> deadline))
     } else old.foreach(st => fs.delete(st.getPath, false))
-    ShardpackIndex.invalidate(fs, new Path(dir)) // sidecar is per-generation
+    ShardpackIndex.carry(fs, new Path(dir), listed.map(_.getPath.getName).toSet)
   }
 
   def deleteKeys(spark: SparkSession, dir: String, keys: Seq[String]): Unit = {
@@ -167,7 +173,7 @@ object ShardpackOps {
     // then the old drops: a crash mid-swap leaves transient duplicates,
     // never an empty bucket — the previous delete-then-rename order had an
     // unbounded data-loss window
-    swapIn(fs, dir, affected, "rewrite") { out =>
+    swapIn(fs, dir, oldShards, affected, "rewrite") { out =>
       affectedDf
         .join(broadcast(keys.toDF("key")), Seq("key"), "left_anti")
         .write.format("shardpack").mode("append").save(out)
@@ -278,12 +284,12 @@ object ShardpackOps {
       graceMs: Long = 0L): Int = {
     val fs = new Path(dir).getFileSystem(HadoopConfs.session())
     val threshold = math.max(1L, (shardCap * minFill).toLong)
-    val small = ShardpackDataSource.listShards(fs, new Path(dir))
-      .filter(_.getLen < threshold)
+    val listed = ShardpackDataSource.listShards(fs, new Path(dir))
+    val small = listed.filter(_.getLen < threshold)
     if (small.length < 2) return 0 // one small shard compacts to itself
     // target partition count so each writer task fills ~one cap-sized shard
     val parts = math.max(1, (small.map(_.getLen).sum / shardCap).toInt + 1)
-    swapIn(fs, dir, small.toSeq, "compact", graceMs) { out =>
+    swapIn(fs, dir, listed, small, "compact", graceMs) { out =>
       small.map(st => spark.read.format("shardpack").load(st.getPath.toString))
         .reduce(_ union _)
         .coalesce(parts)
@@ -352,7 +358,7 @@ object ShardpackOps {
         ShardpackFormat.KeyOrd.lt(mn, hi) => st
     }
     if (affected.isEmpty) return
-    swapIn(fs, dir, affected, "rewrite") { out =>
+    swapIn(fs, dir, oldShards, affected, "rewrite") { out =>
       affected.map(st => spark.read.format("shardpack").load(st.getPath.toString))
         .reduce(_ union _)
         .filter(col("key") < lo || col("key") >= hi)
@@ -415,7 +421,7 @@ object ShardpackOps {
           .map(st => spark.read.format("shardpack").load(st.getPath.toString))
           .reduce(_ union _)
           .join(up.select("key"), Seq("key"), "left_anti")
-        swapIn(fs, dir, affected, "merge") { out =>
+        swapIn(fs, dir, oldShards, affected, "merge") { out =>
           survivors.union(up)
             .write.format("shardpack").option("compression", compression)
             .mode("append").save(out)

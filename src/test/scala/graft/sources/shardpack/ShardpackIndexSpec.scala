@@ -9,21 +9,35 @@ import org.scalatest.funsuite.AnyFunSuite
 import graft.SparkTestBase
 
 /** Sidecar envelope index: distributed build, planning-time shard pruning,
-  * stale-safety against post-build appends, and invalidation by mutating
-  * ops.
+  * stale-safety against post-build appends, and how generation swaps carry
+  * (inline) or drop (partitioned) the sidecar.
   */
 class ShardpackIndexSpec extends AnyFunSuite with SparkTestBase {
 
   private def tmp(): String = Files.createTempDirectory("spidx").toString
 
-  private def writeDocs(dir: String, rows: (String, String)*): Unit = {
+  private def docsDf(rows: (String, String)*) = {
     import spark.implicits._
     rows.toSeq.toDF("key", "body")
       .coalesce(1)
       .select($"key", lit(null).cast("binary").as("metadata"),
         array(struct(lit("body.txt").as("file_name"), lit("text/plain").as("content_type"),
           lit("").as("encoding"), encode($"body", "UTF-8").as("data"))).as("entries"))
-      .write.format("shardpack").mode("append").save(dir)
+  }
+
+  private def writeDocs(dir: String, rows: (String, String)*): Unit =
+    docsDf(rows: _*).write.format("shardpack").mode("append").save(dir)
+
+  /** key -> (body, metadata as a string or null) of every record. */
+  private def readBack(dir: String): Map[String, (String, String)] =
+    spark.read.format("shardpack").load(dir)
+      .select(col("key"), col("entries").getItem(0).getField("data").cast("string"),
+        col("metadata").cast("string"))
+      .collect().map(r => r.getString(0) -> ((r.getString(1), r.getString(2)))).toMap
+
+  private def shardNames(dir: String): Set[String] = {
+    val fs = new Path(dir).getFileSystem(HadoopConfs.session())
+    ShardpackDataSource.listShards(fs, new Path(dir)).map(_.getPath.getName).toSet
   }
 
   private def lookupParts(dir: String, key: String): Int = {
@@ -217,24 +231,106 @@ class ShardpackIndexSpec extends AnyFunSuite with SparkTestBase {
       .select(col("entries").getItem(0).getField("data").cast("string"))
       .collect().map(_.getString(0))
     assert(hit.toSeq == Seq("body-7"))
+
+    // a generation swap does not carry a partitioned root: it is dropped
+    ShardpackOps.deleteKeys(spark, dir, Seq(probe))
+    assert(!fs.exists(new Path(dirPath, ShardpackIndex.FileName)),
+      "a swap must drop a partitioned root")
+    assert(ShardpackIndex.load(fs, dirPath).isEmpty)
+    assert(spark.read.format("shardpack").load(dir).filter(col("key") === probe).isEmpty)
   }
 
-  test("mutating ops drop the sidecar; envelopes() falls back to footer probes") {
-    val dir = tmp() + "/inval"
+  test("generation swaps carry the sidecar: every op keeps keyed lookups on one shard") {
+    val root = tmp()
+    spark.conf.set("spark.sql.catalog.spkidx", classOf[ShardpackCatalog].getName)
+    spark.conf.set("spark.sql.catalog.spkidx.root", root)
+    spark.sql(
+      """CREATE TABLE spkidx.carried (
+        |  key STRING NOT NULL, metadata BINARY,
+        |  entries ARRAY<STRUCT<file_name: STRING, content_type: STRING,
+        |                       encoding: STRING, data: BINARY>> NOT NULL)
+        |USING shardpack""".stripMargin)
+    val dir = s"$root/carried"
+    val fs = new Path(dir).getFileSystem(HadoopConfs.session())
+    // four shards with disjoint envelopes
+    Seq(Seq("a1", "a2"), Seq("g1", "g2"), Seq("m1", "m2"), Seq("z1", "z2")).foreach { ks =>
+      writeDocs(dir, ks.map(k => k -> s"body-$k"): _*)
+    }
+    ShardpackIndex.build(spark, dir)
+    var expected = readBack(dir)
+    assert(expected.size == 8 && lookupParts(dir, "m1") == 1)
+
+    def swap(op: String, survivor: String)(run: => Unit)(
+        edit: Map[String, (String, String)] => Map[String, (String, String)]): Unit = {
+      val before = shardNames(dir)
+      run
+      val listed = ShardpackDataSource.listShards(fs, new Path(dir))
+      val retired = before -- listed.map(_.getPath.getName)
+      assert(retired.nonEmpty, s"$op retired no shard")
+      val idx = ShardpackIndex.load(fs, new Path(dir))
+        .getOrElse(fail(s"$op dropped the sidecar"))
+      listed.foreach { st =>
+        assert(idx.get(st.getPath.getName).exists(_.len == st.getLen),
+          s"$op left ${st.getPath.getName} without a valid entry")
+      }
+      assert(retired.forall(n => !idx.contains(n)), s"$op kept entries for $retired")
+      assert(lookupParts(dir, survivor) == 1, s"after $op, lookup of $survivor")
+      expected = edit(expected)
+      assert(readBack(dir) == expected, s"rows after $op")
+    }
+
+    swap("deleteKeys", "a2")(ShardpackOps.deleteKeys(spark, dir, Seq("a1")))(_ - "a1")
+    swap("deleteRange", "g2")(ShardpackOps.deleteRange(spark, dir, "g0", "g2"))(_ - "g1")
+    swap("merge", "m1")(ShardpackOps.merge(spark, dir, docsDf("m1" -> "new-m1")))(
+      _ + ("m1" -> (("new-m1", null))))
+    swap("UPDATE", "z1")(spark.sql(
+      "UPDATE spkidx.carried SET metadata = CAST('u' AS BINARY) WHERE key = 'z1'"))(
+      _ + ("z1" -> (("body-z1", "u"))))
+    swap("compact", "z2")(assert(ShardpackOps.compact(spark, dir) > 1))(identity)
+    spark.sql("DROP TABLE spkidx.carried")
+  }
+
+  test("a swap on a bucket without a sidecar leaves none; envelopes() probes footers") {
+    val dir = tmp() + "/noidx"
     writeDocs(dir, ("a1", "one"), ("a2", "two"))
     writeDocs(dir, ("z1", "three"))
-    ShardpackIndex.build(spark, dir)
     val fs = new Path(dir).getFileSystem(HadoopConfs.session())
     ShardpackOps.deleteKeys(spark, dir, Seq("a1"))
     assert(ShardpackIndex.load(fs, new Path(dir)).isEmpty,
-      "deleteKeys must invalidate the per-generation sidecar")
+      "a swap must carry a sidecar, never create one")
+    ShardpackOps.merge(spark, dir, docsDf("z1" -> "new"))
+    assert(ShardpackIndex.load(fs, new Path(dir)).isEmpty)
     // with no sidecar, envelopes() probes footers and still sees every shard
     val shards = ShardpackDataSource.listShards(fs, new Path(dir))
     val envs = ShardpackIndex.envelopes(fs, new Path(dir), shards)
     assert(envs.size == shards.size)
     assert(envs.forall(_._2.isDefined))
-    val left = spark.read.format("shardpack").load(dir)
-      .select("key").collect().map(_.getString(0)).sorted
-    assert(left.toSeq == Seq("a2", "z1"))
+    assert(readBack(dir).map { case (k, (b, _)) => k -> b } == Map("a2" -> "two", "z1" -> "new"))
+  }
+
+  test("a shard appended after the sidecar was carried is still scanned and found") {
+    val dir = tmp() + "/lateappend"
+    writeDocs(dir, ("a1", "one"), ("a2", "two"))
+    writeDocs(dir, ("m1", "three"))
+    ShardpackIndex.build(spark, dir)
+    ShardpackOps.deleteKeys(spark, dir, Seq("a1"))
+    val fs = new Path(dir).getFileSystem(HadoopConfs.session())
+    assert(ShardpackIndex.load(fs, new Path(dir)).isDefined)
+    val carried = shardNames(dir)
+    writeDocs(dir, ("q1", "late")) // not in the carried sidecar
+    val late = shardNames(dir) -- carried
+    def found(): Seq[String] = spark.read.format("shardpack").load(dir)
+      .filter(col("key") === "q1")
+      .select(col("entries").getItem(0).getField("data").cast("string"))
+      .collect().map(_.getString(0)).toSeq
+    assert(found() == Seq("late"))
+    // a later swap carries the sidecar but never indexes another writer's
+    // shard: the late shard stays unindexed and is still found
+    ShardpackOps.deleteKeys(spark, dir, Seq("m1"))
+    val idx = ShardpackIndex.load(fs, new Path(dir)).get
+    assert(late.nonEmpty && late.forall(n => !idx.contains(n)))
+    assert(found() == Seq("late"))
+    // the indexed a-shard is pruned, the unindexed late shard is planned
+    assert(lookupParts(dir, "q1") == 1)
   }
 }
