@@ -1,6 +1,5 @@
 package graft
-import org.apache.spark.sql.SparkSession
-import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
+import org.apache.spark.sql.DataFrame
 object Bench {
   /** SPARK_GRAFT_BENCH_FORCE: unset or `1` drives every output row, `0`
     * drives `count()`. Anything else fails before a session starts — a
@@ -13,9 +12,27 @@ object Bench {
       s"SPARK_GRAFT_BENCH_FORCE must be 0 or 1, got '$other'")
   }
 
+  /** The timed action: iterate every OUTPUT ROW
+    * (queryExecution.toRdd.foreachPartition — no driver collect, no
+    * row-format conversion). count() lets Catalyst column-prune a
+    * PROJECTED deterministic UDF column, so map-only codec queries
+    * (multimodal_*_features) benched at scan+sort cost, not delivered-row
+    * cost — what a writer downstream of the query would pay (guide §1.4's
+    * point about count() vs the noop sink). DEFAULT SINCE r13 — a
+    * deliberate measurement-semantics break, re-baselined at every armed
+    * scale in the same commit (OPTIMIZATION_r13.md records both old- and
+    * new-semantics totals on the same host). `rows = false` is the old
+    * count() drive, kept for cross-round comparison
+    * (SPARK_GRAFT_BENCH_FORCE=0, parsed at start-up by [[rowDrive]]).
+    */
+  def drive(df: DataFrame, rows: Boolean = true): Unit =
+    if (rows) df.queryExecution.toRdd.foreachPartition { it =>
+      while (it.hasNext) it.next()
+    }
+    else { df.count(); () }
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     // runs per query; the reported time is the MIN across runs. One warm +
     // one measured pass per query makes the committed number decision-grade:
     // single-shot timings on a shared host showed up to 9× phantom
@@ -24,21 +41,7 @@ object Bench {
     // codegen/JIT/cache-fill cost.
     val runs = sys.env.getOrElse("SPARK_GRAFT_BENCH_RUNS", "2").toInt.max(1)
     val force = rowDrive(sys.env.get("SPARK_GRAFT_BENCH_FORCE"))
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      // scan-split sizing for local[32] over single-file tables: the split
-      // is min(maxPartitionBytes, max(openCostInBytes, bytes/parallelism)),
-      // so the 4 MiB default open cost leaves a <128 MiB single-file scan
-      // in 1-2 partitions and every map-only kernel (the image/video codec
-      // round-trips especially) nearly serial. 128 KiB reflects local-FS
-      // open cost and spreads any >4 MiB file across the cores; on a real
-      // cluster the input arrives as many files and this knob is moot.
-      .config("spark.sql.files.openCostInBytes", "131072")
-      .config("spark.ui.enabled", "false")
-      .config(GraftSession.RecursionRowLimitKey, GraftSession.RecursionRowLimit)
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local()
     // self-provision a missing scale dir (sf1 is gitignored and regenerated
     // per session): the armed testdata-sf1 budget section must not be
     // silently skippable just because the dir is absent. Driver-owned dirs
@@ -50,22 +53,11 @@ object Bench {
       GenScale.replicate(spark, src, sfDir, reps)
     }
     // per-query shuffle-read accounting: the number the 100 TB design
-    // notes argue about, measured. Attributed per query by draining the
-    // async listener bus at each window boundary; the reported figure is
-    // the FINAL (warm) run's, matching the min-time semantics — memoized
+    // notes argue about, measured. The reported figure is the FINAL
+    // (warm) run's, matching the min-time semantics — memoized
     // intermediates (goodPairs, minhash) legitimately read cache and
     // shuffle ~0 on later invocations.
-    val shuffleBytes = new java.util.concurrent.atomic.AtomicLong(0)
-    spark.sparkContext.addSparkListener(new SparkListener {
-      override def onTaskEnd(te: SparkListenerTaskEnd): Unit = {
-        val m = te.taskMetrics
-        if (m != null) shuffleBytes.addAndGet(m.shuffleReadMetrics.totalBytesRead)
-      }
-    })
-    def drained(): Long = {
-      org.apache.spark.graftbridge.ListenerBridge.drain(spark.sparkContext)
-      shuffleBytes.get()
-    }
+    val meter = new TaskMeter(spark.sparkContext)
     // absorb session init (context launch, codegen compiler, FS client) so
     // the first timed query measures the query, not the JVM
     spark.range(1000).selectExpr("sum(id)").collect()
@@ -77,45 +69,26 @@ object Bench {
     // memo-fill ordering alone). Builds run exactly once: they are
     // idempotent cache fills, and a second run would measure the cache.
     val buildResults = SparkEntry.builds.map { case (name, f) =>
-      val s0 = drained()
-      val t0 = System.nanoTime()
-      var failed = false
-      try f(spark, sfDir) catch { case _: Throwable => failed = true }
-      val sec = (System.nanoTime() - t0) / 1e9
-      name -> ((sec, drained() - s0, failed))
+      val ((sec, failed), t) = meter.measure {
+        val t0 = System.nanoTime()
+        val failed = try { f(spark, sfDir); false } catch { case _: Throwable => true }
+        ((System.nanoTime() - t0) / 1e9, failed)
+      }
+      name -> ((sec, t.shuffleReadBytes, failed))
     }
     // registry order (not Map hash order): run-to-run and round-to-round
     // timings stay comparable per query
-    //
-    // The timed action drives each query by iterating every OUTPUT ROW
-    // (queryExecution.toRdd.foreachPartition — no driver collect, no
-    // row-format conversion): count() lets Catalyst column-prune a
-    // PROJECTED deterministic UDF column, so map-only codec queries
-    // (multimodal_*_features) benched at scan+sort cost, not delivered-row
-    // cost — what a writer downstream of the query would pay (guide §1.4's
-    // point about count() vs the noop sink). DEFAULT SINCE r13 — a
-    // deliberate measurement-semantics break, re-baselined at every armed
-    // scale in the same commit (OPTIMIZATION_r13.md records both old- and
-    // new-semantics totals on the same host). SPARK_GRAFT_BENCH_FORCE=0
-    // restores the old count() drive for cross-round comparison (parsed
-    // at start-up by [[rowDrive]]).
-    def drive(df: org.apache.spark.sql.DataFrame): Unit =
-      if (force) df.queryExecution.toRdd.foreachPartition { it =>
-        while (it.hasNext) it.next()
-      }
-      else { df.count(); () }
     val results = buildResults ++ SparkEntry.all.map { q =>
-      var lastShuffle = 0L
       var failed = false
-      val times = (1 to runs).map { _ =>
-        val s0 = drained()
-        val t0 = System.nanoTime()
-        try drive(q.fn(spark, sfDir)) catch { case _: Throwable => failed = true }
-        val sec = (System.nanoTime() - t0) / 1e9
-        lastShuffle = drained() - s0
-        sec
+      val timed = (1 to runs).map { _ =>
+        meter.measure {
+          val t0 = System.nanoTime()
+          try drive(q.fn(spark, sfDir), force)
+          catch { case _: Throwable => failed = true }
+          (System.nanoTime() - t0) / 1e9
+        }
       }
-      q.name -> ((times.min, lastShuffle, failed))
+      q.name -> ((timed.map(_._1).min, timed.last._2.shuffleReadBytes, failed))
     }
     // a throwing query is reported as "failed", never min-folded into the
     // timing map: a broken query's wall-clock is not a benchmark number

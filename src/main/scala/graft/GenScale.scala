@@ -145,12 +145,7 @@ object GenScale {
     val dst = if (args.length > 1) args(1) else "testdata-sf1"
     val replicas = if (args.length > 2) args(2).toInt
       else sys.env.getOrElse("GEN_REPLICAS", "10").toInt
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = GraftSession.local()
     try replicate(spark, src, dst, replicas)
     finally spark.stop()
     println(s"[GenScale] $src x$replicas -> $dst")

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.{FileSourceScanExec, SparkPlan}
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
 
@@ -118,14 +117,8 @@ object PlanAudit {
 
   def main(args: Array[String]): Unit = {
     val sfDir = if (args.nonEmpty) args(0) else "/root/testdata/sf0.001"
-    val spark = SparkSession.builder()
-      .master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config(GraftSession.RecursionRowLimitKey, GraftSession.RecursionRowLimit)
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    // Bench's session: the audited plans are the plans Bench runs
+    val spark = GraftSession.local()
 
     var flagged = 0
     val fps = scala.collection.mutable.LinkedHashMap.empty[String, String]

@@ -17,18 +17,21 @@ import com.fasterxml.jackson.databind.node.ObjectNode
   *    session (local[4], 4 shuffle partitions); enforced on every
   *    `sbt test`.
   *  - Bench scales (`"sf0.1"`, `"testdata-sf1"`, …) — measured by [[Bench]]
-  *    under its own session (local[32], 32 partitions), section named after
-  *    the SF dir; enforced on every bench run at an armed scale, breaches
-  *    land in the committed bench JSON as `"shuffle_over_budget"`. A scale
-  *    without a section is measured, not gated.
+  *    under [[GraftSession.local]] (local[32], 32 partitions by default),
+  *    section named after the SF dir; enforced on every bench run at an
+  *    armed scale, breaches land in the committed bench JSON as
+  *    `"shuffle_over_budget"`. A scale without a section is measured, not
+  *    gated.
   *
   * Each measurer owns its section: rerunning it with
   * `SPARK_GRAFT_REGEN_BUDGET=1` rebaselines that section only, so the two
-  * environments never cross-contaminate each other's numbers. Slack is
-  * multiplicative + additive (×1.3 + 0.3 MB): shuffle bytes for a fixed
-  * plan on fixed data are stable to a few percent (compression block
-  * boundaries, AQE coalescing), while a genuinely new exchange on these
-  * tables shows up ≥1 MB even at sf0.01.
+  * environments never cross-contaminate each other's numbers. [[Ab]]
+  * measures under Bench's session and honours the same variable, but
+  * merges only the registry and `build:*` entries it ran into the
+  * section. Slack is multiplicative + additive (×1.3 + 0.3 MB): shuffle
+  * bytes for a fixed plan on fixed data are stable to a few percent
+  * (compression block boundaries, AQE coalescing), while a genuinely new
+  * exchange on these tables shows up ≥1 MB even at sf0.01.
   */
 object ShuffleBudget {
   val DefaultPath = "SHUFFLE_BUDGET.json"
@@ -49,12 +52,28 @@ object ShuffleBudget {
     }.toMap
   }
 
-  /** Replace one scale's section, preserving the others. */
+  /** Replace one scale's section, preserving the others — the full
+    * re-arm of a measurer that ran every entry ([[Bench]], the spec).
+    */
   def saveSection(scale: String, measuredMb: Map[String, Double],
+      path: String = DefaultPath): Unit =
+    write(load(path) + (scale -> entries(measuredMb)), path)
+
+  /** Merge entries into one scale's section: the named entries are
+    * re-armed, every other entry of the section (and every other section)
+    * is kept verbatim — the partial re-arm of a measurer that ran only
+    * some entries ([[Ab]]).
+    */
+  def mergeSection(scale: String, measuredMb: Map[String, Double],
       path: String = DefaultPath): Unit = {
-    val all = load(path) + (scale -> measuredMb.map { case (k, m) =>
-      k -> ((math.round(m * 10) / 10.0, budgetFor(m)))
-    })
+    val all = load(path)
+    write(all + (scale -> (all.getOrElse(scale, Map.empty) ++ entries(measuredMb))), path)
+  }
+
+  private def entries(measuredMb: Map[String, Double]): Map[String, (Double, Double)] =
+    measuredMb.map { case (k, m) => k -> ((math.round(m * 10) / 10.0, budgetFor(m))) }
+
+  private def write(all: Map[String, Map[String, (Double, Double)]], path: String): Unit = {
     val mapper = new ObjectMapper()
     val root = mapper.createObjectNode()
     all.toSeq.sortBy(_._1).foreach { case (sc, qs) =>

@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -10,23 +9,7 @@ object Verify {
       // optional 3rd arg: comma-separated query names for fast local iteration
       case Array(s, o, names) => (s, o, Some(names.split(",").toSet))
     }
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      // scan-split sizing for local[32] over single-file tables: the split
-      // is min(maxPartitionBytes, max(openCostInBytes, bytes/parallelism)),
-      // so the 4 MiB default open cost leaves a <128 MiB single-file scan
-      // in 1-2 partitions and every map-only kernel (the image/video codec
-      // round-trips especially) nearly serial. 128 KiB reflects local-FS
-      // open cost and spreads any >4 MiB file across the cores; on a real
-      // cluster the input arrives as many files and this knob is moot.
-      .config("spark.sql.files.openCostInBytes", "131072")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config(GraftSession.RecursionRowLimitKey, GraftSession.RecursionRowLimit)
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local()
     new java.io.File(outDir).mkdirs()
     SparkEntry.queries
       .filter { case (name, _) => only.forall(_.contains(name)) }

@@ -241,9 +241,11 @@ object LlmQueries {
 
   /** LOWER bound for the band join's SHUFFLE_HASH hint: below it the
     * planner's own broadcast of the tiny band frame wins and the hint
-    * would only add two exchanges. Measured (ExpBand, noop sink, warm,
-    * this host): 40k band rows (sf0.1) — broadcast 0.84 s vs SHJ 1.67 s;
-    * 400k rows (sf1) — planner 3.39 s vs SHJ 1.78 s. The crossover sits
+    * would only add two exchanges. Measured (noop sink, warm,
+    * local[32]): 40k band rows (sf0.1) — broadcast 0.84 s vs SHJ 1.67 s;
+    * 400k rows (sf1) — planner 3.39 s vs SHJ 1.78 s; reproduce with
+    * `runMain graft.Ab <sfDir> 3 minhash_band_auto minhash_band_shj`
+    * (Ab drives rows, not a noop sink). The crossover sits
     * between; 200k (≈ 5 MB of band rows, half the broadcast threshold)
     * splits it with a bounded ~1.5–2× error either way, against the
     * unbounded SMJ sort the demoted broadcast degenerates to at scale.
@@ -340,8 +342,8 @@ object LlmQueries {
     */
   private[llm] def releaseInterCounts(s: SparkSession, d: String): Unit = {
     // slot-scoped: the family holds one frame per dir, and a multi-dir
-    // session (PairStateProbe's scale loop) must not lose sibling dirs'
-    // caches when one dir's pair children materialize
+    // session must not lose sibling dirs' caches when one dir's pair
+    // children materialize
     graft.FrameRegistry.releaseSlot(s, "inter_counts", d); ()
   }
 
@@ -972,7 +974,8 @@ object LlmQueries {
   /** Anchors probed per (band, value) bucket in `dedup_image` — buckets
     * up to this size get EXACT pairwise treatment; above it, members
     * compare against the K smallest (mdoc, h) anchors only. K = 128
-    * measured at sf1 ([[graft.ImageBandProbe]]): candidate volume
+    * measured at sf1 (by a one-off probe, `git show
+    * b281894:src/main/scala/graft/ImageBandProbe.scala`): candidate volume
     * 85.7M → 9.7M (and Σ k·min(k,K) is corpus-LINEAR where Σk² was
     * quadratic), rep changed for 2.6% of hashes — all in the degenerate
     * all-zero-band dark core, where any anchor is an equally-valid
@@ -1144,11 +1147,21 @@ object LlmQueries {
       .withColumnRenamed("pos", "band").withColumnRenamed("col", "bh")
   }
 
-  /** [[minhashPairsRaw]] exposed for the ExpBand A/B harness. */
-  private[llm] def minhashPairsRawFor(sig: DataFrame, shj: Boolean): DataFrame =
-    minhashPairsRaw(sig, shj)
+  /** Named [[graft.Ab]] variants: the band self-join behind
+    * `build:minhash_pairs` over the memoized signatures, with the
+    * planner's choice (`auto`) or the shuffled-hash dispatch forced
+    * (`shj`) — the two sides of the [[BandShjMinRows]] gate. Keep them
+    * out of an Ab call that fills `build:minhash_pairs` (or a query that
+    * reads it): the cache lookup ignores join hints, so both would then
+    * read that cached frame instead of joining.
+    */
+  private[graft] val abVariants: Seq[(String, (SparkSession, String) => DataFrame)] =
+    Seq("auto" -> false, "shj" -> true).map { case (tag, shj) =>
+      s"minhash_band_$tag" -> ((s: SparkSession, d: String) =>
+        minhashPairsRaw(minhashSig(s, d), shj))
+    }
 
-  private def minhashPairsRaw(sig: DataFrame, shj: Boolean = false): DataFrame = {
+  private[llm] def minhashPairsRaw(sig: DataFrame, shj: Boolean = false): DataFrame = {
       val numHashes = MinhashPerms
       // NARROW band join: the bucket shuffle carries only (doc_id, band,
       // bh) — 24 bytes/row — not the 32-long signature array (which
@@ -3061,8 +3074,9 @@ object LlmQueries {
     // combinable, nothing pair-shaped survives a shuffle, output is one
     // row per doc at every scale.
     //
-    // BOUNDED BUCKET PROBING (the hot-bucket guard, measured by
-    // [[graft.ImageBandProbe]]): each band row compares only against its
+    // BOUNDED BUCKET PROBING (the hot-bucket guard, measured by the
+    // one-off probe `git show b281894:src/main/scala/graft/ImageBandProbe.scala`;
+    // numbers in BASELINE.md): each band row compares only against its
     // bucket's [[ImageAnchorK]] smallest (mdoc, h) anchors. The flat
     // self-join's candidate CPU is Σ_buckets k² and the corpus's
     // degenerate buckets are ALL-ZERO band values (dark renderings:

@@ -135,8 +135,10 @@ object TextRankQueries {
   // LOSES here because [[tok]] is memoized — the three passes read the
   // in-memory token cache, while the merged shape's shared (doc,w) subtree
   // is not reused by Catalyst (no ReusedExchange: the aggregate runs twice
-  // in one plan). ExpDsir, testdata-sf1, noop sink, min of warm runs:
-  // reference 2.60 s vs flagged 3.94 s vs flagged+persisted-m0 2.87 s.
+  // in one plan). testdata-sf1, noop sink, min of warm runs: reference
+  // 2.60 s vs flagged 3.94 s vs flagged+persisted-m0 2.87 s. The flagged
+  // formulation and its harness: `git show
+  // b281894:src/main/scala/graft/llm/ExpDsir.scala`.
 
   /** The DSIR per-word log-ratio vocabulary (w, lr) — the trainable half
     * of [[dsirScoredFrame]], split out so a deployment can FREEZE it on a

@@ -566,8 +566,9 @@ object AnalyticsQueries {
       // Width dispatch (the inter_counts pairBuildPartitions pattern):
       // pair volume is Σ C(basket,2) ≈ O·b̄(b̄−1)/2 — at a FIXED session
       // width, per-task aggregate state grows linearly with the corpus
-      // (PairStateProbe measured sf10→sf30 per-task spill 3.0× on 3×
-      // data at 98 fixed tasks). Estimate the volume from two cheap
+      // (measured sf10→sf30 per-task spill 3.0× on 3× data at 98 fixed
+      // tasks; `runMain graft.Ab <sfDir> 1 basket_pairs` prints the
+      // per-task peak memory and spill). Estimate the volume from two cheap
       // table stats (one map-combined pass), scale BOTH heavy stages
       // with it: the per-order basket build and the (p1,p2) support
       // count — the second repartition sits before the pair aggregation

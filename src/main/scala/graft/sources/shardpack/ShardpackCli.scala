@@ -144,12 +144,7 @@ object ShardpackCli {
   }
 
   def main(args: Array[String]): Unit = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(sys.env.getOrElse("SPARK_GRAFT_MASTER", s"local[$cpus]"))
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.GraftSession.local(sys.env.get("SPARK_GRAFT_MASTER"))
     try run(spark, args.toSeq)
     catch {
       case e: IllegalArgumentException =>

@@ -83,12 +83,13 @@ class ShjDispatchSpec extends AnyFunSuite with SparkTestBase {
   test("minhash band join honors its dispatch flag (plan shape)") {
     val sig = LlmQueries.minhashSigOf(synthDocs(300))
     def planOf(shj: Boolean): String =
-      LlmQueries.minhashPairsRawFor(sig, shj)
+      LlmQueries.minhashPairsRaw(sig, shj)
         .queryExecution.executedPlan.toString
     assert(planOf(true).contains("ShuffledHashJoin"),
       "shj=true must plan the band self-join as shuffled-hash")
     // below BandShjMinRows the gate leaves the planner's broadcast — the
-    // measured ExpBand crossover (broadcast wins ≲200k band rows)
+    // measured crossover (broadcast wins ≲200k band rows; reproduce with
+    // `runMain graft.Ab <sfDir> 3 minhash_band_auto minhash_band_shj`)
     assert(!planOf(false).contains("ShuffledHashJoin"),
       "shj=false must leave the planner's choice (broadcast at small scale)")
   }
