@@ -142,14 +142,7 @@ class ShardpackCatalog extends TableCatalog with FunctionCatalog with ProcedureC
     "stats" -> new Proc("stats", Seq("table" -> StringType)) {
       override def call(input: InternalRow): java.util.Iterator[Scan] = {
         val dir = new Path(tableDir(input.getUTF8String(0).toString))
-        val shards = ShardpackDataSource.listShards(fs, dir)
-        // sidecar-first (one read covers counts AND envelopes); footer
-        // probes only for shards the index misses — same policy as scans
-        val idx = ShardpackIndex.load(fs, dir).getOrElse(Map.empty)
-        val entries = ShardpackIndex.resolve(fs, idx, shards)
-        val ranges = entries.flatMap(_.range)
-        val lo = ranges.map(_._1).minOption(ShardpackFormat.KeyOrd).orNull
-        val hi = ranges.map(_._2).maxOption(ShardpackFormat.KeyOrd).orNull
+        val s = ShardpackIndex.stats(fs, dir, ShardpackDataSource.listShards(fs, dir))
         oneRowScan(
           StructType(Seq(
             StructField("n_shards", IntegerType),
@@ -158,10 +151,8 @@ class ShardpackCatalog extends TableCatalog with FunctionCatalog with ProcedureC
             StructField("min_key", StringType),
             StructField("max_key", StringType),
             StructField("indexed", BooleanType))),
-          Array(shards.size, entries.map(_.nRecords).sum, shards.map(_.getLen).sum,
-            if (lo == null) null else org.apache.spark.unsafe.types.UTF8String.fromString(lo),
-            if (hi == null) null else org.apache.spark.unsafe.types.UTF8String.fromString(hi),
-            idx.nonEmpty))
+          Array(s.shards, s.records, s.bytes, s.minKey.map(UTF8String.fromString).orNull,
+            s.maxKey.map(UTF8String.fromString).orNull, s.indexed))
       }
     },
     "vacuum" -> new Proc("vacuum",

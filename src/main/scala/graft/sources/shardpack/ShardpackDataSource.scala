@@ -218,8 +218,9 @@ final class ShardpackTable(paths: Seq[String], bucketN: Option[Int])
     else if (keySets.length == meaningful.length)
       Some(Keys(keySets.reduce(_ intersect _)))
     else if (los.length == 1 && his.length == 1 &&
-        los.length + his.length == meaningful.length && los.head < his.head)
-      Some(Range(los.head, his.head))
+        los.length + his.length == meaningful.length)
+      // a range empty in Spark's string order (KeyOrd) deletes nothing
+      Some(if (KeyOrd.lt(los.head, his.head)) Range(los.head, his.head) else Keys(Set.empty))
     else None
   }
 
@@ -354,6 +355,36 @@ final case class KeyRange(lo: Option[String], loInc: Boolean,
   }
 }
 
+object KeyRange {
+  /** THE filter classifier: the filters on `key` this source can evaluate
+    * (`IsNotNull` among them — keys are never null), the key set they pin
+    * (`=`/`IN`, intersected; None = any key) and the key range they bound
+    * (`>`/`>=`/`<`/`<=`/`startsWith`, conjoined; None = unbounded). Scan
+    * builders and runtime filtering all read predicates through this.
+    */
+  def classify(filters: Array[Filter]): (Array[Filter], Option[Set[String]], Option[KeyRange]) = {
+    val pushed = filters.filter {
+      case EqualTo("key", _: String) | IsNotNull("key") | StringStartsWith("key", _) => true
+      case In("key", vs) => vs.forall(_.isInstanceOf[String])
+      case GreaterThan("key", _: String) | GreaterThanOrEqual("key", _: String) => true
+      case LessThan("key", _: String) | LessThanOrEqual("key", _: String) => true
+      case _ => false
+    }
+    val keySets = pushed.collect {
+      case EqualTo("key", v: String) => Set(v)
+      case In("key", vs) => vs.map(_.asInstanceOf[String]).toSet
+    }
+    val ranges = pushed.collect {
+      case GreaterThan("key", v: String) => KeyRange(Some(v), false, None, true, None)
+      case GreaterThanOrEqual("key", v: String) => KeyRange(Some(v), true, None, true, None)
+      case LessThan("key", v: String) => KeyRange(None, true, Some(v), false, None)
+      case LessThanOrEqual("key", v: String) => KeyRange(None, true, Some(v), true, None)
+      case StringStartsWith("key", p) => KeyRange(Some(p), true, None, true, Some(p))
+    }
+    (pushed, keySets.reduceOption(_ intersect _), ranges.reduceOption(_ and _))
+  }
+}
+
 final class ShardpackScanBuilder(paths: Seq[String], options: CaseInsensitiveStringMap,
     bucketN: Option[Int] = None)
     extends ScanBuilder with SupportsPushDownFilters with SupportsPushDownRequiredColumns
@@ -422,32 +453,11 @@ final class ShardpackScanBuilder(paths: Seq[String], options: CaseInsensitiveStr
   }
 
   override def pushFilters(filters: Array[Filter]): Array[Filter] = {
-    val (supported, residual) = filters.partition {
-      case EqualTo("key", _: String) => true
-      case In("key", vs) if vs.forall(_.isInstanceOf[String]) => true
-      case IsNotNull("key") => true
-      case GreaterThan("key", _: String) => true
-      case GreaterThanOrEqual("key", _: String) => true
-      case LessThan("key", _: String) => true
-      case LessThanOrEqual("key", _: String) => true
-      case StringStartsWith("key", _) => true
-      case _ => false
-    }
+    val (supported, keys, range) = KeyRange.classify(filters)
     pushed = supported
-    val keySets = supported.collect {
-      case EqualTo("key", v: String) => Set(v)
-      case In("key", vs) => vs.map(_.asInstanceOf[String]).toSet
-    }
-    if (keySets.nonEmpty) keyFilter = Some(keySets.reduce(_ intersect _))
-    val ranges = supported.collect {
-      case GreaterThan("key", v: String) => KeyRange(Some(v), false, None, true, None)
-      case GreaterThanOrEqual("key", v: String) => KeyRange(Some(v), true, None, true, None)
-      case LessThan("key", v: String) => KeyRange(None, true, Some(v), false, None)
-      case LessThanOrEqual("key", v: String) => KeyRange(None, true, Some(v), true, None)
-      case StringStartsWith("key", p) => KeyRange(Some(p), true, None, true, Some(p))
-    }
-    keyRange = ranges.reduceOption(_ and _)
-    residual
+    keyFilter = keys
+    keyRange = range
+    filters.filterNot(supported.contains)
   }
 
   override def pushedFilters(): Array[Filter] = pushed
@@ -507,13 +517,7 @@ final class ShardpackScan(paths: Seq[String], required: StructType,
   private[shardpack] var effectiveShards: Option[Set[String]] = None
 
   override def filter(filters: Array[Filter]): Unit = {
-    val keySets = filters.collect {
-      case In("key", vs) if vs.forall(_.isInstanceOf[String]) =>
-        vs.map(_.asInstanceOf[String]).toSet
-      case EqualTo("key", v: String) => Set(v)
-    }
-    if (keySets.nonEmpty) {
-      val runtime = keySets.reduce(_ intersect _)
+    KeyRange.classify(filters)._2.foreach { runtime =>
       effectiveKeys = Some(effectiveKeys.fold(runtime)(_ intersect runtime))
     }
     val shardSets = filters.collect {
@@ -621,14 +625,8 @@ final class ShardpackScan(paths: Seq[String], required: StructType,
       // whose key span the predicate touches — part-level EXCLUSION of
       // the untouched parts' shards is enabled only under the sidecar's
       // listing-signature proof (see ShardpackIndex.pruned).
-      def touches(span: Option[(String, String)]): Boolean = span match {
-        case scala.None => true
-        case Some((lo, hi)) =>
-          effectiveKeys.forall(_.exists(k =>
-            ShardpackFormat.KeyOrd.gteq(k, lo) &&
-              ShardpackFormat.KeyOrd.lteq(k, hi))) &&
-            keyRange.forall(_.intersects(lo, hi))
-      }
+      def touches(span: Option[(String, String)]): Boolean =
+        ShardStats.mayHold(span, effectiveKeys, keyRange)
       lazy val byDir: Map[String, ShardpackIndex.PrunedIndex] = {
         val listedByDir = shardList.groupBy(_.getPath.getParent.toString)
         paths.map { p =>
@@ -649,11 +647,7 @@ final class ShardpackScan(paths: Seq[String], required: StructType,
         else allowed.filter { st =>
           if (byDir.get(st.getPath.getParent.toString)
               .exists(_.excluded(st.getPath.getName, st.getLen))) false
-          else entryOf(st) match {
-            case Some(e) =>
-              e.range.forall { case (lo, hi) => touches(Some((lo, hi))) }
-            case None => true
-          }
+          else entryOf(st).forall(e => touches(e.range))
         }
       // Pushed LIMIT with no key predicates: schedule only the prefix of
       // shards whose cumulative INDEXED record count reaches the limit.
@@ -790,35 +784,31 @@ final case class ShardpackFooterAggReaderFactory(hconf: SerializableHadoopConf,
         if (file.isEmpty) return (0L, null, null)
         val path = new Path(file)
         val fs = path.getFileSystem(hconf.value)
-        val in = fs.open(path)
-        try {
-          val footer = ShardpackFormat.readFooter(len, (pos, k) => {
-            val b = new Array[Byte](k); in.readFully(pos, b); b
-          })
-          val n = footer.offsets.length.toLong
-          if (!kinds.exists(k => k == 'n' || k == 'x')) return (n, null, null)
-          ShardpackFormat.ShardStats.unwrap(footer.shardMetadata)._1 match {
-            case Some((lo, hi)) => (n, lo, hi)
-            case None if n == 0 => (n, null, null)
-            case None =>
-              // stats-less shard: header-only key sweep (no entry decode)
-              in.seek(0)
-              val ds = new java.io.DataInputStream(
-                new java.io.BufferedInputStream(in, 1 << 20))
+        val e = ShardpackIndex.probeEntry(fs, path, len)
+        val n = e.nRecords
+        if (!kinds.exists(k => k == 'n' || k == 'x')) return (n, null, null)
+        e.range match {
+          case Some((lo, hi)) => (n, lo, hi)
+          case None if n == 0 => (n, null, null)
+          case None =>
+            // stats-less shard: header-only key sweep (no entry decode)
+            val ds = new java.io.DataInputStream(
+              new java.io.BufferedInputStream(fs.open(path), 1 << 20))
+            try {
               var lo: String = null; var hi: String = null
               var i = 0L
               while (i < n) {
                 val recLen = ds.readInt()
                 val block = new Array[Byte](recLen)
                 ds.readFully(block)
-                val (key, _) = ShardpackFormat.decodeKeyMeta(block)
-                if (lo == null || ShardpackFormat.KeyOrd.lt(key, lo)) lo = key
-                if (hi == null || ShardpackFormat.KeyOrd.gt(key, hi)) hi = key
+                val key = ShardpackFormat.decodeKey(block)
+                if (lo == null || KeyOrd.lt(key, lo)) lo = key
+                if (hi == null || KeyOrd.gt(key, hi)) hi = key
                 i += 1
               }
               (n, lo, hi)
-          }
-        } finally in.close()
+            } finally ds.close()
+        }
       }
 
       override def next(): Boolean =
@@ -854,16 +844,16 @@ final case class ShardpackReaderFactory(required: StructType,
     entryNames: Option[Set[String]] = None,
     keyRange: Option[KeyRange] = None,
     samplePct: Option[Int] = None) extends PartitionReaderFactory {
-  private def fileOf(p: InputPartition): (String, Long, Long, Long) = p match {
-    case ShardInputPartition(f, l, rs, re) => (f, l, rs, re)
-    case BucketedShardInputPartition(f, l, _) => (f, l, 0L, -1L)
+  private def slice(p: InputPartition): ShardSlice = {
+    val (file, length, rs, re) = p match {
+      case ShardInputPartition(f, l, rs, re) => (f, l, rs, re)
+      case BucketedShardInputPartition(f, l, _) => (f, l, 0L, -1L)
+    }
+    new ShardSlice(file, length, hconf.value, keyFilter, keyRange, rs, re, samplePct)
   }
 
-  override def createReader(p: InputPartition): PartitionReader[InternalRow] = {
-    val (file, length, rs, re) = fileOf(p)
-    new ShardpackPartitionReader(file, length, required, keyFilter, verify,
-      hconf.value, entryNames, keyRange, rs, re, samplePct)
-  }
+  override def createReader(p: InputPartition): PartitionReader[InternalRow] =
+    new ShardpackPartitionReader(slice(p), required, verify, entryNames)
 
   /** Payload-free scans (no `entries` column requested — counts, metadata
     * profiles, key listings) go through the VECTORIZED path: record headers
@@ -875,78 +865,71 @@ final case class ShardpackReaderFactory(required: StructType,
     !required.fieldNames.contains("entries")
 
   override def createColumnarReader(p: InputPartition)
-      : PartitionReader[org.apache.spark.sql.vectorized.ColumnarBatch] = {
-    val (file, length, rs, re) = fileOf(p)
-    new ShardpackColumnarReader(file, length, required, keyFilter, hconf.value,
-      keyRange, rs, re, samplePct)
-  }
+      : PartitionReader[org.apache.spark.sql.vectorized.ColumnarBatch] =
+    new ShardpackColumnarReader(slice(p), required)
 }
 
-/** Reads one shard: parses the EOF index first (one seek), then streams the
-  * record region sequentially. With a pushed key filter the footer's
-  * key-range stats can prune the WHOLE shard (one footer read, zero record
-  * bytes — at 100 TB a point lookup touches ~16 bytes per non-matching
-  * shard); within a matching shard, non-matching record blocks are skipped
-  * from their length prefix — no entry decode, no decompression, no
-  * checksum work.
+/** The part of one shard a reader task reads, and everything both readers
+  * do before decoding a record. The footer (the EOF index) is read first,
+  * with one seek. With a pushed key filter or range, the footer's key
+  * envelope and Bloom can prune the WHOLE shard through
+  * [[ShardpackFormat.ShardStats.mayContain]]: one footer read, zero
+  * record bytes. At 100 TB a point lookup touches ~16 bytes per
+  * non-matching shard. A pruned shard reads as an empty slice. Otherwise
+  * the records [recStart, recEnd) stream from a 1 MiB-buffered input,
+  * opened on the first read and seeked straight to the first record via
+  * the footer offset index (O(1) random access, `docs/draft.md:124`).
+  * `keep` is the per-record test: pushed keys, pushed range and the
+  * deterministic sample. The records it rejects are skipped from their
+  * length prefix (no entry decode, decompression or checksum work) and
+  * counted in `skipped`.
   */
-final class ShardpackPartitionReader(file: String, fileLen: Long,
-    required: StructType, keyFilter: Option[Set[String]], verify: Boolean,
-    hadoopConf: Configuration = new Configuration(),
-    entryNames: Option[Set[String]] = None,
-    keyRange: Option[KeyRange] = None,
-    recStart: Long = 0L, recEnd: Long = -1L,
-    samplePct: Option[Int] = None)
-    extends PartitionReader[InternalRow] {
-
-  // deterministic in-scan sampling: keep keys whose cross-engine
-  // polynomial hash lands below the percentage — skipped records never
-  // decode payloads (same stream-skip path as a key-filter miss)
-  private val sampleKeep: String => Boolean = samplePct match {
-    case Some(pct) => k => ShardpackDataSource.keyHashPct(k) < pct
-    case None => _ => true
-  }
-
+private[shardpack] final class ShardSlice(val file: String, fileLen: Long,
+    hadoopConf: Configuration, keyFilter: Option[Set[String]],
+    keyRange: Option[KeyRange], recStart: Long, recEnd: Long,
+    samplePct: Option[Int]) {
   private val fs = new Path(file).getFileSystem(hadoopConf)
-  private val footer = {
-    val in = fs.open(new Path(file))
-    try ShardpackFormat.readFooter(fileLen, (pos, len) => {
-      val buf = new Array[Byte](len); in.readFully(pos, buf); buf
-    })
-    finally in.close()
-  }
-  // whole-shard pruning: the pushed key set / key range cannot intersect
-  // this shard's stamped [minKey, maxKey] → never open the record region
-  private val pruned: Boolean = {
-    val env = ShardpackFormat.ShardStats.unwrap(footer.shardMetadata)._1
-    val rangePruned = env.exists { case (mn, mx) =>
-      keyFilter.exists(ks => !ks.exists(k => k >= mn && k <= mx)) ||
-        keyRange.exists(r => !r.intersects(mn, mx))
-    }
-    // v3 Bloom: a point-lookup key set none of whose members might be in
-    // this shard prunes it even when the key RANGE overlaps (the
-    // hash-distributed-layout case range stats cannot help)
-    def bloomPruned = keyFilter.exists { ks =>
-      ShardpackFormat.ShardStats.unwrapBloom(footer.shardMetadata)
-        .exists(b => !ks.exists(b.mightContain))
-    }
-    rangePruned || bloomPruned
-  }
+  private val footer = ShardpackIndex.footer(fs, new Path(file), fileLen)
+  val pruned: Boolean =
+    !ShardStats.mayContain(footer.shardMetadata, keyFilter, keyRange)
 
-  private val endRec: Int =
-    if (recEnd < 0) footer.offsets.length
+  /** Ordinal of the next record; the slice ends before `end`. */
+  var idx: Int = math.min(recStart, Int.MaxValue.toLong).toInt
+  val end: Int =
+    if (pruned) 0
+    else if (recEnd < 0) footer.offsets.length
     else math.min(recEnd, footer.offsets.length.toLong).toInt
+  var skipped = 0L
 
-  private var streamOpened = false
-  private lazy val stream = {
-    streamOpened = true
+  private var opened = false
+  lazy val stream: java.io.DataInputStream = {
+    opened = true
     val raw = fs.open(new Path(file))
-    // record-range split: seek straight to the first record of this range
-    // via the footer offset index (O(1) random access, docs/draft.md:124)
     if (recStart > 0 && recStart < footer.offsets.length)
       raw.seek(footer.offsets(recStart.toInt))
     new java.io.DataInputStream(new java.io.BufferedInputStream(raw, 1 << 20))
   }
+
+  // deterministic in-scan sampling: keep keys whose cross-engine
+  // polynomial hash lands below the percentage
+  private val sampled: String => Boolean = samplePct match {
+    case Some(pct) => k => ShardpackDataSource.keyHashPct(k) < pct
+    case None => _ => true
+  }
+  val keep: String => Boolean = key =>
+    keyFilter.forall(_.contains(key)) && keyRange.forall(_.contains(key)) && sampled(key)
+
+  def metrics: Array[org.apache.spark.sql.connector.metric.CustomTaskMetric] =
+    Array(TaskMetric("shardsPruned", if (pruned) 1L else 0L),
+      TaskMetric("recordsSkipped", skipped))
+
+  def close(): Unit = if (opened) stream.close()
+}
+
+/** Row reader: decodes each kept record of its [[ShardSlice]] in full. */
+final class ShardpackPartitionReader(slice: ShardSlice, required: StructType,
+    verify: Boolean, entryNames: Option[Set[String]])
+    extends PartitionReader[InternalRow] {
 
   private val entriesField = required.fields.zipWithIndex
     .find(_._1.name == "entries")
@@ -956,34 +939,28 @@ final class ShardpackPartitionReader(file: String, fileLen: Long,
     .getOrElse(Array.empty)
   private val wantEntryData = entrySubfields.contains("data")
 
-  private var idx = math.min(recStart, Int.MaxValue.toLong).toInt
   private var current: InternalRow = _
 
-  private var skipped = 0L
-
   override def next(): Boolean = {
-    if (pruned) return false
-    while (idx < endRec) {
-      idx += 1
+    while (slice.idx < slice.end) {
+      slice.idx += 1
       // streaming decode: key-filtered misses and entryNames-filtered
       // sibling payloads are SKIPPED in the stream (buffer discard, or a
       // seek when the skip outruns the 1 MiB buffer) — never read, copied,
       // decompressed or checksummed
-      ShardpackFormat.decodeRecordStreaming(
-          stream, keyFilter, wantEntryData, verify, entryNames, keyRange,
-          sampleKeep) match {
+      ShardpackFormat.decodeRecordStreaming(slice.stream, None, wantEntryData, verify,
+          entryNames, keep = slice.keep) match {
         case Some(rec) =>
           current = toRow(rec)
           return true
-        case None => skipped += 1 // key miss — record already skipped
+        case None => slice.skipped += 1 // key miss — record already skipped
       }
     }
     false
   }
 
   override def currentMetricsValues(): Array[org.apache.spark.sql.connector.metric.CustomTaskMetric] =
-    Array(TaskMetric("shardsPruned", if (pruned) 1L else 0L),
-      TaskMetric("recordsSkipped", skipped))
+    slice.metrics
 
   private def toRow(rec: Record): InternalRow = {
     val values = required.fields.map { f =>
@@ -1000,8 +977,8 @@ final class ShardpackPartitionReader(file: String, fileLen: Long,
             }
             new GenericInternalRow(ev): Any
           }.toArray)
-        case "_shard" => UTF8String.fromString(file)
-        case "_pos" => (idx - 1).toLong: java.lang.Long
+        case "_shard" => UTF8String.fromString(slice.file)
+        case "_pos" => (slice.idx - 1).toLong: java.lang.Long
         case other => throw new IllegalArgumentException(s"unknown column $other")
       }
     }
@@ -1009,89 +986,39 @@ final class ShardpackPartitionReader(file: String, fileLen: Long,
   }
 
   override def get(): InternalRow = current
-  override def close(): Unit = if (streamOpened) stream.close()
+  override def close(): Unit = slice.close()
 }
 
 /** Vectorized reader for payload-free scans: fills OnHeap column vectors
   * with (key, metadata) straight from record-block headers — entry headers
   * and payload bytes are never parsed, decompressed or checksummed (there
   * is nothing to verify without payloads). Shard pruning and pushed key
-  * filters apply exactly as in the row reader.
+  * filters apply exactly as in the row reader: both read a [[ShardSlice]].
   */
-final class ShardpackColumnarReader(file: String, fileLen: Long,
-    required: StructType, keyFilter: Option[Set[String]],
-    hadoopConf: Configuration, keyRange: Option[KeyRange] = None,
-    recStart: Long = 0L, recEnd: Long = -1L,
-    samplePct: Option[Int] = None)
+final class ShardpackColumnarReader(slice: ShardSlice, required: StructType)
     extends PartitionReader[org.apache.spark.sql.vectorized.ColumnarBatch] {
-
-  private val sampleKeep: String => Boolean = samplePct match {
-    case Some(pct) => k => ShardpackDataSource.keyHashPct(k) < pct
-    case None => _ => true
-  }
   import org.apache.spark.sql.execution.vectorized.OnHeapColumnVector
   import org.apache.spark.sql.vectorized.ColumnarBatch
 
   private val BatchRows = 4096
-  private val fs = new Path(file).getFileSystem(hadoopConf)
-  private val footer = {
-    val in = fs.open(new Path(file))
-    try ShardpackFormat.readFooter(fileLen, (pos, len) => {
-      val buf = new Array[Byte](len); in.readFully(pos, buf); buf
-    })
-    finally in.close()
-  }
-  private val pruned: Boolean = {
-    val env = ShardpackFormat.ShardStats.unwrap(footer.shardMetadata)._1
-    val rangePruned = env.exists { case (mn, mx) =>
-      keyFilter.exists(ks => !ks.exists(k => k >= mn && k <= mx)) ||
-        keyRange.exists(r => !r.intersects(mn, mx))
-    }
-    // v3 Bloom: a point-lookup key set none of whose members might be in
-    // this shard prunes it even when the key RANGE overlaps (the
-    // hash-distributed-layout case range stats cannot help)
-    def bloomPruned = keyFilter.exists { ks =>
-      ShardpackFormat.ShardStats.unwrapBloom(footer.shardMetadata)
-        .exists(b => !ks.exists(b.mightContain))
-    }
-    rangePruned || bloomPruned
-  }
-
-  private val endRec: Int =
-    if (recEnd < 0) footer.offsets.length
-    else math.min(recEnd, footer.offsets.length.toLong).toInt
-
-  private var streamOpened = false
-  private lazy val stream = {
-    streamOpened = true
-    val raw = fs.open(new Path(file))
-    if (recStart > 0 && recStart < footer.offsets.length)
-      raw.seek(footer.offsets(recStart.toInt))
-    new java.io.DataInputStream(new java.io.BufferedInputStream(raw, 1 << 20))
-  }
-
   private val vectors = OnHeapColumnVector.allocateColumns(BatchRows, required)
   private val batch = new ColumnarBatch(vectors.toArray)
   private val keyPos = required.fieldNames.indexOf("key")
   private val metaPos = required.fieldNames.indexOf("metadata")
   private val shardPos = required.fieldNames.indexOf("_shard")
   private val posPos = required.fieldNames.indexOf("_pos")
-  private val fileUtf8 = file.getBytes("UTF-8")
-
-  private var idx = math.min(recStart, Int.MaxValue.toLong).toInt
+  private val fileUtf8 = slice.file.getBytes("UTF-8")
 
   override def next(): Boolean = {
-    if (pruned) return false
     vectors.foreach(_.reset())
     var rows = 0
-    while (rows < BatchRows && idx < endRec) {
-      idx += 1
-      val recLen = stream.readInt()
+    while (rows < BatchRows && slice.idx < slice.end) {
+      slice.idx += 1
+      val recLen = slice.stream.readInt()
       val block = new Array[Byte](recLen)
-      stream.readFully(block)
+      slice.stream.readFully(block)
       val (key, meta) = ShardpackFormat.decodeKeyMeta(block)
-      if (keyFilter.forall(_.contains(key)) && keyRange.forall(_.contains(key)) &&
-          sampleKeep(key)) {
+      if (slice.keep(key)) {
         if (keyPos >= 0)
           vectors(keyPos).putByteArray(rows, key.getBytes("UTF-8"))
         if (metaPos >= 0) {
@@ -1099,24 +1026,22 @@ final class ShardpackColumnarReader(file: String, fileLen: Long,
           else vectors(metaPos).putByteArray(rows, meta)
         }
         if (shardPos >= 0) vectors(shardPos).putByteArray(rows, fileUtf8)
-        if (posPos >= 0) vectors(posPos).putLong(rows, (idx - 1).toLong)
+        if (posPos >= 0) vectors(posPos).putLong(rows, (slice.idx - 1).toLong)
         rows += 1
-      } else skipped += 1
+      } else slice.skipped += 1
     }
     batch.setNumRows(rows)
     rows > 0
   }
 
-  private var skipped = 0L
   override def currentMetricsValues(): Array[org.apache.spark.sql.connector.metric.CustomTaskMetric] =
-    Array(TaskMetric("shardsPruned", if (pruned) 1L else 0L),
-      TaskMetric("recordsSkipped", skipped))
+    slice.metrics
 
   override def get(): ColumnarBatch = batch
 
   override def close(): Unit = {
     batch.close()
-    if (streamOpened) stream.close()
+    slice.close()
   }
 }
 
@@ -1197,27 +1122,10 @@ final class ShardpackRewriteScanBuilder(paths: Seq[String],
   private var keyRange: Option[KeyRange] = None
 
   override def pushFilters(filters: Array[Filter]): Array[Filter] = {
-    pushed = filters.filter {
-      case EqualTo("key", _: String) | In("key", _) => true
-      case GreaterThan("key", _: String) | GreaterThanOrEqual("key", _: String) => true
-      case LessThan("key", _: String) | LessThanOrEqual("key", _: String) => true
-      case StringStartsWith("key", _) => true
-      case _ => false
-    }
-    val keySets = pushed.collect {
-      case EqualTo("key", v: String) => Set(v)
-      case In("key", vs) if vs.forall(_.isInstanceOf[String]) =>
-        vs.map(_.asInstanceOf[String]).toSet
-    }
-    if (keySets.nonEmpty) keyFilter = Some(keySets.reduce(_ intersect _))
-    val ranges = pushed.collect {
-      case GreaterThan("key", v: String) => KeyRange(Some(v), false, None, true, None)
-      case GreaterThanOrEqual("key", v: String) => KeyRange(Some(v), true, None, true, None)
-      case LessThan("key", v: String) => KeyRange(None, true, Some(v), false, None)
-      case LessThanOrEqual("key", v: String) => KeyRange(None, true, Some(v), true, None)
-      case StringStartsWith("key", p) => KeyRange(Some(p), true, None, true, Some(p))
-    }
-    keyRange = ranges.reduceOption(_ and _)
+    val (supported, keys, range) = KeyRange.classify(filters)
+    pushed = supported
+    keyFilter = keys
+    keyRange = range
     filters // everything residual: group pruning only, no row skipping
   }
 
@@ -1239,7 +1147,7 @@ final class ShardpackRewriteScanBuilder(paths: Seq[String],
   * indexed (replacement shards probed in, replaced ones dropped), so the
   * next keyed read still plans one shard. The pre-swap listing is taken
   * when the job starts, before any task can publish a shard. Same
-  * crash-safe order as [[ShardpackOps.deleteKeys]]: a crash mid-commit
+  * crash-safe order as [[ShardpackOps.retire]]: a crash mid-commit
   * leaves transient duplicates (old + new visible), never a window with
   * neither.
   */
@@ -1259,15 +1167,14 @@ final class ShardpackReplaceWrite(base: Write, path: String,
     val dir = new Path(path)
     val fs = dir.getFileSystem(HadoopConfs.session())
     new BatchWrite {
-      @volatile private var listed = Set.empty[String]
+      @volatile private var listed = Seq.empty[org.apache.hadoop.fs.FileStatus]
       override def createBatchWriterFactory(info: PhysicalWriteInfo): DataWriterFactory = {
-        listed = ShardpackDataSource.listShards(fs, dir).map(_.getPath.getName).toSet
+        listed = ShardpackDataSource.listShards(fs, dir)
         inner.createBatchWriterFactory(info)
       }
       override def commit(messages: Array[WriterCommitMessage]): Unit = {
         inner.commit(messages) // replacement shards renamed IN first
-        replaced().foreach(f => fs.delete(new Path(f), false))
-        ShardpackIndex.carry(fs, dir, listed)
+        ShardpackOps.retire(fs, dir, listed, replaced().toSeq.map(new Path(_)))
       }
       override def abort(messages: Array[WriterCommitMessage]): Unit =
         inner.abort(messages)

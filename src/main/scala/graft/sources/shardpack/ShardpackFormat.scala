@@ -225,32 +225,7 @@ object ShardpackFormat {
   def decodeRecordBody(block: Array[Byte], wantEntryData: Boolean,
       verify: Boolean, entryFilter: Option[Set[String]] = None): Record = {
     val in = new DataInputStream(new ByteArrayInputStream(block))
-    val key = readStr16(in)
-    val metaLen = in.readInt()
-    val meta = if (metaLen < 0) null else readFully(in, metaLen)
-    val nEntries = in.readUnsignedShort()
-    val entries = (0 until nEntries).flatMap { _ =>
-      val name = readStr16(in)
-      val ctype = readStr16(in)
-      val codec = Codec.name(in.readByte())
-      val rawLen = in.readInt()
-      val storedLen = in.readInt()
-      val checksum = readFully(in, 32)
-      if (!entryFilter.forall(_.contains(name))) {
-        in.skipBytes(storedLen)
-        None
-      } else if (wantEntryData) {
-        val stored = readFully(in, storedLen)
-        val raw = Codec.decompress(codec, stored, rawLen)
-        if (verify && !java.util.Arrays.equals(sha256(raw), checksum))
-          throw new ChecksumMismatch(s"checksum mismatch for entry '$name' of record '$key'")
-        Some(Entry(name, ctype, codec, raw))
-      } else {
-        in.skipBytes(storedLen)
-        Some(Entry(name, ctype, codec, null))
-      }
-    }
-    Record(key, meta, entries)
+    decodeAfterKey(in, readStr16(in), wantEntryData, verify, entryFilter)
   }
 
   /** Streaming record decode: consumes one record from a stream positioned
@@ -262,46 +237,52 @@ object ShardpackFormat {
     * reads the blob bytes at all — the I/O form of the spec's partial
     * loading (`docs/draft.md:126`), not just the CPU form.
     *
-    * Returns None for a key-filtered miss (record fully skipped).
+    * Returns None for a key-filtered miss (record fully skipped): a key
+    * outside `keyFilter` or failing `keep` (the reader's pushed range and
+    * sample).
     */
   def decodeRecordStreaming(in: DataInputStream, keyFilter: Option[Set[String]],
       wantEntryData: Boolean, verify: Boolean,
       entryFilter: Option[Set[String]],
-      keyRange: Option[KeyRange] = None,
       keep: String => Boolean = _ => true): Option[Record] = {
     val recLen = in.readInt()
     val key = readStr16(in)
-    if (!keyFilter.forall(_.contains(key)) || !keyRange.forall(_.contains(key)) ||
-        !keep(key)) {
+    if (!keyFilter.forall(_.contains(key)) || !keep(key)) {
       skipFully(in, recLen - 2 - key.getBytes(StandardCharsets.UTF_8).length)
       None
-    } else {
-      val metaLen = in.readInt()
-      val meta = if (metaLen < 0) null else readFully(in, metaLen)
-      val nEntries = in.readUnsignedShort()
-      val entries = (0 until nEntries).flatMap { _ =>
-        val name = readStr16(in)
-        val ctype = readStr16(in)
-        val codec = Codec.name(in.readByte())
-        val rawLen = in.readInt()
-        val storedLen = in.readInt()
-        val checksum = readFully(in, 32)
-        if (!entryFilter.forall(_.contains(name))) {
-          skipFully(in, storedLen)
-          None
-        } else if (wantEntryData) {
-          val stored = readFully(in, storedLen)
-          val raw = Codec.decompress(codec, stored, rawLen)
-          if (verify && !java.util.Arrays.equals(sha256(raw), checksum))
-            throw new ChecksumMismatch(s"checksum mismatch for entry '$name' of record '$key'")
-          Some(Entry(name, ctype, codec, raw))
-        } else {
-          skipFully(in, storedLen)
-          Some(Entry(name, ctype, codec, null))
-        }
+    } else Some(decodeAfterKey(in, key, wantEntryData, verify, entryFilter))
+  }
+
+  /** The rest of a record whose key `in` has just yielded: metadata, then
+    * the entry loop shared by the block and streaming decoders.
+    */
+  private def decodeAfterKey(in: DataInputStream, key: String, wantEntryData: Boolean,
+      verify: Boolean, entryFilter: Option[Set[String]]): Record = {
+    val metaLen = in.readInt()
+    val meta = if (metaLen < 0) null else readFully(in, metaLen)
+    val nEntries = in.readUnsignedShort()
+    val entries = (0 until nEntries).flatMap { _ =>
+      val name = readStr16(in)
+      val ctype = readStr16(in)
+      val codec = Codec.name(in.readByte())
+      val rawLen = in.readInt()
+      val storedLen = in.readInt()
+      val checksum = readFully(in, 32)
+      if (!entryFilter.forall(_.contains(name))) {
+        skipFully(in, storedLen)
+        None
+      } else if (wantEntryData) {
+        val stored = readFully(in, storedLen)
+        val raw = Codec.decompress(codec, stored, rawLen)
+        if (verify && !java.util.Arrays.equals(sha256(raw), checksum))
+          throw new ChecksumMismatch(s"checksum mismatch for entry '$name' of record '$key'")
+        Some(Entry(name, ctype, codec, raw))
+      } else {
+        skipFully(in, storedLen)
+        Some(Entry(name, ctype, codec, null))
       }
-      Some(Record(key, meta, entries))
     }
+    Record(key, meta, entries)
   }
 
   private def skipFully(in: DataInputStream, n: Long): Unit = {
@@ -505,16 +486,34 @@ object ShardpackFormat {
         Some(new KeyBloom(k, bits))
       }
 
-    /** Can a shard with this metadata contain any of `keys`? (No stats →
-      * must be read; the Bloom check strengthens the range check when
-      * present — both are conservative, so the conjunction is too.)
+    /** Can a shard with this metadata hold a key of `keys` (None: any key)
+      * inside `range` (None: unbounded)? The envelope test of [[mayHold]],
+      * strengthened by the v3 Bloom when a key set is pushed — a point
+      * lookup none of whose keys might be in the shard prunes it even when
+      * the key RANGE overlaps (hash-distributed layouts). Both checks are
+      * conservative, so the conjunction is too.
       */
+    def mayContain(meta: Array[Byte], keys: Option[Set[String]],
+        range: Option[KeyRange]): Boolean =
+      mayHold(unwrap(meta)._1, keys, range) &&
+        keys.forall(ks => unwrapBloom(meta).forall(b => ks.exists(b.mightContain)))
+
     def mayContain(meta: Array[Byte], keys: Set[String]): Boolean =
-      (unwrap(meta)._1 match {
-        case Some((lo, hi)) =>
-          keys.exists(k => KeyOrd.gteq(k, lo) && KeyOrd.lteq(k, hi))
-        case None => true
-      }) && unwrapBloom(meta).forall(b => keys.exists(b.mightContain))
+      mayContain(meta, Some(keys), None)
+
+    /** THE envelope test: can a shard whose keys span `env` = [lo, hi]
+      * hold a key of `keys` inside `range`? Compared in [[KeyOrd]], the
+      * order of the record filters Spark applies, so the prune is always
+      * conservative. No envelope (foreign or v1 shard) → must be read; an
+      * empty key set holds nothing. Reader pruning ([[mayContain]]),
+      * sidecar planning and the rewrite verbs' affected-shard selection
+      * all decide through this one function.
+      */
+    def mayHold(env: Option[(String, String)], keys: Option[Set[String]],
+        range: Option[KeyRange]): Boolean = env.forall { case (lo, hi) =>
+      keys.forall(_.exists(k => KeyOrd.gteq(k, lo) && KeyOrd.lteq(k, hi))) &&
+        range.forall(_.intersects(lo, hi))
+    }
   }
 
   /** Per-shard key Bloom filter (v3 envelopes): double hashing h1 + i·h2

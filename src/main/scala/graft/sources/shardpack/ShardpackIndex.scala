@@ -137,16 +137,23 @@ object ShardpackIndex {
       throw new java.io.IOException(s"shardpack index publish failed: $tmp -> $dst")
   }
 
-  /** Footer probe of one shard: its envelope and record count. */
-  private def probeEntry(fs: FileSystem, path: Path, len: Long): Entry = {
+  /** The EOF index of the shard at `path` (`len` = its listed length):
+    * one open, the footer reads, one close. Every footer read of a stored
+    * shard goes through here.
+    */
+  private[shardpack] def footer(fs: FileSystem, path: Path, len: Long): ShardpackFormat.Footer = {
     val in = fs.open(path)
-    val footer =
-      try ShardpackFormat.readFooter(len, (pos, n) => {
-        val b = new Array[Byte](n); in.readFully(pos, b); b
-      })
-      finally in.close()
-    Entry(path.getName, len, ShardpackFormat.ShardStats.unwrap(footer.shardMetadata)._1,
-      footer.offsets.length.toLong)
+    try ShardpackFormat.readFooter(len, (pos, n) => {
+      val b = new Array[Byte](n); in.readFully(pos, b); b
+    })
+    finally in.close()
+  }
+
+  /** Footer probe of one shard: its envelope and record count. */
+  private[shardpack] def probeEntry(fs: FileSystem, path: Path, len: Long): Entry = {
+    val f = footer(fs, path, len)
+    Entry(path.getName, len, ShardpackFormat.ShardStats.unwrap(f.shardMetadata)._1,
+      f.offsets.length.toLong)
   }
 
   /** One inline sidecar file holding `entries`, name-sorted. */
@@ -404,6 +411,26 @@ object ShardpackIndex {
       idx.get(st.getPath.getName).filter(_.len == st.getLen)
         .getOrElse(probeEntry(fs, st.getPath, st.getLen))
     }
+
+  /** A bucket profile: shard, record and byte totals and the
+    * [[ShardpackFormat.KeyOrd]] extremes of the shard envelopes (None when
+    * no shard has one); `indexed` = a non-empty sidecar was found.
+    */
+  final case class Stats(shards: Int, records: Long, bytes: Long,
+      minKey: Option[String], maxKey: Option[String], indexed: Boolean)
+
+  /** Profile the listed `shards` of `dir` sidecar-first ([[resolve]]): one
+    * index read covers counts and envelopes, footer probes only the shards
+    * it misses. The one computation behind both stats verbs.
+    */
+  def stats(fs: FileSystem, dir: Path, shards: Seq[org.apache.hadoop.fs.FileStatus]): Stats = {
+    val idx = load(fs, dir).getOrElse(Map.empty)
+    val entries = resolve(fs, idx, shards)
+    val ranges = entries.flatMap(_.range)
+    Stats(entries.size, entries.map(_.nRecords).sum, entries.map(_.len).sum,
+      ranges.map(_._1).minOption(ShardpackFormat.KeyOrd),
+      ranges.map(_._2).maxOption(ShardpackFormat.KeyOrd), idx.nonEmpty)
+  }
 
   /** Envelope per listed shard, sidecar-first: a shard matching a sidecar
     * entry by (name, len) uses the indexed range; anything else gets its

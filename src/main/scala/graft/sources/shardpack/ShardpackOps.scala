@@ -91,6 +91,48 @@ object ShardpackOps {
     case c => c.toString
   } + "\""
 
+  /** Retire `old` once the replacement generation is visible in `dir`,
+    * then carry the sidecar to the new generation ([[ShardpackIndex.carry]];
+    * `before` is the op's pre-swap listing). The tail of every
+    * generation swap: the rewrite verbs here and SQL row-level DML
+    * ([[ShardpackReplaceWrite]]).
+    *
+    * The replacement is written straight into `dir` by the batch writer,
+    * whose commit promotes staged dot-temps to task-unique final names
+    * (object stores: conditional-puts them there directly), so new rows
+    * become visible before old ones disappear: a crash mid-swap leaves
+    * transient duplicates, never data loss or emptiness. An indexed bucket
+    * stays indexed: the replacement shards are probed in and the retired
+    * ones leave, so keyed reads after the swap still plan only the shards
+    * a key can be in. A bucket without a sidecar still has none.
+    *
+    * `graceMs` > 0 retires `old` via tombstones instead of deleting: the
+    * bytes stay at their paths (a scan planned against generation N keeps
+    * reading exactly generation N) while fresh listings see only N+1;
+    * [[vacuum]] reclaims the space once the grace deadline passes. Size the
+    * grace to the longest query a cluster runs against the bucket.
+    */
+  private[shardpack] def retire(fs: FileSystem, dir: Path, before: Seq[FileStatus],
+      old: Seq[Path], graceMs: Long = 0L): Unit = {
+    if (graceMs > 0L) {
+      val deadline = System.currentTimeMillis() + graceMs
+      ShardpackDataSource.writeTombstones(fs, dir,
+        ShardpackDataSource.readTombstones(fs, dir) ++ old.map(_.getName -> deadline))
+    } else old.foreach(fs.delete(_, false))
+    ShardpackIndex.carry(fs, dir, before.map(_.getPath.getName).toSet)
+  }
+
+  /** The listed shards whose envelope may hold a key of `keys` inside
+    * `range` ([[ShardpackFormat.ShardStats.mayHold]]); envelopes come
+    * sidecar-first (one read), footer probes only for shards the index
+    * doesn't cover, and stats-less shards are always affected.
+    */
+  private def affected(fs: FileSystem, dir: String, shards: Seq[FileStatus],
+      keys: Option[Set[String]], range: Option[KeyRange]): Seq[FileStatus] =
+    ShardpackIndex.envelopes(fs, new Path(dir), shards).collect {
+      case (st, env) if ShardpackFormat.ShardStats.mayHold(env, keys, range) => st
+    }
+
   /** Delete records by key: rewrite surviving records of the AFFECTED
     * shards only to a new generation, then swap. Never edits a shard in
     * place (shards are immutable, `docs/draft.md:207-211`).
@@ -100,91 +142,27 @@ object ShardpackOps {
     * misses every delete key is left untouched — the rewrite cost is
     * proportional to the shards actually containing deletions, not the
     * bucket size. (Stats-less shards — foreign writers — are conservatively
-    * rewritten.) Footer probes run on the driver here; at very large shard
-    * counts the same ranges would come from a sidecar summary built once.
+    * rewritten.)
     */
-  /** Publish a rewritten generation over `dir`: run `write` to produce the
-    * replacement shards, make them visible, drop `old`, then carry the
-    * sidecar to the new generation ([[ShardpackIndex.carry]]; `listed` is
-    * the op's pre-swap listing). An indexed bucket stays indexed: the
-    * replacement shards are probed in and the retired ones leave, so keyed
-    * reads after the swap still plan only the shards a key can be in. A
-    * bucket without a sidecar still has none.
-    *
-    * On object-store schemes the write goes DIRECTLY into the live dir —
-    * batch writers conditional-put to final task-unique names (never
-    * clashing with live shards), so the swap performs zero per-shard
-    * copies; elsewhere it stages in a sibling dir and renames in (one
-    * metadata op per shard on a real filesystem). Both orders are
-    * crash-safe the same way: new rows become visible before old ones
-    * disappear, so a crash mid-swap leaves transient duplicates, never
-    * data loss or emptiness.
-    *
-    * `graceMs` > 0 retires `old` via tombstones instead of deleting: the
-    * bytes stay at their paths (a scan planned against generation N keeps
-    * reading exactly generation N) while fresh listings see only N+1;
-    * [[vacuum]] reclaims the space once the grace deadline passes. Size the
-    * grace to the longest query a cluster runs against the bucket.
-    */
-  private def swapIn(fs: FileSystem, dir: String, listed: Seq[FileStatus],
-      old: Seq[FileStatus], tag: String, graceMs: Long = 0L)(
-      write: String => Unit): Unit = {
-    val scheme = Option(new Path(dir).toUri.getScheme).getOrElse("")
-    if (ShardpackDataSource.ObjectStoreSchemes.contains(scheme)) {
-      write(dir)
-    } else {
-      val staging = s"$dir-$tag-${java.util.UUID.randomUUID().toString.take(8)}"
-      write(staging)
-      ShardpackDataSource.listShards(fs, new Path(staging)).foreach { st =>
-        val dst = new Path(dir, st.getPath.getName)
-        if (!fs.rename(st.getPath, dst))
-          throw new java.io.IOException(s"$tag: rename ${st.getPath} -> $dst failed")
-      }
-      fs.delete(new Path(staging), true)
-    }
-    if (graceMs > 0L) {
-      val deadline = System.currentTimeMillis() + graceMs
-      val d = new Path(dir)
-      ShardpackDataSource.writeTombstones(fs, d,
-        ShardpackDataSource.readTombstones(fs, d) ++
-          old.map(_.getPath.getName -> deadline))
-    } else old.foreach(st => fs.delete(st.getPath, false))
-    ShardpackIndex.carry(fs, new Path(dir), listed.map(_.getPath.getName).toSet)
-  }
-
   def deleteKeys(spark: SparkSession, dir: String, keys: Seq[String]): Unit = {
     import spark.implicits._
-    val keySet = keys.toSet
     val fs = new Path(dir).getFileSystem(HadoopConfs.session())
-    // snapshot the old generation BEFORE making the new one visible;
-    // envelopes come sidecar-first (one read), footer probes only for
-    // shards the index doesn't cover
+    // snapshot the old generation BEFORE making the new one visible
     val oldShards = ShardpackDataSource.listShards(fs, new Path(dir))
-    val affected = ShardpackIndex.envelopes(fs, new Path(dir), oldShards).collect {
-      case (st, None) => st
-      case (st, Some((lo, hi))) if keySet.exists(k =>
-        ShardpackFormat.KeyOrd.gteq(k, lo) && ShardpackFormat.KeyOrd.lteq(k, hi)) => st
-    }
-    if (affected.isEmpty) return
+    val hit = affected(fs, dir, oldShards, Some(keys.toSet), None)
+    if (hit.isEmpty) return
     // read ONLY the affected shards (each is a valid single-file table path)
-    val affectedDf = affected.map(st =>
-      spark.read.format("shardpack").load(st.getPath.toString)).reduce(_ union _)
-    // new generation becomes visible first (task-unique names never clash),
-    // then the old drops: a crash mid-swap leaves transient duplicates,
-    // never an empty bucket — the previous delete-then-rename order had an
-    // unbounded data-loss window
-    swapIn(fs, dir, oldShards, affected, "rewrite") { out =>
-      affectedDf
-        .join(broadcast(keys.toDF("key")), Seq("key"), "left_anti")
-        .write.format("shardpack").mode("append").save(out)
-    }
+    hit.map(st => spark.read.format("shardpack").load(st.getPath.toString)).reduce(_ union _)
+      .join(broadcast(keys.toDF("key")), Seq("key"), "left_anti")
+      .write.format("shardpack").mode("append").save(dir)
+    retire(fs, new Path(dir), oldShards, hit.map(_.getPath))
   }
 
   /** Compact undersized shards into full-cap ones: the maintenance op for
     * the small-file backlog a streaming sink accumulates (one+ shard per
     * epoch×partition). Only shards below `minFill`·cap are read and
     * rewritten — cost scales with the backlog, not the bucket — and the
-    * swap follows deleteKeys' crash-safe order (new generation renamed IN
+    * swap follows [[retire]]'s crash-safe order (new generation visible
     * before old shards are dropped; a crash mid-swap leaves transient
     * duplicates, never data loss). Readers are unaffected throughout:
     * shards are immutable and appear/disappear atomically via rename.
@@ -195,6 +173,28 @@ object ShardpackOps {
     *
     * Returns the number of small shards compacted away (0 = nothing to do).
     */
+  def compact(spark: SparkSession, dir: String, minFill: Double = 0.5,
+      shardCap: Long = ShardpackFormat.DefaultShardCap,
+      compression: String = ShardpackFormat.Codec.None,
+      graceMs: Long = 0L): Int = {
+    val fs = new Path(dir).getFileSystem(HadoopConfs.session())
+    val threshold = math.max(1L, (shardCap * minFill).toLong)
+    val listed = ShardpackDataSource.listShards(fs, new Path(dir))
+    val small = listed.filter(_.getLen < threshold)
+    if (small.length < 2) return 0 // one small shard compacts to itself
+    // target partition count so each writer task fills ~one cap-sized shard
+    val parts = math.max(1, (small.map(_.getLen).sum / shardCap).toInt + 1)
+    small.map(st => spark.read.format("shardpack").load(st.getPath.toString))
+      .reduce(_ union _)
+      .coalesce(parts)
+      .write.format("shardpack")
+      .option("compression", compression)
+      .option("shardCapBytes", shardCap)
+      .mode("append").save(dir)
+    retire(fs, new Path(dir), listed, small.map(_.getPath), graceMs)
+    small.length
+  }
+
   /** Remove orphaned staged temp files left by CRASHED jobs. Commit/abort
     * sweeps are deliberately job-scoped (a concurrent job's temps must
     * survive), so a writer that dies without either leaves `.graft-tmp-*`
@@ -214,11 +214,10 @@ object ShardpackOps {
         st.getPath.getName.startsWith(".graft-tombstones-tmp-")) &&
         st.getModificationTime < cutoff)
     stale.foreach(st => fs.delete(st.getPath, false))
-    // a rewrite op (deleteKeys/deleteRange/compact/merge) that crashed
-    // between its staging write and the rename-in sweep leaves a sibling
-    // `<dir>-<tag>-<uuid>` staging directory: invisible to readers, but a
-    // disk leak — swept here under the same age guard so an IN-FLIGHT
-    // op's staging is never touched
+    // rewrite ops of earlier versions staged in a sibling
+    // `<dir>-<tag>-<uuid>` directory; one that crashed before its
+    // rename-in sweep left it behind: invisible to readers, but a disk
+    // leak — swept here under the same age guard
     val parent = d.getParent
     val stagingRe = (java.util.regex.Pattern.quote(d.getName) +
       "-(rewrite|compact|merge)-[0-9a-f]{8}").r
@@ -247,58 +246,26 @@ object ShardpackOps {
 
   /** Sidecar-first bucket profile — the `stats` maintenance verb: one row
     * (n_shards, n_records, total_bytes, min_key, max_key) computed from
-    * the INDEX alone, O(shards) with zero data bytes read — at 100 TB the
+    * the INDEX alone ([[ShardpackIndex.stats]], shared with `CALL
+    * system.stats`), O(shards) with zero data bytes read — at 100 TB the
     * difference between a catalog ping and a full scan. The sidecar is
     * validated against a fresh listing (every listed shard present at its
     * listed length) and rebuilt via the distributed footer reader when
-    * stale, so post-compact/delete listings never serve stale counts.
-    * Driver memory is one Entry per shard (the same bound the CLI's other
-    * verbs already carry).
+    * stale, so the next profile is index-only again; shards it still
+    * misses are footer-probed, never left out. Driver memory is one Entry
+    * per shard (the same bound the CLI's other verbs already carry).
     */
   def stats(spark: SparkSession, dir: String): DataFrame = {
     val p = new Path(dir)
     val fs = p.getFileSystem(HadoopConfs.session())
     val listed = ShardpackDataSource.listShards(fs, p)
-      .map(st => (st.getPath.getName, st.getLen))
-    def loadValid(): Option[Seq[ShardpackIndex.Entry]] =
-      ShardpackIndex.load(fs, p).flatMap { m =>
-        val es = listed.map { case (n, l) => m.get(n).filter(_.len == l) }
-        if (es.forall(_.isDefined)) Some(es.map(_.get).toSeq) else None
-      }
-    val entries = loadValid().getOrElse {
-      ShardpackIndex.build(spark, dir)
-      loadValid().getOrElse(Seq.empty)
-    }
-    val ranges = entries.flatMap(_.range)
+    val fresh = ShardpackIndex.load(fs, p).exists(idx =>
+      listed.forall(st => idx.get(st.getPath.getName).exists(_.len == st.getLen)))
+    if (!fresh) ShardpackIndex.build(spark, dir)
+    val s = ShardpackIndex.stats(fs, p, listed)
     import spark.implicits._
-    Seq((entries.size.toLong, entries.map(_.nRecords).sum,
-      entries.map(_.len).sum,
-      if (ranges.isEmpty) null else ranges.map(_._1).min,
-      if (ranges.isEmpty) null else ranges.map(_._2).max))
+    Seq((s.shards.toLong, s.records, s.bytes, s.minKey.orNull, s.maxKey.orNull))
       .toDF("n_shards", "n_records", "total_bytes", "min_key", "max_key")
-  }
-
-  def compact(spark: SparkSession, dir: String, minFill: Double = 0.5,
-      shardCap: Long = ShardpackFormat.DefaultShardCap,
-      compression: String = ShardpackFormat.Codec.None,
-      graceMs: Long = 0L): Int = {
-    val fs = new Path(dir).getFileSystem(HadoopConfs.session())
-    val threshold = math.max(1L, (shardCap * minFill).toLong)
-    val listed = ShardpackDataSource.listShards(fs, new Path(dir))
-    val small = listed.filter(_.getLen < threshold)
-    if (small.length < 2) return 0 // one small shard compacts to itself
-    // target partition count so each writer task fills ~one cap-sized shard
-    val parts = math.max(1, (small.map(_.getLen).sum / shardCap).toInt + 1)
-    swapIn(fs, dir, listed, small, "compact", graceMs) { out =>
-      small.map(st => spark.read.format("shardpack").load(st.getPath.toString))
-        .reduce(_ union _)
-        .coalesce(parts)
-        .write.format("shardpack")
-        .option("compression", compression)
-        .option("shardCapBytes", shardCap)
-        .mode("append").save(out)
-    }
-    small.length
   }
 
   /** Rewrite a bucket Z-ORDER clustered on two integer dimensions computed
@@ -349,21 +316,14 @@ object ShardpackOps {
     require(ShardpackFormat.KeyOrd.lt(lo, hi), s"deleteRange: empty range [$lo, $hi)")
     val fs = new Path(dir).getFileSystem(HadoopConfs.session())
     val oldShards = ShardpackDataSource.listShards(fs, new Path(dir))
-    val affected = ShardpackIndex.envelopes(fs, new Path(dir), oldShards).collect {
-      case (st, None) => st
-      // envelope check in KeyOrd (Spark's UTF8String order) — the record
-      // filter below runs in Spark, so the prune must be conservative
-      // with respect to THAT order, not Java's UTF-16 order
-      case (st, Some((mn, mx))) if ShardpackFormat.KeyOrd.gteq(mx, lo) &&
-        ShardpackFormat.KeyOrd.lt(mn, hi) => st
-    }
-    if (affected.isEmpty) return
-    swapIn(fs, dir, oldShards, affected, "rewrite") { out =>
-      affected.map(st => spark.read.format("shardpack").load(st.getPath.toString))
-        .reduce(_ union _)
-        .filter(col("key") < lo || col("key") >= hi)
-        .write.format("shardpack").mode("append").save(out)
-    }
+    val hit = affected(fs, dir, oldShards, None,
+      Some(KeyRange(Some(lo), loInc = true, Some(hi), hiInc = false, None)))
+    if (hit.isEmpty) return
+    hit.map(st => spark.read.format("shardpack").load(st.getPath.toString))
+      .reduce(_ union _)
+      .filter(col("key") < lo || col("key") >= hi)
+      .write.format("shardpack").mode("append").save(dir)
+    retire(fs, new Path(dir), oldShards, hit.map(_.getPath))
   }
 
   /** MERGE (upsert): rows of `updates` replace same-key records in the
@@ -381,9 +341,10 @@ object ShardpackOps {
     * list). Shards whose envelope misses every update key are untouched;
     * the rewrite cost is proportional to the shards actually hit. Stats-less
     * shards (foreign writers) are conservatively rewritten. The swap follows
-    * deleteKeys' crash-safe order: new generation renamed IN before old
+    * [[retire]]'s crash-safe order: new generation visible before old
     * shards are dropped — a crash mid-swap leaves transient duplicates,
-    * never data loss.
+    * never data loss. The envelope join runs in Spark's string order,
+    * which is already [[ShardpackFormat.KeyOrd]].
     *
     * `updates` must be key-unique: with no ordering column there is no
     * deterministic last-writer-wins, so duplicates are rejected loudly.
@@ -392,7 +353,7 @@ object ShardpackOps {
       compression: String = ShardpackFormat.Codec.None): Unit = {
     import spark.implicits._
     // materialize once: the plan is scanned three times (uniqueness check,
-    // range probe, staging write), and caching before any swap makes a
+    // range probe, rewrite), and caching before any swap makes a
     // self-referential update (CDC derived from this same bucket) safe
     val up = updates.select(col("key"), col("metadata"), col("entries")).persist()
     try {
@@ -421,11 +382,10 @@ object ShardpackOps {
           .map(st => spark.read.format("shardpack").load(st.getPath.toString))
           .reduce(_ union _)
           .join(up.select("key"), Seq("key"), "left_anti")
-        swapIn(fs, dir, oldShards, affected, "merge") { out =>
-          survivors.union(up)
-            .write.format("shardpack").option("compression", compression)
-            .mode("append").save(out)
-        }
+        survivors.union(up)
+          .write.format("shardpack").option("compression", compression)
+          .mode("append").save(dir)
+        retire(fs, new Path(dir), oldShards, affected.map(_.getPath))
       }
     } finally up.unpersist(false)
   }

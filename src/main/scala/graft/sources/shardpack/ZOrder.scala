@@ -8,7 +8,7 @@ import org.apache.spark.sql.functions._
   * shard key ranges 2-D-local, and a 2-D box predicate becomes a SMALL set
   * of contiguous key ranges — each of which the format's per-shard
   * [minKey, maxKey] envelopes prune wholesale (the same one-footer-read
-  * rejection as a point lookup, `ShardpackPartitionReader.pruned`).
+  * rejection as a point lookup, `ShardSlice.pruned`).
   *
   * This is the standard multi-dimensional clustering construction
   * (Morton 1966; the BIGMIN/LITMAX range-splitting literature, Tropf &

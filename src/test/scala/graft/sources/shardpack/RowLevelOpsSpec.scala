@@ -164,6 +164,21 @@ class RowLevelOpsSpec extends AnyFunSuite with SparkTestBase {
     spark.sql("DROP TABLE spkrl.del1")
   }
 
+  test("DELETE over a key range empty in code-point order deletes nothing") {
+    root
+    createTable("delord")
+    import spark.implicits._
+    Seq("\uE000", "\uF000", "\uD83D\uDE00").toDF("key").select(col("key"),
+      lit(null).cast("binary").as("metadata"),
+      array(struct(lit("k.txt").as("file_name"), lit("text/plain").as("content_type"),
+        lit("").as("encoding"), encode(col("key"), "UTF-8").as("data"))).as("entries"))
+      .coalesce(1).writeTo("spkrl.delord").append()
+    // U+1F600 >= U+E000 in code points, though its UTF-16 units sort below
+    spark.sql("DELETE FROM spkrl.delord WHERE key >= '\uD83D\uDE00' AND key < '\uE000'")
+    assert(spark.table("spkrl.delord").count() == 3)
+    spark.sql("DROP TABLE spkrl.delord")
+  }
+
   test("_shard metadata column reports each record's source shard file") {
     root
     createTable("prov")

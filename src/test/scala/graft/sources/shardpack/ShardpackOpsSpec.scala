@@ -2,6 +2,7 @@ package graft.sources.shardpack
 
 import java.nio.file.{Files, Paths}
 
+import org.apache.spark.sql.{DataFrameWriter, Row}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -307,6 +308,75 @@ class ShardpackOpsSpec extends AnyFunSuite with SparkTestBase {
           .select(col("key"), col("entries").getItem(0).getField("data").cast("string"))
           .collect().map(r => (r.getString(0), r.getString(1))).sorted.toSeq
         assert(back == expect, s"seed=$i base=$bk upd=$uk")
+      }
+    }
+  }
+
+  test("key order: lookups, ranges, pushed aggregates and stats match a KeyOrd scan (scalacheck)") {
+    import org.scalacheck.Gen
+    import org.scalacheck.rng.Seed
+    import ShardpackFormat.KeyOrd
+    // ASCII, U+E000..U+FFFF and supplementary code points: UTF-16 order
+    // sorts the third class below the second, code-point order above it
+    val cp = Gen.oneOf(Gen.choose(0x61, 0x7a), Gen.choose(0xE000, 0xFFFF),
+      Gen.choose(0x10000, 0x10FFFF))
+    val keyGen = Gen.choose(1, 3).flatMap(n => Gen.listOfN(n, cp))
+      .map(cps => new String(cps.toArray, 0, cps.length))
+    val gen = for {
+      keys <- Gen.containerOfN[Set, String](40, keyGen)
+      absent <- Gen.listOfN(4, keyGen)
+    } yield (keys ++ Set("\uE000", "\uF000", "\uD83D\uDE00"), absent)
+    val catRoot = tmp()
+    spark.conf.set("spark.sql.catalog.spkord", classOf[ShardpackCatalog].getName)
+    spark.conf.set("spark.sql.catalog.spkord.root", catRoot)
+    // one shard, and a few key-sorted shards with disjoint envelopes
+    val layouts = Seq[(String, org.apache.spark.sql.DataFrame => DataFrameWriter[Row])](
+      "one" -> (_.coalesce(1).write),
+      "sorted" -> (_.write.option("sortedWrite", true).option("targetShards", 3)))
+    (0 until 2).foreach { seed =>
+      gen.apply(Gen.Parameters.default, Seed(seed.toLong)).foreach { case (keys, absent) =>
+        val sorted = keys.toSeq.sorted(KeyOrd)
+        layouts.foreach { case (layout, writer) =>
+          val name = s"${layout}_$seed"
+          val dir = s"$catRoot/$name"
+          import spark.implicits._
+          writer(sorted.toDF("key").select(col("key"),
+            encode(col("key"), "UTF-8").as("metadata"),
+            array(struct(lit("k.txt").as("file_name"), lit("text/plain").as("content_type"),
+              lit("").as("encoding"), encode(col("key"), "UTF-8").as("data"))).as("entries")))
+            .format("shardpack").mode("append").save(dir)
+          Seq(false, true).foreach { indexed =>
+            if (indexed) ShardpackIndex.build(spark, dir)
+            val ctx = s"seed=$seed layout=$layout sidecar=$indexed"
+            val df = spark.read.format("shardpack").load(dir)
+            val all = df.select("key").collect().map(_.getString(0)).toSeq.sorted(KeyOrd)
+            assert(all == sorted, ctx)
+            def rowPath(c: org.apache.spark.sql.Column) = df.filter(c).select("key", "entries")
+              .collect().map(_.getString(0)).toSeq.sorted(KeyOrd)
+            def colPath(c: org.apache.spark.sql.Column) = df.filter(c).select("key")
+              .collect().map(_.getString(0)).toSeq.sorted(KeyOrd)
+            def check(c: org.apache.spark.sql.Column, want: Seq[String], what: String): Unit = {
+              assert(rowPath(c) == want, s"$ctx row path $what")
+              assert(colPath(c) == want, s"$ctx columnar path $what")
+            }
+            val probes = Seq("\uE000", "\uF000", "\uD83D\uDE00", sorted(sorted.size / 2)) ++ absent
+            probes.foreach(k => check(col("key") === k, all.filter(_ == k), s"key = $k"))
+            check(col("key").isin(probes: _*), all.filter(probes.contains), "IN")
+            val (lo, hi) = (sorted(sorted.size / 4), sorted(3 * sorted.size / 4))
+            check(col("key") >= lo && col("key") < hi,
+              all.filter(k => KeyOrd.gteq(k, lo) && KeyOrd.lt(k, hi)), s"[$lo, $hi)")
+            val agg = df.agg(count(lit(1)), min(col("key")), max(col("key"))).collect()(0)
+            assert((agg.getLong(0), agg.getString(1), agg.getString(2)) ==
+              ((all.size.toLong, all.head, all.last)), s"$ctx pushed count/min/max")
+            // CALL first: ShardpackOps.stats builds a missing sidecar
+            val call = spark.sql(s"CALL spkord.system.stats('$name')").collect()(0)
+            assert((call.getLong(1), call.getString(3), call.getString(4)) ==
+              ((all.size.toLong, all.head, all.last)), s"$ctx CALL system.stats")
+            val ops = ShardpackOps.stats(spark, dir).collect()(0)
+            assert((ops.getLong(1), ops.getString(3), ops.getString(4)) ==
+              ((all.size.toLong, all.head, all.last)), s"$ctx ShardpackOps.stats")
+          }
+        }
       }
     }
   }

@@ -16,7 +16,8 @@ import StreamingOps._
 object StreamFault {
   /** When set, the next rename whose DESTINATION starts with this prefix
     * throws once (then disarms) — simulates a crash mid-generation-swap,
-    * after the staging write committed but before all shards renamed in.
+    * while the batch commit promotes the replacement shards into the live
+    * bucket, before the old generation is retired.
     */
   @volatile var renameFaultPrefix: String = null
 }
@@ -24,7 +25,7 @@ object StreamFault {
 /** `faultfs://` — local FS whose rename can be armed to fail once against a
   * chosen destination prefix. Used to crash a streaming upsert's merge at
   * the nastiest point: mid-swap, with the replacement generation partially
-  * renamed into the live bucket.
+  * promoted into the live bucket.
   */
 class FaultFileSystem extends RawLocalFileSystem {
   override def getScheme: String = "faultfs"
@@ -129,12 +130,12 @@ class StreamingFaultSpec extends AnyFunSuite with SparkTestBase {
     q1.processAllAvailable()
     q1.stop()
 
-    // epoch 1's merge dies ON THE RENAME INTO THE LIVE BUCKET: the
-    // replacement generation is committed in staging, zero-or-some shards
-    // already swapped in, old shards still present. The prefix must be the
+    // epoch 1's merge dies ON THE RENAME INTO THE LIVE BUCKET: the write
+    // goes straight into the bucket, so the fault fires on the batch
+    // commit's first promotion of a staged `.graft-tmp-` shard into it —
+    // old shards still present, none retired. The prefix must be the
     // NORMALIZED path (Path.toString collapses file-style triple slashes)
-    // plus a trailing slash so it matches only swap renames into the live
-    // dir, not the staging write's internal temp promotions next door.
+    // plus a trailing slash so it matches only renames into the live dir.
     StreamFault.renameFaultPrefix = new Path(dir).toString + "/"
     in.addData(ev(9, ts(2), 1, 9.0), ev(3, ts(2), 3, 3.0))
     val q2 = start()
@@ -151,13 +152,16 @@ class StreamingFaultSpec extends AnyFunSuite with SparkTestBase {
     assert(snapshot(dir) === expected,
       "corpus after mid-swap crash + replay diverged from the no-fault run")
 
-    // the crashed attempt's staging dir is an invisible sibling leak;
-    // vacuum with age guard 0 sweeps it
+    // the crashed attempt's staged temps are invisible leaks; vacuum with
+    // age guard 0 sweeps them, and no sibling staging dir is ever made
     val parent = new Path(dir).getParent
     val fs = parent.getFileSystem(spark.sparkContext.hadoopConfiguration)
     ShardpackOps.vacuum(dir, olderThanMs = 0L)
     val leftovers = fs.listStatus(parent).map(_.getPath.getName)
       .filter(_.matches("bucket-(rewrite|compact|merge)-[0-9a-f]{8}"))
     assert(leftovers.isEmpty, s"staging leak survived vacuum: ${leftovers.mkString(",")}")
+    val temps = fs.listStatus(new Path(dir)).map(_.getPath.getName)
+      .filter(_.startsWith(".graft-tmp-"))
+    assert(temps.isEmpty, s"staged temps survived vacuum: ${temps.mkString(",")}")
   }
 }
