@@ -2,15 +2,13 @@ package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
-/** Central lifecycle registry for session-persisted DataFrames — the
-  * generalization of the ad-hoc memo-and-release pattern that grew one
-  * family at a time (tok, dsirDoc, vocab, signatures, pair frames, cell
-  * layouts…; VERDICT r9 "what's wrong" #2). Two lifecycles:
+/** Central lifecycle registry for session-persisted DataFrames. Two
+  * lifecycles:
   *
-  *  - [[tracked]]: session-lived shared intermediates (the `build:*`
-  *    memo families). One frame per (session, family, tag); registering
-  *    the same slot again releases the previous occupant. Released in
-  *    bulk by [[releaseFamily]]/[[releaseAll]].
+  *  - [[tracked]]: session-lived shared intermediates. Every tracked frame
+  *    comes from a frame [[Memo]] (family = the memo's name, tag = the
+  *    dir); registering the same slot again releases the previous
+  *    occupant. Released by [[releaseSlot]]/[[releaseFamily]].
   *  - [[transient]]: per-call frames with no natural memo key (a pipeline
   *    scoring a live frame). Each family keeps at most [[TransientCap]]
   *    live frames — registering past the cap unpersists the OLDEST
@@ -37,25 +35,13 @@ object FrameRegistry {
     * Idempotent per slot: a re-registration releases the previous frame.
     */
   def tracked(s: SparkSession, family: String, df: DataFrame,
-      tag: String = ""): DataFrame = {
-    sweepStopped()
+      tag: String): DataFrame = {
+    // stopped sessions' slots would pin the session and every frame plan
+    Memo.dropStopped(frames)(_.session)
     val out = df.persist()
     val prev = frames.put(Slot(s, family, tag), out)
     if (prev != null && (prev ne out)) prev.unpersist()
     out
-  }
-
-  /** Drop entries whose session has stopped — their RDDs are already gone
-    * with the SparkContext, but the map would otherwise pin the session
-    * and every frame plan forever (a registry leak across session
-    * restarts, e.g. spec suites). Called from every registration; cheap
-    * (map-sized scan of `isStopped` flags, no Spark work).
-    */
-  private def sweepStopped(): Unit = {
-    import scala.jdk.CollectionConverters._
-    frames.keySet.asScala
-      .filter(_.session.sparkContext.isStopped)
-      .foreach(frames.remove)
   }
 
   /** Persist + register a per-call frame under a bounded family. */
@@ -105,10 +91,6 @@ object FrameRegistry {
     }
     ks.size
   }
-
-  /** Unpersist + drop every registered frame of the session. */
-  def releaseAll(s: SparkSession): Int =
-    slots(s).map(_.family).distinct.map(releaseFamily(s, _)).sum
 
   /** Live registered frames with their cached plan sizes (bytes; the
     * optimizer's post-materialization estimate for cached relations).

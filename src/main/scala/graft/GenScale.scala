@@ -42,7 +42,7 @@ object GenScale {
     * hardcoded sf0.1 size — any src dir replicates without collisions.
     */
   private def stride(df: DataFrame, key: String): Long =
-    df.agg(max(col(key)).cast(LongType)).head.getLong(0) + 1L
+    df.agg(max(col(key)).cast(LongType)).head().getLong(0) + 1L
 
   /** Cross-join with the replica index r (0..replicas-1). */
   private def withR(df: DataFrame, spark: SparkSession, replicas: Int): DataFrame =

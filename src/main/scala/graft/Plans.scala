@@ -49,6 +49,7 @@ object Plans {
     }
     java.nio.file.Files.write(java.nio.file.Paths.get(path),
       mapper.writerWithDefaultPrettyPrinter().writeValueAsBytes(root))
+    ()
   }
 
   /** Drifts: (query, fingerprint-now, fingerprint-committed). A query

@@ -86,6 +86,7 @@ object ShuffleBudget {
     }
     java.nio.file.Files.write(java.nio.file.Paths.get(path),
       mapper.writerWithDefaultPrettyPrinter().writeValueAsBytes(root))
+    ()
   }
 
   /** Breaches: (query, measured_mb, budget_mb). Queries without a budget

@@ -25,13 +25,45 @@ object SparkEntry {
       llm.CompositeQueries.queries ++
       llm.TextRankQueries.queries
 
-  /** Shared-intermediate builds (memoized pair graphs, LSH/IVF index
-    * state, BPE table), charged by Bench as explicit `build:*` stages so
-    * per-query times are ordering-independent.
+  /** Bench's `build:*` stages, in run order: each shared intermediate
+    * ([[Memo]]) is filled by an explicit named stage before any query
+    * runs, so its cost is charged to the stage and per-query times are
+    * ordering-independent — previously each fill landed on whichever
+    * consumer ran first (dedup_minhash_cluster reported 0.1 s vs 8.2 s
+    * across artifacts on fill ordering alone). A fill is idempotent, so
+    * Bench runs each stage exactly once. Memos no stage names fill inside
+    * the stage (or query) whose build reads them.
     */
+  def stages: Seq[Memo.Stage] = {
+    import llm.{LlmQueries => L, TextRankQueries => T}
+    Seq(
+      llm.ProfileStats.profiles.stage,
+      L.interCountsStage,
+      L.goodPairs.stage,
+      L.containPairsStage,
+      L.minhashSig.stage,
+      L.minhashPairs.stage,
+      L.incrementalStage,
+      L.lshFrame.stage,
+      L.trainedCodebook.stage,
+      L.kmeansRefined.stage,
+      L.ivfCellLayout.stage,
+      L.bpeTrained.stage,
+      L.imageHashFrame.stage,
+      L.imageEmbedFrame.stage,
+      L.videoHashFrame.stage,
+      L.audioHashFrame.stage,
+      T.tok.stage,
+      T.vocabStats.stage,
+      // the one corpus pass also yields the fuzzy block profile: a second
+      // stage name on the same memo (whichever stage runs first pays)
+      Memo.Stage("fuzzy_stats", llm.ProfileStats.profiles)(llm.ProfileStats.profiles.fill),
+      T.dsirDoc.stage,
+      T.linModel.stage)
+  }
+
   def builds: Seq[(String, (SparkSession, String) => Unit)] =
-    (llm.LlmQueries.sharedBuilds ++ llm.TextRankQueries.sharedBuilds)
-      .map { case (n, f) => s"build:$n" -> f }
+    stages.map(st => s"build:${st.name}" -> st.fill)
 
   /** Flagship query on /root/testdata/sf0.001; driver smoke-checks rows>0. */
   def entry(spark: SparkSession): DataFrame = {

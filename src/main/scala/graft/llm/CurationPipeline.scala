@@ -375,7 +375,7 @@ final class CurationPipeline private (df: DataFrame, val lineage: Seq[String]) {
       org.apache.spark.sql.functions.size(split(col("text"), " "))
         .cast(LongType).as("__toks"))
     val tot = tok.groupBy(col("lang")).agg(sum(col("__toks")).as("__total"))
-    val budgetRow = tot.agg(min(col("__total"))).head
+    val budgetRow = tot.agg(min(col("__total"))).head()
     // empty upstream frame (every doc filtered out earlier, or lang all
     // NULL): min is NULL — nothing to rebalance, pass the frame through
     // rather than NPE at pipeline-construction time
@@ -429,7 +429,7 @@ final class CurationPipeline private (df: DataFrame, val lineage: Seq[String]) {
         // keys and corrupted ids on read-back at corpus scale.
         concat(lit("doc_"), lpad(col("doc_id").cast(StringType), 19, "0")).as("key"),
         (if (meta.isEmpty) lit(null).cast(BinaryType)
-         else to_json(struct(meta.map(col): _*)).cast(BinaryType)).as("metadata"),
+         else to_json(struct(meta.toIndexedSeq.map(col): _*)).cast(BinaryType)).as("metadata"),
         array(struct(
           lit("text.txt").as("file_name"), lit("text/plain").as("content_type"),
           lit("").as("encoding"), col("text").cast(BinaryType).as("data"))).as("entries"))

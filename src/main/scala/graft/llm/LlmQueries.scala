@@ -136,8 +136,41 @@ object LlmQueries {
     * never build this frame; their candidate generation is metric- and
     * threshold-specific by construction).
     */
-  private val interMemo =
-    new graft.SessionMemo[(SparkSession, String), DataFrame]()
+  private[graft] val interCounts = graft.Memo.frame("inter_counts") { (s, d) =>
+    val docs = documents(s, d)
+    // interCounts is only built on the naive-dispatch path, where the
+    // profile (memoized, already paid by the blowup dispatch) is in
+    // hand — its Σdf² sizes the pair stage. The explicit exchange only
+    // engages when the derived width EXCEEDS the session layout: at or
+    // below it the planner's own w-exchange is identical and cheaper
+    // (no separate repartition node).
+    val base = s.conf.get("spark.sql.shuffle.partitions", "32").toInt
+    val stats = ProfileStats.profiles(s, d).shingle
+    val derived = pairBuildPartitions(s, stats.sumDf2)
+    val parts = if (derived > base) derived else 0
+    // shuffled-hash dispatch: the WORST partition's build side — its
+    // uniform share of the token rows plus the hottest shingle's entire
+    // df (all of which hashes to one partition) — must fit the
+    // memory-derived cap (see shjSafe / shjBuildRowsCap)
+    val shj = shjSafe(stats.tokens, stats.maxDf, math.max(base, derived),
+      shjBuildRowsCap(s, InterShjBytesPerRow))
+    if (docCount(s, d) <= InterBroadcastDocsCutover)
+      interCountsBroadcast(docs, parts, shj)
+    else interCountsCarryN(docs, parts, shj)
+  }
+
+  /** `build:inter_counts`: the metric-independent candidate frame both
+    * pair families project, built once so the jaccard/contain stages
+    * report their own marginal (filter-only) cost. No-op on heavy-tailed
+    * corpora, where the dispatch routes both families to their prefix
+    * paths instead.
+    */
+  private[graft] val interCountsStage =
+    graft.Memo.Stage("inter_counts", interCounts) { (s, d) =>
+      if (ProfileStats.profiles(s, d).shingle.blowup <= JaccardBlowupCutover)
+        interCounts.fill(s, d)
+    }
+
   /** Dispatch bound for [[interCounts]]' two physically different (but
     * row-identical — SharedInterSpec pins it) builds: up to this many docs
     * the per-doc count dim (16 B/doc → 64 MB here) is FORCED broadcast and
@@ -155,10 +188,8 @@ object LlmQueries {
   /** Corpus doc count, memoized per (session, dir) — parquet metadata
     * count, one cheap job, shared by every dispatch that needs it.
     */
-  private val docCountMemo = new graft.SessionMemo[
-    (SparkSession, String), java.lang.Long]()
-  private[llm] def docCount(s: SparkSession, d: String): Long =
-    docCountMemo.computeIfAbsent((s, d), _ => documents(s, d).count()).longValue()
+  private[llm] val docCount =
+    graft.Memo.value("doc_count") { (s, d) => documents(s, d).count() }
 
   /** Pair-stage task count for the [[interCounts]] build. The inverted-
     * index self-join emits ~Σdf²/2 candidate rows into a map-side partial
@@ -304,49 +335,6 @@ object LlmQueries {
         min(col("a.n")).as("na"), min(col("b.n")).as("nb"))
   }
 
-  private[llm] def interCounts(s: SparkSession, d: String): DataFrame =
-    interMemo.computeIfAbsent((s, d), _ => {
-      val docs = documents(s, d)
-      // interCounts is only built on the naive-dispatch path, where the
-      // profile (memoized, already paid by the blowup dispatch) is in
-      // hand — its Σdf² sizes the pair stage. The explicit exchange only
-      // engages when the derived width EXCEEDS the session layout: at or
-      // below it the planner's own w-exchange is identical and cheaper
-      // (no separate repartition node).
-      val base = s.conf.get("spark.sql.shuffle.partitions", "32").toInt
-      val stats = docShingleStats(s, d)
-      val derived = pairBuildPartitions(s, stats.sumDf2)
-      val parts = if (derived > base) derived else 0
-      // shuffled-hash dispatch: the WORST partition's build side — its
-      // uniform share of the token rows plus the hottest shingle's entire
-      // df (all of which hashes to one partition) — must fit the
-      // memory-derived cap (see shjSafe / shjBuildRowsCap)
-      val shj = shjSafe(stats.tokens, stats.maxDf, math.max(base, derived),
-        shjBuildRowsCap(s, InterShjBytesPerRow))
-      val frame =
-        if (docCount(s, d) <= InterBroadcastDocsCutover)
-          interCountsBroadcast(docs, parts, shj)
-        else interCountsCarryN(docs, parts, shj)
-      graft.FrameRegistry.tracked(s, "inter_counts", frame, d)
-    })
-
-  /** Drop the parent candidate frame's cache once BOTH filtered pair
-    * families are materialized (Bench's jaccard_pairs + contain_pairs
-    * build stages force them): the unthresholded frame can dwarf the
-    * good-pair frames at scale and no registered consumer reads it after
-    * the two projections exist. The memo entry stays, so an off-registry
-    * threshold still gets a correct (recomputed-lineage) answer. On the
-    * lazy consumer path (Verify, ad-hoc use) nothing forces the children,
-    * so the parent stays cached — unpersisting before a child
-    * materializes would recompute the whole self-join.
-    */
-  private[llm] def releaseInterCounts(s: SparkSession, d: String): Unit = {
-    // slot-scoped: the family holds one frame per dir, and a multi-dir
-    // session must not lose sibling dirs' caches when one dir's pair
-    // children materialize
-    graft.FrameRegistry.releaseSlot(s, "inter_counts", d); ()
-  }
-
   /** Session-scoped materialized intermediate over [[jaccardPairs]].
     *
     * Four registered queries (dedup_ngram_jaccard, dedup_cluster,
@@ -356,10 +344,10 @@ object LlmQueries {
     * candidate pairs), while its OUTPUT is tiny (good pairs only), so the
     * first evaluation caches the pair graph and the rest reuse it — the
     * same build-once-share-across-reads contract as the reference's bucket
-    * index (`/root/reference/src/index/bucket.rs:85-117`). Sound because
-    * the inputs are immutable datasets (the shardpack write model: shards
-    * append, never mutate), keyed by (session, dir, threshold) so distinct
-    * sessions or scale factors never cross-contaminate. `persist()` is
+    * index. Sound because the inputs are immutable datasets (the shardpack
+    * write model: shards append, never mutate), keyed by (session, dir) so
+    * distinct sessions or scale factors never cross-contaminate; the
+    * threshold is the registry's one [[JaccardThreshold]]. `persist()` is
     * lazy: plan audits still see the full join lineage and nothing runs at
     * plan time.
     *
@@ -369,41 +357,58 @@ object LlmQueries {
     * SharedInterSpec pins all three paths equal); heavy-tailed corpora
     * dispatch to [[jaccardPairsPrefix]] exactly as before.
     */
-  private val pairMemo =
-    new graft.SessionMemo[(SparkSession, String, Double), DataFrame]()
-  private[llm] def goodPairs(s: SparkSession, d: String, t: Double): DataFrame =
-    pairMemo.computeIfAbsent((s, d, t), _ => {
-      val frame =
-        if (docShingleStats(s, d).blowup <= JaccardBlowupCutover) {
-          val jac = col("inter").cast(DoubleType) /
-            (col("na") + col("nb") - col("inter"))
-          interCounts(s, d).filter(jac >= t)
-            .select($"a_id", $"b_id", $"inter", jac.as("jac"))
-        } else jaccardPairsPrefix(documents(s, d), t)
-      graft.FrameRegistry.tracked(s, "jaccard_pairs", frame, d)
-    })
+  private[graft] val goodPairs = graft.Memo.frame("jaccard_pairs") { (s, d) =>
+    val t = JaccardThreshold
+    if (ProfileStats.profiles(s, d).shingle.blowup <= JaccardBlowupCutover) {
+      val jac = col("inter").cast(DoubleType) /
+        (col("na") + col("nb") - col("inter"))
+      interCounts(s, d).filter(jac >= t)
+        .select($"a_id", $"b_id", $"inter", jac.as("jac"))
+    } else jaccardPairsPrefix(documents(s, d), t)
+  }
+
+  /** The exact-Jaccard and containment thresholds of the registry's pair
+    * graphs ([[goodPairs]], [[goodContainPairs]]) — every consumer reads
+    * the graph at these, so the memos key on (session, dir) alone.
+    */
+  private val JaccardThreshold = 0.5
+  private val ContainThreshold = 0.8
 
   /** Containment-pair twin of [[goodPairs]] — same build-once-share
-    * contract, separate map because the metric differs (inter/min vs
-    * inter/union): a (session, dir, threshold) key collision between the
-    * two families would silently serve the wrong pair graph. Round-5
+    * contract, separate memo because the metric differs (inter/min vs
+    * inter/union). Round-5
     * verdict flagged the asymmetry: the shingle *profile* was memoized but
     * the containment pair frame was rebuilt per invocation (2.85 s warm,
     * the registry's slowest query) while its Jaccard siblings read cache.
     * Naive dispatch shares [[interCounts]] with the Jaccard family.
     */
-  private val containPairMemo =
-    new graft.SessionMemo[(SparkSession, String, Double), DataFrame]()
-  private[llm] def goodContainPairs(s: SparkSession, d: String, t: Double): DataFrame =
-    containPairMemo.computeIfAbsent((s, d, t), _ => {
-      val frame =
-        if (docShingleStats(s, d).blowup <= JaccardBlowupCutover) {
-          val cont = col("inter").cast(DoubleType) / least(col("na"), col("nb"))
-          interCounts(s, d).filter(cont >= t)
-            .select($"a_id", $"b_id", $"inter", cont.as("cont"))
-        } else containmentPairsPrefix(documents(s, d), t)
-      graft.FrameRegistry.tracked(s, "contain_pairs", frame, d)
-    })
+  private[graft] val goodContainPairs = graft.Memo.frame("contain_pairs") { (s, d) =>
+    val t = ContainThreshold
+    if (ProfileStats.profiles(s, d).shingle.blowup <= JaccardBlowupCutover) {
+      val cont = col("inter").cast(DoubleType) / least(col("na"), col("nb"))
+      interCounts(s, d).filter(cont >= t)
+        .select($"a_id", $"b_id", $"inter", cont.as("cont"))
+    } else containmentPairsPrefix(documents(s, d), t)
+  }
+
+  /** `build:contain_pairs`, which then drops the parent candidate
+    * frame's cache: BOTH filtered pair families are materialized now
+    * (jaccard_pairs is the stage before), the unthresholded frame can
+    * dwarf the good-pair frames at scale, and no registered consumer reads
+    * it after the two projections exist. The memo entry stays, so a later
+    * read still gets a correct (recomputed-lineage) answer. On the lazy
+    * consumer path (Verify, ad-hoc use) nothing forces the children, so
+    * the parent stays cached — unpersisting before a child materializes
+    * would recompute the whole self-join.
+    */
+  private[graft] val containPairsStage =
+    graft.Memo.Stage("contain_pairs", goodContainPairs) { (s, d) =>
+      goodContainPairs.fill(s, d)
+      // slot-scoped: the family holds one frame per dir, and a multi-dir
+      // session must not lose sibling dirs' caches when one dir's pair
+      // children materialize
+      graft.FrameRegistry.releaseSlot(s, interCounts.name, d); ()
+    }
 
   /** PREFIX-FILTERED exact Jaccard pairs (AllPairs/PPJoin family): order
     * every doc's shingles by a global total order (document frequency asc,
@@ -483,7 +488,7 @@ object LlmQueries {
     jaccardPairsAuto(docs, t, shingleStats(docs))
 
   /** [[jaccardPairsAuto]] with a caller-supplied profile (see
-    * [[docShingleStats]]).
+    * [[ProfileStats.profiles]]).
     */
   def jaccardPairsAuto(docs: DataFrame, t: Double, stats: ShingleStats): DataFrame =
     if (stats.blowup <= JaccardBlowupCutover) jaccardPairs(docs, t)
@@ -567,18 +572,6 @@ object LlmQueries {
     if (stats.blowup <= JaccardBlowupCutover) containmentPairs(docs, t)
     else containmentPairsPrefix(docs, t)
 
-  /** Memoized shingle-frequency profile of the `documents` table, keyed like
-    * [[goodPairs]] — the dispatch statistic is a property of the immutable
-    * input dataset, so one O(T) pass per (session, dir) serves every
-    * df-dispatched query. Since r13 the pass is SHARED with the fuzzy
-    * block profile ([[ProfileStats]]): one corpus read fills both memos,
-    * so whichever of `build:shingle_stats` / `build:fuzzy_stats` runs
-    * first pays the combined (≈ shingle-sized) cost and the other reads
-    * the memo.
-    */
-  private[llm] def docShingleStats(s: SparkSession, d: String): ShingleStats =
-    ProfileStats.of(s, d).shingle
-
   /** Shared oracle for dedup_cluster AND its distributed twin
     * [[ScaleDedup]].dedup_cluster_dist: recursive-CTE transitive closure of
     * the exact-Jaccard ≥ 0.5 pair graph, min label per component.
@@ -609,35 +602,31 @@ object LlmQueries {
     * join runs once, dedup_minhash and dedup_minhash_cluster both read the
     * cached (tiny) pair graph.
     */
-  private val minhashMemo =
-    new graft.SessionMemo[(SparkSession, String), DataFrame]()
-  private[llm] def minhashPairs(s: SparkSession, d: String): DataFrame =
-    minhashMemo.computeIfAbsent((s, d), _ => {
-      val sig = minhashSig(s, d)
-      // band rows are EXACTLY 8·docs (every doc emits one row per band),
-      // so the BandShjMinRows lower bound is decidable from the memoized
-      // doc count alone — below it the planner's broadcast wins and the
-      // bucket profile job would be pure overhead (measured: the profile
-      // added ~2 s to build:minhash_pairs at sf0.1 where the gate then
-      // kept the broadcast anyway)
-      val rows = 8L * docCount(s, d)
-      val shj = rows >= BandShjMinRows && {
-        // band-bucket profile for the shuffled-hash dispatch: one
-        // vocab-sized map-combine aggregate over the (doc_id, band, bh)
-        // rows — O(8·docs) against the band join's O(Σ bucket²) candidate
-        // volume. maxBucket is the skew signal shjSafe needs: a near-dup
-        // cluster of c docs is ONE (band, bh) key of c build rows, all of
-        // which hash to a single partition of the build relation.
-        val prof = bandedFrame(sig).groupBy($"band", $"bh")
-          .agg(count(lit(1)).as("c"))
-          .agg(max($"c").cast(LongType)).head()
-        val maxBucket = if (prof.isNullAt(0)) 0L else prof.getLong(0)
-        val base = s.conf.get("spark.sql.shuffle.partitions", "32").toInt
-        shjSafe(rows, maxBucket, base, shjBuildRowsCap(s, BandShjBytesPerRow))
-      }
-      graft.FrameRegistry.tracked(s, "minhash_pairs",
-        minhashPairsRaw(sig, shj), d)
-    })
+  private[graft] val minhashPairs = graft.Memo.frame("minhash_pairs") { (s, d) =>
+    val sig = minhashSig(s, d)
+    // band rows are EXACTLY 8·docs (every doc emits one row per band),
+    // so the BandShjMinRows lower bound is decidable from the memoized
+    // doc count alone — below it the planner's broadcast wins and the
+    // bucket profile job would be pure overhead (measured: the profile
+    // added ~2 s to build:minhash_pairs at sf0.1 where the gate then
+    // kept the broadcast anyway)
+    val rows = 8L * docCount(s, d)
+    val shj = rows >= BandShjMinRows && {
+      // band-bucket profile for the shuffled-hash dispatch: one
+      // vocab-sized map-combine aggregate over the (doc_id, band, bh)
+      // rows — O(8·docs) against the band join's O(Σ bucket²) candidate
+      // volume. maxBucket is the skew signal shjSafe needs: a near-dup
+      // cluster of c docs is ONE (band, bh) key of c build rows, all of
+      // which hash to a single partition of the build relation.
+      val prof = bandedFrame(sig).groupBy($"band", $"bh")
+        .agg(count(lit(1)).as("c"))
+        .agg(max($"c").cast(LongType)).head()
+      val maxBucket = if (prof.isNullAt(0)) 0L else prof.getLong(0)
+      val base = s.conf.get("spark.sql.shuffle.partitions", "32").toInt
+      shjSafe(rows, maxBucket, base, shjBuildRowsCap(s, BandShjBytesPerRow))
+    }
+    minhashPairsRaw(sig, shj)
+  }
 
   /** Memoized 32-perm signature frame over the driver tables — shared by
     * the band join ([[minhashPairs]]) and the band-calibration sweep
@@ -645,11 +634,9 @@ object LlmQueries {
     * expensive stage, and every banding config reads the SAME signatures
     * (that is what makes the sweep a calibration, not three experiments).
     */
-  private val sigMemo =
-    new graft.SessionMemo[(SparkSession, String), DataFrame]()
-  private[llm] def minhashSig(s: SparkSession, d: String): DataFrame =
-    sigMemo.computeIfAbsent((s, d), _ =>
-      graft.FrameRegistry.tracked(s, "minhash_sig", minhashSigRaw(documents(s, d)), d))
+  private[graft] val minhashSig = graft.Memo.frame("minhash_sig") { (s, d) =>
+    minhashSigRaw(documents(s, d))
+  }
 
   /** Shared 6-plane LSH frame (vec_id, label, v, bkt, n2), materialized
     * behind an exchange and memoized per (session, dir) — the "build the
@@ -659,20 +646,17 @@ object LlmQueries {
     * two engines, and a drifted copy is a silent oracle divergence.
     */
   private val LshPlanes = 6
-  private val lshMemo =
-    new graft.SessionMemo[(SparkSession, String), DataFrame]()
-  private def lshFrame(s: SparkSession, d: String): DataFrame =
-    lshMemo.computeIfAbsent((s, d), _ => {
-      val e0 = embeddings(s, d)
-        .select($"vec_id", $"label", quantize($"embedding").as("v"))
-        .withColumn("n2", qnorm2($"v"))
-        .repartition(col("vec_id"))
-      val bucket = AnnSigns.take(LshPlanes).foldLeft(lit(0L): Column) { (acc, sv) =>
-        val proj = qdot($"v", array(sv.map(lit(_)): _*))
-        acc * 2 + when(proj > 0, lit(1L)).otherwise(lit(0L))
-      }
-      graft.FrameRegistry.tracked(s, "lsh_frame", e0.withColumn("bkt", bucket), d)
-    })
+  private[graft] val lshFrame = graft.Memo.frame("lsh_frame") { (s, d) =>
+    val e0 = embeddings(s, d)
+      .select($"vec_id", $"label", quantize($"embedding").as("v"))
+      .withColumn("n2", qnorm2($"v"))
+      .repartition(col("vec_id"))
+    val bucket = AnnSigns.take(LshPlanes).foldLeft(lit(0L): Column) { (acc, sv) =>
+      val proj = qdot($"v", array(sv.toIndexedSeq.map(lit(_)): _*))
+      acc * 2 + when(proj > 0, lit(1L)).otherwise(lit(0L))
+    }
+    e0.withColumn("bkt", bucket)
+  }
 
   /** DuckDB fold mirroring lshFrame's bucket column. */
   private def lshBucketSql: String =
@@ -730,7 +714,7 @@ object LlmQueries {
     // re-running the 64-element qnorm2 aggregate 16× PER ROW (measured ~2×
     // assignment cost at sf1 before this)
     val centLit = array(cents.map { case (cid, cv) =>
-      struct(lit(cid).as("cid"), array(cv.map(lit(_)): _*).as("cv"),
+      struct(lit(cid).as("cid"), array(cv.toIndexedSeq.map(lit(_)): _*).as("cv"),
         lit(cv.map(x => x * x).sum).as("cn2"))
     }: _*)
     -array_max(transform(centLit, c => struct(
@@ -784,42 +768,35 @@ object LlmQueries {
   }
 
   /** dedup_incremental's asymmetric (batch ⋈ corpus) band-join pipeline,
-    * memoized per (session, dir) like [[minhashPairs]] so the persisted
-    * signature frame is allocated once, not per invocation.
+    * memoized per (session, dir) like [[minhashPairs]]. It reads the
+    * [[minhashSig]] frame: a second memo over the same plan would share
+    * Spark's one cache entry while `FrameRegistry` counted it twice.
     */
-  private val incrMemo =
-    new graft.SessionMemo[(SparkSession, String), DataFrame]()
-  private def incrementalPairs(s: SparkSession, d: String): DataFrame =
-    incrMemo.computeIfAbsent((s, d), _ => {
-      val numHashes = 32
-      val bands = 8
-      val rows = numHashes / bands
-      val tok = shingleTok(documents(s, d)).withColumn("x", H.wordHash($"w"))
-      val sigCols = (0 until numHashes).map(i => min(H.affine(i, $"x")).as(s"h$i"))
-      val sig = graft.FrameRegistry.tracked(s, "incremental_sigs",
-        tok.groupBy($"doc_id")
-          .agg(sigCols.head, sigCols.tail: _*)
-          .select($"doc_id",
-            array((0 until numHashes).map(i => col(s"h$i")): _*).as("sig")), d)
-      val banded = sig.select($"doc_id",
-          posexplode(array((0 until bands).map(b =>
-            H.foldHash((0 until rows).map(r => col("sig")(b * rows + r)))): _*)))
-        .withColumnRenamed("pos", "band").withColumnRenamed("col", "bh")
-      val cand = banded.filter($"doc_id" % 2 === 1).as("b")
-        .join(banded.filter($"doc_id" % 2 === 0).as("c"),
-          col("b.band") === col("c.band") && col("b.bh") === col("c.bh"))
-        .select(col("b.doc_id").as("batch_id"), col("c.doc_id").as("corpus_id"))
-        .distinct()
-      cand
-        .join(sig.select($"doc_id".as("batch_id"), $"sig".as("sa")), Seq("batch_id"))
-        .join(sig.select($"doc_id".as("corpus_id"), $"sig".as("sb")), Seq("corpus_id"))
-        .withColumn("est_jac",
-          aggregate(zip_with($"sa", $"sb", (x, y) => when(x === y, 1).otherwise(0)),
-            lit(0), (acc, x) => acc + x).cast(DoubleType) / numHashes)
-        .filter($"est_jac" >= 0.5)
-        .select($"batch_id", $"corpus_id", $"est_jac")
-        .transform(graft.FrameRegistry.tracked(s, "incremental_pairs", _, d))
-    })
+  private[graft] val incrementalPairs = graft.Memo.frame("incremental_pairs") { (s, d) =>
+    val sig = minhashSig(s, d)
+    val banded = bandedFrame(sig)
+    val cand = banded.filter($"doc_id" % 2 === 1).as("b")
+      .join(banded.filter($"doc_id" % 2 === 0).as("c"),
+        col("b.band") === col("c.band") && col("b.bh") === col("c.bh"))
+      .select(col("b.doc_id").as("batch_id"), col("c.doc_id").as("corpus_id"))
+      .distinct()
+    cand
+      .join(sig.select($"doc_id".as("batch_id"), $"sig".as("sa")), Seq("batch_id"))
+      .join(sig.select($"doc_id".as("corpus_id"), $"sig".as("sb")), Seq("corpus_id"))
+      .withColumn("est_jac",
+        aggregate(zip_with($"sa", $"sb", (x, y) => when(x === y, 1).otherwise(0)),
+          lit(0), (acc, x) => acc + x).cast(DoubleType) / MinhashPerms)
+      .filter($"est_jac" >= 0.5)
+      .select($"batch_id", $"corpus_id", $"est_jac")
+  }
+
+  /** `build:incremental_sigs` fills the PAIRS frame, not only the
+    * [[minhashSig]] signatures it reads: dedup_incremental reads the
+    * pairs, so forcing them here keeps the pair build's time and shuffle
+    * on this stage instead of the query.
+    */
+  private[graft] val incrementalStage =
+    graft.Memo.Stage("incremental_sigs", incrementalPairs)(incrementalPairs.fill)
 
   /** The band-join pipeline over an arbitrary document frame (doc_id,
     * text) — the memoized entry above binds it to the driver tables;
@@ -849,8 +826,16 @@ object LlmQueries {
     * 16 B/doc. Persisted: the band join references it on both sides plus
     * the final pair rejoin.
     */
-  private val imageHashMemo =
-    new graft.SessionMemo[(SparkSession, String), DataFrame]()
+  private[graft] val imageHashFrame = graft.Memo.frame("image_hash") { (s, d) =>
+    // Array[Int] input: ArrayData converts via one primitive toIntArray
+    // copy — a Seq[Int] parameter boxes all 256 cells per row
+    val hashUdf = udf((gray: Array[Int]) => {
+      val bmp = Multimodal.encodeBmpGray(16, 16, gray)
+      Multimodal.imageAHash(bmp).getOrElse(
+        sys.error("BMP pixel round-trip failed"))
+    })
+    imageGrayFrame(s, d).select($"doc_id", hashUdf($"gray").as("h"))
+  }
 
   /** The planted-pixel frame (doc_id, gray ARRAY<INT>[256]) the image
     * queries decode from: each doc's 16×16 grayscale rendering, computed
@@ -867,19 +852,6 @@ object LlmQueries {
         graft.functions.ImageRender.grayHistCol($"text").as("gray"))
       .filter(size($"gray") > 0)
 
-  private[graft] def imageHashFrame(s: SparkSession, d: String): DataFrame =
-    imageHashMemo.computeIfAbsent((s, d), _ => {
-      // Array[Int] input: ArrayData converts via one primitive toIntArray
-      // copy — a Seq[Int] parameter boxes all 256 cells per row
-      val hashUdf = udf((gray: Array[Int]) => {
-        val bmp = Multimodal.encodeBmpGray(16, 16, gray)
-        Multimodal.imageAHash(bmp).getOrElse(
-          sys.error("BMP pixel round-trip failed"))
-      })
-      graft.FrameRegistry.tracked(s, "image_hash",
-        imageGrayFrame(s, d).select($"doc_id", hashUdf($"gray").as("h")), d)
-    })
-
   /** Per-doc pooled pixel EMBEDDING frame (doc_id, e ARRAY<BIGINT>[64])
     * behind `multimodal_embed` and `sim_image_topk`, memoized per
     * (session, dir): the 16×16 rendering goes through the REAL codec
@@ -890,19 +862,14 @@ object LlmQueries {
     * per doc, zero shuffle; the frame is ~0.5 KB/doc and both consumers
     * read it from cache (`build:image_embed` charges the fill).
     */
-  private val imageEmbedMemo =
-    new graft.SessionMemo[(SparkSession, String), DataFrame]()
-
-  private def imageEmbedFrame(s: SparkSession, d: String): DataFrame =
-    imageEmbedMemo.computeIfAbsent((s, d), _ => {
-      val embUdf = udf((gray: Array[Int]) => {
-        val bmp = Multimodal.encodeBmpGray(16, 16, gray)
-        Multimodal.pixelEmbed(bmp, 8, 8).getOrElse(
-          sys.error("BMP pixel round-trip failed"))
-      })
-      graft.FrameRegistry.tracked(s, "image_embed",
-        imageGrayFrame(s, d).select($"doc_id", embUdf($"gray").as("e")), d)
+  private[graft] val imageEmbedFrame = graft.Memo.frame("image_embed") { (s, d) =>
+    val embUdf = udf((gray: Array[Int]) => {
+      val bmp = Multimodal.encodeBmpGray(16, 16, gray)
+      Multimodal.pixelEmbed(bmp, 8, 8).getOrElse(
+        sys.error("BMP pixel round-trip failed"))
     })
+    imageGrayFrame(s, d).select($"doc_id", embUdf($"gray").as("e"))
+  }
 
   /** The DuckDB replay of [[imageEmbedFrame]] as WITH-clause CTEs ending
     * in `pool(doc_id, i, v)` — the pooling computed from the planted
@@ -951,8 +918,28 @@ object LlmQueries {
     * and a narrow 4-element explode. No shuffle touches pixels;
     * 32 B/frame output.
     */
-  private val videoHashMemo =
-    new graft.SessionMemo[(SparkSession, String), DataFrame]()
+  private[graft] val videoHashFrame = graft.Memo.frame("video_hash") { (s, d) =>
+    val grays = documents(s, d)
+      .select($"doc_id",
+        graft.functions.ImageRender.videoGrayHistCol($"text", VideoFrames)
+          .as("gray"))
+      .filter(size($"gray") > 0)
+    // Array[Int] input — see imageHashFrame's boxing note
+    val hashUdf = udf((gray: Array[Int]) => {
+      val frames = (0 until VideoFrames).map { f =>
+        val g = new Array[Int](256)
+        var i = 0
+        while (i < 256) { g(i) = gray(f * 256 + i); i += 1 }
+        g
+      }
+      val gif = Multimodal.encodeGifGray(16, 16, frames)
+      val hs = Multimodal.videoFrameHashes(gif)
+      require(hs.length == frames.length, "GIF frame round-trip failed")
+      hs.zipWithIndex.map { case ((ah, dh), f) => (f, ah, dh) }
+    })
+    grays.select($"doc_id", explode(hashUdf($"gray")).as("e"))
+      .select($"doc_id", $"e._1".as("f"), $"e._2".as("ah"), $"e._3".as("dh"))
+  }
   private[llm] val VideoFrames = 4
 
   /** Frame rate planted in the AVI container (`multimodal_avi_features`):
@@ -1051,51 +1038,21 @@ object LlmQueries {
     * the frame is 16 B/doc. Persisted: the band join references it on
     * both sides plus the final rejoin.
     */
-  private val audioHashMemo =
-    new graft.SessionMemo[(SparkSession, String), DataFrame]()
-
   /** The planted per-token PCM signal both audio queries decode from. */
   private def audioSamplesCol: Column =
     transform(split($"text", " "),
       w => (H.wordHash(w) % 65536L - 32768L).cast(IntegerType))
 
-  private def audioHashFrame(s: SparkSession, d: String): DataFrame =
-    audioHashMemo.computeIfAbsent((s, d), _ => {
-      val hashUdf = udf((samp: Array[Int]) => {
-        val wav = Multimodal.encodeWavPcm16(8000, samp)
-        val (_, dec) = Multimodal.decodeWavSamples(wav).getOrElse(
-          sys.error("WAV sample round-trip failed"))
-        require(dec.length == samp.length, "WAV sample count drifted")
-        Multimodal.audioFingerprint64(dec)
-      })
-      graft.FrameRegistry.tracked(s, "audio_hash",
-        documents(s, d).select($"doc_id", hashUdf(audioSamplesCol).as("h")), d)
+  private[graft] val audioHashFrame = graft.Memo.frame("audio_hash") { (s, d) =>
+    val hashUdf = udf((samp: Array[Int]) => {
+      val wav = Multimodal.encodeWavPcm16(8000, samp)
+      val (_, dec) = Multimodal.decodeWavSamples(wav).getOrElse(
+        sys.error("WAV sample round-trip failed"))
+      require(dec.length == samp.length, "WAV sample count drifted")
+      Multimodal.audioFingerprint64(dec)
     })
-
-  private def videoHashFrame(s: SparkSession, d: String): DataFrame =
-    videoHashMemo.computeIfAbsent((s, d), _ => {
-      val grays = documents(s, d)
-        .select($"doc_id",
-          graft.functions.ImageRender.videoGrayHistCol($"text", VideoFrames)
-            .as("gray"))
-        .filter(size($"gray") > 0)
-      // Array[Int] input — see imageHashFrame's boxing note
-      val hashUdf = udf((gray: Array[Int]) => {
-        val frames = (0 until VideoFrames).map { f =>
-          val g = new Array[Int](256)
-          var i = 0
-          while (i < 256) { g(i) = gray(f * 256 + i); i += 1 }
-          g
-        }
-        val gif = Multimodal.encodeGifGray(16, 16, frames)
-        val hs = Multimodal.videoFrameHashes(gif)
-        require(hs.length == frames.length, "GIF frame round-trip failed")
-        hs.zipWithIndex.map { case ((ah, dh), f) => (f, ah, dh) }
-      })
-      graft.FrameRegistry.tracked(s, "video_hash",
-        grays.select($"doc_id", explode(hashUdf($"gray")).as("e"))
-          .select($"doc_id", $"e._1".as("f"), $"e._2".as("ah"), $"e._3".as("dh")), d)
-    })
+    documents(s, d).select($"doc_id", hashUdf(audioSamplesCol).as("h"))
+  }
 
   /** 32-perm MinHash signature frame (doc_id, sig ARRAY<BIGINT>) over an
     * arbitrary document frame. Persisted: it is referenced three times by
@@ -1237,72 +1194,68 @@ object LlmQueries {
     * corpus exactly once (to build the word histogram), so re-running the
     * loop per consumer would redo N vocab-sized jobs for nothing.
     */
-  private val bpeMemo = new graft.SessionMemo[
-    (SparkSession, String), (Seq[(Int, String, String, String, Long)], DataFrame)]()
-  private def bpeTrained(s: SparkSession, d: String)
-      : (Seq[(Int, String, String, String, Long)], DataFrame) =
-    bpeMemo.computeIfAbsent((s, d), { _ =>
-      val tok = documents(s, d)
-        .select(explode(
-          graft.functions.TextStats.wordTokensCol($"text", 2)).as("w"))
-      // DOUBLE-space separators ("  x  y  "): every symbol occurrence
-      // owns a boundary space on each side, so ONE literal
-      // replace(" a  b ", " ab ") is exactly greedy left-to-right BPE —
-      // the matched region keeps one outer space per side and the
-      // replacement restores the invariant, so the scanner never consumes
-      // the next occurrence's lead. (A single-space scheme needed two
-      // passes and STILL misaligned self-pair merges on symbol runs ≥ 5 —
-      // caught by BpeMergesSpec's greedy-equivalence property.)
-      // r12 optimization (guide §1.2 step 1 — fewer passes): rounds no
-      // longer persist+count each replace result (2 jobs/round). The
-      // BASE word histogram is the only corpus-derived state; each
-      // round's argmax job applies the ≤9 accumulated merge replaces
-      // map-side over the cached base (vocab-sized string work, trivial
-      // against the job it rides in), so the loop runs 1 job per round
-      // instead of 2, and one final materialization replaces the ten.
-      // Merge order, replace semantics and the returned histogram are
-      // bit-identical — the replaces chain in the same sequence.
-      val base = tok.groupBy($"w").agg(count(lit(1)).as("freq"))
-        .select($"w",
-          concat(lit("  "), regexp_replace($"w", "(.)", "$1  ")).as("s"), $"freq")
-        .persist()
-      var cur = base
-      val out = Seq.newBuilder[(Int, String, String, String, Long)]
-      var step = 1
-      var exhausted = false
-      while (step <= BpeMergeRounds && !exhausted) {
-        // guard size >= 2 explicitly: Spark's sequence(1, 0) DESCENDS
-        // ([1, 0]) instead of returning empty like DuckDB's range(1, 1)
-        val pairs = cur.select(split(trim($"s"), "  ").as("syms"), $"freq")
-          .filter(size($"syms") >= 2)
-          .select(explode(transform(sequence(lit(1), size($"syms") - 1),
-            i => struct(element_at($"syms", i).as("lhs"),
-              element_at($"syms", i + 1).as("rhs")))).as("pr"), $"freq")
-          .select($"pr.lhs", $"pr.rhs", $"freq")
-          .groupBy($"lhs", $"rhs").agg(sum($"freq").cast(LongType).as("n"))
-        pairs.orderBy($"n".desc, $"lhs", $"rhs").limit(1).collect() match {
-          case Array() =>
-            // every word is a single symbol: no pairs left to merge; the
-            // oracle's b/w CTEs go empty the same round, so both engines
-            // emit the same truncated merge table
-            exhausted = true
-          case Array(best) =>
-            val (a, b, n) = (best.getString(0), best.getString(1), best.getLong(2))
-            out += ((step, a, b, a + b, n))
-            cur = cur.select($"w",
-              replace($"s", lit(s" $a  $b "), lit(s" $a$b ")).as("s"), $"freq")
-            step += 1
-        }
+  private[graft] val bpeTrained = graft.Memo.value("bpe_table") { (s, d) =>
+    val tok = documents(s, d)
+      .select(explode(
+        graft.functions.TextStats.wordTokensCol($"text", 2)).as("w"))
+    // DOUBLE-space separators ("  x  y  "): every symbol occurrence
+    // owns a boundary space on each side, so ONE literal
+    // replace(" a  b ", " ab ") is exactly greedy left-to-right BPE —
+    // the matched region keeps one outer space per side and the
+    // replacement restores the invariant, so the scanner never consumes
+    // the next occurrence's lead. (A single-space scheme needed two
+    // passes and STILL misaligned self-pair merges on symbol runs ≥ 5 —
+    // caught by BpeMergesSpec's greedy-equivalence property.)
+    // r12 optimization (guide §1.2 step 1 — fewer passes): rounds no
+    // longer persist+count each replace result (2 jobs/round). The
+    // BASE word histogram is the only corpus-derived state; each
+    // round's argmax job applies the ≤9 accumulated merge replaces
+    // map-side over the cached base (vocab-sized string work, trivial
+    // against the job it rides in), so the loop runs 1 job per round
+    // instead of 2, and one final materialization replaces the ten.
+    // Merge order, replace semantics and the returned histogram are
+    // bit-identical — the replaces chain in the same sequence.
+    val base = tok.groupBy($"w").agg(count(lit(1)).as("freq"))
+      .select($"w",
+        concat(lit("  "), regexp_replace($"w", "(.)", "$1  ")).as("s"), $"freq")
+      .persist()
+    var cur = base
+    val out = Seq.newBuilder[(Int, String, String, String, Long)]
+    var step = 1
+    var exhausted = false
+    while (step <= BpeMergeRounds && !exhausted) {
+      // guard size >= 2 explicitly: Spark's sequence(1, 0) DESCENDS
+      // ([1, 0]) instead of returning empty like DuckDB's range(1, 1)
+      val pairs = cur.select(split(trim($"s"), "  ").as("syms"), $"freq")
+        .filter(size($"syms") >= 2)
+        .select(explode(transform(sequence(lit(1), size($"syms") - 1),
+          i => struct(element_at($"syms", i).as("lhs"),
+            element_at($"syms", i + 1).as("rhs")))).as("pr"), $"freq")
+        .select($"pr.lhs", $"pr.rhs", $"freq")
+        .groupBy($"lhs", $"rhs").agg(sum($"freq").cast(LongType).as("n"))
+      pairs.orderBy($"n".desc, $"lhs", $"rhs").limit(1).collect() match {
+        case Array() =>
+          // every word is a single symbol: no pairs left to merge; the
+          // oracle's b/w CTEs go empty the same round, so both engines
+          // emit the same truncated merge table
+          exhausted = true
+        case Array(best) =>
+          val (a, b, n) = (best.getString(0), best.getString(1), best.getLong(2))
+          out += ((step, a, b, a + b, n))
+          cur = cur.select($"w",
+            replace($"s", lit(s" $a  $b "), lit(s" $a$b ")).as("s"), $"freq")
+          step += 1
       }
-      if (!(cur eq base)) {
-        // the consumers (bpe_merges/bpe_encode, the vocab memos) re-read
-        // the FINAL histogram: cache it once, release the base
-        cur = cur.persist()
-        cur.count()
-        base.unpersist()
-      }
-      (out.result(), cur)
-    })
+    }
+    if (!(cur eq base)) {
+      // the consumers (bpe_merges/bpe_encode, the vocab memos) re-read
+      // the FINAL histogram: cache it once, release the base
+      cur = cur.persist()
+      cur.count()
+      base.unpersist()
+    }
+    (out.result(), cur)
+  }
 
   /** Unrolled DuckDB oracle for bpe_merges: iteration k's CTEs rebuild the
     * word histogram from k−1's. `AS MATERIALIZED` is load-bearing — w/b
@@ -1348,20 +1301,16 @@ object LlmQueries {
     * repartition-by-cell shuffle (the index-build cost) once; every probed
     * search after that reads only the probed cells' FILES.
     */
-  private val cellLayoutMemo = new graft.SessionMemo[
-    (SparkSession, String), (String, Seq[(Long, Array[Long])])]()
-  private def ivfCellLayout(s: SparkSession, d: String)
-      : (String, Seq[(Long, Array[Long])]) =
-    cellLayoutMemo.computeIfAbsent((s, d), { _ =>
-      val eq = lshFrame(s, d).select($"vec_id", $"label", $"v", $"n2")
-      // same derived-K rank-seeded cold start as the in-memory path —
-      // the two physical paths must share one coarse quantizer for the
-      // shared oracle to pin them to one semantic result
-      val cents = coldStartRows(eq, deriveCellCount(embCount(eq, Some((s, d)))))
-      val dir = java.nio.file.Files.createTempDirectory("ivf-cells").toString
-      VectorIndex.writeCellLayout(eq, cents, dir)
-      (dir, cents)
-    })
+  private[graft] val ivfCellLayout = graft.Memo.value("ivf_cell_layout") { (s, d) =>
+    val eq = lshFrame(s, d).select($"vec_id", $"label", $"v", $"n2")
+    // same derived-K rank-seeded cold start as the in-memory path —
+    // the two physical paths must share one coarse quantizer for the
+    // shared oracle to pin them to one semantic result
+    val cents = coldStartRows(eq, deriveCellCount(embCount(s, d)))
+    val dir = java.nio.file.Files.createTempDirectory("ivf-cells").toString
+    VectorIndex.writeCellLayout(eq, cents, dir)
+    (dir, cents)
+  }
 
   /** Apply the (session, trainDir)-trained BPE vocabulary to an arbitrary
     * documents frame: per-doc word and token counts via one explode + one
@@ -1414,29 +1363,21 @@ object LlmQueries {
     */
   private[llm] val BpeVocabBroadcastCutover = 1000000L
 
-  private val bpeVocabCountMemo = new graft.SessionMemo[
-    (SparkSession, String), java.lang.Long]()
-  private def bpeVocabCount(s: SparkSession, d: String): Long =
-    bpeVocabCountMemo.computeIfAbsent((s, d),
-      _ => bpeTrained(s, d)._2.count()).longValue()
+  private val bpeVocabCount =
+    graft.Memo.value("bpe_vocab_count") { (s, d) => bpeTrained(s, d)._2.count() }
 
   /** The trained word→token-count table as a broadcast HashMap, memoized
     * per (session, dir) — only ever built on the ≤-cutover dispatch, so
     * the collect is bounded by [[BpeVocabBroadcastCutover]].
     */
-  private val bpeVocabMemo = new graft.SessionMemo[
-    (SparkSession, String),
-    org.apache.spark.broadcast.Broadcast[java.util.HashMap[String, java.lang.Long]]]()
-  private def bpeVocabBcast(s: SparkSession, d: String)
-      : org.apache.spark.broadcast.Broadcast[java.util.HashMap[String, java.lang.Long]] =
-    bpeVocabMemo.computeIfAbsent((s, d), _ => {
-      val m = new java.util.HashMap[String, java.lang.Long]()
-      bpeTrained(s, d)._2
-        .select($"w", size(split(trim($"s"), "  ")).cast(LongType).as("toks"))
-        .collect()
-        .foreach(r => m.put(r.getString(0), java.lang.Long.valueOf(r.getLong(1))))
-      s.sparkContext.broadcast(m)
-    })
+  private val bpeVocabBcast = graft.Memo.value("bpe_vocab") { (s, d) =>
+    val m = new java.util.HashMap[String, java.lang.Long]()
+    bpeTrained(s, d)._2
+      .select($"w", size(split(trim($"s"), "  ")).cast(LongType).as("toks"))
+      .collect()
+      .foreach(r => m.put(r.getString(0), java.lang.Long.valueOf(r.getLong(1))))
+    s.sparkContext.broadcast(m)
+  }
 
   /** One-Lloyd-round trained PQ codebook, memoized per (session, dir) —
     * a deployment trains the index once offline; re-paying the training
@@ -1444,22 +1385,23 @@ object LlmQueries {
     * warm query cost. Deterministic (fixed seed rows, fixed rounds), so
     * caching cannot change any oracle-checked result.
     */
-  private val trainedCbMemo = new graft.SessionMemo[
-    (SparkSession, String), VectorIndex.Codebook]()
-  private def trainedCodebook(s: SparkSession, d: String): VectorIndex.Codebook =
-    trainedCbMemo.computeIfAbsent((s, d),
-      _ => VectorIndex.trainCodebook(lshFrame(s, d), rounds = 1))
+  private[graft] val trainedCodebook = graft.Memo.value("pq_codebook") { (s, d) =>
+    VectorIndex.trainCodebook(lshFrame(s, d), rounds = 1)
+  }
 
-  /** One-Lloyd-round refined IVF centroids (sim_ann_ivf_kmeans's training
-    * step), memoized per (session, dir) under the same train-once-serve-
-    * many contract: assign to cold-start cells, per-cell element-wise
-    * floor-mean via a bounded (cells×dim) aggregate collect.
+  /** One-Lloyd-round refined IVF centroids over [[lshFrame]]
+    * (sim_ann_ivf_kmeans's training step, shared with dedup_semantic),
+    * memoized per (session, dir) under the same train-once-serve-many
+    * contract: assign to the derived-K cold-start cells, per-cell
+    * element-wise floor-mean via a bounded (cells×dim) aggregate collect.
+    * Empty on an empty index.
     */
-  private val kmeansCentsMemo = new graft.SessionMemo[
-    (SparkSession, String), Seq[(Long, Array[Long])]]()
-  private def kmeansRefined(s: SparkSession, d: String, eq: DataFrame,
-      initRows: Seq[(Long, Array[Long])], dim: Int): Seq[(Long, Array[Long])] =
-    kmeansCentsMemo.computeIfAbsent((s, d), _ => kmeansRefinedOf(eq, initRows, dim))
+  private[graft] val kmeansRefined = graft.Memo.value("kmeans_cells") { (s, d) =>
+    val eq = lshFrame(s, d)
+    val init = coldStartRows(eq, deriveCellCount(embCount(s, d)))
+    if (init.isEmpty) Seq.empty[(Long, Array[Long])]
+    else kmeansRefinedOf(eq, init, init.head._2.length)
+  }
 
   /** The un-memoized Lloyd round, for callers training on frames with no
     * (session, dir) identity (CurationPipeline.dedupSemantic).
@@ -1478,18 +1420,21 @@ object LlmQueries {
     }.sortBy(_._1)
   }
 
-  /** Per-(session, dir, K) trained coarse quantizers for the K-sweep query
-    * — same train-once-serve-many contract as [[kmeansRefined]], one slot
-    * per swept K (3 × cells×dim driver state, bounded).
+  /** The cell counts `sim_ann_recall_k` sweeps. */
+  private val RecallSweepKs = Seq(16, 64, 256)
+
+  /** Per-(session, dir) trained coarse quantizers for the K-sweep query,
+    * one per [[RecallSweepKs]] entry — same train-once-serve-many contract
+    * as [[kmeansRefined]] (3 × cells×dim driver state, bounded). Built only
+    * once the index is known to be non-empty.
     */
-  private val kSweepMemo = new graft.SessionMemo[
-    (SparkSession, String, Int), Seq[(Long, Array[Long])]]()
-  private def kSweepCents(s: SparkSession, d: String, eq: DataFrame,
-      k: Int): Seq[(Long, Array[Long])] =
-    kSweepMemo.computeIfAbsent((s, d, k), _ => {
+  private val kSweepCents = graft.Memo.value("k_sweep_cells") { (s, d) =>
+    val eq = lshFrame(s, d)
+    RecallSweepKs.map { k =>
       val init = coldStartRows(eq, k)
-      kmeansRefinedOf(eq, init, init.head._2.length)
-    })
+      k -> kmeansRefinedOf(eq, init, init.head._2.length)
+    }.toMap
+  }
 
   /** Target mean cell population for the SemDeDup/IVF-kmeans coarse
     * quantizer. The cell count K is DERIVED from the corpus as
@@ -1508,17 +1453,12 @@ object LlmQueries {
   private[llm] def deriveCellCount(n: Long, targetPop: Long = SemTargetCellPop): Int =
     math.max(16L, (n + targetPop - 1) / targetPop).toInt
 
-  /** Corpus row count, memoized per (session, dir) alongside the other
-    * index-build memos so the derived-K chain counts the registry frame
-    * once per session, not once per consumer.
+  /** [[lshFrame]]'s row count, memoized per (session, dir) alongside the
+    * other index-build memos so the derived-K chain counts the registry
+    * frame once per session, not once per consumer.
     */
-  private val embCountMemo = new graft.SessionMemo[
-    (SparkSession, String), java.lang.Long]()
-  private def embCount(eq: DataFrame,
-      memoKey: Option[(SparkSession, String)]): Long = memoKey match {
-    case Some(k) => embCountMemo.computeIfAbsent(k, _ => eq.count()).longValue()
-    case scala.None => eq.count()
-  }
+  private val embCount =
+    graft.Memo.value("emb_count") { (s, d) => lshFrame(s, d).count() }
 
   /** Cold-start centroids: the K smallest vec_ids PRESENT (not
     * `vec_id < K` — arbitrary corpora handed to the public pipeline may
@@ -1535,15 +1475,18 @@ object LlmQueries {
     * K-smallest-vec_id cold start (K derived from corpus size — see
     * [[deriveCellCount]]), no-shuffle cell assignment, within-cell
     * greedy-by-id cosine pruning. `eq` must carry (vec_id, v, n2); output
-    * is (vec_id, cell, is_dup, dup_of). `memoKey` reuses the per-(session,
-    * dir) trained centroids when the input IS the registry's index frame.
+    * is (vec_id, cell, is_dup, dup_of). `memoKey` = Some((s, d)) says
+    * `eq` IS the registry's index frame `lshFrame(s, d)` at the default
+    * cell population: the row count and the trained centroids then come
+    * from its (session, dir) memos instead of being recomputed.
     */
   private[llm] def semanticDedupFrame(eq: DataFrame, tau: Double,
       memoKey: Option[(SparkSession, String)],
       targetCellPop: Long = SemTargetCellPop,
       assignCutover: Int = VectorIndex.CellAssignJoinCutover,
       assignProbe: Int = VectorIndex.DefaultAssignProbe): DataFrame = {
-    val nCent = deriveCellCount(embCount(eq, memoKey), targetCellPop)
+    val n = memoKey.fold(eq.count()) { case (s, d) => embCount(s, d) }
+    val nCent = deriveCellCount(n, targetCellPop)
     if (nCent > assignCutover) {
       // K past the broadcast-literal cutover: centroids stay in a FRAME,
       // assignment is the pruned join, Lloyd is fully distributed —
@@ -1560,16 +1503,19 @@ object LlmQueries {
         .select($"vec_id", $"cell", $"v", $"n2")
       withinCellDups(cells, tau)
     } else {
-      val initRows = coldStartRows(eq, nCent)
-      if (initRows.isEmpty)
+      // the memo seeds its own cold start, so the memoized path collects
+      // no init rows here; both paths are empty exactly on an empty index
+      val refined = memoKey match {
+        case Some((s, d)) => kmeansRefined(s, d)
+        case scala.None =>
+          val initRows = coldStartRows(eq, nCent)
+          if (initRows.isEmpty) Seq.empty[(Long, Array[Long])]
+          else kmeansRefinedOf(eq, initRows, initRows.head._2.length)
+      }
+      if (refined.isEmpty)
         eq.select($"vec_id", lit(0L).as("cell"), lit(false).as("is_dup"),
           lit(null).cast(LongType).as("dup_of")).filter(lit(false))
       else {
-        val dim = initRows.head._2.length
-        val refined = memoKey match {
-          case Some((s, d)) => kmeansRefined(s, d, eq, initRows, dim)
-          case scala.None => kmeansRefinedOf(eq, initRows, dim)
-        }
         val cells = eq.withColumn("cell", ivfCellCol(refined))
           .select($"vec_id", $"cell", $"v", $"n2")
         withinCellDups(cells, tau)
@@ -1738,7 +1684,7 @@ object LlmQueries {
          |JOIN cnt cb ON cb.doc_id = b_id
          |WHERE CAST(inter AS DOUBLE) / (ca.n + cb.n - inter) >= 0.5
          |ORDER BY a_id, b_id""".stripMargin) { (s, d) =>
-      goodPairs(s, d, 0.5).orderBy($"a_id", $"b_id")
+      goodPairs(s, d).orderBy($"a_id", $"b_id")
     },
 
     // Asymmetric near-dup: n-gram CONTAINMENT |A∩B| / min(|A|,|B|) — the
@@ -1765,7 +1711,7 @@ object LlmQueries {
          |JOIN cnt cb ON cb.doc_id = b_id
          |WHERE CAST(inter AS DOUBLE) / LEAST(ca.n, cb.n) >= 0.8
          |ORDER BY a_id, b_id""".stripMargin) { (s, d) =>
-      goodContainPairs(s, d, 0.8).orderBy($"a_id", $"b_id")
+      goodContainPairs(s, d).orderBy($"a_id", $"b_id")
     },
 
     // Near-dup CLUSTERS: connected components over the exact-Jaccard pair
@@ -1776,7 +1722,7 @@ object LlmQueries {
     // GraphX computes components, no driver-side graph. Oracle: recursive
     // CTE transitive closure.
     Q("dedup_cluster", ClusterOracleSql) { (s, d) =>
-      val good = goodPairs(s, d, 0.5).select($"a_id", $"b_id")
+      val good = goodPairs(s, d).select($"a_id", $"b_id")
       // The pair graph is the LSH/Jaccard CANDIDATE output — orders of
       // magnitude smaller than the corpus (477 nodes for 5000 docs at
       // sf0.1). Union-find over the collected pairs is O(E α(E)) with
@@ -1929,7 +1875,7 @@ object LlmQueries {
          |FROM cfg ORDER BY bands DESC""".stripMargin
     }) { (s, d) =>
       val sig = minhashSig(s, d)
-      val truth = goodPairs(s, d, 0.5).select($"a_id", $"b_id")
+      val truth = goodPairs(s, d).select($"a_id", $"b_id")
       val nTruth = truth.count()
       val measured = Seq((16, 2), (8, 4), (4, 8)).map { case (b, r) =>
         val banded = sig.select($"doc_id",
@@ -2091,7 +2037,7 @@ object LlmQueries {
         .withColumn("n2", qnorm2($"v"))
         .repartition(col("vec_id"))
       val bucket = AnnSigns.foldLeft(lit(0L): Column) { (acc, sv) =>
-        val proj = qdot($"v", array(sv.map(lit(_)): _*))
+        val proj = qdot($"v", array(sv.toIndexedSeq.map(lit(_)): _*))
         acc * 2 + when(proj > 0, lit(1L)).otherwise(lit(0L))
       }
       val e = e0.withColumn("bkt", bucket)
@@ -2199,7 +2145,7 @@ object LlmQueries {
       // quantize+repartition per invocation re-paid the index build on
       // every call (~2 s of the sf1 warm time before round 6).
       val eq = lshFrame(s, d)
-      val nCent = deriveCellCount(embCount(eq, Some((s, d))))
+      val nCent = deriveCellCount(embCount(s, d))
       val centRows = coldStartRows(eq, nCent)
       // vec_id 1, if present, is by construction among the K ≥ 16
       // smallest present ids, so the seed rows double as the query lookup
@@ -2217,7 +2163,7 @@ object LlmQueries {
         eq.withColumn("cell", ivfCellCol(centRows))
           .filter($"cell".isin(probeCells: _*))
           .select($"vec_id", $"label", $"cell",
-            ivfCosCol($"v", $"n2", array(qv.map(lit(_)): _*), lit(qn2)).as("cos"))
+            ivfCosCol($"v", $"n2", array(qv.toIndexedSeq.map(lit(_)): _*), lit(qn2)).as("cos"))
           .orderBy($"cos".desc, $"vec_id")
           .limit(10)
       }
@@ -2246,7 +2192,7 @@ object LlmQueries {
           val probes = VectorIndex.probeCells(cents, qv, nprobe = 2)
           VectorIndex.readProbed(s, layoutDir, probes)
             .select($"vec_id", $"label", $"cell",
-              (qdot($"v", array(qv.map(lit(_)): _*)).cast(DoubleType) /
+              (qdot($"v", array(qv.toIndexedSeq.map(lit(_)): _*)).cast(DoubleType) /
                 (sqrt($"n2".cast(DoubleType)) *
                   sqrt(lit(qn2).cast(DoubleType)))).as("cos"))
             .orderBy($"cos".desc, $"vec_id")
@@ -2324,7 +2270,7 @@ object LlmQueries {
       val nProbe = 2
       // shared persisted (vec_id, label, v, n2) index pass — bkt unused here
       val eq = lshFrame(s, d)
-      val nCent = deriveCellCount(embCount(eq, Some((s, d))))
+      val nCent = deriveCellCount(embCount(s, d))
       val initRows = coldStartRows(eq, nCent)
       val qvOpt = initRows.find(_._1 == 1L).map(_._2)
       if (qvOpt.isEmpty)
@@ -2334,7 +2280,7 @@ object LlmQueries {
         val qv = qvOpt.get
         // one Lloyd round, memoized per (session, dir) like
         // trainedCodebook: train once, serve every invocation
-        val refined = kmeansRefined(s, d, eq, initRows, qv.length)
+        val refined = kmeansRefined(s, d)
         val probeCells = refined.map { case (cid, cv) => (cid, qcosArr(qv, cv)) }
           .sortBy { case (cid, cos) => (-cos, cid) }
           .take(nProbe).map(_._1)
@@ -2342,7 +2288,7 @@ object LlmQueries {
         eq.withColumn("cell", ivfCellCol(refined))
           .filter($"cell".isin(probeCells: _*))
           .select($"vec_id", $"label", $"cell",
-            ivfCosCol($"v", $"n2", array(qv.map(lit(_)): _*), lit(qn2)).as("cos"))
+            ivfCosCol($"v", $"n2", array(qv.toIndexedSeq.map(lit(_)): _*), lit(qn2)).as("cos"))
           .orderBy($"cos".desc, $"vec_id")
           .limit(10)
       }
@@ -2357,14 +2303,14 @@ object LlmQueries {
     // exact-arithmetic one-Lloyd-round quantizer as sim_ann_ivf_kmeans
     // (rank-seeded cold start, floor-mean refine — bit-replayed by the
     // oracle), assignment stays the no-shuffle broadcast-literal map, and
-    // training state is (session, dir, K)-memoized like every other index
-    // build. At a fixed probe fraction the per-query scan cost is
+    // the three trainings are (session, dir)-memoized like every other
+    // index build. At a fixed probe fraction the per-query scan cost is
     // n·(nprobe/K); the sweep measures what that selectivity buys/costs in
     // recall on this corpus — on the isotropic driver fixture recall decays
     // with K (cells are arbitrary), which is exactly the calibration signal
     // a deployment reads before picking K for clustered real embeddings.
     Q("sim_ann_recall_k", {
-      val ks = Seq(16, 64, 256)
+      val ks = RecallSweepKs
       def np(k: Int): Int = math.max(2, k / 8)
       def ctes(k: Int): String =
         s"""c0_$k AS (SELECT cid, cv, cn2 FROM (
@@ -2402,7 +2348,7 @@ object LlmQueries {
          |${ks.map(row).mkString(" UNION ALL ")}
          |ORDER BY k""".stripMargin
     }) { (s, d) =>
-      val ks = Seq(16, 64, 256)
+      val ks = RecallSweepKs
       def np(k: Int): Int = math.max(2, k / 8)
       val eq = lshFrame(s, d)
       val qRow = eq.filter($"vec_id" === 1).select($"v").collect()
@@ -2411,7 +2357,7 @@ object LlmQueries {
         else {
           val qv = qRow.head.getSeq[Long](0).toArray
           val qn2 = qv.map(x => x * x).sum
-          def qcos = ivfCosCol($"v", $"n2", array(qv.map(lit(_)): _*), lit(qn2))
+          def qcos = ivfCosCol($"v", $"n2", array(qv.toIndexedSeq.map(lit(_)): _*), lit(qn2))
           // the exact top-10 is at most 10 longs: collect it ONCE and
           // intersect each swept K's result on the driver, instead of
           // re-running the full-corpus exact scan as the build side of a
@@ -2420,7 +2366,7 @@ object LlmQueries {
             .orderBy(qcos.desc, $"vec_id").limit(10).select($"vec_id")
             .collect().map(_.getLong(0)).toSet
           ks.map { k =>
-            val refined = kSweepCents(s, d, eq, k)
+            val refined = kSweepCents(s, d)(k)
             val probes = refined.map { case (cid, cv) => (cid, qcosArr(qv, cv)) }
               .sortBy { case (cid, cos) => (-cos, cid) }.take(np(k)).map(_._1)
             val approx = eq.withColumn("cell", ivfCellCol(refined))
@@ -3808,7 +3754,7 @@ object LlmQueries {
       val tot = tok.groupBy($"lang")
         .agg(count(lit(1)).as("n_docs"), sum($"toks").as("total_toks"))
       // 1-row global min: a driver scalar, same as the oracle's tgt CTE
-      val budget = tot.agg(min($"total_toks")).head.getLong(0)
+      val budget = tot.agg(min($"total_toks")).head().getLong(0)
       val rate = tot.withColumn("rate",
         lit(budget).cast(DoubleType) / $"total_toks")
       val kept = tok
@@ -4087,48 +4033,6 @@ object LlmQueries {
         .orderBy($"lang")
     }
   )
-
-  /** The module's shared-intermediate builds (memoized index/pair-graph
-    * state), named so Bench can charge each to an explicit `build:*`
-    * stage instead of whichever consumer query happens to run first —
-    * round-7 verdict: dedup_minhash_cluster's reported time swung
-    * 0.1 s ↔ 8.2 s across artifacts purely on memo-fill ordering. Each
-    * entry forces one (session, dir) memo; all are idempotent cache
-    * fills, so Bench runs them exactly once.
-    */
-  def sharedBuilds: Seq[(String, (SparkSession, String) => Unit)] = Seq(
-    "shingle_stats" -> ((s, d) => { docShingleStats(s, d); () }),
-    // the metric-independent candidate frame both pair families project;
-    // built here once so jaccard/contain build stages report their own
-    // marginal (filter-only) cost. No-op on heavy-tailed corpora, where
-    // the dispatch routes both families to their prefix paths instead.
-    "inter_counts" -> ((s, d) =>
-      if (docShingleStats(s, d).blowup <= JaccardBlowupCutover) {
-        interCounts(s, d).count(); ()
-      }),
-    "jaccard_pairs" -> ((s, d) => { goodPairs(s, d, 0.5).count(); () }),
-    "contain_pairs" -> ((s, d) => {
-      goodContainPairs(s, d, 0.8).count()
-      // both registry pair families are now materialized — release the
-      // unthresholded parent frame they projected from
-      releaseInterCounts(s, d)
-    }),
-    "minhash_sig" -> ((s, d) => { minhashSig(s, d).count(); () }),
-    "minhash_pairs" -> ((s, d) => { minhashPairs(s, d).count(); () }),
-    "incremental_sigs" -> ((s, d) => { incrementalPairs(s, d).count(); () }),
-    "lsh_frame" -> ((s, d) => { lshFrame(s, d).count(); () }),
-    "pq_codebook" -> ((s, d) => { trainedCodebook(s, d); () }),
-    "kmeans_cells" -> ((s, d) => {
-      val eq = lshFrame(s, d)
-      val init = coldStartRows(eq, deriveCellCount(embCount(eq, Some((s, d)))))
-      if (init.nonEmpty) { kmeansRefined(s, d, eq, init, init.head._2.length); () }
-    }),
-    "ivf_cell_layout" -> ((s, d) => { ivfCellLayout(s, d); () }),
-    "bpe_table" -> ((s, d) => { bpeTrained(s, d)._2.count(); () }),
-    "image_hash" -> ((s, d) => { imageHashFrame(s, d).count(); () }),
-    "image_embed" -> ((s, d) => { imageEmbedFrame(s, d).count(); () }),
-    "video_hash" -> ((s, d) => { videoHashFrame(s, d).count(); () }),
-    "audio_hash" -> ((s, d) => { audioHashFrame(s, d).count(); () }))
 
   private implicit class Interp(val sc: StringContext) {
     def $(args: Any*): Column = col(sc.s(args: _*))

@@ -1,6 +1,6 @@
 package graft.llm
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
 
 /** Multimodal-column pipeline: image/audio/video payloads ride through the
@@ -1035,13 +1035,13 @@ object Multimodal {
     // size-back-patched box writer: push a placeholder, write the body,
     // patch the u32 size — no hand-summed layout arithmetic to get wrong
     val bytes = new java.util.ArrayList[Byte]() // growable, patchable
-    def put(b: Int): Unit = bytes.add(b.toByte)
+    def put(b: Int): Unit = { bytes.add(b.toByte); () }
     def put4s(s: String): Unit = { require(s.length == 4); s.foreach(c => put(c.toInt)) }
     def pu16(v: Int): Unit = { put(v >>> 8); put(v) }
     def pu32(v: Long): Unit = { put((v >>> 24).toInt); put((v >>> 16).toInt); put((v >>> 8).toInt); put(v.toInt) }
     def patch32(at: Int, v: Long): Unit = {
       bytes.set(at, (v >>> 24).toByte); bytes.set(at + 1, (v >>> 16).toByte)
-      bytes.set(at + 2, (v >>> 8).toByte); bytes.set(at + 3, v.toByte)
+      bytes.set(at + 2, (v >>> 8).toByte); bytes.set(at + 3, v.toByte); ()
     }
     def box(typ: String)(body: => Unit): Unit = {
       val at = bytes.size()

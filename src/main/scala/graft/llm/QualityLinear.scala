@@ -160,7 +160,7 @@ object QualityLinear {
       // the frame is a pure training intermediate — the model memoizes
       // per (session, dir), so nothing ever re-reads this cache; release
       // the slot instead of pinning it until transient-cap eviction
-      graft.FrameRegistry.releaseFamily(spark, "qlin_feat")
+      graft.FrameRegistry.releaseFamily(spark, "qlin_feat"); ()
     }
   }
 
@@ -212,7 +212,7 @@ object QualityLinear {
         }
       }
       LinearModel(mu, rng, pocketW, pocketErr, pocketRound, errs.toSeq)
-    } finally graft.FrameRegistry.releaseFamily(spark, "qlin_xs")
+    } finally { graft.FrameRegistry.releaseFamily(spark, "qlin_xs"); () }
   }
 
   /** Row-local score Σ_b w_b·xs_b — ONE codegen scan: the B+1 hashed

@@ -213,7 +213,7 @@ object ScaleDedup {
          |$iters
          |SELECT u AS doc_id, p AS score FROM p5 ORDER BY doc_id""".stripMargin
     }) { (s, d) =>
-      val good = LlmQueries.goodPairs(s, d, 0.5)
+      val good = LlmQueries.goodPairs(s, d)
         .select($"a_id", $"b_id")
       // ONE localCheckpoint, on the edge list: truncates the jaccard
       // lineage so the 5 iteration levels below reference a tiny leaf —
@@ -247,7 +247,7 @@ object ScaleDedup {
     // frame). Oracle and output are IDENTICAL to dedup_cluster, proving
     // the scale path computes the same components as the driver union-find.
     Q("dedup_cluster_dist", LlmQueries.ClusterOracleSql) { (s, d) =>
-      val good = LlmQueries.goodPairs(s, d, 0.5)
+      val good = LlmQueries.goodPairs(s, d)
         .select($"a_id", $"b_id")
       // localCheckpoint, not persist: the loop references edges every
       // round, and persist alone would re-optimize the whole pair
@@ -264,7 +264,7 @@ object ScaleDedup {
       // materialization of `next` and the convergence test (no per-round
       // join+count).
       var prevSum = Long.MaxValue
-      var curSum = labels.agg(sum($"label")).head.getLong(0)
+      var curSum = labels.agg(sum($"label")).head().getLong(0)
       var rounds = 0
       while (curSum < prevSum && rounds < 50) {
         val prop = edges.join(labels, $"dst" === $"id")
@@ -272,7 +272,7 @@ object ScaleDedup {
         val next = labels.union(prop)
           .groupBy($"id").agg(min($"label").as("label")).persist()
         prevSum = curSum
-        curSum = next.agg(sum($"label")).head.getLong(0)
+        curSum = next.agg(sum($"label")).head().getLong(0)
         labels.unpersist(blocking = false)
         labels = next
         rounds += 1

@@ -258,7 +258,7 @@ object StreamingCuration {
     stream.writeStream
       .foreachBatch { (df: DataFrame, _: Long) =>
         val (kept, st2) = epoch(df, st, m)
-        try onKept(kept) finally kept.unpersist()
+        try onKept(kept) finally { kept.unpersist(); () }
         st = st2
       }
       .start()

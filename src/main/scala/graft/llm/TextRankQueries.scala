@@ -1,7 +1,7 @@
 package graft.llm
 
 import graft.{Q, Tables}
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -62,11 +62,9 @@ object TextRankQueries {
     * [[LlmQueries.goodPairs]]: the explode runs once, the other relevance
     * queries reuse the persisted (doc_id, w) frame.
     */
-  private val tokMemo =
-    new graft.SessionMemo[(SparkSession, String), DataFrame]()
-  private def tok(s: SparkSession, d: String): DataFrame =
-    tokMemo.computeIfAbsent((s, d), _ =>
-      graft.FrameRegistry.tracked(s, "word_tok", wordTok(documents(s, d)), d))
+  private[graft] val tok = graft.Memo.frame("word_tok") { (s, d) =>
+    wordTok(documents(s, d))
+  }
 
   private val SqlWordTok =
     """SELECT doc_id, w FROM (
@@ -107,16 +105,12 @@ object TextRankQueries {
     * persisted frame (3 narrow columns × doc count — the cheapest frame
     * in the memo family). Charged to Bench as `build:dsir_doc`.
     */
-  private val dsirMemo =
-    new graft.SessionMemo[(SparkSession, String), DataFrame]()
-  private def dsirDoc(s: SparkSession, d: String): DataFrame =
-    dsirMemo.computeIfAbsent((s, d), _ => {
-      val tk = tok(s, d)
-      val tgtIds = documents(s, d)
-        .filter(col("source") === "src0").select(col("doc_id"))
-      graft.FrameRegistry.tracked(s, "dsir_doc",
-        dsirScoredFrame(tk, tk.join(tgtIds, "doc_id")), d)
-    })
+  private[graft] val dsirDoc = graft.Memo.frame("dsir_doc") { (s, d) =>
+    val tk = tok(s, d)
+    val tgtIds = documents(s, d)
+      .filter(col("source") === "src0").select(col("doc_id"))
+    dsirScoredFrame(tk, tk.join(tgtIds, "doc_id"))
+  }
 
   /** Per-doc DSIR importance frame (doc_id, n_words, logratio) from a raw
     * (doc_id, w) token frame and a target token frame — the scorer behind
@@ -215,7 +209,7 @@ object TextRankQueries {
     val dec = DecimalType(38, 0)
     val r = scored
       .select(round(exp(col("logratio")) * 1000000L, 0).cast(LongType).as("wgrid"))
-      .agg(sum(col("wgrid").cast(dec)).as("z"), count(lit(1)).as("n")).head
+      .agg(sum(col("wgrid").cast(dec)).as("z"), count(lit(1)).as("n")).head()
     (r.getDecimal(0), r.getLong(1))
   }
 
@@ -286,12 +280,9 @@ object TextRankQueries {
     out
   }
 
-  private val vocabMemo = new graft.SessionMemo[
-    (SparkSession, String),
-    Option[(graft.functions.VocabMeters.Stats, Long, Long)]]()
-  private def vocabStats(s: SparkSession, d: String)
-      : Option[(graft.functions.VocabMeters.Stats, Long, Long)] =
-    vocabMemo.computeIfAbsent((s, d), _ => vocabStatsOf(documents(s, d)))
+  private[graft] val vocabStats = graft.Memo.value("vocab_stats") { (s, d) =>
+    vocabStatsOf(documents(s, d))
+  }
 
   /** quality_perplexity body, dispatched on the vocab stats: one
     * broadcast-vocab scan per doc below the cutover, the shared
@@ -511,14 +502,6 @@ object TextRankQueries {
   def fuzzyPairsAuto(docs: DataFrame): DataFrame =
     fuzzyPairsAuto(docs, fuzzyBlockStats(docs))
 
-  /** Memoized per-(session, dir) block profile — the dispatch statistic
-    * is a property of the immutable input dataset (same contract as
-    * [[LlmQueries.docShingleStats]], and since r13 the same ONE combined
-    * corpus pass: see [[ProfileStats]]).
-    */
-  private def fuzzyStats(s: SparkSession, d: String): FuzzyBlockStats =
-    ProfileStats.of(s, d).fuzzy
-
   val queries: Seq[Q] = Seq(
 
     // TF-IDF top terms per document: tf from one grouped count, df from a
@@ -643,7 +626,7 @@ object TextRankQueries {
       // output: min-length 16 is unaffected by a 200-char cap — and the
       // suffix key reads the SAME truncated window in both engines), so
       // the joins carry bounded rows instead of full documents.
-      fuzzyPairsAuto(documents(s, d), fuzzyStats(s, d))
+      fuzzyPairsAuto(documents(s, d), ProfileStats.profiles(s, d).fuzzy)
         .orderBy($"a_id", $"b_id")
     },
 
@@ -671,7 +654,7 @@ object TextRankQueries {
          |FROM good e1 JOIN good e2 ON e2.a_id = e1.b_id
          |JOIN good e3 ON e3.a_id = e1.a_id AND e3.b_id = e2.b_id
          |ORDER BY a, b, c""".stripMargin) { (s, d) =>
-      val e = LlmQueries.goodPairs(s, d, 0.5).select($"a_id", $"b_id")
+      val e = LlmQueries.goodPairs(s, d).select($"a_id", $"b_id")
       e.as("e1")
         .join(e.as("e2"), col("e2.a_id") === col("e1.b_id"))
         .join(e.as("e3"),
@@ -1285,28 +1268,16 @@ object TextRankQueries {
     }
   )
 
-  // $"…" sugar without a SparkSession-bound `implicits` import.
-  /** Module's shared-intermediate builds — see
-    * [[LlmQueries.sharedBuilds]] for the bench-attribution contract.
-    */
-  def sharedBuilds: Seq[(String, (SparkSession, String) => Unit)] = Seq(
-    "word_tok" -> ((s, d) => { tok(s, d).count(); () }),
-    "vocab_stats" -> ((s, d) => { vocabStats(s, d); () }),
-    "fuzzy_stats" -> ((s, d) => { fuzzyStats(s, d); () }),
-    "dsir_doc" -> ((s, d) => { dsirDoc(s, d).count(); () }),
-    "qlin_model" -> ((s, d) => { linModel(s, d); () }))
-
   /** Session-memoized pocket-perceptron model per (session, dir) — the
     * train-once-serve-many contract: Verify/Bench re-runs of
     * quality_classifier score against the cached D=20 weight vector
     * instead of re-running the 5-round training.
     */
-  private val linMemo = new graft.SessionMemo[
-    (SparkSession, String), QualityLinear.LinearModel]()
-  private[llm] def linModel(s: SparkSession, d: String): QualityLinear.LinearModel =
-    linMemo.computeIfAbsent((s, d), _ =>
-      QualityLinear.train(documents(s, d).select(col("doc_id"), col("text"))))
+  private[graft] val linModel = graft.Memo.value("qlin_model") { (s, d) =>
+    QualityLinear.train(documents(s, d).select(col("doc_id"), col("text")))
+  }
 
+  // $"…" sugar without a SparkSession-bound `implicits` import.
   private implicit class Interp(val sc: StringContext) {
     def $(args: Any*): Column = col(sc.s(args: _*))
   }

@@ -112,7 +112,7 @@ object VectorIndex {
     */
   private def assign(cb: Codebook, cfg: PqConfig, m: Int): Column = {
     val lits = array(cb(m).map { case (k, cv) =>
-      struct(array(cv.map(lit(_)): _*).as("cv"), lit(k).as("k"))
+      struct(array(cv.toIndexedSeq.map(lit(_)): _*).as("cv"), lit(k).as("k"))
     }: _*)
     array_min(transform(lits, c => struct(
       qdist2(slice(col("v"), m * cfg.subDim + 1, cfg.subDim), c.getField("cv")).as("d"),
@@ -180,7 +180,7 @@ object VectorIndex {
     // one) instead of once per centroid — 16 redundant 64-element
     // aggregates per row otherwise
     val centLit = array(cents.map { case (cid, cv) =>
-      struct(lit(cid).as("cid"), array(cv.map(lit(_)): _*).as("cv"),
+      struct(lit(cid).as("cid"), array(cv.toIndexedSeq.map(lit(_)): _*).as("cv"),
         lit(cv.map(x => x * x).sum).as("cn2"))
     }: _*)
     val hasN2 = df.columns.contains("n2")
@@ -242,7 +242,7 @@ object VectorIndex {
   def residualize(df: DataFrame, cents: Seq[(Long, Array[Long])]): DataFrame = {
     val centMap = map_from_arrays(
       array(cents.map { case (cid, _) => lit(cid) }: _*),
-      array(cents.map { case (_, cv) => array(cv.map(lit(_)): _*) }: _*))
+      array(cents.map { case (_, cv) => array(cv.toIndexedSeq.map(lit(_)): _*) }: _*))
     df.withColumn("v",
       zip_with(col("v"), element_at(centMap, col("cell")), (a, b) => a - b))
   }

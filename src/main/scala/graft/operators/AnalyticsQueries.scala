@@ -42,7 +42,7 @@ object AnalyticsQueries {
       val bloomAgg = Bridge.column(
         new BloomFilterAggregate(new XxHash64(Seq(Bridge.expression($"o_orderkey"))))
           .toAggregateExpression())
-      val bf = dim.agg(bloomAgg.as("bf")).head.getAs[Array[Byte]](0)
+      val bf = dim.agg(bloomAgg.as("bf")).head().getAs[Array[Byte]](0)
       val might = Bridge.column(BloomFilterMightContain(
         Literal(bf, BinaryType),
         new XxHash64(Seq(Bridge.expression($"l_orderkey")))))
@@ -577,7 +577,7 @@ object AnalyticsQueries {
       // reduce state to 1/32nd of the corpus.
       val li = lineitem(s, d)
       val st = li.agg(count(lit(1)).cast("double").as("l"),
-        approx_count_distinct($"l_orderkey").cast("double").as("o")).head
+        approx_count_distinct($"l_orderkey").cast("double").as("o")).head()
       val (l, o) = (st.getDouble(0), st.getDouble(1))
       val bbar = if (o > 0) l / o else 0.0
       val estPairs = o * bbar * math.max(0.0, bbar - 1) / 2.0

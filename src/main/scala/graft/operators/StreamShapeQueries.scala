@@ -2,9 +2,7 @@ package graft.operators
 
 import graft.{Q, Tables}
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types._
 
 /** Batch analogs of the Structured Streaming surface (SURVEY.md §2B
   * "Streaming"): the same tumbling / sliding / session windows and keyed

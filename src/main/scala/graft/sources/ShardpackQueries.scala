@@ -126,6 +126,7 @@ object ShardpackQueries {
              |  entries ARRAY<STRUCT<file_name: STRING, content_type: STRING,
              |                       encoding: STRING, data: BINARY>> NOT NULL)
              |USING shardpack PARTITIONED BY (bucket(8, key))""".stripMargin)
+        ()
       }
       create("spj_text")
       create("spj_lang")

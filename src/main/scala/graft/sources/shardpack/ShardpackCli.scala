@@ -65,28 +65,29 @@ object ShardpackCli {
     */
   private[shardpack] def parseFlags(args: List[String],
       known: Set[String]): (Map[String, String], Map[String, String]) = {
-    var flags = Map.empty[String, String]
-    var meta = Map.empty[String, String]
-    var rest = args
-    while (rest.nonEmpty) rest match {
-      case "--metadata" :: kv :: tail =>
-        kv.split("=", 2) match {
-          case Array(k, v) if k.nonEmpty => meta += (k -> v); rest = tail
-          case _ => throw new IllegalArgumentException(s"bad --metadata (want key=value): $kv")
-        }
-      // a following "--" token is the NEXT flag, not this flag's value —
-      // without this guard `create --input --output y` would set
-      // input="--output" and fail later with a misleading missing-flag error
-      case flag :: value :: tail if known.contains(flag) && !value.startsWith("--") =>
-        if (flags.contains(flag))
-          throw new IllegalArgumentException(s"duplicate flag: $flag")
-        flags += (flag -> value); rest = tail
-      case flag :: _ if known.contains(flag) || flag == "--metadata" =>
-        throw new IllegalArgumentException(s"missing value for $flag")
-      case other :: _ =>
-        throw new IllegalArgumentException(s"unknown flag: $other")
-    }
-    (flags, meta)
+    @annotation.tailrec
+    def loop(rest: List[String], flags: Map[String, String],
+        meta: Map[String, String]): (Map[String, String], Map[String, String]) =
+      rest match {
+        case Nil => (flags, meta)
+        case "--metadata" :: kv :: tail =>
+          kv.split("=", 2) match {
+            case Array(k, v) if k.nonEmpty => loop(tail, flags, meta + (k -> v))
+            case _ => throw new IllegalArgumentException(s"bad --metadata (want key=value): $kv")
+          }
+        // a following "--" token is the NEXT flag, not this flag's value —
+        // without this guard `create --input --output y` would set
+        // input="--output" and fail later with a misleading missing-flag error
+        case flag :: value :: tail if known.contains(flag) && !value.startsWith("--") =>
+          if (flags.contains(flag))
+            throw new IllegalArgumentException(s"duplicate flag: $flag")
+          loop(tail, flags + (flag -> value), meta)
+        case flag :: _ if known.contains(flag) || flag == "--metadata" =>
+          throw new IllegalArgumentException(s"missing value for $flag")
+        case other :: _ =>
+          throw new IllegalArgumentException(s"unknown flag: $other")
+      }
+    loop(args, Map.empty, Map.empty)
   }
 
   private def req(flags: Map[String, String], name: String): String =
@@ -112,11 +113,13 @@ object ShardpackCli {
       val (f, _) = parseFlags(rest, Set("--dir", "--min-fill"))
       ShardpackOps.compact(spark, req(f, "--dir"),
         minFill = f.get("--min-fill").map(_.toDouble).getOrElse(0.5))
+      ()
     case "vacuum" :: rest =>
       val (f, _) = parseFlags(rest, Set("--dir", "--older-than-ms"))
       ShardpackOps.vacuum(req(f, "--dir"),
         olderThanMs = f.get("--older-than-ms").map(_.toLong)
           .getOrElse(24L * 3600 * 1000))
+      ()
     case "stats" :: rest =>
       val (f, _) = parseFlags(rest, Set("--dir"))
       ShardpackOps.stats(spark, req(f, "--dir")).collect().foreach { r =>

@@ -178,12 +178,24 @@ object ShardpackDataSource {
       .sortBy(_.getPath.getName)
 }
 
+/** The shapes a supported `DELETE … WHERE` condition resolves to (see
+  * `ShardpackTable.classify`). Top-level, so matching on them needs no
+  * outer-instance check.
+  */
+private object ShardpackTable {
+  sealed trait DeleteShape
+  case object Truncate extends DeleteShape
+  final case class Keys(ks: Set[String]) extends DeleteShape
+  final case class Range(lo: String, hi: String) extends DeleteShape
+}
+
 final class ShardpackTable(paths: Seq[String], bucketN: Option[Int])
     extends Table with SupportsRead with SupportsWrite
     with org.apache.spark.sql.connector.catalog.SupportsDelete
     with org.apache.spark.sql.connector.catalog.SupportsRowLevelOperations
     with org.apache.spark.sql.connector.catalog.SupportsMetadataColumns {
   import ShardpackDataSource._
+  import ShardpackTable._
 
   def this(path: String, bucketN: Option[Int] = None) = this(Seq(path), bucketN)
 
@@ -196,11 +208,6 @@ final class ShardpackTable(paths: Seq[String], bucketN: Option[Int])
     * bounds — is declined here so Spark raises a clear unsupported error
     * instead of this table guessing.
     */
-  private sealed trait DeleteShape
-  private case object Truncate extends DeleteShape
-  private final case class Keys(ks: Set[String]) extends DeleteShape
-  private final case class Range(lo: String, hi: String) extends DeleteShape
-
   private def classify(filters: Array[Filter]): Option[DeleteShape] = {
     val meaningful = filters.filterNot {
       case IsNotNull("key") => true
@@ -1066,7 +1073,6 @@ final class ShardpackRowLevelOperation(path: String,
     cmd: org.apache.spark.sql.connector.write.RowLevelOperation.Command,
     bucketN: Option[Int])
     extends org.apache.spark.sql.connector.write.RowLevelOperation {
-  import ShardpackDataSource._
 
   /** Shards the rewrite scan planned LAST (volatile snapshot, not an
     * accumulator — see [[ShardpackScan.planInputPartitions]]).

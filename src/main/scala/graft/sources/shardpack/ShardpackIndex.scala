@@ -369,8 +369,9 @@ object ShardpackIndex {
     * bucket, so there is nothing to carry. Generation swaps go through
     * [[carry]].
     */
-  def invalidate(fs: FileSystem, dir: Path): Unit =
-    fs.delete(new Path(dir, FileName), false)
+  def invalidate(fs: FileSystem, dir: Path): Unit = {
+    fs.delete(new Path(dir, FileName), false); ()
+  }
 
   /** Carry the sidecar across a generation swap. Called once the new
     * generation is visible and the retired shards are gone; `before` is

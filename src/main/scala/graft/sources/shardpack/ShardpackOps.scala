@@ -1,6 +1,5 @@
 package graft.sources.shardpack
 
-import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -387,7 +386,7 @@ object ShardpackOps {
           .mode("append").save(dir)
         retire(fs, new Path(dir), oldShards, affected.map(_.getPath))
       }
-    } finally up.unpersist(false)
+    } finally { up.unpersist(false); () }
   }
 
   /** Join per-column shardpack tables on key, concatenating their entry

@@ -44,7 +44,7 @@ class SharedInterSpec extends AnyFunSuite with SparkTestBase {
   test("shared-frame jaccard pairs == direct jaccardPairs at t=0.5") {
     val docs = graft.Tables.documents(spark, dir)
     val direct = rowsOf(LlmQueries.jaccardPairs(docs, 0.5))
-    val shared = rowsOf(LlmQueries.goodPairs(spark, dir, 0.5))
+    val shared = rowsOf(LlmQueries.goodPairs(spark, dir))
     assert(shared == direct)
     assert(direct.nonEmpty, "fixture must produce at least one jaccard pair")
   }
@@ -64,7 +64,7 @@ class SharedInterSpec extends AnyFunSuite with SparkTestBase {
   test("shared-frame containment pairs == direct containmentPairs at t=0.8") {
     val docs = graft.Tables.documents(spark, dir)
     val direct = rowsOf(LlmQueries.containmentPairs(docs, 0.8))
-    val shared = rowsOf(LlmQueries.goodContainPairs(spark, dir, 0.8))
+    val shared = rowsOf(LlmQueries.goodContainPairs(spark, dir))
     assert(shared == direct)
     assert(direct.nonEmpty, "fixture must produce at least one containment pair")
     // the containment plant (3 ⊂ 4) must be found with cont = 1.0
