@@ -10,10 +10,11 @@ import org.apache.spark.sql.types._
   * stay inside whole-stage codegen — no UDFs in the hot path.
   *
   * Two families:
-  *   - `quant*`: fixed-point (1e-7) integer arithmetic. Integer sums are
-  *     associative, so results are bit-identical across any partitioning /
-  *     aggregation order AND across engines — these back the oracle-hashed
-  *     similarity queries.
+  *   - `quantize` and `q*`: fixed-point (1e-7) integer arithmetic. Integer
+  *     sums are associative, so results are bit-identical across any
+  *     partitioning / aggregation order AND across engines — these back the
+  *     oracle-hashed similarity queries. Each has a DuckDB SQL twin
+  *     (`sqlQ*`); [[qcosine]] also has the driver form probe selection uses.
   *   - `dot`/`norm2`/`cosine`: plain double arithmetic (sequential fold) for
   *     internal use (ANN, clustering) where cross-engine hashing isn't needed.
   */
@@ -45,12 +46,30 @@ object VectorFns {
   def qdist2(a: Column, b: Column): Column =
     Bridge.column(QVecDist2(Bridge.expression(a), Bridge.expression(b)))
 
-  /** Deterministic cosine from quantized inputs; fixed op sequence
-    * `dot / (sqrt(n_a) * sqrt(n_b))` matches the oracle SQL exactly.
+  /** Deterministic cosine of two quantized vectors with precomputed
+    * squared norms `na`, `nb` ([[qnorm2]]): the fixed op sequence
+    * `dot / (sqrt(n_a) * sqrt(n_b))` that [[sqlQcosine]] and the driver
+    * overload below replay exactly. Every quantized cosine — scoring,
+    * cell assignment, probe selection, within-cell pruning — is this one;
+    * a drifted copy is a silent oracle divergence.
     */
+  def qcosine(a: Column, na: Column, b: Column, nb: Column): Column =
+    qdot(a, b).cast(DoubleType) / (sqrt(na.cast(DoubleType)) * sqrt(nb.cast(DoubleType)))
+
+  /** [[qcosine]] computing both norms in place. */
   def qcosine(qa: Column, qb: Column): Column =
-    qdot(qa, qb).cast(DoubleType) /
-      (sqrt(qnorm2(qa).cast(DoubleType)) * sqrt(qnorm2(qb).cast(DoubleType)))
+    qcosine(qa, qnorm2(qa), qb, qnorm2(qb))
+
+  /** Driver-side [[qcosine]] over collected vectors (probe selection
+    * against the bounded centroid set): same Long sums, same Double ops.
+    */
+  def qcosine(a: Array[Long], b: Array[Long]): Double = {
+    var dot = 0L; var na = 0L; var nb = 0L; var i = 0
+    while (i < a.length) {
+      dot += a(i) * b(i); na += a(i) * a(i); nb += b(i) * b(i); i += 1
+    }
+    dot.toDouble / (math.sqrt(na.toDouble) * math.sqrt(nb.toDouble))
+  }
 
   /** Double-precision dot product (left-to-right fold). */
   def dot(a: Column, b: Column): Column =
@@ -81,6 +100,13 @@ object VectorFns {
   /** DuckDB SQL fragment: exact integer squared norm. */
   def sqlQnorm2(a: String): String =
     s"CAST(list_sum([x*x FOR x IN $a]) AS BIGINT)"
+
+  /** DuckDB SQL fragment mirroring [[qcosine]] over list columns `a`, `b`
+    * with squared-norm columns `na`, `nb`.
+    */
+  def sqlQcosine(a: String, na: String, b: String, nb: String): String =
+    s"CAST(${sqlQdot(a, b)} AS DOUBLE) / " +
+      s"(sqrt(CAST($na AS DOUBLE)) * sqrt(CAST($nb AS DOUBLE)))"
 
   /** DuckDB SQL fragment mirroring [[qdist2]]; same equal-length guard as
     * [[sqlQdot]] to preserve the null-on-mismatch contract.

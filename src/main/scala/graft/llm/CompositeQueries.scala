@@ -44,8 +44,7 @@ object CompositeQueries {
         .withColumn("n2", qnorm2($"v"))
       val q = e.filter($"vec_id" < KnnQueries)
         .select($"vec_id".as("q_id"), $"v".as("qv"), $"n2".as("qn2"))
-      val cos = qdot($"v", $"qv").cast(DoubleType) /
-        (sqrt($"n2".cast(DoubleType)) * sqrt($"qn2".cast(DoubleType)))
+      val cos = qcosine($"v", $"n2", $"qv", $"qn2")
       val w = Window.partitionBy($"q_id").orderBy($"cos".desc, $"n_id")
       e.crossJoin(broadcast(q)).filter($"vec_id" =!= $"q_id")
         .select($"q_id", $"vec_id".as("n_id"), cos.as("cos"))

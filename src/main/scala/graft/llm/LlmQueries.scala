@@ -233,15 +233,33 @@ object LlmQueries {
     * heap·0.3/slots bytes, at `bytesPerRow` of hash-relation footprint
     * per build row. r12 shipped a flat 8M-row cap validated only at
     * ~375k rows/partition (round-12 ADVICE); this bounds the regime the
-    * cap was never measured in by construction instead. local[n]: heap =
-    * driver JVM = executor; on a cluster the same formula reads the
-    * executor JVM's own Runtime, which is the heap that matters.
+    * cap was never measured in by construction instead.
+    */
+  private[graft] def shjBuildRowsCap(heap: Long, slots: Int, bytesPerRow: Long): Long =
+    math.min(ShjBuildRowsMax, heap * 3L / 10L / math.max(1, slots) / bytesPerRow)
+
+  /** [[shjBuildRowsCap]] for the executors `s` runs its tasks on. The cap
+    * is computed on the driver at plan construction, so it reads the
+    * executor's heap and slots from configuration: on local[n] the driver
+    * JVM IS the executor (its max heap, `defaultParallelism` slots); on a
+    * cluster, [[executorHeapAndSlots]] — never the driver's own heap, which
+    * says nothing about the JVM that builds the hash relation.
     */
   private[graft] def shjBuildRowsCap(s: SparkSession, bytesPerRow: Long): Long = {
-    val heap = Runtime.getRuntime.maxMemory()
-    val slots = math.max(1, s.sparkContext.defaultParallelism)
-    math.min(ShjBuildRowsMax, heap * 3L / 10L / slots / bytesPerRow)
+    val sc = s.sparkContext
+    val (heap, slots) =
+      if (sc.isLocal) (Runtime.getRuntime.maxMemory(), sc.defaultParallelism)
+      else executorHeapAndSlots(sc.getConf)
+    shjBuildRowsCap(heap, slots, bytesPerRow)
   }
+
+  /** One executor's heap bytes (`spark.executor.memory`, Spark's 1g
+    * default) and concurrent task slots (`spark.executor.cores` /
+    * `spark.task.cpus`, defaults 1 and 1).
+    */
+  private[graft] def executorHeapAndSlots(conf: org.apache.spark.SparkConf): (Long, Int) =
+    (conf.getSizeAsBytes("spark.executor.memory", "1g"),
+      conf.getInt("spark.executor.cores", 1) / math.max(1, conf.getInt("spark.task.cpus", 1)))
 
   /** Worst-PARTITION shuffled-hash safety, not worst-average: the r12
     * gate divided total build rows by the partition count, but the build
@@ -252,6 +270,12 @@ object LlmQueries {
     * hottest partition is ≤ avg + maxKeyRows (its share of the uniform
     * mass plus the entire hot key), so gate on that bound: dispatch to
     * SHUFFLE_HASH only when it fits the cap.
+    *
+    * `parts` is the planned partition count. AQE coalescing is not
+    * modeled: it may merge post-shuffle partitions up to its advisory
+    * size, so a runtime build partition can hold several times
+    * totalRows/parts; the cap's conservative bytes-per-row and the 30%
+    * heap share are the only margin for that.
     */
   private[graft] def shjSafe(totalRows: Long, maxKeyRows: Long, parts: Int,
       cap: Long): Boolean =
@@ -672,55 +696,43 @@ object LlmQueries {
     (0 until LshPlanes).map(i => $"bkt" === $"qbkt".bitwiseXOR(lit(1L << i))))
     .reduce(_ || _)
 
-  /** Fixed-op-order cosine over the lshFrame/q column names, both forms. */
-  private def lshCosSql: String =
-    s"CAST(${sqlQdot("b.v", "q.qv")} AS DOUBLE) / " +
-      "(sqrt(CAST(b.n2 AS DOUBLE)) * sqrt(CAST(q.qn2 AS DOUBLE)))"
-  private def lshCosCol: Column =
-    qdot($"v", $"qv").cast(DoubleType) /
-      (sqrt($"n2".cast(DoubleType)) * sqrt($"qn2".cast(DoubleType)))
   private def lshQueryFrame(b: DataFrame): DataFrame =
     b.filter($"vec_id" === 1)
       .select($"v".as("qv"), $"bkt".as("qbkt"), $"n2".as("qn2"))
 
-  /** Fixed-op-order cosine between a (v, n2) row and a centroid (cv, cn2),
-    * Column + SQL forms — shared by the IVF family (sim_ann_ivf,
-    * sim_ann_ivf_kmeans); a drifted copy is a silent oracle divergence.
+  /** The 10 lshFrame rows nearest the query (vec_id 1 itself excluded)
+    * among those matching `pred` — the top-10 id sets the LSH recall
+    * queries intersect.
     */
-  private def ivfCosCol(v: Column, n2: Column, cv: Column, cn2: Column): Column =
-    qdot(v, cv).cast(DoubleType) /
-      (sqrt(n2.cast(DoubleType)) * sqrt(cn2.cast(DoubleType)))
-  private def sqlIvfCos(dv: String, dn: String, cv: String, cn: String): String =
-    s"CAST(${sqlQdot(dv, cv)} AS DOUBLE) / " +
-      s"(sqrt(CAST($dn AS DOUBLE)) * sqrt(CAST($cn AS DOUBLE)))"
+  private def lshTopIds(b: DataFrame, pred: Column): DataFrame =
+    b.join(broadcast(lshQueryFrame(b)), pred).filter($"vec_id" =!= 1)
+      .orderBy(qcosine($"v", $"n2", $"qv", $"qn2").desc, $"vec_id")
+      .limit(10).select($"vec_id")
 
-  /** Driver-side replica of the same op order, for probe-cell selection
-    * over collected centroids (the bounded "load the index" state).
+  /** Probed cells per IVF search (sim_ann_ivf / _kmeans / _partitioned). */
+  private val IvfProbes = 2
+
+  /** The IVF search tail shared by sim_ann_ivf, sim_ann_ivf_kmeans and
+    * sim_ann_ivf_partitioned. The query is vec_id 1's vector in `seeds`
+    * (the cold-start rows); without it the result is empty. Otherwise
+    * probe the query's [[IvfProbes]] nearest `cents`, take the probed
+    * cells' (vec_id, label, cell, v, n2) rows from `cells(probes)` and
+    * keep the top 10 by (cosine desc, vec_id).
     */
-  private def qcosArr(x: Array[Long], y: Array[Long]): Double = {
-    var dot = 0L; var nx = 0L; var ny = 0L; var i = 0
-    while (i < x.length) {
-      dot += x(i) * y(i); nx += x(i) * x(i); ny += y(i) * y(i); i += 1
+  private def ivfSearch(eq: DataFrame, seeds: Seq[(Long, Array[Long])],
+      cents: => Seq[(Long, Array[Long])])(cells: Seq[Long] => DataFrame): DataFrame =
+    seeds.find(_._1 == 1L) match {
+      case scala.None =>
+        eq.select($"vec_id", $"label", lit(0L).as("cell"), lit(0.0).as("cos"))
+          .filter(lit(false))
+      case Some((_, qv)) =>
+        cells(VectorIndex.probeCells(cents, qv, IvfProbes))
+          .select($"vec_id", $"label", $"cell",
+            qcosine($"v", $"n2", array(qv.toIndexedSeq.map(lit(_)): _*),
+              lit(qv.map(x => x * x).sum)).as("cos"))
+          .orderBy($"cos".desc, $"vec_id")
+          .limit(10)
     }
-    dot.toDouble / (math.sqrt(nx.toDouble) * math.sqrt(ny.toDouble))
-  }
-
-  /** argmax-cosine cell assignment against broadcast literal centroids:
-    * array_max over (cos, -cid) structs = highest cosine, ties to the
-    * smaller cid — lexicographic struct ordering, a pure map, no shuffle.
-    */
-  private def ivfCellCol(cents: Seq[(Long, Array[Long])]): Column = {
-    // centroid norms are constants — stamp them as literals instead of
-    // re-running the 64-element qnorm2 aggregate 16× PER ROW (measured ~2×
-    // assignment cost at sf1 before this)
-    val centLit = array(cents.map { case (cid, cv) =>
-      struct(lit(cid).as("cid"), array(cv.toIndexedSeq.map(lit(_)): _*).as("cv"),
-        lit(cv.map(x => x * x).sum).as("cn2"))
-    }: _*)
-    -array_max(transform(centLit, c => struct(
-      ivfCosCol($"v", $"n2", c.getField("cv"), c.getField("cn2")).as("cos"),
-      (-c.getField("cid")).as("ncid")))).getField("ncid")
-  }
 
   /** Product-quantization geometry shared by `embedding_pq` /
     * `sim_ann_adc`: M=8 subspaces × S=8 dims, K=16 codewords per subspace.
@@ -1270,9 +1282,6 @@ object LlmQueries {
     * scan_shardpack over one semantic result).
     */
   private lazy val simAnnIvfOracleSql: String = {
-    def sqlCos(dv: String, dn: String, cv: String, cn: String) =
-      s"CAST(${sqlQdot(dv, cv)} AS DOUBLE) / " +
-        s"(sqrt(CAST($dn AS DOUBLE)) * sqrt(CAST($cn AS DOUBLE)))"
     // K is DERIVED from the corpus (kk mirrors deriveCellCount; rank
     // seeding mirrors coldStartRows) — probe selectivity keeps improving
     // as the corpus grows instead of freezing at a 16-cell demo grid
@@ -1285,13 +1294,13 @@ object LlmQueries {
        |  WHERE rn <= (SELECT k FROM kk)),
        |qv AS (SELECT v, n2 FROM n WHERE vec_id = 1),
        |probe AS (SELECT cid FROM c, qv
-       |  ORDER BY ${sqlCos("qv.v", "qv.n2", "c.cv", "c.cn2")} DESC, cid LIMIT 2),
+       |  ORDER BY ${sqlQcosine("qv.v", "qv.n2", "c.cv", "c.cn2")} DESC, cid LIMIT 2),
        |cell AS (SELECT n.vec_id, n.label, n.v, n.n2,
-       |  -(list_max(list({'cos': ${sqlCos("n.v", "n.n2", "c.cv", "c.cn2")},
+       |  -(list_max(list({'cos': ${sqlQcosine("n.v", "n.n2", "c.cv", "c.cn2")},
        |                   'ncid': -c.cid}))).ncid AS cell
        |  FROM n, c GROUP BY n.vec_id, n.label, n.v, n.n2)
        |SELECT cl.vec_id, cl.label, cl.cell,
-       |  ${sqlCos("cl.v", "cl.n2", "qv.v", "qv.n2")} AS cos
+       |  ${sqlQcosine("cl.v", "cl.n2", "qv.v", "qv.n2")} AS cos
        |FROM cell cl, qv WHERE cl.cell IN (SELECT cid FROM probe)
        |ORDER BY cos DESC, vec_id LIMIT 10""".stripMargin
   }
@@ -1398,26 +1407,7 @@ object LlmQueries {
     */
   private[graft] val kmeansRefined = graft.Memo.value("kmeans_cells") { (s, d) =>
     val eq = lshFrame(s, d)
-    val init = coldStartRows(eq, deriveCellCount(embCount(s, d)))
-    if (init.isEmpty) Seq.empty[(Long, Array[Long])]
-    else kmeansRefinedOf(eq, init, init.head._2.length)
-  }
-
-  /** The un-memoized Lloyd round, for callers training on frames with no
-    * (session, dir) identity (CurationPipeline.dedupSemantic).
-    */
-  private def kmeansRefinedOf(eq: DataFrame,
-      initRows: Seq[(Long, Array[Long])], dim: Int): Seq[(Long, Array[Long])] = {
-    val sums = eq.withColumn("cell", ivfCellCol(initRows))
-      .select($"cell", posexplode($"v"))
-      .groupBy($"cell", $"pos").agg(sum($"col").as("sx"), count(lit(1)).as("cnt"))
-      .collect()
-    sums.groupBy(_.getLong(0)).toSeq.map { case (cell, rs) =>
-      val arr = new Array[Long](dim)
-      rs.foreach(r => arr(r.getInt(1)) =
-        math.floor(r.getLong(2).toDouble / r.getLong(3)).toLong)
-      (cell, arr)
-    }.sortBy(_._1)
+    VectorIndex.lloydRound(eq, coldStartRows(eq, deriveCellCount(embCount(s, d))))
   }
 
   /** The cell counts `sim_ann_recall_k` sweeps. */
@@ -1430,10 +1420,7 @@ object LlmQueries {
     */
   private val kSweepCents = graft.Memo.value("k_sweep_cells") { (s, d) =>
     val eq = lshFrame(s, d)
-    RecallSweepKs.map { k =>
-      val init = coldStartRows(eq, k)
-      k -> kmeansRefinedOf(eq, init, init.head._2.length)
-    }.toMap
+    RecallSweepKs.map(k => k -> VectorIndex.lloydRound(eq, coldStartRows(eq, k))).toMap
   }
 
   /** Target mean cell population for the SemDeDup/IVF-kmeans coarse
@@ -1494,9 +1481,8 @@ object LlmQueries {
       // dedup_cluster cutover pattern applied to the coarse quantizer).
       // The gated corpora never reach this branch (K = 100 at sf10); it
       // is the 1e9+-embedding story, exercised by CellAssignCutoverSpec.
-      val init = VectorIndex.coldStartFrame(eq, nCent)
-      val refined = VectorIndex.trainCentroidsFrame(eq, init, nCent,
-        rounds = 1, probe = assignProbe)
+      val refined = VectorIndex.lloydRoundFrame(eq,
+        VectorIndex.coldStartFrame(eq, nCent), nCent, assignProbe)
       val cells = VectorIndex
         .assignCellsJoin(eq.select($"vec_id", $"v", $"n2"), refined, nCent,
           assignProbe)
@@ -1507,16 +1493,13 @@ object LlmQueries {
       // no init rows here; both paths are empty exactly on an empty index
       val refined = memoKey match {
         case Some((s, d)) => kmeansRefined(s, d)
-        case scala.None =>
-          val initRows = coldStartRows(eq, nCent)
-          if (initRows.isEmpty) Seq.empty[(Long, Array[Long])]
-          else kmeansRefinedOf(eq, initRows, initRows.head._2.length)
+        case scala.None => VectorIndex.lloydRound(eq, coldStartRows(eq, nCent))
       }
       if (refined.isEmpty)
         eq.select($"vec_id", lit(0L).as("cell"), lit(false).as("is_dup"),
           lit(null).cast(LongType).as("dup_of")).filter(lit(false))
       else {
-        val cells = eq.withColumn("cell", ivfCellCol(refined))
+        val cells = VectorIndex.assignCells(eq, refined)
           .select($"vec_id", $"cell", $"v", $"n2")
         withinCellDups(cells, tau)
       }
@@ -1531,7 +1514,7 @@ object LlmQueries {
     val dups = cells.as("a")
       .join(cells.as("b"),
         col("a.cell") === col("b.cell") && col("a.vec_id") < col("b.vec_id"))
-      .filter(ivfCosCol(col("a.v"), col("a.n2"), col("b.v"), col("b.n2")) >= tau)
+      .filter(qcosine(col("a.v"), col("a.n2"), col("b.v"), col("b.n2")) >= tau)
       .select(col("a.vec_id").as("a_id"), col("b.vec_id").as("vec_id"))
       .groupBy($"vec_id").agg(min($"a_id").as("dup_of"))
     cells.select($"vec_id", $"cell")
@@ -1557,7 +1540,7 @@ object LlmQueries {
        |           row_number() OVER (ORDER BY vec_id) AS rn FROM n)
        |  WHERE rn <= (SELECT k FROM kk)),
        |a0 AS (SELECT n.vec_id, n.v,
-       |  -(list_max(list({'cos': ${sqlIvfCos("n.v", "n.n2", "c0.cv", "c0.cn2")},
+       |  -(list_max(list({'cos': ${sqlQcosine("n.v", "n.n2", "c0.cv", "c0.cn2")},
        |                   'ncid': -c0.cid}))).ncid AS cell
        |  FROM n, c0 GROUP BY n.vec_id, n.v, n.n2),
        |sums AS (SELECT cell, generate_subscripts(v, 1) AS pos, unnest(v) AS x FROM a0),
@@ -1974,8 +1957,7 @@ object LlmQueries {
         .withColumn("n2", qnorm2($"v"))
         .repartition(col("vec_id"))
       val a = e.filter($"vec_id" < SampleVecs)
-      val cos = qdot(col("a.v"), col("b.v")).cast(DoubleType) /
-        (sqrt(col("a.n2").cast(DoubleType)) * sqrt(col("b.n2").cast(DoubleType)))
+      val cos = qcosine(col("a.v"), col("a.n2"), col("b.v"), col("b.n2"))
       broadcast(a.as("a")).join(e.as("b"), col("a.vec_id") < col("b.vec_id"))
         .select(col("a.vec_id").as("a_id"), col("b.vec_id").as("b_id"), cos.as("cos"))
         .filter($"cos" >= 0.35)
@@ -1998,10 +1980,7 @@ object LlmQueries {
       val qv = embeddings(s, d).filter($"vec_id" === 1)
         .select(quantize($"embedding").as("q"))
       e.crossJoin(broadcast(qv))
-        .select($"vec_id", $"label",
-          (qdot($"v", $"q").cast(DoubleType) /
-            (sqrt(qnorm2($"v").cast(DoubleType)) *
-              sqrt(qnorm2($"q").cast(DoubleType)))).as("cos"))
+        .select($"vec_id", $"label", qcosine($"v", $"q").as("cos"))
         .orderBy($"cos".desc, $"vec_id")
         .limit(10)
     },
@@ -2045,8 +2024,7 @@ object LlmQueries {
         .select($"v".as("qv"), $"bkt".as("qbkt"), $"n2".as("qn2"))
       e.join(broadcast(q), $"bkt" === $"qbkt")
         .select($"vec_id", $"label", $"bkt",
-          (qdot($"v", $"qv").cast(DoubleType) /
-            (sqrt($"n2".cast(DoubleType)) * sqrt($"qn2".cast(DoubleType)))).as("cos"))
+          qcosine($"v", $"n2", $"qv", $"qn2").as("cos"))
         .orderBy($"cos".desc, $"vec_id")
         .limit(10)
     },
@@ -2068,12 +2046,13 @@ object LlmQueries {
       s"""WITH e AS (SELECT vec_id, label, ${sqlQuantize("embedding")} AS v FROM embeddings),
          |b AS (SELECT vec_id, label, v, $lshBucketSql AS bkt, ${sqlQnorm2("v")} AS n2 FROM e),
          |q AS (SELECT v AS qv, bkt AS qbkt, n2 AS qn2 FROM b WHERE vec_id = 1)
-         |SELECT b.vec_id, b.label, b.bkt, $lshCosSql AS cos
+         |SELECT b.vec_id, b.label, b.bkt, ${sqlQcosine("b.v", "b.n2", "q.qv", "q.qn2")} AS cos
          |FROM b, q WHERE $lshProbeSql
          |ORDER BY cos DESC, vec_id LIMIT 10""".stripMargin) { (s, d) =>
       val b = lshFrame(s, d)
       b.join(broadcast(lshQueryFrame(b)), lshProbeCol)
-        .select($"vec_id", $"label", $"bkt", lshCosCol.as("cos"))
+        .select($"vec_id", $"label", $"bkt",
+          qcosine($"v", $"n2", $"qv", $"qn2").as("cos"))
         .orderBy($"cos".desc, $"vec_id")
         .limit(10)
     },
@@ -2091,15 +2070,16 @@ object LlmQueries {
       // owner whether their embeddings have the cluster structure LSH
       // exploits (recall ≫ coverage) or need IVF/brute force (recall ≈
       // coverage, as here).
+      val cos = sqlQcosine("b.v", "b.n2", "q.qv", "q.qn2")
       s"""WITH e AS (SELECT vec_id, ${sqlQuantize("embedding")} AS v FROM embeddings),
          |b AS (SELECT vec_id, v, $lshBucketSql AS bkt, ${sqlQnorm2("v")} AS n2 FROM e),
          |q AS (SELECT v AS qv, bkt AS qbkt, n2 AS qn2 FROM b WHERE vec_id = 1),
          |single AS (SELECT b.vec_id FROM b, q WHERE b.bkt = q.qbkt AND b.vec_id <> 1
-         |  ORDER BY $lshCosSql DESC, b.vec_id LIMIT 10),
+         |  ORDER BY $cos DESC, b.vec_id LIMIT 10),
          |multi AS (SELECT b.vec_id FROM b, q WHERE ($lshProbeSql) AND b.vec_id <> 1
-         |  ORDER BY $lshCosSql DESC, b.vec_id LIMIT 10),
+         |  ORDER BY $cos DESC, b.vec_id LIMIT 10),
          |exact AS (SELECT b.vec_id FROM b, q WHERE b.vec_id <> 1
-         |  ORDER BY $lshCosSql DESC, b.vec_id LIMIT 10)
+         |  ORDER BY $cos DESC, b.vec_id LIMIT 10)
          |SELECT 10 AS k,
          |  (SELECT count(*) FROM exact JOIN single USING (vec_id)) AS n_hit_single,
          |  CAST((SELECT count(*) FROM exact JOIN single USING (vec_id)) AS DOUBLE) / 10
@@ -2109,13 +2089,9 @@ object LlmQueries {
          |    AS recall_multi""".stripMargin
     }) { (s, d) =>
       val b = lshFrame(s, d)
-      val q = lshQueryFrame(b)
-      def topIds(pred: Column): DataFrame =
-        b.join(broadcast(q), pred).filter($"vec_id" =!= 1)
-          .orderBy(lshCosCol.desc, $"vec_id").limit(10).select($"vec_id")
-      val exact = topIds(lit(true))
-      val nSingle = exact.join(topIds($"bkt" === $"qbkt"), "vec_id").count()
-      val nMulti = exact.join(topIds(lshProbeCol), "vec_id").count()
+      val exact = lshTopIds(b, lit(true))
+      val nSingle = exact.join(lshTopIds(b, $"bkt" === $"qbkt"), "vec_id").count()
+      val nMulti = exact.join(lshTopIds(b, lshProbeCol), "vec_id").count()
       val spark = s
       import spark.implicits._
       Seq((10, nSingle, nSingle / 10.0, nMulti, nMulti / 10.0))
@@ -2135,7 +2111,6 @@ object LlmQueries {
     // DuckDB oracle replays cell assignment, probe selection, and the
     // final top-k identically.
     Q("sim_ann_ivf", simAnnIvfOracleSql) { (s, d) =>
-      val nProbe = 2
       // Centroids (and the query vector) are collected driver state, as in
       // any IVF index — the collect here is the "load the index" step,
       // bounded by the derived K. If the bucket lacks vec_id 1 (the query)
@@ -2146,27 +2121,11 @@ object LlmQueries {
       // every call (~2 s of the sf1 warm time before round 6).
       val eq = lshFrame(s, d)
       val nCent = deriveCellCount(embCount(s, d))
-      val centRows = coldStartRows(eq, nCent)
       // vec_id 1, if present, is by construction among the K ≥ 16
       // smallest present ids, so the seed rows double as the query lookup
-      val qvOpt = centRows.find(_._1 == 1L).map(_._2)
-      if (qvOpt.isEmpty)
-        eq.select($"vec_id", $"label", lit(0L).as("cell"), lit(0.0).as("cos"))
-          .filter(lit(false))
-      else {
-        val qv = qvOpt.get
-        val qn2 = qv.map(x => x * x).sum
-        val probeCells = centRows
-          .map { case (cid, cv) => (cid, qcosArr(qv, cv)) }
-          .sortBy { case (cid, cos) => (-cos, cid) }
-          .take(nProbe).map(_._1)
-        eq.withColumn("cell", ivfCellCol(centRows))
-          .filter($"cell".isin(probeCells: _*))
-          .select($"vec_id", $"label", $"cell",
-            ivfCosCol($"v", $"n2", array(qv.toIndexedSeq.map(lit(_)): _*), lit(qn2)).as("cos"))
-          .orderBy($"cos".desc, $"vec_id")
-          .limit(10)
-      }
+      val centRows = coldStartRows(eq, nCent)
+      ivfSearch(eq, centRows, centRows)(probes =>
+        VectorIndex.assignCells(eq, centRows).filter($"cell".isin(probes: _*)))
     },
 
     // The same IVF search served from a CELL-PARTITIONED layout
@@ -2181,23 +2140,8 @@ object LlmQueries {
     // probe cost grows only with the probed cells.
     Q("sim_ann_ivf_partitioned", simAnnIvfOracleSql) { (s, d) =>
       val (layoutDir, cents) = ivfCellLayout(s, d)
-      val qvOpt = cents.find(_._1 == 1L).map(_._2)
-      qvOpt match {
-        case scala.None =>
-          lshFrame(s, d)
-            .select($"vec_id", $"label", lit(0L).as("cell"), lit(0.0).as("cos"))
-            .filter(lit(false))
-        case Some(qv) =>
-          val qn2 = qv.map(x => x * x).sum
-          val probes = VectorIndex.probeCells(cents, qv, nprobe = 2)
-          VectorIndex.readProbed(s, layoutDir, probes)
-            .select($"vec_id", $"label", $"cell",
-              (qdot($"v", array(qv.toIndexedSeq.map(lit(_)): _*)).cast(DoubleType) /
-                (sqrt($"n2".cast(DoubleType)) *
-                  sqrt(lit(qn2).cast(DoubleType)))).as("cos"))
-            .orderBy($"cos".desc, $"vec_id")
-            .limit(10)
-      }
+      ivfSearch(lshFrame(s, d), cents, cents)(
+        VectorIndex.readProbed(s, layoutDir, _))
     },
 
     // Recall-vs-probes CURVE over the 6-plane LSH geometry: top-10 recall
@@ -2211,7 +2155,7 @@ object LlmQueries {
     Q("sim_ann_recall_curve", {
       def top(alias: String, cond: String) =
         s"$alias AS (SELECT b.vec_id FROM b, q WHERE $cond AND b.vec_id <> 1 " +
-          s"ORDER BY $lshCosSql DESC, b.vec_id LIMIT 10)"
+          s"ORDER BY ${sqlQcosine("b.v", "b.n2", "q.qv", "q.qn2")} DESC, b.vec_id LIMIT 10)"
       def row(r: Int, cells: Int, t: String) =
         s"SELECT CAST($r AS INT) AS probe_radius, CAST($cells AS INT) AS cells_probed, " +
           s"(SELECT count(*) FROM exact JOIN $t USING (vec_id)) AS n_hit, " +
@@ -2227,15 +2171,11 @@ object LlmQueries {
          |ORDER BY probe_radius""".stripMargin
     }) { (s, d) =>
       val b = lshFrame(s, d)
-      val q = lshQueryFrame(b)
-      def topIds(pred: Column): DataFrame =
-        b.join(broadcast(q), pred).filter($"vec_id" =!= 1)
-          .orderBy(lshCosCol.desc, $"vec_id").limit(10).select($"vec_id")
-      val exact = topIds(lit(true))
+      val exact = lshTopIds(b, lit(true))
       val cellsAt = Seq(1, 7, 22) // Σ_{j≤r} C(6, j)
       val rows = (0 to 2).map { r =>
         val hit = exact
-          .join(topIds(bit_count($"bkt".bitwiseXOR($"qbkt")) <= r), "vec_id")
+          .join(lshTopIds(b, bit_count($"bkt".bitwiseXOR($"qbkt")) <= r), "vec_id")
           .count()
         (r, cellsAt(r), hit, hit / 10.0)
       }
@@ -2258,40 +2198,23 @@ object LlmQueries {
       s"""WITH $sqlKmeansCellCtes,
          |qv AS (SELECT v, n2 FROM n WHERE vec_id = 1),
          |probe AS (SELECT cid FROM cn, qv
-         |  ORDER BY ${sqlIvfCos("qv.v", "qv.n2", "cn.cv", "cn.cn2")} DESC, cid LIMIT 2),
+         |  ORDER BY ${sqlQcosine("qv.v", "qv.n2", "cn.cv", "cn.cn2")} DESC, cid LIMIT 2),
          |a1 AS (SELECT n.vec_id, n.label, n.v, n.n2,
-         |  -(list_max(list({'cos': ${sqlIvfCos("n.v", "n.n2", "cn.cv", "cn.cn2")},
+         |  -(list_max(list({'cos': ${sqlQcosine("n.v", "n.n2", "cn.cv", "cn.cn2")},
          |                   'ncid': -cn.cid}))).ncid AS cell
          |  FROM n, cn GROUP BY n.vec_id, n.label, n.v, n.n2)
          |SELECT a1.vec_id, a1.label, a1.cell,
-         |  ${sqlIvfCos("a1.v", "a1.n2", "qv.v", "qv.n2")} AS cos
+         |  ${sqlQcosine("a1.v", "a1.n2", "qv.v", "qv.n2")} AS cos
          |FROM a1, qv WHERE a1.cell IN (SELECT cid FROM probe)
          |ORDER BY cos DESC, vec_id LIMIT 10""".stripMargin) { (s, d) =>
-      val nProbe = 2
       // shared persisted (vec_id, label, v, n2) index pass — bkt unused here
       val eq = lshFrame(s, d)
       val nCent = deriveCellCount(embCount(s, d))
-      val initRows = coldStartRows(eq, nCent)
-      val qvOpt = initRows.find(_._1 == 1L).map(_._2)
-      if (qvOpt.isEmpty)
-        eq.select($"vec_id", $"label", lit(0L).as("cell"), lit(0.0).as("cos"))
-          .filter(lit(false))
-      else {
-        val qv = qvOpt.get
-        // one Lloyd round, memoized per (session, dir) like
-        // trainedCodebook: train once, serve every invocation
-        val refined = kmeansRefined(s, d)
-        val probeCells = refined.map { case (cid, cv) => (cid, qcosArr(qv, cv)) }
-          .sortBy { case (cid, cos) => (-cos, cid) }
-          .take(nProbe).map(_._1)
-        val qn2 = qv.map(x => x * x).sum
-        eq.withColumn("cell", ivfCellCol(refined))
-          .filter($"cell".isin(probeCells: _*))
-          .select($"vec_id", $"label", $"cell",
-            ivfCosCol($"v", $"n2", array(qv.toIndexedSeq.map(lit(_)): _*), lit(qn2)).as("cos"))
-          .orderBy($"cos".desc, $"vec_id")
-          .limit(10)
-      }
+      // one Lloyd round, memoized per (session, dir) like
+      // trainedCodebook: train once, serve every invocation
+      lazy val refined = kmeansRefined(s, d)
+      ivfSearch(eq, coldStartRows(eq, nCent), refined)(probes =>
+        VectorIndex.assignCells(eq, refined).filter($"cell".isin(probes: _*)))
     },
 
     // COARSE-QUANTIZER K SWEEP: recall@10 vs (K, nprobe) with K up to 256
@@ -2318,7 +2241,7 @@ object LlmQueries {
            |           row_number() OVER (ORDER BY vec_id) AS rn FROM n)
            |  WHERE rn <= $k),
            |a0_$k AS (SELECT n.vec_id, n.v,
-           |  -(list_max(list({'cos': ${sqlIvfCos("n.v", "n.n2", "c.cv", "c.cn2")},
+           |  -(list_max(list({'cos': ${sqlQcosine("n.v", "n.n2", "c.cv", "c.cn2")},
            |                   'ncid': -c.cid}))).ncid AS cell
            |  FROM n, c0_$k c GROUP BY n.vec_id, n.v, n.n2),
            |sums_$k AS (SELECT cell, generate_subscripts(v, 1) AS pos, unnest(v) AS x FROM a0_$k),
@@ -2327,14 +2250,14 @@ object LlmQueries {
            |cn_$k AS (SELECT cid, cv, ${sqlQnorm2("cv")} AS cn2 FROM (
            |    SELECT cell AS cid, list(ci ORDER BY pos) AS cv FROM ref_$k GROUP BY cell)),
            |probe_$k AS (SELECT cid FROM cn_$k c, qv
-           |  ORDER BY ${sqlIvfCos("qv.v", "qv.n2", "c.cv", "c.cn2")} DESC, cid LIMIT ${np(k)}),
+           |  ORDER BY ${sqlQcosine("qv.v", "qv.n2", "c.cv", "c.cn2")} DESC, cid LIMIT ${np(k)}),
            |a1_$k AS (SELECT n.vec_id, n.v, n.n2,
-           |  -(list_max(list({'cos': ${sqlIvfCos("n.v", "n.n2", "c.cv", "c.cn2")},
+           |  -(list_max(list({'cos': ${sqlQcosine("n.v", "n.n2", "c.cv", "c.cn2")},
            |                   'ncid': -c.cid}))).ncid AS cell
            |  FROM n, cn_$k c GROUP BY n.vec_id, n.v, n.n2),
            |t_$k AS (SELECT a.vec_id FROM a1_$k a, qv
            |  WHERE a.cell IN (SELECT cid FROM probe_$k) AND a.vec_id <> 1
-           |  ORDER BY ${sqlIvfCos("a.v", "a.n2", "qv.v", "qv.n2")} DESC, a.vec_id LIMIT 10)""".stripMargin
+           |  ORDER BY ${sqlQcosine("a.v", "a.n2", "qv.v", "qv.n2")} DESC, a.vec_id LIMIT 10)""".stripMargin
       def row(k: Int): String =
         s"SELECT CAST($k AS INT) AS k, CAST(${np(k)} AS INT) AS nprobe, " +
           s"(SELECT count(*) FROM exact_k JOIN t_$k USING (vec_id)) AS n_hit, " +
@@ -2343,7 +2266,7 @@ object LlmQueries {
          |n AS (SELECT vec_id, v, ${sqlQnorm2("v")} AS n2 FROM e),
          |qv AS (SELECT v, n2 FROM n WHERE vec_id = 1),
          |exact_k AS (SELECT n.vec_id FROM n, qv WHERE n.vec_id <> 1
-         |  ORDER BY ${sqlIvfCos("n.v", "n.n2", "qv.v", "qv.n2")} DESC, n.vec_id LIMIT 10),
+         |  ORDER BY ${sqlQcosine("n.v", "n.n2", "qv.v", "qv.n2")} DESC, n.vec_id LIMIT 10),
          |${ks.map(ctes).mkString(",\n")}
          |${ks.map(row).mkString(" UNION ALL ")}
          |ORDER BY k""".stripMargin
@@ -2356,8 +2279,8 @@ object LlmQueries {
         if (qRow.isEmpty) ks.map(k => (k, np(k), 0L, 0.0))
         else {
           val qv = qRow.head.getSeq[Long](0).toArray
-          val qn2 = qv.map(x => x * x).sum
-          def qcos = ivfCosCol($"v", $"n2", array(qv.toIndexedSeq.map(lit(_)): _*), lit(qn2))
+          def qcos = qcosine($"v", $"n2", array(qv.toIndexedSeq.map(lit(_)): _*),
+            lit(qv.map(x => x * x).sum))
           // the exact top-10 is at most 10 longs: collect it ONCE and
           // intersect each swept K's result on the driver, instead of
           // re-running the full-corpus exact scan as the build side of a
@@ -2367,9 +2290,8 @@ object LlmQueries {
             .collect().map(_.getLong(0)).toSet
           ks.map { k =>
             val refined = kSweepCents(s, d)(k)
-            val probes = refined.map { case (cid, cv) => (cid, qcosArr(qv, cv)) }
-              .sortBy { case (cid, cos) => (-cos, cid) }.take(np(k)).map(_._1)
-            val approx = eq.withColumn("cell", ivfCellCol(refined))
+            val probes = VectorIndex.probeCells(refined, qv, np(k))
+            val approx = VectorIndex.assignCells(eq, refined)
               .filter($"cell".isin(probes: _*) && $"vec_id" =!= 1)
               .orderBy(qcos.desc, $"vec_id").limit(10).select($"vec_id")
               .collect().map(_.getLong(0))
@@ -2399,12 +2321,12 @@ object LlmQueries {
     Q("dedup_semantic",
       s"""WITH $sqlKmeansCellCtes,
          |a1 AS (SELECT n.vec_id, n.v, n.n2,
-         |  -(list_max(list({'cos': ${sqlIvfCos("n.v", "n.n2", "cn.cv", "cn.cn2")},
+         |  -(list_max(list({'cos': ${sqlQcosine("n.v", "n.n2", "cn.cv", "cn.cn2")},
          |                   'ncid': -cn.cid}))).ncid AS cell
          |  FROM n, cn GROUP BY n.vec_id, n.v, n.n2),
          |p AS (SELECT b.vec_id AS vec_id, min(a.vec_id) AS dup_of
          |  FROM a1 a JOIN a1 b ON a.cell = b.cell AND a.vec_id < b.vec_id
-         |  WHERE ${sqlIvfCos("a.v", "a.n2", "b.v", "b.n2")} >= 0.4
+         |  WHERE ${sqlQcosine("a.v", "a.n2", "b.v", "b.n2")} >= 0.4
          |  GROUP BY b.vec_id)
          |SELECT a1.vec_id, a1.cell, (p.dup_of IS NOT NULL) AS is_dup, p.dup_of
          |FROM a1 LEFT JOIN p ON a1.vec_id = p.vec_id
@@ -2488,12 +2410,12 @@ object LlmQueries {
          |n AS (SELECT vec_id, label, v, ${sqlQnorm2("v")} AS n2 FROM e),
          |c0 AS (SELECT vec_id AS cid, v AS cv, n2 AS cn2 FROM n WHERE vec_id < 16),
          |a0 AS (SELECT n.vec_id,
-         |  -(list_max(list({'cos': ${sqlIvfCos("n.v", "n.n2", "c0.cv", "c0.cn2")},
+         |  -(list_max(list({'cos': ${sqlQcosine("n.v", "n.n2", "c0.cv", "c0.cn2")},
          |                   'ncid': -c0.cid}))).ncid AS cell
          |  FROM n, c0 GROUP BY n.vec_id, n.v, n.n2),
          |qn AS (SELECT v, n2 FROM n WHERE vec_id = 1),
          |probe AS (SELECT cid FROM c0, qn
-         |  ORDER BY ${sqlIvfCos("qn.v", "qn.n2", "c0.cv", "c0.cn2")} DESC, cid LIMIT 2),
+         |  ORDER BY ${sqlQcosine("qn.v", "qn.n2", "c0.cv", "c0.cn2")} DESC, cid LIMIT 2),
          |cand AS (SELECT vec_id FROM a0 WHERE cell IN (SELECT cid FROM probe)),
          |ms AS (SELECT unnest(range($PqM)) AS m),
          |sub AS (SELECT vec_id, label, m, v[m*$PqS+1 : m*$PqS+$PqS] AS sv FROM e, ms),
@@ -2589,12 +2511,12 @@ object LlmQueries {
          |n AS (SELECT vec_id, label, v, ${sqlQnorm2("v")} AS n2 FROM e),
          |c0 AS (SELECT vec_id AS cid, v AS cv, n2 AS cn2 FROM n WHERE vec_id < $PqK),
          |a0 AS (SELECT n.vec_id,
-         |  -(list_max(list({'cos': ${sqlIvfCos("n.v", "n.n2", "c0.cv", "c0.cn2")},
+         |  -(list_max(list({'cos': ${sqlQcosine("n.v", "n.n2", "c0.cv", "c0.cn2")},
          |                   'ncid': -c0.cid}))).ncid AS cell
          |  FROM n, c0 GROUP BY n.vec_id, n.v, n.n2),
          |qn AS (SELECT v, n2 FROM n WHERE vec_id = 1),
          |probe AS (SELECT cid FROM c0, qn
-         |  ORDER BY ${sqlIvfCos("qn.v", "qn.n2", "c0.cv", "c0.cn2")} DESC, cid LIMIT 2),
+         |  ORDER BY ${sqlQcosine("qn.v", "qn.n2", "c0.cv", "c0.cn2")} DESC, cid LIMIT 2),
          |rv AS (SELECT e.vec_id, e.label, a0.cell,
          |  [e.v[i] - c0.cv[i] FOR i IN range(1, len(e.v)+1)] AS v
          |  FROM e JOIN a0 ON e.vec_id = a0.vec_id JOIN c0 ON a0.cell = c0.cid),

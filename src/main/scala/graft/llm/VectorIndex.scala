@@ -160,17 +160,6 @@ object VectorIndex {
     index.filter(col("vec_id") < k).select(col("vec_id"), col("v")).collect()
       .map(r => (r.getLong(0), r.getSeq[Long](1).toArray)).sortBy(_._1).toSeq
 
-  /** Driver-side cosine under the engine-fixed op order (matches the
-    * oracle SQL's `dot / (sqrt·sqrt)`).
-    */
-  private[llm] def qcosArrPub(x: Array[Long], y: Array[Long]): Double = {
-    var dot = 0L; var nx = 0L; var ny = 0L; var i = 0
-    while (i < x.length) {
-      dot += x(i) * y(i); nx += x(i) * x(i); ny += y(i) * y(i); i += 1
-    }
-    dot.toDouble / (math.sqrt(nx.toDouble) * math.sqrt(ny.toDouble))
-  }
-
   /** Append `cell: BIGINT` — argmax-cosine assignment against broadcast
     * literal centroids, ties to the smaller centroid id. Pure map.
     */
@@ -187,9 +176,7 @@ object VectorIndex {
     val base = if (hasN2) df else df.withColumn("n2", qnorm2(col("v")))
     val out = base.withColumn("cell",
       -array_max(transform(centLit, c => struct(
-        (qdot(col("v"), c.getField("cv")).cast(DoubleType) /
-          (sqrt(col("n2").cast(DoubleType)) *
-            sqrt(c.getField("cn2").cast(DoubleType)))).as("cos"),
+        qcosine(col("v"), col("n2"), c.getField("cv"), c.getField("cn2")).as("cos"),
         (-c.getField("cid")).as("ncid")))).getField("ncid"))
     if (hasN2) out else out.drop("n2")
   }
@@ -199,38 +186,34 @@ object VectorIndex {
     */
   def probeCells(cents: Seq[(Long, Array[Long])], query: Array[Long],
       nprobe: Int): Seq[Long] =
-    cents.map { case (cid, cv) => (cid, qcosArrPub(query, cv)) }
+    cents.map { case (cid, cv) => (cid, qcosine(query, cv)) }
       .sortBy { case (cid, cos) => (-cos, cid) }.take(nprobe).map(_._1)
 
-  /** Lloyd-TRAINED coarse quantizer: `rounds` iterations of
-    * [[assignCells]] + per-cell floor-mean update, seeded from the
-    * cold-start [[centroids]]. Same determinism and bounded-collect
-    * contract as [[trainCodebook]]; an emptied cell keeps its previous
-    * centroid.
+  /** One Lloyd round of the coarse quantizer over driver-held centroids:
+    * [[assignCells]], then each cell's element-wise floor(sum/count) via
+    * one bounded (cells × dim) aggregate collect. Per-cell sums stay
+    * ≪ 2^53, so the double division is exact and the oracle's training
+    * CTEs replay it bit-for-bit. A centroid that loses every member is
+    * DROPPED — the oracle's rule (its refined centroids come from
+    * `GROUP BY cell`), shared by [[lloydRoundFrame]]. Empty in, empty out.
     */
-  def trainCentroids(index: DataFrame, k: Int = 16,
-      rounds: Int = 1): Seq[(Long, Array[Long])] = {
-    var cents = centroids(index, k)
-    for (_ <- 0 until rounds) {
-      val sums = assignCells(index, cents)
+  def lloydRound(index: DataFrame,
+      cents: Seq[(Long, Array[Long])]): Seq[(Long, Array[Long])] =
+    if (cents.isEmpty) cents
+    else {
+      val dim = cents.head._2.length
+      assignCells(index, cents)
         .select(col("cell"), posexplode(col("v")))
         .groupBy(col("cell"), col("pos"))
         .agg(sum(col("col")).as("sx"), count(lit(1)).as("cnt"))
         .collect()
-      val upd = sums.groupBy(_.getLong(0))
-      cents = cents.map { case (cid, old) =>
-        upd.get(cid) match {
-          case Some(rs) =>
-            val arr = new Array[Long](old.length)
-            rs.foreach(r => arr(r.getInt(1)) =
-              math.floor(r.getLong(2).toDouble / r.getLong(3)).toLong)
-            (cid, arr)
-          case scala.None => (cid, old)
-        }
-      }
+        .groupBy(_.getLong(0)).toSeq.map { case (cell, rs) =>
+          val arr = new Array[Long](dim)
+          rs.foreach(r => arr(r.getInt(1)) =
+            math.floor(r.getLong(2).toDouble / r.getLong(3)).toLong)
+          (cell, arr)
+        }.sortBy(_._1)
     }
-    cents
-  }
 
   /** Replace `v` with the RESIDUAL `v − centroid(cell)` (element-wise,
     * exact integers) for a frame that already carries `cell` from
@@ -282,7 +265,7 @@ object VectorIndex {
   // --------------------------------------------------------------------
   // Frame-held centroids: the K-cutover for cell ASSIGNMENT and Lloyd
   // training. The literal-array path above ([[assignCells]]) embeds all
-  // K centroids in the plan and [[trainCentroids]] collects a K×dim
+  // K centroids in the plan and [[lloydRound]] collects a K×dim
   // aggregate to the driver — both grow linearly with K, and K itself is
   // derived to grow linearly with the corpus (SemDeDup's fixed target
   // cell population). At 1e10 embeddings K ≈ 5M: a multi-GB expression
@@ -433,49 +416,38 @@ object VectorIndex {
       .join(members, Seq("g"))
       .select(col("vec_id"),
         array_max(transform(col("members"), c => struct(
-          (qdot(col("v"), c.getField("cv")).cast(DoubleType) /
-            (sqrt(col("n2").cast(DoubleType)) *
-              sqrt(c.getField("cn2").cast(DoubleType)))).as("cos"),
+          qcosine(col("v"), col("n2"), c.getField("cv"), c.getField("cn2")).as("cos"),
           (-c.getField("cid")).as("ncid")))).as("b"))
       .groupBy(col("vec_id")).agg(max(col("b")).as("b"))
       .select(col("vec_id"), (-col("b").getField("ncid")).as("cell"))
     df.join(best, Seq("vec_id"))
   }
 
-  /** Distributed Lloyd rounds over frame-held centroids: pruned-join
-    * assignment → (cell, pos) floor-mean aggregate → centroid frame
-    * rebuilt by sorting the per-cell (pos, mean) structs back into an
-    * array. NOTHING K-sized touches the driver (the (cell, pos) frame is
-    * written back as the next round's `centDf`); the floor-mean double
-    * division matches [[trainCentroids]] bit-for-bit. A cell that loses
-    * every member keeps its previous centroid (left-join coalesce — the
-    * same deterministic empty-cell rule as the driver path).
+  /** [[lloydRound]] over frame-held centroids: pruned-join assignment →
+    * (cell, pos) floor-mean aggregate → centroid frame rebuilt by sorting
+    * the per-cell (pos, mean) structs back into an array. NOTHING K-sized
+    * touches the driver; the floor-mean arithmetic and the emptied-cell
+    * rule (dropped) are [[lloydRound]]'s, so at full probe both rounds
+    * return the same centroids. `cents` is cached for the round and
+    * released once the returned (cid, cv, cn2) frame is materialized.
     */
-  def trainCentroidsFrame(index: DataFrame, initCents: DataFrame, k: Long,
-      rounds: Int = 1, probe: Int = DefaultAssignProbe): DataFrame = {
-    var cents = initCents.persist()
-    for (_ <- 0 until rounds) {
-      val asn = assignCellsJoin(index.select(col("vec_id"), col("v"), col("n2")),
-        cents, k, probe)
-      val upd = asn.select(col("cell"), posexplode(col("v")))
-        .groupBy(col("cell"), col("pos"))
-        .agg(floor(sum(col("col")).cast(DoubleType) / count(lit(1)))
-          .cast(LongType).as("m"))
-        .groupBy(col("cell"))
-        .agg(transform(array_sort(collect_list(struct(col("pos"), col("m")))),
-          x => x.getField("m")).as("cvn"))
-        .select(col("cell").as("cid"), col("cvn"))
-        .withColumn("cn2n", qnorm2(col("cvn")))
-      val prev = cents
-      cents = prev
-        .join(upd, Seq("cid"), "left")
-        .select(col("cid"),
-          coalesce(col("cvn"), col("cv")).as("cv"),
-          coalesce(col("cn2n"), col("cn2")).as("cn2"))
-        .persist()
-      cents.count() // materialize before releasing the previous round
-      prev.unpersist()
-    }
-    cents
+  def lloydRoundFrame(index: DataFrame, cents: DataFrame, k: Long,
+      probe: Int = DefaultAssignProbe): DataFrame = {
+    val seeds = cents.persist()
+    val next = assignCellsJoin(index.select(col("vec_id"), col("v"), col("n2")),
+        seeds, k, probe)
+      .select(col("cell"), posexplode(col("v")))
+      .groupBy(col("cell"), col("pos"))
+      .agg(floor(sum(col("col")).cast(DoubleType) / count(lit(1)))
+        .cast(LongType).as("m"))
+      .groupBy(col("cell"))
+      .agg(transform(array_sort(collect_list(struct(col("pos"), col("m")))),
+        x => x.getField("m")).as("cv"))
+      .select(col("cell").as("cid"), col("cv"))
+      .withColumn("cn2", qnorm2(col("cv")))
+      .persist()
+    next.count() // materialize before releasing the seeds
+    seeds.unpersist()
+    next
   }
 }

@@ -836,9 +836,9 @@ object StatQueries {
       // oracle keeps the self-join formulation — hash-identical is the
       // proof (plus the r13 plan diff: 3 exchanges → 2, join gone).
       // Assumes non-null value (holds by the events generator: verified 0
-      // nulls at every armed scale; a null would shrink the collected
-      // frame where the join kept the weight row, and the oracle gate
-      // would flag the divergence corpus-specifically).
+      // nulls at every armed scale, pinned by StatQueriesSpec; a null would
+      // shrink the collected frame where the join kept the weight row, and
+      // the oracle gate would flag the divergence corpus-specifically).
       events(s, d)
         .withColumn("vals", collect_list(dec($"value", 2)).over(
           Window.partitionBy($"user_id").orderBy($"ts", $"event_id")
@@ -884,6 +884,11 @@ object StatQueries {
       // doubles are bit-identical (the oracle keeps DuckDB's window
       // quantile_cont; hash-identical is the proof). Plan: self-join +
       // pair aggregation gone, 10× candidate blowup gone.
+      // Assumes (user_id, ts, event_id) is unique per row, as ts_ewma does
+      // (event_id is unique; 0 duplicates at every armed scale, pinned by
+      // StatQueriesSpec): under a tie each engine orders the tied rows
+      // arbitrarily, so the ROWS frame's members — and the median — could
+      // differ between engines and runs.
       val vals = sort_array(collect_list($"value").over(
         Window.partitionBy($"user_id").orderBy($"ts", $"event_id")
           .rowsBetween(-9, 0)))

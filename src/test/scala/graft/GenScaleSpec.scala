@@ -45,7 +45,7 @@ class GenScaleSpec extends AnyFunSuite with SparkTestBase {
 
   test("replica 0 is the original rows, bit-for-bit") {
     val stride = spark.read.parquet(s"$src/customer.parquet")
-      .agg(max("c_custkey")).head.getLong(0) + 1
+      .agg(max("c_custkey")).head().getLong(0) + 1
     val orig = spark.read.parquet(s"$src/customer.parquet")
     val rep0 = spark.read.parquet(s"$dst/customer.parquet")
       .filter(col("c_custkey") < stride)
@@ -67,12 +67,12 @@ class GenScaleSpec extends AnyFunSuite with SparkTestBase {
 
   test("documents: replica tokens get the r-suffix, n_chars recomputed") {
     val stride = spark.read.parquet(s"$src/documents.parquet")
-      .agg(max("doc_id")).head.getLong(0) + 1
+      .agg(max("doc_id")).head().getLong(0) + 1
     val origRow = spark.read.parquet(s"$src/documents.parquet")
-      .orderBy("doc_id").select("doc_id", "text").head
+      .orderBy("doc_id").select("doc_id", "text").head()
     val rep1 = spark.read.parquet(s"$dst/documents.parquet")
       .filter(col("doc_id") === origRow.getLong(0) + stride)
-      .select("text", "n_chars").head
+      .select("text", "n_chars").head()
     val expected = origRow.getString(1).replaceAll("(\\S+)", "$1r1")
     assert(rep1.getString(0) == expected,
       "replica-1 text must suffix every whitespace token with 'r1'")
@@ -93,14 +93,14 @@ class GenScaleSpec extends AnyFunSuite with SparkTestBase {
 
   test("embeddings: replica r is the source vector rotated left by r") {
     val stride = spark.read.parquet(s"$src/embeddings.parquet")
-      .agg(max("vec_id")).head.getLong(0) + 1
+      .agg(max("vec_id")).head().getLong(0) + 1
     val orig = spark.read.parquet(s"$src/embeddings.parquet")
-      .orderBy("vec_id").select("vec_id", "embedding").head
+      .orderBy("vec_id").select("vec_id", "embedding").head()
     val v = orig.getSeq[Float](1)
     for (r <- 1 until R) {
       val rep = spark.read.parquet(s"$dst/embeddings.parquet")
         .filter(col("vec_id") === orig.getLong(0) + r * stride)
-        .select("embedding").head.getSeq[Float](0)
+        .select("embedding").head().getSeq[Float](0)
       assert(rep == v.drop(r) ++ v.take(r), s"replica $r must rotate left by $r")
     }
   }

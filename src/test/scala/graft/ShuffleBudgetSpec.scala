@@ -27,10 +27,8 @@ class ShuffleBudgetSpec extends AnyFunSuite with SparkTestBase {
   test("per-query warm shuffle read stays within SHUFFLE_BUDGET.json [sf0.01]") {
     val bytes = new AtomicLong(0)
     val listener = new SparkListener {
-      override def onTaskEnd(te: SparkListenerTaskEnd): Unit = {
-        val m = te.taskMetrics
-        if (m != null) bytes.addAndGet(m.shuffleReadMetrics.totalBytesRead)
-      }
+      override def onTaskEnd(te: SparkListenerTaskEnd): Unit =
+        Option(te.taskMetrics).foreach(m => bytes.addAndGet(m.shuffleReadMetrics.totalBytesRead))
     }
     spark.sparkContext.addSparkListener(listener)
     def drained(): Long = {

@@ -1,6 +1,5 @@
 package graft.functions
 
-import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.SparkTestBase
@@ -61,7 +60,7 @@ class CrossHashSpec extends AnyFunSuite with SparkTestBase {
     import spark.implicits._
     val x = 123456789L
     val got = Seq(x).toDF("x")
-      .select(CrossHash.affine(7, $"x").as("h")).head.getLong(0)
+      .select(CrossHash.affine(7, $"x").as("h")).head().getLong(0)
     assert(got == (x * CrossHash.affineA(7) + CrossHash.affineB(7)) % CrossHash.P1)
   }
 
@@ -80,8 +79,8 @@ class CrossHashSpec extends AnyFunSuite with SparkTestBase {
   test("foldHash is order-sensitive and matches its SQL-side definition") {
     import spark.implicits._
     val df = Seq((3L, 5L, 7L)).toDF("a", "b", "c")
-    val fwd = df.select(CrossHash.foldHash(Seq($"a", $"b", $"c"))).head.getLong(0)
-    val rev = df.select(CrossHash.foldHash(Seq($"c", $"b", $"a"))).head.getLong(0)
+    val fwd = df.select(CrossHash.foldHash(Seq($"a", $"b", $"c"))).head().getLong(0)
+    val rev = df.select(CrossHash.foldHash(Seq($"c", $"b", $"a"))).head().getLong(0)
     assert(fwd != rev, "fold must be order-sensitive")
     val expected = Seq(3L, 5L, 7L).foldLeft(0L)((acc, v) => (acc * 131 + v) % CrossHash.P1)
     assert(fwd == expected)

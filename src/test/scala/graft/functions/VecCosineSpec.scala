@@ -61,6 +61,6 @@ class VecCosineSpec extends AnyFunSuite with SparkTestBase {
     // "*(n)" prefixes mark operators inside a WholeStageCodegen stage
     assert(plan.contains("*(1) Project [vec_cosine"), plan)
     // if doGenCode were broken, execution would throw or fall back
-    assert(q.agg(min("c")).head.getDouble(0) > 0.999999)
+    assert(q.agg(min("c")).head().getDouble(0) > 0.999999)
   }
 }

@@ -112,7 +112,7 @@ class AnnCalibrationSpec extends AnyFunSuite with SparkTestBase {
       .select(col("vec_id"), col("label"),
         graft.functions.VectorFns.quantize(col("embedding")).as("v"))
     def totalErr(cb: VectorIndex.Codebook): Long =
-      VectorIndex.encode(eq, cb).agg(sum(col("err"))).head.getLong(0)
+      VectorIndex.encode(eq, cb).agg(sum(col("err"))).head().getLong(0)
     val errCold = totalErr(VectorIndex.codebook(eq))
     val errTrained = totalErr(VectorIndex.trainCodebook(eq, rounds = 1))
     info(s"total PQ reconstruction err: cold=$errCold trained=$errTrained " +

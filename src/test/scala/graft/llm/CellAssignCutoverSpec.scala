@@ -20,8 +20,11 @@ import graft.functions.VectorFns
   *     the parity contract that lets the two physical paths share one
   *     semantic definition;
   *  2. the distributed floor-mean Lloyd round reproduces the driver-side
-  *     arithmetic bit-for-bit;
-  *  3. a synthetic high-K corpus (K ≫ a forced cutover) runs end-to-end
+  *     arithmetic bit-for-bit and, like the driver round and the oracle,
+  *     drops a cell that lost every member;
+  *  3. a seed that duplicates a smaller seed (its cell empties in the
+  *     Lloyd round) leaves the two paths row-identical;
+  *  4. a synthetic high-K corpus (K ≫ a forced cutover) runs end-to-end
   *     through the frame path and still delivers SemDeDup's planted-
   *     cluster semantics under genuine pruning (probe < coarse groups).
   */
@@ -33,6 +36,13 @@ class CellAssignCutoverSpec extends AnyFunSuite with SparkTestBase {
       perCluster = perCluster)
     spark.read.parquet(s"$d/embeddings.parquet")
       .select(col("vec_id"), VectorFns.quantize(col("embedding")).as("v"))
+      .withColumn("n2", VectorFns.qnorm2(col("v")))
+  }
+
+  /** `eq` with vec_id `twin` given the exact vector of vec_id `of`. */
+  private def withTwin(eq: DataFrame, twin: Long, of: Long): DataFrame = {
+    val v = eq.filter(col("vec_id") === of).select(col("v")).head().getSeq[Long](0)
+    eq.withColumn("v", when(col("vec_id") === twin, typedLit(v)).otherwise(col("v")))
       .withColumn("n2", VectorFns.qnorm2(col("v")))
   }
 
@@ -81,40 +91,64 @@ class CellAssignCutoverSpec extends AnyFunSuite with SparkTestBase {
     val k = 32
     val cents = VectorIndex.centroids(eq, k)
     // driver-side expected: literal assignment + floor(sum/count) per
-    // (cell, pos) — the exact arithmetic trainCentroids uses
+    // (cell, pos), and a cell left without members is dropped — the
+    // arithmetic and the rule of VectorIndex.lloydRound and the oracle
     val asn = VectorIndex.assignCells(eq, cents)
       .select(col("cell"), col("v")).collect()
       .map(r => (r.getLong(0), r.getSeq[Long](1).toArray))
-    val expected = cents.map { case (cid, old) =>
+    val expected = cents.flatMap { case (cid, old) =>
       val members = asn.filter(_._1 == cid).map(_._2)
-      if (members.isEmpty) (cid, old)
+      if (members.isEmpty) scala.None
       else {
         val dim = old.length
-        (cid, Array.tabulate(dim) { p =>
+        Some((cid, Array.tabulate(dim) { p =>
           math.floor(members.map(_(p)).sum.toDouble / members.length).toLong
-        })
+        }))
       }
     }.toMap
-    val trained = VectorIndex.trainCentroidsFrame(eq,
-        VectorIndex.centroidFrame(spark, cents), k, rounds = 1, probe = k)
+    val trained = VectorIndex.lloydRoundFrame(eq,
+        VectorIndex.centroidFrame(spark, cents), k, probe = k)
       .select(col("cid"), col("cv")).collect()
       .map(r => (r.getLong(0), r.getSeq[Long](1).toArray)).toMap
+    val driver = VectorIndex.lloydRound(eq, cents).toMap
     assert(trained.keySet == expected.keySet)
+    assert(driver.keySet == expected.keySet)
     expected.foreach { case (cid, ev) =>
       assert(trained(cid).sameElements(ev), s"centroid $cid drifted")
+      assert(driver(cid).sameElements(ev), s"driver centroid $cid drifted")
     }
   }
 
-  test("semanticDedupFrame parity across the cutover at full probe") {
-    val eq = plantedEq(50, 20).persist()
+  /** `semanticDedupFrame` returns the same rows through the literal path
+    * and through the cutover path at full probe, K = 20.
+    */
+  private def assertCutoverParity(eq: DataFrame) = {
     val targetPop = 50L // K = 20 — small enough to compare exhaustively
-    val lit = LlmQueries.semanticDedupFrame(eq, 0.4, None, targetPop)
+    val literal = LlmQueries.semanticDedupFrame(eq, 0.4, None, targetPop)
       .orderBy(col("vec_id")).collect().map(_.toSeq)
     val joined = LlmQueries.semanticDedupFrame(eq, 0.4, None, targetPop,
         assignCutover = 1, assignProbe = Int.MaxValue)
       .orderBy(col("vec_id")).collect().map(_.toSeq)
-    assert(lit.length == joined.length)
-    lit.zip(joined).foreach { case (a, b) => assert(a == b) }
+    assert(literal.length == joined.length)
+    val diff = literal.zip(joined).count { case (a, b) => a != b }
+    assert(diff == 0, s"$diff of ${literal.length} rows differ across the cutover")
+  }
+
+  test("semanticDedupFrame parity across the cutover at full probe") {
+    val eq = plantedEq(50, 20).persist()
+    assertCutoverParity(eq)
+    eq.unpersist()
+  }
+
+  test("semanticDedupFrame parity across the cutover when a seed duplicates a smaller seed") {
+    // vec_id 1 carries vec_id 0's exact vector: every assignment tie goes
+    // to the smaller cid, so cell 1 loses all its members in the Lloyd
+    // round. Both rounds must drop it; a round that kept its stale
+    // centroid pulls rows into cell 1 on the final assignment (22 of the
+    // 1,000 rows differ when the frame round keeps emptied cells).
+    val eq = withTwin(plantedEq(50, 20), twin = 1L, of = 0L).persist()
+    assert(eq.count() == 1000L)
+    assertCutoverParity(eq)
     eq.unpersist()
   }
 

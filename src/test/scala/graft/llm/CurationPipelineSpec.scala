@@ -132,7 +132,7 @@ class CurationPipelineSpec extends AnyFunSuite with SparkTestBase {
     // same rates rebalanceByLang derives, as a static frame
     val toks = size(split(col("text"), " ")).cast("long")
     val tot = docs.groupBy(col("lang")).agg(sum(toks).as("total"))
-    val budget = tot.agg(min(col("total"))).head.getLong(0)
+    val budget = tot.agg(min(col("total"))).head().getLong(0)
     val rates = tot.select(col("lang"),
       (lit(budget).cast("double") / col("total")).as("rate"))
     // the gate is a pure per-row function + a stream-static broadcast
@@ -255,7 +255,6 @@ class CurationPipelineSpec extends AnyFunSuite with SparkTestBase {
   }
 
   test("decontaminate drops exactly the docs sharing a span with the benchmark") {
-    import spark.implicits._
     val bench = docs.filter(col("doc_id") < 10)
     val corpus = docs.filter(col("doc_id") >= 10)
     val out = CurationPipeline(corpus).decontaminate(bench).result
@@ -321,7 +320,7 @@ class CurationPipelineSpec extends AnyFunSuite with SparkTestBase {
     val back = spark.read.format("shardpack").load(dir)
     assert(back.count() == a.length)
     val meta = back.filter(col("key") === f"doc_${a.head.getAs[Long]("doc_id")}%019d")
-      .select(col("metadata").cast("string")).head.getString(0)
+      .select(col("metadata").cast("string")).head().getString(0)
     assert(meta.contains("\"split\":") && meta.contains("\"lang\":"))
     // the inverse: fromShardpack recovers (doc_id, text) exactly, and a
     // sampled read is the hash-membership subset

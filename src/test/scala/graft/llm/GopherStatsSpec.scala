@@ -1,7 +1,6 @@
 package graft.llm
 
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{DoubleType, IntegerType, LongType}
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.SparkTestBase

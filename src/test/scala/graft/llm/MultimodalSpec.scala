@@ -205,7 +205,7 @@ class MultimodalSpec extends AnyFunSuite with SparkTestBase {
     // decodable images take the REAL pixel resize path: the output is an
     // 8×8 BMP (itself decodable), not raw newW·newH stub bytes
     val resized = Multimodal.resizeEntries(df.filter($"key" === "png1"), 8, 8)
-      .select("data").head.getAs[Array[Byte]](0)
+      .select("data").head().getAs[Array[Byte]](0)
     assert(Multimodal.decodeGrayPixels(resized)
       .exists { case (w, h, _) => w == 8 && h == 8 })
   }

@@ -57,12 +57,25 @@ class ShjDispatchSpec extends AnyFunSuite with SparkTestBase {
       slots * cap * 128L <= heap * 3L / 10L)
   }
 
+  test("off local, the cap reads the executor's memory and cores, not the driver's") {
+    val conf = new org.apache.spark.SparkConf(false)
+      .set("spark.executor.memory", "8g").set("spark.executor.cores", "8")
+    assert(LlmQueries.executorHeapAndSlots(conf) == ((8L << 30, 8)))
+    // 8 GiB × 0.3 / 8 slots / 128 B, whatever the driver heap is
+    assert(LlmQueries.shjBuildRowsCap(8L << 30, 8, 128L) == 2516582L)
+    // two cpus per task halve the concurrent tasks
+    conf.set("spark.task.cpus", "2")
+    assert(LlmQueries.executorHeapAndSlots(conf) == ((8L << 30, 4)))
+    // unset keys take Spark's defaults: a 1g executor running one task
+    assert(LlmQueries.executorHeapAndSlots(new org.apache.spark.SparkConf(false)) ==
+      ((1L << 30, 1)))
+  }
+
   // SYNTHETIC docs for the plan-shape pins: a parquet-table frame here can
   // be plan-matched by CacheManager against frames other suites persisted
   // over the same dir, and the substituted InMemoryRelation carries the
   // join strategy of whoever cached it first — not the hint under test
   private def synthDocs(n: Int) = {
-    import spark.implicits._
     spark.range(0, n).select(col("id").as("doc_id"),
       concat(lit("alpha beta gamma delta epsilon zeta eta theta doc "),
         col("id").cast("string")).as("text"),

@@ -109,7 +109,7 @@ class StreamingCurationSpec extends AnyFunSuite with SparkTestBase {
     val got = new java.util.concurrent.ConcurrentLinkedQueue[java.lang.Long]()
     val q = StreamingCuration.start(stream, model, kept => {
       kept.select(col("doc_id")).collect().foreach(r => got.add(r.getLong(0)))
-      kept.unpersist()
+      kept.unpersist(); ()
     })
     try {
       val rows = input.orderBy(col("doc_id")).collect()

@@ -18,7 +18,7 @@ class AqeSpec extends AnyFunSuite with SparkTestBase {
 
   private val sf = "/root/testdata/sf0.01"
 
-  private def withConf(pairs: (String, String)*)(body: => Unit): Unit = {
+  private def withConf[T](pairs: (String, String)*)(body: => T): T = {
     val olds = pairs.map { case (k, _) => k -> spark.conf.getOption(k) }
     pairs.foreach { case (k, v) => spark.conf.set(k, v) }
     try body

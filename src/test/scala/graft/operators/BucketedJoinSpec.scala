@@ -55,8 +55,7 @@ class BucketedJoinSpec extends AnyFunSuite with SparkTestBase {
         "expected the sort-merge path (broadcast disabled)")
     } finally {
       spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prevThreshold)
-      spark.sql("DROP TABLE IF EXISTS b_orders")
-      spark.sql("DROP TABLE IF EXISTS b_customer")
+      Seq("b_orders", "b_customer").foreach(t => spark.sql(s"DROP TABLE IF EXISTS $t"))
     }
   }
 }

@@ -16,6 +16,21 @@ class StatQueriesSpec extends AnyFunSuite with SparkTestBase {
   private val sf = "/root/testdata/sf0.001"
   private def run(name: String) = SparkEntry.queries(name)(spark, sf)
 
+  test("events meets the window rewrites' preconditions on every armed corpus") {
+    // ts_ewma and win_rolling_median fold trailing frames of a window
+    // ordered by (ts, event_id) per user: they assume no null value and
+    // no two rows sharing (user_id, ts, event_id)
+    val root = new java.io.File(sf).getParent
+    for (scale <- Seq("sf0.001", "sf0.01", "sf0.1")) {
+      val ev = graft.Tables.events(spark, s"$root/$scale")
+      val nulls = ev.filter(col("value").isNull).count()
+      val dupKeys = ev.groupBy("user_id", "ts", "event_id").count()
+        .filter(col("count") > 1).count()
+      assert(nulls == 0L && dupKeys == 0L,
+        s"$scale: $nulls null values, $dupKeys duplicated (user_id, ts, event_id)")
+    }
+  }
+
   test("agg_corr matches Spark's native corr/covar/regr within 1e-6 relative") {
     val ours = run("agg_corr").collect()
       .map(r => r.getString(0) -> r).toMap

@@ -24,13 +24,15 @@ class RowLevelOpsSpec extends AnyFunSuite with SparkTestBase {
     r
   }
 
-  private def createTable(name: String): Unit =
+  private def createTable(name: String): Unit = {
     spark.sql(
       s"""CREATE TABLE spkrl.$name (
          |  key STRING NOT NULL, metadata BINARY,
          |  entries ARRAY<STRUCT<file_name: STRING, content_type: STRING,
          |                       encoding: STRING, data: BINARY>> NOT NULL)
          |USING shardpack""".stripMargin)
+    ()
+  }
 
   private def sampleDf(n: Int) = {
     import spark.implicits._

@@ -39,13 +39,19 @@ class ShardpackCatalogSpec extends AnyFunSuite with SparkTestBase {
     case other => other +: other.children.flatMap(collectPlans)
   }
 
-  private def createBucketed(name: String, buckets: Int): Unit =
+  private def createBucketed(name: String, buckets: Int): Unit = {
     spark.sql(
       s"""CREATE TABLE spk.$name (
          |  key STRING NOT NULL, metadata BINARY,
          |  entries ARRAY<STRUCT<file_name: STRING, content_type: STRING,
          |                       encoding: STRING, data: BINARY>> NOT NULL)
          |USING shardpack PARTITIONED BY (bucket($buckets, key))""".stripMargin)
+    ()
+  }
+
+  private def dropTable(name: String): Unit = {
+    spark.sql(s"DROP TABLE IF EXISTS spk.$name"); ()
+  }
 
   test("bucketed write produces one-bucket shards tagged in the file name") {
     root // force catalog registration
@@ -92,8 +98,8 @@ class ShardpackCatalogSpec extends AnyFunSuite with SparkTestBase {
         s"expected a storage-partitioned join, found shuffles:\n${joined.queryExecution.executedPlan}")
     } finally {
       spark.conf.unset("spark.sql.autoBroadcastJoinThreshold")
-      spark.sql("DROP TABLE IF EXISTS spk.spj_a")
-      spark.sql("DROP TABLE IF EXISTS spk.spj_b")
+      dropTable("spj_a")
+      dropTable("spj_b")
     }
   }
 
@@ -106,7 +112,7 @@ class ShardpackCatalogSpec extends AnyFunSuite with SparkTestBase {
           |SELECT key, metadata, entries FROM ctas_src WHERE key < 'key00020'""".stripMargin)
       assert(spark.table("spk.ctas").count() == 20)
       assert(spark.table("spk.ctas").filter(col("key") === "key00019").count() == 1)
-    } finally spark.sql("DROP TABLE IF EXISTS spk.ctas")
+    } finally dropTable("ctas")
   }
 
   test("CALL system.stats reports the table's metadata profile") {
@@ -126,7 +132,7 @@ class ShardpackCatalogSpec extends AnyFunSuite with SparkTestBase {
       spark.sql("CALL spk.system.build_index('st')")
       val r1 = spark.sql("CALL spk.system.stats('st')").collect()(0)
       assert(r1.getBoolean(5) && r1.getLong(1) == 50)
-    } finally spark.sql("DROP TABLE IF EXISTS spk.st")
+    } finally dropTable("st")
   }
 
   test("CALL system.vacuum removes only stale orphaned temps") {
@@ -151,7 +157,7 @@ class ShardpackCatalogSpec extends AnyFunSuite with SparkTestBase {
       assert(removed == 1)
       assert(!stale.exists() && fresh.exists())
       assert(spark.table("spk.vac").count() == 10) // data untouched
-    } finally spark.sql("DROP TABLE IF EXISTS spk.vac")
+    } finally dropTable("vac")
   }
 
   test("stored procedures: CALL system.build_index / compact / expire_range") {
@@ -181,7 +187,7 @@ class ShardpackCatalogSpec extends AnyFunSuite with SparkTestBase {
       val listed = spark.sql("SHOW PROCEDURES IN spk.system").collect()
         .map(_.mkString).mkString(",")
       assert(listed.contains("build_index") && listed.contains("compact"))
-    } finally spark.sql("DROP TABLE IF EXISTS spk.proc1")
+    } finally dropTable("proc1")
   }
 
   test("SQL DELETE FROM: key set, key range, and full truncate") {
@@ -213,7 +219,7 @@ class ShardpackCatalogSpec extends AnyFunSuite with SparkTestBase {
       // unconditional delete → truncate
       spark.sql("DELETE FROM spk.del1")
       assert(spark.table("spk.del1").count() == 0)
-    } finally spark.sql("DROP TABLE IF EXISTS spk.del1")
+    } finally dropTable("del1")
   }
 
   test("catalog lifecycle: list, rename, drop") {

@@ -192,8 +192,8 @@ class ShardpackDataSourceSpec extends AnyFunSuite with SparkTestBase {
         lit("").as("encoding"), lit("x".getBytes).as("data"))).as("entries"))
       .write.format("shardpack").mode("append").save(dir)
     val back = spark.read.format("shardpack").load(dir)
-    assert(back.filter(col("metadata").isNull).select("key").head.getString(0) == "k0")
-    val empty = back.filter(col("metadata").isNotNull).head
+    assert(back.filter(col("metadata").isNull).select("key").head().getString(0) == "k0")
+    val empty = back.filter(col("metadata").isNotNull).head()
     assert(empty.getString(0) == "k1")
     assert(empty.getAs[Array[Byte]]("metadata").length == 0)
   }

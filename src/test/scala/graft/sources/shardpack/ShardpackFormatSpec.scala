@@ -1,6 +1,6 @@
 package graft.sources.shardpack
 
-import java.io.{ByteArrayInputStream, ByteArrayOutputStream, DataInputStream, DataOutputStream}
+import java.io.{ByteArrayInputStream, ByteArrayOutputStream, DataInputStream}
 import java.nio.charset.StandardCharsets
 
 import org.scalatest.funsuite.AnyFunSuite

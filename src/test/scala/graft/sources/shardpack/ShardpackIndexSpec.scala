@@ -120,7 +120,6 @@ class ShardpackIndexSpec extends AnyFunSuite with SparkTestBase {
   }
 
   test("pushed LIMIT plans only the shard prefix covering the limit") {
-    import spark.implicits._
     val dir = tmp() + "/limit"
     // three shards of 2 records each, written in three separate appends
     writeDocs(dir, ("a1", "one"), ("a2", "two"))
@@ -260,7 +259,7 @@ class ShardpackIndexSpec extends AnyFunSuite with SparkTestBase {
     var expected = readBack(dir)
     assert(expected.size == 8 && lookupParts(dir, "m1") == 1)
 
-    def swap(op: String, survivor: String)(run: => Unit)(
+    def swap(op: String, survivor: String)(run: => Any)(
         edit: Map[String, (String, String)] => Map[String, (String, String)]): Unit = {
       val before = shardNames(dir)
       run
@@ -276,7 +275,7 @@ class ShardpackIndexSpec extends AnyFunSuite with SparkTestBase {
       assert(retired.forall(n => !idx.contains(n)), s"$op kept entries for $retired")
       assert(lookupParts(dir, survivor) == 1, s"after $op, lookup of $survivor")
       expected = edit(expected)
-      assert(readBack(dir) == expected, s"rows after $op")
+      assert(readBack(dir) == expected, s"rows after $op"); ()
     }
 
     swap("deleteKeys", "a2")(ShardpackOps.deleteKeys(spark, dir, Seq("a1")))(_ - "a1")

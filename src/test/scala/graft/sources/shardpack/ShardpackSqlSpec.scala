@@ -2,7 +2,6 @@ package graft.sources.shardpack
 
 import java.nio.file.Files
 
-import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.SparkTestBase

@@ -45,7 +45,7 @@ class StreamingSpec extends AnyFunSuite with SparkTestBase {
       // a late event inside an already-finalized window is dropped
       in.addData(ev(5, ts(0, 50)))
       q.processAllAvailable()
-      assert(spark.table("tumbling").agg(sum("cnt")).head.getLong(0) == 3L)
+      assert(spark.table("tumbling").agg(sum("cnt")).head().getLong(0) == 3L)
     } finally q.stop()
   }
 
@@ -97,7 +97,7 @@ class StreamingSpec extends AnyFunSuite with SparkTestBase {
       assert(spark.table("statesess").count() == 0) // session still open
       in.addData(ev(3, ts(10))) // 9-min silence closes the first session
       q.processAllAvailable()
-      val r = spark.table("statesess").head
+      val r = spark.table("statesess").head()
       assert(r.getAs[Timestamp]("sess_start") == ts(0))
       assert(r.getAs[Timestamp]("sess_end") == ts(3)) // last + gap
       assert(r.getAs[Int]("cnt") == 2)
@@ -265,7 +265,7 @@ class StreamingSpec extends AnyFunSuite with SparkTestBase {
       val keys = back.select("key").collect().map(_.getString(0)).sorted
       assert(keys.toSeq == Seq("ev_000001", "ev_000002", "ev_000003"))
       val payload = back.filter($"key" === "ev_000003")
-        .select($"entries".getItem(0).getField("data").cast("string")).head.getString(0)
+        .select($"entries".getItem(0).getField("data").cast("string")).head().getString(0)
       assert(payload == """{"value":1.0}""")
       // shard names are a deterministic function of (epoch, partition, seq):
       // the commit skips already-published names, so epoch replays after
