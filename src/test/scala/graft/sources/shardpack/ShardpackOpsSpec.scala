@@ -3,6 +3,8 @@ package graft.sources.shardpack
 import java.nio.file.{Files, Paths}
 
 import org.apache.spark.sql.{DataFrameWriter, Row}
+import org.apache.spark.sql.execution.LocalTableScanExec
+import org.apache.spark.sql.execution.datasources.v2.BatchScanExec
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -351,20 +353,33 @@ class ShardpackOpsSpec extends AnyFunSuite with SparkTestBase {
             val df = spark.read.format("shardpack").load(dir)
             val all = df.select("key").collect().map(_.getString(0)).toSeq.sorted(KeyOrd)
             assert(all == sorted, ctx)
-            def rowPath(c: org.apache.spark.sql.Column) = df.filter(c).select("key", "entries")
-              .collect().map(_.getString(0)).toSeq.sorted(KeyOrd)
-            def colPath(c: org.apache.spark.sql.Column) = df.filter(c).select("key")
-              .collect().map(_.getString(0)).toSeq.sorted(KeyOrd)
-            def check(c: org.apache.spark.sql.Column, want: Seq[String], what: String): Unit = {
-              assert(rowPath(c) == want, s"$ctx row path $what")
-              assert(colPath(c) == want, s"$ctx columnar path $what"); ()
+            // keyed reads run on both scan kinds: the batch scan without a
+            // sidecar, the driver read (ShardpackLocalScan) with one
+            def keysOf(q: org.apache.spark.sql.DataFrame, path: String, what: String,
+                kind: String): Seq[String] = {
+              val plan = q.queryExecution.executedPlan
+              val planned = plan match {
+                case _: LocalTableScanExec => "local"
+                case p if p.collectFirst { case _: BatchScanExec => () }.isDefined => "batch"
+                case p => p.toString
+              }
+              assert(planned == kind, s"$ctx $path path $what planned\n$plan")
+              q.collect().map(_.getString(0)).toSeq.sorted(KeyOrd)
             }
+            def check(c: org.apache.spark.sql.Column, want: Seq[String], what: String,
+                kind: String): Unit = {
+              assert(keysOf(df.filter(c).select("key", "entries"), "row", what, kind) == want,
+                s"$ctx row path $what")
+              assert(keysOf(df.filter(c).select("key"), "columnar", what, kind) == want,
+                s"$ctx columnar path $what"); ()
+            }
+            val lookup = if (indexed) "local" else "batch"
             val probes = Seq("\uE000", "\uF000", "\uD83D\uDE00", sorted(sorted.size / 2)) ++ absent
-            probes.foreach(k => check(col("key") === k, all.filter(_ == k), s"key = $k"))
-            check(col("key").isin(probes: _*), all.filter(probes.contains), "IN")
+            probes.foreach(k => check(col("key") === k, all.filter(_ == k), s"key = $k", lookup))
+            check(col("key").isin(probes: _*), all.filter(probes.contains), "IN", lookup)
             val (lo, hi) = (sorted(sorted.size / 4), sorted(3 * sorted.size / 4))
             check(col("key") >= lo && col("key") < hi,
-              all.filter(k => KeyOrd.gteq(k, lo) && KeyOrd.lt(k, hi)), s"[$lo, $hi)")
+              all.filter(k => KeyOrd.gteq(k, lo) && KeyOrd.lt(k, hi)), s"[$lo, $hi)", "batch")
             val agg = df.agg(count(lit(1)), min(col("key")), max(col("key"))).collect()(0)
             assert((agg.getLong(0), agg.getString(1), agg.getString(2)) ==
               ((all.size.toLong, all.head, all.last)), s"$ctx pushed count/min/max")

@@ -45,4 +45,17 @@ class ShardpackSourceScanSpec extends AnyFunSuite {
     Seq("final class ShardpackPartitionReader(", "final class ShardpackColumnarReader(")
       .foreach(r => assert(definition(src, r).contains("slice: ShardSlice"), r))
   }
+
+  test("the driver read goes through the batch reader factory, ShardSlice and ShardpackPartitionReader") {
+    val src = Files.readString(Paths.get(
+      "src/main/scala/graft/sources/shardpack/ShardpackDataSource.scala"))
+    val local = definition(src, "final class ShardpackLocalScan(")
+    assert(local.contains("batch.createReaderFactory()"))
+    assert(local.contains("reader: ShardpackPartitionReader ="))
+    assert(!local.contains("decodeRecord"), "the driver read must not decode records itself")
+    val factory = definition(src, "final case class ShardpackReaderFactory(")
+    assert(factory.contains("new ShardSlice("))
+    assert(factory.contains("createReader(p: InputPartition): ShardpackPartitionReader"))
+    assert(factory.contains("new ShardpackPartitionReader(slice(p)"))
+  }
 }
