@@ -2,7 +2,10 @@ package graft.sources.shardpack
 
 import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.Bridge
 
 /** Dataset-level operations over shardpack tables, completing the
   * reference's operation inventory (SURVEY.md §2A) beyond plain scan/write:
@@ -23,8 +26,8 @@ import org.apache.spark.sql.functions._
   *     (`docs/draft.md:207-211`): a small shardpack of updated records
   *     combined with the base at read time, overlay winning per key.
   *   - [[merge]] — the write-time counterpart of overlay: copy-on-write
-  *     upsert folding updates into the bucket, rewriting only the shards
-  *     whose key envelope is hit.
+  *     upsert folding updates into the bucket, rewriting each shard whose
+  *     key envelope is hit as exactly one key-sorted shard.
   *   - [[compact]] — small-shard compaction, the maintenance counterpart
   *     of the streaming sink's per-epoch appends.
   *
@@ -121,24 +124,32 @@ object ShardpackOps {
     ShardpackIndex.carry(fs, dir, before.map(_.getPath.getName).toSet)
   }
 
-  /** The listed shards whose envelope may hold a key of `keys` inside
-    * `range` ([[ShardpackFormat.ShardStats.mayHold]]); envelopes come
-    * sidecar-first (one read), footer probes only for shards the index
-    * doesn't cover, and stats-less shards are always affected.
+  /** The listed shards that may hold a key of `keys` inside `range`, with
+    * their envelopes. The envelope test
+    * ([[ShardpackFormat.ShardStats.mayHold]]) runs on sidecar-first
+    * envelopes (one read; footer probes only for shards the index doesn't
+    * cover); with a key set, each candidate's footer then decides through
+    * [[ShardpackFormat.ShardStats.mayContain]], so a key inside an envelope
+    * that the shard's v3 Bloom rules out touches nothing. Stats-less shards
+    * are always affected.
     */
   private def affected(fs: FileSystem, dir: String, shards: Seq[FileStatus],
-      keys: Option[Set[String]], range: Option[KeyRange]): Seq[FileStatus] =
-    ShardpackIndex.envelopes(fs, new Path(dir), shards).collect {
-      case (st, env) if ShardpackFormat.ShardStats.mayHold(env, keys, range) => st
+      keys: Option[Set[String]], range: Option[KeyRange])
+      : Seq[(FileStatus, Option[(String, String)])] =
+    ShardpackIndex.envelopes(fs, new Path(dir), shards).filter { case (st, env) =>
+      ShardpackFormat.ShardStats.mayHold(env, keys, range) && (keys.isEmpty ||
+        ShardpackFormat.ShardStats.mayContain(
+          ShardpackIndex.footer(fs, st.getPath, st.getLen).shardMetadata, keys, range))
     }
 
   /** Delete records by key: rewrite surviving records of the AFFECTED
     * shards only to a new generation, then swap. Never edits a shard in
     * place (shards are immutable, `docs/draft.md:207-211`).
     *
-    * Shard selection uses the footer key-range stats the DSv2 writer
-    * stamps ([[ShardpackFormat.ShardStats]]): a shard whose [min,max] range
-    * misses every delete key is left untouched — the rewrite cost is
+    * Shard selection uses the footer key-range and Bloom stats the DSv2
+    * writer stamps ([[ShardpackFormat.ShardStats]], through [[affected]]):
+    * a shard whose [min,max] range misses every delete key, or whose Bloom
+    * rules every one out, is left untouched — the rewrite cost is
     * proportional to the shards actually containing deletions, not the
     * bucket size. (Stats-less shards — foreign writers — are conservatively
     * rewritten.)
@@ -148,7 +159,7 @@ object ShardpackOps {
     val fs = new Path(dir).getFileSystem(HadoopConfs.session())
     // snapshot the old generation BEFORE making the new one visible
     val oldShards = ShardpackDataSource.listShards(fs, new Path(dir))
-    val hit = affected(fs, dir, oldShards, Some(keys.toSet), None)
+    val hit = affected(fs, dir, oldShards, Some(keys.toSet), None).map(_._1)
     if (hit.isEmpty) return
     // read ONLY the affected shards (each is a valid single-file table path)
     hit.map(st => spark.read.format("shardpack").load(st.getPath.toString)).reduce(_ union _)
@@ -316,7 +327,7 @@ object ShardpackOps {
     val fs = new Path(dir).getFileSystem(HadoopConfs.session())
     val oldShards = ShardpackDataSource.listShards(fs, new Path(dir))
     val hit = affected(fs, dir, oldShards, None,
-      Some(KeyRange(Some(lo), loInc = true, Some(hi), hiInc = false, None)))
+      Some(KeyRange(Some(lo), loInc = true, Some(hi), hiInc = false, None))).map(_._1)
     if (hit.isEmpty) return
     hit.map(st => spark.read.format("shardpack").load(st.getPath.toString))
       .reduce(_ union _)
@@ -332,61 +343,125 @@ object ShardpackOps {
     * reference sketches (`/root/reference/docs/draft.md:207-211` stops at
     * the read-time combine).
     *
-    * Scale: affected-shard selection runs DISTRIBUTED — each shard's footer
-    * [min,max] key envelope (driver probes, shard-count work) is broadcast
-    * against the update keys, and only affected shard NAMES return to the
-    * driver. Bounded by shard count, never by update cardinality, so a merge
-    * batch can be arbitrarily large (unlike [[deleteKeys]]' driver key
-    * list). Shards whose envelope misses every update key are untouched;
-    * the rewrite cost is proportional to the shards actually hit. Stats-less
-    * shards (foreign writers) are conservatively rewritten. The swap follows
-    * [[retire]]'s crash-safe order: new generation visible before old
-    * shards are dropped — a crash mid-swap leaves transient duplicates,
-    * never data loss. The envelope join runs in Spark's string order,
-    * which is already [[ShardpackFormat.KeyOrd]].
+    * Two deciders pick the affected shards and check that `updates` is
+    * key-unique (with no ordering column there is no deterministic
+    * last-writer-wins, so duplicates are rejected loudly, before anything
+    * is written):
+    *   - Updates already on the driver (the optimized plan is a
+    *     `LocalRelation`: `Seq.toDF`, `createDataFrame` of a list) are
+    *     decided there, with no Spark job: their keys are collected and
+    *     hash-checked, and shards are picked by [[affected]], the envelope
+    *     test then the candidate footer's Bloom — a new key inside an
+    *     envelope that the Bloom rules out rewrites nothing. The rows are
+    *     already materialized, so a self-referential update is safe.
+    *   - Any other update (a streaming micro-batch, a derived frame) is
+    *     persisted first — which makes a self-referential update (CDC
+    *     derived from this same bucket) safe — and decided in ONE action:
+    *     the per-key counts are tested against the broadcast envelopes and
+    *     folded per partition into (keys seen, duplicate seen, pure insert
+    *     seen, hit shards), so what returns to the driver is bounded by
+    *     shard count × partitions, never by the number of updates.
     *
-    * `updates` must be key-unique: with no ordering column there is no
-    * deterministic last-writer-wins, so duplicates are rejected loudly.
+    * Both rewrite through [[rewrite]]: each affected shard becomes exactly
+    * one key-sorted shard, and the keys no affected envelope holds one
+    * more, all in one job. An update goes to the first affected shard
+    * whose envelope holds it, so a rewritten shard's envelope never grows
+    * and a sorted bucket stays sorted and disjoint: a single-key upsert on
+    * it is one job that replaces one shard by one. On the driver path a
+    * shard's survivors are a key filter; on the distributed path the
+    * shard's partition also carries the updates its envelope holds, and a
+    * window over the key keeps the update. Unhit shards are untouched;
+    * stats-less shards (foreign writers) are always affected. The swap
+    * follows [[retire]]'s crash-safe order. An empty update set writes
+    * nothing and leaves the sidecar as it is.
     */
   def merge(spark: SparkSession, dir: String, updates: DataFrame,
       compression: String = ShardpackFormat.Codec.None): Unit = {
     import spark.implicits._
-    // materialize once: the plan is scanned three times (uniqueness check,
-    // range probe, rewrite), and caching before any swap makes a
-    // self-referential update (CDC derived from this same bucket) safe
-    val up = updates.select(col("key"), col("metadata"), col("entries")).persist()
-    try {
-      require(up.groupBy("key").count().filter(col("count") > lit(1)).isEmpty,
-        "merge: updates must be key-unique — dedupe upstream")
-      val fs = new Path(dir).getFileSystem(HadoopConfs.session())
-      val oldShards = ShardpackDataSource.listShards(fs, new Path(dir))
-      // sidecar-first envelopes: one index read covers the whole listing,
-      // footer probes only for shards the index doesn't cover
-      val ranges = ShardpackIndex.envelopes(fs, new Path(dir), oldShards)
-      val statless = ranges.collect { case (st, None) => st }
-      val rangeDf = ranges
-        .collect { case (st, Some((lo, hi))) => (st.getPath.toString, lo, hi) }
-        .toSeq.toDF("shard", "kmin", "kmax")
-      val hitNames = up.select("key")
-        .join(broadcast(rangeDf), col("key") >= col("kmin") && col("key") <= col("kmax"))
-        .select("shard").distinct().as[String].collect().toSet
-      val affected = statless ++ ranges.collect {
-        case (st, Some(_)) if hitNames.contains(st.getPath.toString) => st
-      }
-      if (affected.isEmpty) {
-        up.write.format("shardpack").option("compression", compression)
-          .mode("append").save(dir)
-      } else {
-        val survivors = affected
-          .map(st => spark.read.format("shardpack").load(st.getPath.toString))
-          .reduce(_ union _)
-          .join(up.select("key"), Seq("key"), "left_anti")
-        survivors.union(up)
-          .write.format("shardpack").option("compression", compression)
-          .mode("append").save(dir)
-        retire(fs, new Path(dir), oldShards, affected.map(_.getPath))
-      }
-    } finally { up.unpersist(false); () }
+    val fs = new Path(dir).getFileSystem(HadoopConfs.session())
+    val oldShards = ShardpackDataSource.listShards(fs, new Path(dir))
+    val unique = "merge: updates must be key-unique — dedupe upstream"
+    val up = updates.select(col("key"), col("metadata"), col("entries"))
+    def read(st: FileStatus) = spark.read.format("shardpack").load(st.getPath.toString)
+    up.queryExecution.optimizedPlan match {
+      case _: LocalRelation =>
+        val keys = up.select("key").as[String].collect().toSeq
+        require(keys.toSet.size == keys.length, unique)
+        if (keys.isEmpty) return
+        val hit = affected(fs, dir, oldShards, Some(keys.toSet), None)
+        val routed = keys.groupBy(k => hit.indexWhere(h => holds(h._2, k)))
+        def rows(ks: Seq[String]) = up.filter(col("key").isin(ks: _*))
+        rewrite(fs, dir, oldShards, hit.map(_._1), compression,
+          hit.zipWithIndex.map { case ((st, env), i) =>
+            read(st).filter(!col("key").isin(keys.filter(holds(env, _)): _*))
+              .union(rows(routed.getOrElse(i, Nil)))
+          } ++ routed.get(-1).map(rows))
+      case _ =>
+        up.persist()
+        try {
+          val envs = ShardpackIndex.envelopes(fs, new Path(dir), oldShards)
+          val spans = spark.sparkContext.broadcast(envs.map(_._2).toArray)
+          // per partition: (keys seen, duplicate seen, pure insert seen, hit shards)
+          val folds = try up.groupBy("key").count().as[(String, Long)].mapPartitions { it =>
+            val sp = spans.value
+            var seen = false
+            var dup = false
+            var insert = false
+            val hit = scala.collection.mutable.BitSet.empty
+            it.foreach { case (k, n) =>
+              val holding = sp.indices.filter(i => holds(sp(i), k))
+              seen = true
+              dup ||= n > 1
+              insert ||= holding.isEmpty
+              hit ++= holding
+            }
+            Iterator((seen, dup, insert, hit.toSeq))
+          }.collect() finally spans.destroy()
+          require(!folds.exists(_._2), unique)
+          if (!folds.exists(_._1)) return
+          val hitIdx = folds.flatMap(_._4).toSet
+          val hit = envs.zipWithIndex.collect { case (e, i) if hitIdx(i) => e }
+          val hitSpans = hit.map(_._2).toArray
+          val route = udf((k: String) => hitSpans.indexWhere(holds(_, k)))
+          rewrite(fs, dir, oldShards, hit.map(_._1), compression,
+            hit.zipWithIndex.map { case ((st, env), i) =>
+              // the shard's records and every update its envelope holds in
+              // one partition; a key with an update keeps only the update,
+              // and only where it is routed (the window needs no exchange:
+              // one partition is clustered on any key)
+              val held = udf((k: String) => holds(env, k))
+              read(st).withColumn("_update", lit(false))
+                .union(up.filter(held(col("key"))).withColumn("_update", lit(true)))
+                .coalesce(1)
+                .withColumn("_updated", max("_update").over(Window.partitionBy("key")))
+                .filter(col("_update") === col("_updated") &&
+                  (!col("_update") || route(col("key")) === i))
+                .drop("_update", "_updated")
+            } ++ Option.when(folds.exists(_._3))(up.filter(route(col("key")) === -1)))
+        } finally { up.unpersist(false); () }
+    }
+  }
+
+  private def holds(env: Option[(String, String)], key: String): Boolean =
+    ShardpackFormat.ShardStats.mayHold(env, Some(Set(key)), None)
+
+  /** Append each of `parts` as ONE key-sorted write partition, in one job,
+    * then [[retire]] the `hit` shards: one part per hit shard (its
+    * survivors plus the updates routed to it) and one for the pure
+    * inserts, so each hit shard is replaced by exactly one shard (more
+    * only past the shard cap). The parts are unioned as RDDs, not
+    * DataFrames: Spark's `UnionExec` zips children that are each one
+    * partition into a single partition.
+    */
+  private def rewrite(fs: FileSystem, dir: String, before: Seq[FileStatus],
+      hit: Seq[FileStatus], compression: String, parts: Seq[DataFrame]): Unit = {
+    val sorted = parts.map(_.coalesce(1).sortWithinPartitions("key"))
+    val spark = sorted.head.sparkSession
+    Bridge.frame(spark, spark.sparkContext.union(sorted.map(_.queryExecution.toRdd)),
+        sorted.reduce(_ union _).schema)
+      .write.format("shardpack").option("compression", compression)
+      .mode("append").save(dir)
+    retire(fs, new Path(dir), before, hit.map(_.getPath))
   }
 
   /** Join per-column shardpack tables on key, concatenating their entry

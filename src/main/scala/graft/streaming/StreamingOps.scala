@@ -88,7 +88,9 @@ object StreamingOps {
     * [[graft.sources.shardpack.ShardpackOps.merge]] (copy-on-write with
     * envelope-pruned shard selection — an epoch rewrites only the shards
     * its key envelope intersects). Last-writer-wins per key across epochs;
-    * rows must be key-unique WITHIN a batch (merge enforces it). This is
+    * rows must be key-unique WITHIN a batch (merge enforces it). An empty
+    * micro-batch is a no-op inside merge, which decides emptiness in the
+    * same action as its shard selection, so no pre-check job runs. This is
     * the streaming complement of the append sink: append for immutable
     * event streams, upsert for mutable-entity change streams.
     *
@@ -110,8 +112,7 @@ object StreamingOps {
       .option("checkpointLocation", checkpoint)
       .outputMode(OutputMode.Update)
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        if (!batch.isEmpty)
-          graft.sources.shardpack.ShardpackOps.merge(batch.sparkSession, dir, batch)
+        graft.sources.shardpack.ShardpackOps.merge(batch.sparkSession, dir, batch)
         if (compactEvery > 0 && batchId % compactEvery == compactEvery - 1)
           graft.sources.shardpack.ShardpackOps.compact(batch.sparkSession, dir)
         () // compact returns a count; foreachBatch wants Unit

@@ -1,14 +1,25 @@
 package org.apache.spark.sql.graftbridge
 
-import org.apache.spark.sql.Column
+import org.apache.spark.rdd.RDD
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.classic.ExpressionUtils
+import org.apache.spark.sql.types.StructType
 
-/** Column ⇄ Expression bridge. Spark 4 made these conversions
-  * `private[sql]`; third-party expression libraries conventionally reach
-  * them through a shim inside the `org.apache.spark.sql` package tree.
+/** Column ⇄ Expression and RDD ⇄ DataFrame bridge. Spark 4 made these
+  * conversions `private[sql]`; third-party expression libraries
+  * conventionally reach them through a shim inside the
+  * `org.apache.spark.sql` package tree.
   */
 object Bridge {
   def column(e: Expression): Column = ExpressionUtils.column(e)
   def expression(c: Column): Expression = ExpressionUtils.expression(c)
+
+  /** A DataFrame over rows another plan already produces (`toRdd`), with
+    * no per-row conversion through `Row`.
+    */
+  def frame(spark: SparkSession, rows: RDD[InternalRow], schema: StructType): DataFrame =
+    spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
+      .internalCreateDataFrame(rows, schema)
 }

@@ -1,9 +1,7 @@
 package graft
 
 import java.nio.file.Files
-import java.util.concurrent.atomic.AtomicInteger
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.scalatest.funsuite.AnyFunSuite
 
 class AbSpec extends AnyFunSuite with SparkTestBase {
@@ -20,20 +18,12 @@ class AbSpec extends AnyFunSuite with SparkTestBase {
   }
 
   test("unknown variants and bad rounds are rejected before any Spark job") {
-    val jobs = new AtomicInteger()
-    val l = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit = { jobs.incrementAndGet(); () }
-    }
-    spark.sparkContext.addSparkListener(l)
-    try {
-      org.apache.spark.graftbridge.ListenerBridge.drain(spark.sparkContext)
-      val before = jobs.get()
+    val (_, jobs) = jobsDuring {
       Seq(Seq(sfDir, "2", "agg_group", "no_such_query"), Seq(sfDir, "-1", "agg_group"),
         Seq(sfDir, "x", "agg_group"), Seq(sfDir, "2"), Seq(sfDir, "2", "agg_group", "agg_group"))
         .foreach(a => intercept[IllegalArgumentException](Ab.parse(a)))
-      org.apache.spark.graftbridge.ListenerBridge.drain(spark.sparkContext)
-      assert(jobs.get() == before)
-    } finally spark.sparkContext.removeSparkListener(l)
+    }
+    assert(jobs == 0)
   }
 
   test("every record has a cold run, rounds-1 warm runs and non-negative task fields") {

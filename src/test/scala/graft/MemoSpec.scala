@@ -2,7 +2,6 @@ package graft
 
 import java.util.concurrent.atomic.AtomicInteger
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.scalatest.funsuite.AnyFunSuite
 
 /** The build-stage contract: Bench's `build:*` stages are derived from the
@@ -24,24 +23,6 @@ class MemoSpec extends AnyFunSuite with SparkTestBase {
     "build:image_hash", "build:image_embed", "build:video_hash",
     "build:audio_hash", "build:word_tok", "build:vocab_stats",
     "build:fuzzy_stats", "build:dsir_doc", "build:qlin_model")
-
-  /** Jobs started inside `f`, listener bus drained at both ends. */
-  private def jobsDuring[A](f: => A): (A, Int) = {
-    val n = new AtomicInteger()
-    val l = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit = {
-        n.incrementAndGet(); ()
-      }
-    }
-    val sc = spark.sparkContext
-    org.apache.spark.graftbridge.ListenerBridge.drain(sc)
-    sc.addSparkListener(l)
-    try {
-      val a = f
-      org.apache.spark.graftbridge.ListenerBridge.drain(sc)
-      (a, n.get)
-    } finally sc.removeSparkListener(l)
-  }
 
   test("SparkEntry.builds names the 21 build:* stages in their fixed order") {
     assert(SparkEntry.builds.map(_._1) == ExpectedStages)

@@ -1,5 +1,8 @@
 package graft
 
+import java.util.concurrent.atomic.AtomicInteger
+
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.SparkSession
 import org.scalatest.{BeforeAndAfterAll, Suite}
 
@@ -19,5 +22,21 @@ trait SparkTestBase extends BeforeAndAfterAll { self: Suite =>
     val s = SparkTestSession.spark
     s.sparkContext.setLogLevel("WARN")
     s
+  }
+
+  /** Jobs started inside `f`, listener bus drained at both ends. */
+  def jobsDuring[A](f: => A): (A, Int) = {
+    val n = new AtomicInteger()
+    val l = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = { n.incrementAndGet(); () }
+    }
+    val sc = spark.sparkContext
+    org.apache.spark.graftbridge.ListenerBridge.drain(sc)
+    sc.addSparkListener(l)
+    try {
+      val a = f
+      org.apache.spark.graftbridge.ListenerBridge.drain(sc)
+      (a, n.get)
+    } finally sc.removeSparkListener(l)
   }
 }

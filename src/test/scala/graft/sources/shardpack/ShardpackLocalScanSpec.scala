@@ -1,9 +1,7 @@
 package graft.sources.shardpack
 
 import java.nio.file.Files
-import java.util.concurrent.atomic.AtomicInteger
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.execution.{LocalTableScanExec, SparkPlan}
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
@@ -63,22 +61,6 @@ class ShardpackLocalScanSpec extends AnyFunSuite with SparkTestBase {
       case Seq(_: BatchScanExec) => "batch"
       case other => s"other: $other"
     }
-  }
-
-  /** Jobs started inside `f`, listener bus drained at both ends. */
-  private def jobsDuring[A](f: => A): (A, Int) = {
-    val n = new AtomicInteger()
-    val l = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit = { n.incrementAndGet(); () }
-    }
-    val sc = spark.sparkContext
-    org.apache.spark.graftbridge.ListenerBridge.drain(sc)
-    sc.addSparkListener(l)
-    try {
-      val a = f
-      org.apache.spark.graftbridge.ListenerBridge.drain(sc)
-      (a, n.get)
-    } finally sc.removeSparkListener(l)
   }
 
   private def rootCause(e: Throwable): Throwable =

@@ -2,7 +2,7 @@ package graft.sources.shardpack
 
 import java.nio.file.{Files, Paths}
 
-import org.apache.spark.sql.{DataFrameWriter, Row}
+import org.apache.spark.sql.{DataFrame, DataFrameWriter, Row}
 import org.apache.spark.sql.execution.LocalTableScanExec
 import org.apache.spark.sql.execution.datasources.v2.BatchScanExec
 import org.apache.spark.sql.functions._
@@ -17,14 +17,57 @@ class ShardpackOpsSpec extends AnyFunSuite with SparkTestBase {
 
   private def tmp(): String = Files.createTempDirectory("spops").toString
 
-  private def writeDocs(dir: String, rows: (String, String)*): Unit = {
+  /** (key, body) records, on the driver (`Seq.toDF`: a `LocalRelation`) or
+    * not (an RDD of two partitions, with no shuffle of its own).
+    */
+  private def docs(rows: Seq[(String, String)], local: Boolean = true): DataFrame = {
     import spark.implicits._
-    rows.toSeq.toDF("key", "body")
+    (if (local) rows.toDF("key", "body")
+     else spark.sparkContext.parallelize(rows, 2).toDF("key", "body"))
       .select($"key", lit(null).cast("binary").as("metadata"),
         array(struct(lit("body.txt").as("file_name"), lit("text/plain").as("content_type"),
           lit("").as("encoding"), encode($"body", "UTF-8").as("data"))).as("entries"))
-      .write.format("shardpack").mode("append").save(dir)
   }
+
+  private def writeDocs(dir: String, rows: (String, String)*): Unit =
+    docs(rows).write.format("shardpack").mode("append").save(dir)
+
+  private def key(i: Int) = f"k$i%04d"
+
+  /** 80 records `k0000`… in 4 key-sorted shards with disjoint envelopes,
+    * indexed.
+    */
+  private def sortedBucket(): String = {
+    val dir = tmp() + "/sorted"
+    docs((0 until 80).map(i => key(i) -> s"v0-$i")).write.format("shardpack")
+      .option("sortedWrite", true).option("targetShards", 4).mode("append").save(dir)
+    ShardpackIndex.build(spark, dir)
+    dir
+  }
+
+  private case class Shard(mtime: Long, keys: Seq[String],
+      env: Option[(String, String)])
+
+  /** Every listed shard by name: mtime, keys in file order, envelope. */
+  private def shardsOf(dir: String): Map[String, Shard] = {
+    val p = new org.apache.hadoop.fs.Path(dir)
+    val fs = p.getFileSystem(HadoopConfs.session())
+    ShardpackDataSource.listShards(fs, p).map { st =>
+      val keys = spark.read.format("shardpack").load(st.getPath.toString)
+        .select("key").collect().map(_.getString(0)).toSeq
+      val env = ShardpackFormat.ShardStats.unwrap(
+        ShardpackIndex.footer(fs, st.getPath, st.getLen).shardMetadata)._1
+      st.getPath.getName -> Shard(st.getModificationTime, keys, env)
+    }.toMap
+  }
+
+  private def sidecarBytes(dir: String): Seq[Byte] =
+    Files.readAllBytes(Paths.get(dir, ShardpackIndex.FileName)).toSeq
+
+  private def bodies(dir: String): Seq[(String, String)] =
+    spark.read.format("shardpack").load(dir)
+      .select(col("key"), col("entries").getItem(0).getField("data").cast("string"))
+      .collect().map(r => (r.getString(0), r.getString(1))).toSeq.sorted
 
   test("pack: directory of raw files becomes one record per file") {
     val in = tmp()
@@ -252,6 +295,74 @@ class ShardpackOpsSpec extends AnyFunSuite with SparkTestBase {
     assert(spark.read.format("shardpack").load(dir).count() == 6)
   }
 
+  test("merge on a sorted, indexed bucket rewrites each hit shard as one sorted shard, on both paths") {
+    Seq(true, false).foreach { local =>
+      val path = if (local) "local" else "distributed"
+      val dir = sortedBucket()
+      val before = shardsOf(dir)
+      assert(before.size == 4)
+      val ids = Seq(3, 25, 61) // in three different shards
+      val (_, jobs) = jobsDuring(
+        ShardpackOps.merge(spark, dir, docs(ids.map(i => key(i) -> s"v1-$i"), local)))
+      if (local) assert(jobs == 1, s"$path merge ran $jobs jobs")
+      else assert(jobs <= 4, s"$path merge ran $jobs jobs")
+      val after = shardsOf(dir)
+      assert(after.size == 4, path)
+      assert((before.keySet -- after.keySet).size == 3, s"$path: three hit shards retired")
+      after.values.foreach(s => assert(s.keys == s.keys.sorted, s"$path: unsorted shard"))
+      val envs = after.values.flatMap(_.env).toSeq.sorted
+      assert(envs.size == 4)
+      envs.zip(envs.tail).foreach { case ((_, hi), (lo, _)) =>
+        assert(hi < lo, s"$path: overlapping envelopes $envs")
+      }
+      assert(bodies(dir) == (0 until 80).map(i =>
+        key(i) -> (if (ids.contains(i)) s"v1-$i" else s"v0-$i")))
+      // the carried sidecar still answers a lookup on the driver from one shard
+      val lookup = spark.read.format("shardpack").load(dir).filter(col("key") === key(25))
+      assert(lookup.queryExecution.executedPlan.isInstanceOf[LocalTableScanExec], path)
+      val desc = lookup.queryExecution.optimizedPlan.collectFirst {
+        case r: org.apache.spark.sql.execution.datasources.v2.DataSourceV2ScanRelation =>
+          r.scan.description()
+      }
+      assert(desc.exists(_.contains("scan=local (1 candidate shards")), s"$path: $desc")
+    }
+  }
+
+  test("duplicate or empty updates write nothing, on both paths") {
+    Seq(true, false).foreach { local =>
+      val dir = sortedBucket()
+      val before = shardsOf(dir)
+      val index = sidecarBytes(dir)
+      val ex = intercept[IllegalArgumentException] {
+        ShardpackOps.merge(spark, dir, docs(Seq(key(3) -> "x", key(50) -> "y", key(3) -> "z"), local))
+      }
+      assert(ex.getMessage.contains("key-unique"))
+      ShardpackOps.merge(spark, dir, docs(Seq.empty, local))
+      assert(shardsOf(dir) == before, s"local=$local")
+      assert(sidecarBytes(dir) == index, s"local=$local")
+    }
+  }
+
+  test("a key inside an envelope that the Bloom rules out rewrites nothing (merge, deleteKeys)") {
+    val dir = sortedBucket()
+    val before = shardsOf(dir)
+    val fs = new org.apache.hadoop.fs.Path(dir).getFileSystem(HadoopConfs.session())
+    val (name, first) = before.find(_._2.keys.contains(key(10))).get
+    val st = fs.getFileStatus(new org.apache.hadoop.fs.Path(dir, name))
+    val bloom = ShardpackFormat.ShardStats.unwrapBloom(
+      ShardpackIndex.footer(fs, st.getPath, st.getLen).shardMetadata).get
+    // sorts between k0010 and k0011, so the envelope holds it
+    val absent = Iterator.from(0).map(j => s"${key(10)}-$j").find(!bloom.mightContain(_)).get
+    assert(ShardpackFormat.ShardStats.mayHold(first.env, Some(Set(absent)), None))
+    ShardpackOps.deleteKeys(spark, dir, Seq(absent))
+    assert(shardsOf(dir) == before)
+    ShardpackOps.merge(spark, dir, docs(Seq(absent -> "new")))
+    val after = shardsOf(dir)
+    before.foreach { case (n, s) => assert(after.get(n).map(_.mtime).contains(s.mtime), n) }
+    assert((after.keySet -- before.keySet).map(after(_).keys) == Set(Seq(absent)))
+    assert(bodies(dir).toMap.get(absent).contains("new"))
+  }
+
   test("deleteRange expires exactly the half-open key range, pruning unhit shards") {
     val dir = tmp() + "/ranged"
     writeDocs(dir, ("a1", "one"), ("a2", "two"), ("a3", "three"))
@@ -297,19 +408,23 @@ class ShardpackOpsSpec extends AnyFunSuite with SparkTestBase {
       .select($"key", lit(null).cast("binary").as("metadata"),
         array(struct(lit("b.txt").as("file_name"), lit("text/plain").as("content_type"),
           lit("").as("encoding"), encode($"body", "UTF-8").as("data"))).as("entries"))
+    // both deciders: updates on the driver, and the same rows made
+    // non-local by a repartition
+    val paths = Seq[(String, DataFrame => DataFrame)](
+      "local" -> identity, "distributed" -> (_.repartition(2)))
     (0 until 8).foreach { i =>
       gen.apply(Gen.Parameters.default, Seed(i.toLong)).foreach { case (bk, uk) =>
-        val dir = tmp() + s"/m$i"
-        if (bk.nonEmpty)
-          df(bk.toSeq.sorted.map(k => k -> s"base-$k")).coalesce(2)
-            .write.format("shardpack").mode("append").save(dir)
-        ShardpackOps.merge(spark, dir, df(uk.toSeq.sorted.map(k => k -> s"upd-$k")))
-        val expect = ((bk -- uk).map(k => k -> s"base-$k") ++
-          uk.map(k => k -> s"upd-$k")).toSeq.sorted
-        val back = spark.read.format("shardpack").load(dir)
-          .select(col("key"), col("entries").getItem(0).getField("data").cast("string"))
-          .collect().map(r => (r.getString(0), r.getString(1))).sorted.toSeq
-        assert(back == expect, s"seed=$i base=$bk upd=$uk")
+        paths.foreach { case (path, shape) =>
+          val dir = tmp() + s"/m$i-$path"
+          if (bk.nonEmpty)
+            df(bk.toSeq.sorted.map(k => k -> s"base-$k")).coalesce(2)
+              .write.format("shardpack").mode("append").save(dir)
+          ShardpackOps.merge(spark, dir, shape(df(uk.toSeq.sorted.map(k => k -> s"upd-$k"))))
+          val expect = ((bk -- uk).map(k => k -> s"base-$k") ++
+            uk.map(k => k -> s"upd-$k")).toSeq.sorted
+          val back = if (bk.isEmpty && uk.isEmpty) Seq.empty else bodies(dir)
+          assert(back == expect, s"seed=$i path=$path base=$bk upd=$uk")
+        }
       }
     }
   }

@@ -9,7 +9,7 @@ import org.apache.spark.sql.streaming.OutputMode
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.SparkTestBase
-import graft.sources.shardpack.ShardpackDataSource
+import graft.sources.shardpack.{ShardpackDataSource, ShardpackIndex}
 import StreamingOps._
 
 /** Incremental (MemoryStream-driven) tests of the streaming surface:
@@ -525,19 +525,21 @@ class StreamingSpec extends AnyFunSuite with SparkTestBase {
     }
   }
 
+  /** One upsert record per event, keyed by user. */
+  private def toRecords(df: org.apache.spark.sql.DataFrame) = df.select(
+    concat(lit("user_"), lpad(col("user_id").cast("string"), 6, "0")).as("key"),
+    to_json(struct(col("event_type"), col("value"))).cast("binary").as("metadata"),
+    array(struct(
+      lit("state.json").as("file_name"), lit("application/json").as("content_type"),
+      lit("").as("encoding"), to_json(struct(col("event_id"))).cast("binary").as("data")))
+      .as("entries"))
+
   test("streaming upsert sink: last-writer-wins merge into a shardpack bucket") {
     implicit val sq = spark.sqlContext
     import spark.implicits._
     val dir = Files.createTempDirectory("shardpack-upsert").toString + "/bucket"
     val ckpt = Files.createTempDirectory("shardpack-upsert-ckpt").toString
     val in = MemoryStream[Event]
-    def toRecords(df: org.apache.spark.sql.DataFrame) = df.select(
-      concat(lit("user_"), lpad($"user_id".cast("string"), 6, "0")).as("key"),
-      to_json(struct($"event_type", $"value")).cast("binary").as("metadata"),
-      array(struct(
-        lit("state.json").as("file_name"), lit("application/json").as("content_type"),
-        lit("").as("encoding"), to_json(struct($"event_id")).cast("binary").as("data")))
-        .as("entries"))
     val q = StreamingOps.upsertSink(toRecords(in.toDF()), dir, ckpt, compactEvery = 2)
     try {
       in.addData(ev(1, ts(0), user = 1, value = 1.0), ev(2, ts(1), user = 2, value = 2.0))
@@ -555,6 +557,30 @@ class StreamingSpec extends AnyFunSuite with SparkTestBase {
         .filter(_.endsWith(".shardpack"))
       assert(shards.length == 1,
         s"compactEvery=2 should leave one merged shard, got ${shards.mkString(",")}")
+    } finally q.stop()
+  }
+
+  test("streaming upsert sink: an empty micro-batch leaves the bucket and its sidecar as they are") {
+    implicit val sq = spark.sqlContext
+    import spark.implicits._
+    val dir = Files.createTempDirectory("shardpack-upsert-empty").toString + "/bucket"
+    val ckpt = Files.createTempDirectory("shardpack-upsert-empty-ckpt").toString
+    val in = MemoryStream[Event]
+    // only positive values become records: a batch of the others is empty
+    val q = StreamingOps.upsertSink(toRecords(in.toDF().filter($"value" > 0)), dir, ckpt)
+    try {
+      in.addData(ev(1, ts(0), user = 1, value = 1.0), ev(2, ts(1), user = 2, value = 2.0))
+      q.processAllAvailable()
+      ShardpackIndex.build(spark, dir)
+      def listing() = new java.io.File(dir).listFiles.map(f => f.getName -> f.lastModified).toMap
+      def index() = Files.readAllBytes(java.nio.file.Paths.get(dir, ShardpackIndex.FileName)).toSeq
+      val (files, bytes) = (listing(), index())
+      in.addData(ev(3, ts(2), user = 1, value = -1.0))
+      q.processAllAvailable()
+      assert(q.lastProgress.numInputRows == 1, "the empty micro-batch never ran")
+      assert(listing() == files)
+      assert(index() == bytes)
+      assert(spark.read.format("shardpack").load(dir).count() == 2)
     } finally q.stop()
   }
 
