@@ -3,7 +3,6 @@ package graft.sources.shardpack
 import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graftbridge.Bridge
 
@@ -26,8 +25,9 @@ import org.apache.spark.sql.graftbridge.Bridge
   *     (`docs/draft.md:207-211`): a small shardpack of updated records
   *     combined with the base at read time, overlay winning per key.
   *   - [[merge]] — the write-time counterpart of overlay: copy-on-write
-  *     upsert folding updates into the bucket, rewriting each shard whose
-  *     key envelope is hit as exactly one key-sorted shard.
+  *     upsert folding updates into the bucket, rewriting only the shards
+  *     whose key envelope is hit (for updates already on the driver, each
+  *     as exactly one key-sorted shard).
   *   - [[compact]] — small-shard compaction, the maintenance counterpart
   *     of the streaming sink's per-epoch appends.
   *
@@ -343,37 +343,36 @@ object ShardpackOps {
     * reference sketches (`/root/reference/docs/draft.md:207-211` stops at
     * the read-time combine).
     *
-    * Two deciders pick the affected shards and check that `updates` is
-    * key-unique (with no ordering column there is no deterministic
-    * last-writer-wins, so duplicates are rejected loudly, before anything
-    * is written):
+    * `updates` must be key-unique: with no ordering column there is no
+    * deterministic last-writer-wins, so duplicates are rejected loudly,
+    * before anything is written. Two deciders check that and pick the
+    * affected shards:
     *   - Updates already on the driver (the optimized plan is a
     *     `LocalRelation`: `Seq.toDF`, `createDataFrame` of a list) are
     *     decided there, with no Spark job: their keys are collected and
     *     hash-checked, and shards are picked by [[affected]], the envelope
     *     test then the candidate footer's Bloom — a new key inside an
     *     envelope that the Bloom rules out rewrites nothing. The rows are
-    *     already materialized, so a self-referential update is safe.
+    *     already materialized, so a self-referential update is safe. Each
+    *     affected shard is rewritten as exactly one key-sorted shard
+    *     ([[rewriteSorted]]), so a single-key upsert on a sorted bucket is
+    *     one job that replaces one shard by one, and the bucket stays
+    *     sorted and disjoint.
     *   - Any other update (a streaming micro-batch, a derived frame) is
     *     persisted first — which makes a self-referential update (CDC
     *     derived from this same bucket) safe — and decided in ONE action:
     *     the per-key counts are tested against the broadcast envelopes and
-    *     folded per partition into (keys seen, duplicate seen, pure insert
-    *     seen, hit shards), so what returns to the driver is bounded by
-    *     shard count × partitions, never by the number of updates.
+    *     folded per partition into (keys seen, duplicate seen, hit shards),
+    *     so what returns to the driver is bounded by shard count ×
+    *     partitions, never by the number of updates, and a merge batch can
+    *     be any size. The affected shards' survivors (an anti-join on the
+    *     update keys) and the updates are then written with the updates'
+    *     own partitioning.
     *
-    * Both rewrite through [[rewrite]]: each affected shard becomes exactly
-    * one key-sorted shard, and the keys no affected envelope holds one
-    * more, all in one job. An update goes to the first affected shard
-    * whose envelope holds it, so a rewritten shard's envelope never grows
-    * and a sorted bucket stays sorted and disjoint: a single-key upsert on
-    * it is one job that replaces one shard by one. On the driver path a
-    * shard's survivors are a key filter; on the distributed path the
-    * shard's partition also carries the updates its envelope holds, and a
-    * window over the key keeps the update. Unhit shards are untouched;
-    * stats-less shards (foreign writers) are always affected. The swap
-    * follows [[retire]]'s crash-safe order. An empty update set writes
-    * nothing and leaves the sidecar as it is.
+    * Unhit shards are untouched; stats-less shards (foreign writers) are
+    * always affected. The swap follows [[retire]]'s crash-safe order and
+    * carries the sidecar, also after a pure insert. An empty update set
+    * writes nothing and leaves the sidecar as it is.
     */
   def merge(spark: SparkSession, dir: String, updates: DataFrame,
       compression: String = ShardpackFormat.Codec.None): Unit = {
@@ -389,9 +388,11 @@ object ShardpackOps {
         require(keys.toSet.size == keys.length, unique)
         if (keys.isEmpty) return
         val hit = affected(fs, dir, oldShards, Some(keys.toSet), None)
+        // each update goes to the first hit shard whose envelope holds it,
+        // so a rewritten shard's envelope never grows
         val routed = keys.groupBy(k => hit.indexWhere(h => holds(h._2, k)))
         def rows(ks: Seq[String]) = up.filter(col("key").isin(ks: _*))
-        rewrite(fs, dir, oldShards, hit.map(_._1), compression,
+        rewriteSorted(fs, dir, oldShards, hit.map(_._1), compression,
           hit.zipWithIndex.map { case ((st, env), i) =>
             read(st).filter(!col("key").isin(keys.filter(holds(env, _)): _*))
               .union(rows(routed.getOrElse(i, Nil)))
@@ -401,43 +402,29 @@ object ShardpackOps {
         try {
           val envs = ShardpackIndex.envelopes(fs, new Path(dir), oldShards)
           val spans = spark.sparkContext.broadcast(envs.map(_._2).toArray)
-          // per partition: (keys seen, duplicate seen, pure insert seen, hit shards)
+          // per partition: (keys seen, duplicate seen, hit shards)
           val folds = try up.groupBy("key").count().as[(String, Long)].mapPartitions { it =>
             val sp = spans.value
             var seen = false
             var dup = false
-            var insert = false
             val hit = scala.collection.mutable.BitSet.empty
             it.foreach { case (k, n) =>
-              val holding = sp.indices.filter(i => holds(sp(i), k))
               seen = true
               dup ||= n > 1
-              insert ||= holding.isEmpty
-              hit ++= holding
+              hit ++= sp.indices.filter(i => holds(sp(i), k))
             }
-            Iterator((seen, dup, insert, hit.toSeq))
+            Iterator((seen, dup, hit.toSeq))
           }.collect() finally spans.destroy()
           require(!folds.exists(_._2), unique)
           if (!folds.exists(_._1)) return
-          val hitIdx = folds.flatMap(_._4).toSet
-          val hit = envs.zipWithIndex.collect { case (e, i) if hitIdx(i) => e }
-          val hitSpans = hit.map(_._2).toArray
-          val route = udf((k: String) => hitSpans.indexWhere(holds(_, k)))
-          rewrite(fs, dir, oldShards, hit.map(_._1), compression,
-            hit.zipWithIndex.map { case ((st, env), i) =>
-              // the shard's records and every update its envelope holds in
-              // one partition; a key with an update keeps only the update,
-              // and only where it is routed (the window needs no exchange:
-              // one partition is clustered on any key)
-              val held = udf((k: String) => holds(env, k))
-              read(st).withColumn("_update", lit(false))
-                .union(up.filter(held(col("key"))).withColumn("_update", lit(true)))
-                .coalesce(1)
-                .withColumn("_updated", max("_update").over(Window.partitionBy("key")))
-                .filter(col("_update") === col("_updated") &&
-                  (!col("_update") || route(col("key")) === i))
-                .drop("_update", "_updated")
-            } ++ Option.when(folds.exists(_._3))(up.filter(route(col("key")) === -1)))
+          val hitIdx = folds.flatMap(_._3).toSet
+          val hit = envs.zipWithIndex.collect { case ((st, _), i) if hitIdx(i) => st }
+          val out = if (hit.isEmpty) up
+            else hit.map(read).reduce(_ union _)
+              .join(up.select("key"), Seq("key"), "left_anti").union(up)
+          out.write.format("shardpack").option("compression", compression)
+            .mode("append").save(dir)
+          retire(fs, new Path(dir), oldShards, hit.map(_.getPath))
         } finally { up.unpersist(false); () }
     }
   }
@@ -449,11 +436,12 @@ object ShardpackOps {
     * then [[retire]] the `hit` shards: one part per hit shard (its
     * survivors plus the updates routed to it) and one for the pure
     * inserts, so each hit shard is replaced by exactly one shard (more
-    * only past the shard cap). The parts are unioned as RDDs, not
-    * DataFrames: Spark's `UnionExec` zips children that are each one
-    * partition into a single partition.
+    * only past the shard cap). Only driver-resident updates take it: their
+    * insert part is a handful of rows, so one task writes it. The parts
+    * are unioned as RDDs, not DataFrames: Spark's `UnionExec` zips
+    * children that are each one partition into a single partition.
     */
-  private def rewrite(fs: FileSystem, dir: String, before: Seq[FileStatus],
+  private def rewriteSorted(fs: FileSystem, dir: String, before: Seq[FileStatus],
       hit: Seq[FileStatus], compression: String, parts: Seq[DataFrame]): Unit = {
     val sorted = parts.map(_.coalesce(1).sortWithinPartitions("key"))
     val spark = sorted.head.sparkSession

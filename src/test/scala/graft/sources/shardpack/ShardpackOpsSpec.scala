@@ -295,37 +295,67 @@ class ShardpackOpsSpec extends AnyFunSuite with SparkTestBase {
     assert(spark.read.format("shardpack").load(dir).count() == 6)
   }
 
-  test("merge on a sorted, indexed bucket rewrites each hit shard as one sorted shard, on both paths") {
-    Seq(true, false).foreach { local =>
-      val path = if (local) "local" else "distributed"
-      val dir = sortedBucket()
-      val before = shardsOf(dir)
-      assert(before.size == 4)
-      val ids = Seq(3, 25, 61) // in three different shards
-      val (_, jobs) = jobsDuring(
-        ShardpackOps.merge(spark, dir, docs(ids.map(i => key(i) -> s"v1-$i"), local)))
-      if (local) assert(jobs == 1, s"$path merge ran $jobs jobs")
-      else assert(jobs <= 4, s"$path merge ran $jobs jobs")
-      val after = shardsOf(dir)
-      assert(after.size == 4, path)
-      assert((before.keySet -- after.keySet).size == 3, s"$path: three hit shards retired")
-      after.values.foreach(s => assert(s.keys == s.keys.sorted, s"$path: unsorted shard"))
-      val envs = after.values.flatMap(_.env).toSeq.sorted
-      assert(envs.size == 4)
-      envs.zip(envs.tail).foreach { case ((_, hi), (lo, _)) =>
-        assert(hi < lo, s"$path: overlapping envelopes $envs")
-      }
-      assert(bodies(dir) == (0 until 80).map(i =>
-        key(i) -> (if (ids.contains(i)) s"v1-$i" else s"v0-$i")))
-      // the carried sidecar still answers a lookup on the driver from one shard
-      val lookup = spark.read.format("shardpack").load(dir).filter(col("key") === key(25))
-      assert(lookup.queryExecution.executedPlan.isInstanceOf[LocalTableScanExec], path)
-      val desc = lookup.queryExecution.optimizedPlan.collectFirst {
-        case r: org.apache.spark.sql.execution.datasources.v2.DataSourceV2ScanRelation =>
-          r.scan.description()
-      }
-      assert(desc.exists(_.contains("scan=local (1 candidate shards")), s"$path: $desc")
+  test("merge of driver-resident updates rewrites each hit shard of a sorted, indexed bucket as one sorted shard") {
+    val dir = sortedBucket()
+    val before = shardsOf(dir)
+    assert(before.size == 4)
+    val ids = Seq(3, 25, 61) // in three different shards
+    val (_, jobs) = jobsDuring(
+      ShardpackOps.merge(spark, dir, docs(ids.map(i => key(i) -> s"v1-$i"))))
+    assert(jobs == 1, s"merge ran $jobs jobs")
+    val after = shardsOf(dir)
+    assert(after.size == 4)
+    assert((before.keySet -- after.keySet).size == 3, "three hit shards retired")
+    after.values.foreach(s => assert(s.keys == s.keys.sorted, "unsorted shard"))
+    val envs = after.values.flatMap(_.env).toSeq.sorted
+    assert(envs.size == 4)
+    envs.zip(envs.tail).foreach { case ((_, hi), (lo, _)) =>
+      assert(hi < lo, s"overlapping envelopes $envs")
     }
+    assert(bodies(dir) == (0 until 80).map(i =>
+      key(i) -> (if (ids.contains(i)) s"v1-$i" else s"v0-$i")))
+    // the carried sidecar still answers a lookup on the driver from one shard
+    val lookup = spark.read.format("shardpack").load(dir).filter(col("key") === key(25))
+    assert(lookup.queryExecution.executedPlan.isInstanceOf[LocalTableScanExec])
+    val desc = lookup.queryExecution.optimizedPlan.collectFirst {
+      case r: org.apache.spark.sql.execution.datasources.v2.DataSourceV2ScanRelation =>
+        r.scan.description()
+    }
+    assert(desc.exists(_.contains("scan=local (1 candidate shards")), s"$desc")
+  }
+
+  test("merge of distributed updates: one deciding action, only hit shards retired, sidecar carried") {
+    val dir = sortedBucket()
+    val before = shardsOf(dir)
+    val ids = Seq(3, 25, 61) // in three different shards
+    val (_, jobs) = jobsDuring(
+      ShardpackOps.merge(spark, dir, docs(ids.map(i => key(i) -> s"v1-$i"), local = false)))
+    // 3 jobs decide (the cache fill, the count's shuffle, the fold); the
+    // anti-join rewrite and its write take 4
+    assert(jobs <= 7, s"merge ran $jobs jobs")
+    val after = shardsOf(dir)
+    assert((before.keySet -- after.keySet).size == 3, "three hit shards retired")
+    assert(before.keySet.intersect(after.keySet).forall(n => after(n) == before(n)))
+    assert(bodies(dir) == (0 until 80).map(i =>
+      key(i) -> (if (ids.contains(i)) s"v1-$i" else s"v0-$i")))
+    val p = new org.apache.hadoop.fs.Path(dir)
+    val fs = p.getFileSystem(HadoopConfs.session())
+    val idx = ShardpackIndex.load(fs, p).get
+    assert(after.keySet.forall(idx.get(_).isDefined), "sidecar carried to the new shards")
+  }
+
+  test("merge of a multi-partition batch of new keys writes it with more than one task") {
+    val dir = sortedBucket()
+    val before = shardsOf(dir)
+    // past every envelope: a pure insert, four partitions of ten keys
+    val batch = docs((100 until 140).map(i => key(i) -> s"v1-$i"), local = false).repartition(4)
+    ShardpackOps.merge(spark, dir, batch)
+    val after = shardsOf(dir)
+    assert(before.forall { case (n, s) => after.get(n).contains(s) }, "no shard rewritten")
+    val added = after.keySet -- before.keySet
+    assert(added.size > 1, s"one write task: $added")
+    assert(bodies(dir) == (0 until 80).map(i => key(i) -> s"v0-$i") ++
+      (100 until 140).map(i => key(i) -> s"v1-$i"))
   }
 
   test("duplicate or empty updates write nothing, on both paths") {
