@@ -14,6 +14,4 @@ final case class Q(
 object Q {
   def apply(name: String, sql: String)(fn: (SparkSession, String) => DataFrame): Q =
     Q(name, fn, Some(sql))
-  def noOracle(name: String)(fn: (SparkSession, String) => DataFrame): Q =
-    Q(name, fn, None)
 }

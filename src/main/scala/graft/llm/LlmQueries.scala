@@ -1699,55 +1699,18 @@ object LlmQueries {
 
     // Near-dup CLUSTERS: connected components over the exact-Jaccard pair
     // graph (pairs → groups → keep min doc_id per group — the step that
-    // makes dedup actionable). Spark side: min-label propagation iterated
-    // to a fixpoint — each round is one distributed join+agg, rounds =
-    // graph diameter (tiny for near-dup cliques); the same loop is how
-    // GraphX computes components, no driver-side graph. Oracle: recursive
-    // CTE transitive closure.
+    // makes dedup actionable). The pair graph is the Jaccard CANDIDATE
+    // output, orders of magnitude smaller than the corpus (477 nodes for
+    // 5000 docs at sf0.1), so [[ScaleDedup.connectedComponents]] counts it
+    // and union-finds it on the driver in one collect; past its driver cap
+    // it cuts over to the distributed star contraction, label-identical.
+    // Oracle: recursive CTE transitive closure.
     Q("dedup_cluster", ClusterOracleSql) { (s, d) =>
-      val good = goodPairs(s, d).select($"a_id", $"b_id")
-      // The pair graph is the LSH/Jaccard CANDIDATE output — orders of
-      // magnitude smaller than the corpus (477 nodes for 5000 docs at
-      // sf0.1). Union-find over the collected pairs is O(E α(E)) with
-      // min-root determinism, and costs ONE job beyond the pair
-      // computation — measured 30+ Spark jobs (one per diameter step,
-      // ~13 s) for the distributed min-label-propagation loop on the same
-      // input. Past MaxDriverPairs edges (~16 bytes each → ~1.6 GB at the
-      // cap) the driver collect would OOM, so the query CUTS OVER to the
-      // fully distributed star-contraction ([[ScaleDedup.connectedComponents]],
-      // O(log n) rounds) — spec-proven label-identical to the union-find.
-      val MaxDriverPairs = 100L * 1000 * 1000
-      // (no extra persist: the parent pair graph is memo-cached in
-      // goodPairs — count and collect both scan that cache)
-      val nPairs = good.count()
-      if (nPairs > MaxDriverPairs) {
-        // (no `return` — non-local return doesn't work in a lambda body)
-        ScaleDedup.connectedComponents(good)
-          .withColumnRenamed("id", "doc_id")
-          .orderBy(col("doc_id"))
-      } else {
-      val pairRows = good.collect()
-      val parent = scala.collection.mutable.LongMap.empty[Long]
-      def find(x: Long): Long = {
-        var r = x
-        while (parent.getOrElse(r, r) != r) r = parent.getOrElse(r, r)
-        var c = x
-        while (parent.getOrElse(c, c) != c) { val n = parent(c); parent(c) = r; c = n }
-        r
-      }
-      pairRows.foreach { r =>
-        val (a, b) = (r.getLong(0), r.getLong(1))
-        val (ra, rb) = (find(a), find(b))
-        if (ra != rb) {
-          // min root keeps cluster ids deterministic
-          if (ra < rb) parent(rb) = ra else parent(ra) = rb
-        }
-      }
-      val nodes = pairRows.flatMap(r => Seq(r.getLong(0), r.getLong(1))).distinct
-      val labeled = nodes.map(u => (u, find(u))).sortBy(_._1)
-      s.createDataFrame(labeled.toSeq).toDF("doc_id", "cluster")
+      // (no extra persist: the pair graph is memo-cached in goodPairs —
+      // the count and the collect both scan that cache)
+      ScaleDedup.connectedComponents(goodPairs(s, d).select($"a_id", $"b_id"))
+        .select(col("id").as("doc_id"), col("cluster"))
         .orderBy(col("doc_id"))
-      }
     },
 
     // MinHash + LSH banding (32 hashes, 8 bands × 4 rows). Candidate pairs
@@ -1785,9 +1748,12 @@ object LlmQueries {
 
     // Clusters over the MINHASH candidate graph — the LSH-scale
     // counterpart of dedup_cluster (whose edges are exact Jaccard):
-    // candidates come only from shared band buckets (never all-pairs) and
-    // components from the distributed star contraction, so BOTH stages
-    // hold at 10^9 docs. Shares the cached pair graph with dedup_minhash.
+    // candidates come only from shared band buckets (never all-pairs), and
+    // components from [[ScaleDedup.connectedComponents]]: a driver
+    // union-find while the pair count is under the driver cap (2 jobs over
+    // the cached pairs), the distributed star contraction above it — so
+    // both stages hold at 10^9 docs. Shares the cached pair graph with
+    // dedup_minhash.
     Q("dedup_minhash_cluster", MinhashClusterOracleSql) { (s, d) =>
       ScaleDedup.connectedComponents(minhashPairs(s, d).select($"a_id", $"b_id"))
         .select(col("id").as("doc_id"), col("cluster"))

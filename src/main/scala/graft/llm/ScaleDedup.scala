@@ -7,9 +7,10 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
 
 /** Scale-path dedup companions to [[LlmQueries]]: benchmark decontamination
-  * by exact token-span overlap, and the fully distributed connected-components
-  * clustering that replaces the driver union-find of `dedup_cluster` when the
-  * near-dup pair graph outgrows driver memory (the cutover its guard names).
+  * by exact token-span overlap, and the one connected-components entry
+  * point every clustering query calls ([[connectedComponents]]: a driver
+  * union-find while the pair graph fits the driver heap, the distributed
+  * star contraction above that cap).
   */
 object ScaleDedup {
   import Tables._
@@ -21,20 +22,77 @@ object ScaleDedup {
   /** Span length for corpus-internal exact-substring dedup. */
   private val SubLen = 8
 
-  /** Alternating large-star / small-star connected components (Kiveris et
-    * al., "Connected Components in MapReduce and Beyond") — the O(log n)-
-    * round worst-case path that min-label propagation (rounds = diameter)
-    * falls back to on high-diameter graphs. Each half-round is one
-    * aggregation (per-node neighborhood min) + one join, both partitioned
-    * by node id; no neighborhood is ever collected, so hot nodes cost a
-    * shuffle skew, not memory.
-    *
-    * Input: undirected edge pairs (any orientation, self-loops ignored).
-    * Output: (id, cluster) for every node incident to an edge, cluster =
-    * min node id of its component — identical labeling to the union-find
-    * and label-propagation paths (spec-asserted).
+  /** Driver heap per pair on [[connectedComponents]]' union-find path,
+    * measured on disjoint pairs (two new nodes per pair, the worst case):
+    * the smallest `-Xmx` that completes the call grows ~575 MB per million
+    * pairs (collected rows of boxed longs, the `LongMap` parent table, the
+    * labels and the local frame), not the 16 B of two raw longs.
     */
-  def connectedComponents(pairs: DataFrame, maxRounds: Int = 50): DataFrame = {
+  private[llm] val DriverBytesPerPair = 600L
+
+  /** Share of the driver heap the pair graph may take; the rest stays
+    * free for the session, memo frames and the caller's own collect.
+    */
+  private val DriverHeapShare = 4L
+
+  /** Most pairs [[connectedComponents]] union-finds on the driver of a JVM
+    * with `maxHeapBytes` (`Runtime.maxMemory`): a quarter of the heap at
+    * [[DriverBytesPerPair]] — 1.3M pairs at 3 GiB, 3.6M at 8 GiB.
+    */
+  private[llm] def driverPairCap(maxHeapBytes: Long): Long =
+    maxHeapBytes / DriverHeapShare / DriverBytesPerPair
+
+  /** Connected components of an undirected pair graph — the one entry point
+    * for every clustering query. Input: two LONG node-id columns, any
+    * orientation, self-loops ignored. Output: (id, cluster) for every node
+    * incident to an edge, cluster = min node id of its component.
+    *
+    * The path follows the pair count (one job). At most `maxDriverPairs`
+    * pairs are collected once and union-found on the driver (min root, so
+    * the labels are deterministic) and come back as a local frame: 2 jobs
+    * in all. Above the cap the graph would not fit the driver, and
+    * [[starContraction]] labels it without ever collecting it. Both paths
+    * give identical labels (spec-asserted on both sides of the cap).
+    */
+  def connectedComponents(pairs: DataFrame,
+      maxDriverPairs: Long = driverPairCap(Runtime.getRuntime.maxMemory)): DataFrame = {
+    val e = pairs.toDF("a", "b")
+    // an RDD count is one job; `Dataset.count` is two under AQE, whose
+    // single-partition exchange runs as a stage job of its own
+    if (e.queryExecution.toRdd.count() > maxDriverPairs) starContraction(e)
+    else {
+      val parent = scala.collection.mutable.LongMap.empty[Long]
+      def find(x: Long): Long = {
+        var r = x
+        while (parent(r) != r) r = parent(r)
+        var c = x
+        while (c != r) { val n = parent(c); parent(c) = r; c = n }
+        r
+      }
+      e.collect().foreach { row =>
+        val (a, b) = (row.getLong(0), row.getLong(1))
+        if (a != b) {
+          parent.getOrElseUpdate(a, a)
+          parent.getOrElseUpdate(b, b)
+          val (ra, rb) = (find(a), find(b))
+          if (ra < rb) parent(rb) = ra else if (rb < ra) parent(ra) = rb
+        }
+      }
+      val labeled = parent.keys.toArray.map(u => (u, find(u)))
+      pairs.sparkSession.createDataFrame(labeled.toSeq).toDF("id", "cluster")
+    }
+  }
+
+  /** Alternating large-star / small-star connected components (Kiveris et
+    * al., "Connected Components in MapReduce and Beyond"): O(log n) rounds
+    * on any graph shape, where min-label propagation needs rounds =
+    * diameter. Each half-round is one aggregation (per-node neighborhood
+    * min) + one join, both partitioned by node id; no neighborhood is ever
+    * collected, so hot nodes cost a shuffle skew, not memory. The path
+    * [[connectedComponents]] takes above its driver cap, and the one
+    * `dedup_cluster_dist` always takes. Same input and output contract.
+    */
+  private[llm] def starContraction(pairs: DataFrame, maxRounds: Int = 50): DataFrame = {
     def canon(df: DataFrame): DataFrame = df
       .filter($"a" =!= $"b")
       .select(greatest($"a", $"b").as("src"), least($"a", $"b").as("dst"))
@@ -177,7 +235,7 @@ object ScaleDedup {
     // bit-for-bit (no float accumulation order anywhere). Each iteration
     // is one join + one aggregation partitioned by node; at full scale the
     // same loop runs over the complete graph with localCheckpoint rounds
-    // like [[connectedComponents]].
+    // like [[starContraction]].
     Q("graph_pagerank", {
       val tokSub = "(SELECT doc_id, text FROM documents)"
       val tok =
@@ -237,49 +295,15 @@ object ScaleDedup {
       p.select($"u".as("doc_id"), $"p".as("score")).orderBy($"doc_id")
     },
 
-    // dedup_cluster's 100 TB path: min-label propagation over the near-dup
-    // edge list, entirely distributed — no driver materialization of the
-    // graph. Each round is one join + one min-aggregate, both partitioned
-    // by node id; labels strictly decrease, so `changed == 0` is a sound
-    // fixpoint test, reached after diameter rounds (near-dup components are
-    // quasi-cliques — 2-3 rounds in practice; the O(log n) worst-case
-    // refinement is large-star/small-star alternation on the same edge
-    // frame). Oracle and output are IDENTICAL to dedup_cluster, proving
-    // the scale path computes the same components as the driver union-find.
+    // dedup_cluster's 100 TB path: the star contraction that
+    // [[connectedComponents]] cuts over to above its driver cap, run here at
+    // every scale — no driver materialization of the graph, O(log n)
+    // double-rounds of one join + one min-aggregate partitioned by node id.
+    // Oracle and output are IDENTICAL to dedup_cluster, proving the scale
+    // path computes the same components as the driver union-find.
     Q("dedup_cluster_dist", LlmQueries.ClusterOracleSql) { (s, d) =>
-      val good = LlmQueries.goodPairs(s, d)
-        .select($"a_id", $"b_id")
-      // localCheckpoint, not persist: the loop references edges every
-      // round, and persist alone would re-optimize the whole pair
-      // pipeline's logical plan each time (see graph_pagerank)
-      val edges = good.union(good.select($"b_id", $"a_id"))
-        .toDF("src", "dst").localCheckpoint()
-      // seed with min(self, neighbors) — one aggregation that IS the first
-      // propagation round (saves a distinct + a full round vs identity init)
-      var labels = edges.groupBy($"src")
-        .agg(least(min($"dst"), $"src").as("label"))
-        .select($"src".as("id"), $"label").persist()
-      // Labels only ever DECREASE, so Σlabel strictly decreases until the
-      // fixpoint — one cheap agg action per round doubles as both the
-      // materialization of `next` and the convergence test (no per-round
-      // join+count).
-      var prevSum = Long.MaxValue
-      var curSum = labels.agg(sum($"label")).head().getLong(0)
-      var rounds = 0
-      while (curSum < prevSum && rounds < 50) {
-        val prop = edges.join(labels, $"dst" === $"id")
-          .select($"src".as("id"), $"label")
-        val next = labels.union(prop)
-          .groupBy($"id").agg(min($"label").as("label")).persist()
-        prevSum = curSum
-        curSum = next.agg(sum($"label")).head().getLong(0)
-        labels.unpersist(blocking = false)
-        labels = next
-        rounds += 1
-      }
-      // (edges stays checkpointed: unpersisting a localCheckpoint would
-      // orphan the truncated lineage if the result were recomputed)
-      labels.select($"id".as("doc_id"), $"label".as("cluster"))
+      starContraction(LlmQueries.goodPairs(s, d).select($"a_id", $"b_id"))
+        .select($"id".as("doc_id"), $"cluster")
         .orderBy($"doc_id")
     }
   )

@@ -32,13 +32,6 @@ object StreamingOps {
       .agg(count(lit(1)).as("cnt"), sum(col("value")).as("sum_value"))
       .select(col("window.start").as("win_start"), col("cnt"), col("sum_value"))
 
-  def slidingCounts(events: DataFrame, watermark: String = "10 minutes",
-      size: String = "5 minutes", slide: String = "1 minute"): DataFrame =
-    events.withWatermark("ts", watermark)
-      .groupBy(window(col("ts"), size, slide))
-      .agg(count(lit(1)).as("cnt"))
-      .select(col("window.start").as("win_start"), col("cnt"))
-
   /** Gap-based session windows per user (built-in session_window). */
   def sessionCounts(events: DataFrame, watermark: String = "10 minutes",
       gap: String = "10 minutes"): DataFrame =

@@ -84,7 +84,7 @@ class AnalyticsSpec extends AnyFunSuite with SparkTestBase {
     }
   }
 
-  test("distributed label propagation equals the driver union-find clustering") {
+  test("distributed star contraction equals the driver union-find clustering") {
     val a = run("dedup_cluster").collect().map(r => (r.getLong(0), r.getLong(1)))
     val b = run("dedup_cluster_dist").collect().map(r => (r.getLong(0), r.getLong(1)))
     assert(a.toSeq == b.toSeq)
