@@ -1,7 +1,7 @@
 package graft.sources.shardpack
 
 import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graftbridge.Bridge
@@ -14,9 +14,9 @@ import org.apache.spark.sql.graftbridge.Bridge
   *     files into shards, one record per file.
   *   - [[deleteKeys]] — `Bucket::delete`
   *     (`/root/reference/src/bucket.rs:171-183`), re-expressed for immutable
-  *     storage as an anti-join rewrite: the reference's implementation
-  *     destroyed co-located keys by deleting whole shard files (SURVEY.md
-  *     §3.4 defect 5); here surviving records are rewritten and the old
+  *     storage: the reference's implementation destroyed co-located keys by
+  *     deleting whole shard files (SURVEY.md §3.4 defect 5); here each hit
+  *     shard's surviving records are rewritten as one shard and the old
   *     generation swapped out atomically-per-file.
   *   - [[alignedJoin]] — the spec's columnar-by-convention layout
   *     (`docs/draft.md:201-205`): one logical dataset stored as per-column
@@ -31,10 +31,15 @@ import org.apache.spark.sql.graftbridge.Bridge
   *   - [[compact]] — small-shard compaction, the maintenance counterpart
   *     of the streaming sink's per-epoch appends.
   *
-  * Scale notes: deleteKeys broadcast the (small) key list; alignedJoin and
-  * overlay are key-equi joins that Catalyst shuffles on `key` — bucketed
-  * layouts co-partition them away; pack streams file bytes through the
-  * binaryFile source without driver materialization.
+  * Every keyed mutation ends in [[swap]] (write, then [[retire]]): through
+  * [[rewrite]], one key-sorted shard per hit shard (the deletes, [[merge]]
+  * of driver-resident updates), or with its own grouping ([[compact]], the
+  * distributed [[merge]]).
+  *
+  * Scale notes: alignedJoin and overlay are key-equi joins that Catalyst
+  * shuffles on `key` — bucketed layouts co-partition them away; pack
+  * streams file bytes through the binaryFile source without driver
+  * materialization.
   */
 object ShardpackOps {
 
@@ -124,57 +129,59 @@ object ShardpackOps {
     ShardpackIndex.carry(fs, dir, before.map(_.getPath.getName).toSet)
   }
 
-  /** The listed shards that may hold a key of `keys` inside `range`, with
-    * their envelopes. The envelope test
-    * ([[ShardpackFormat.ShardStats.mayHold]]) runs on sidecar-first
-    * envelopes (one read; footer probes only for shards the index doesn't
-    * cover); with a key set, each candidate's footer then decides through
-    * [[ShardpackFormat.ShardStats.mayContain]], so a key inside an envelope
-    * that the shard's v3 Bloom rules out touches nothing. Stats-less shards
-    * are always affected.
+  /** A shard an op touches, its envelope, and the op's keys it may hold. */
+  private case class Hit(st: FileStatus, env: Option[(String, String)], keys: Seq[String])
+
+  /** The listed shards that may hold a key of `keys` inside `range`. The
+    * envelope test ([[ShardpackFormat.ShardStats.mayHold]]) runs on
+    * sidecar-first envelopes (one read; footer probes only for shards the
+    * index doesn't cover); with a key set, each candidate's footer Bloom
+    * then rules keys out, so a key it rules out touches nothing, and a hit
+    * lists only the keys it admitted. Stats-less shards are always hit.
     */
   private def affected(fs: FileSystem, dir: String, shards: Seq[FileStatus],
-      keys: Option[Set[String]], range: Option[KeyRange])
-      : Seq[(FileStatus, Option[(String, String)])] =
-    ShardpackIndex.envelopes(fs, new Path(dir), shards).filter { case (st, env) =>
-      ShardpackFormat.ShardStats.mayHold(env, keys, range) && (keys.isEmpty ||
-        ShardpackFormat.ShardStats.mayContain(
-          ShardpackIndex.footer(fs, st.getPath, st.getLen).shardMetadata, keys, range))
+      keys: Option[Seq[String]], range: Option[KeyRange] = None): Seq[Hit] =
+    ShardpackIndex.envelopes(fs, new Path(dir), shards).flatMap { case (st, env) =>
+      lazy val bloom = ShardpackFormat.ShardStats.unwrapBloom(
+        ShardpackIndex.footer(fs, st.getPath, st.getLen).shardMetadata)
+      val admitted = keys.map(_.filter(k =>
+        ShardpackFormat.ShardStats.mayHold(env, Some(Set(k)), range) &&
+          bloom.forall(_.mightContain(k))))
+      if (admitted.fold(ShardpackFormat.ShardStats.mayHold(env, None, range))(_.nonEmpty))
+        Some(Hit(st, env, admitted.getOrElse(Nil)))
+      else None
     }
 
-  /** Delete records by key: rewrite surviving records of the AFFECTED
-    * shards only to a new generation, then swap. Never edits a shard in
-    * place (shards are immutable, `docs/draft.md:207-211`).
+  private def read(spark: SparkSession, st: FileStatus): DataFrame =
+    spark.read.format("shardpack").load(st.getPath.toString)
+
+  /** Delete records by key: each AFFECTED shard's survivors become one
+    * key-sorted shard ([[rewrite]], one job). Never edits a shard in place
+    * (shards are immutable, `docs/draft.md:207-211`).
     *
     * Shard selection uses the footer key-range and Bloom stats the DSv2
     * writer stamps ([[ShardpackFormat.ShardStats]], through [[affected]]):
     * a shard whose [min,max] range misses every delete key, or whose Bloom
     * rules every one out, is left untouched — the rewrite cost is
     * proportional to the shards actually containing deletions, not the
-    * bucket size. (Stats-less shards — foreign writers — are conservatively
-    * rewritten.)
+    * bucket size, and each shard's filter names only the keys it admitted.
+    * (Stats-less shards — foreign writers — are conservatively rewritten.)
     */
   def deleteKeys(spark: SparkSession, dir: String, keys: Seq[String]): Unit = {
-    import spark.implicits._
     val fs = new Path(dir).getFileSystem(HadoopConfs.session())
     // snapshot the old generation BEFORE making the new one visible
-    val oldShards = ShardpackDataSource.listShards(fs, new Path(dir))
-    val hit = affected(fs, dir, oldShards, Some(keys.toSet), None).map(_._1)
-    if (hit.isEmpty) return
-    // read ONLY the affected shards (each is a valid single-file table path)
-    hit.map(st => spark.read.format("shardpack").load(st.getPath.toString)).reduce(_ union _)
-      .join(broadcast(keys.toDF("key")), Seq("key"), "left_anti")
-      .write.format("shardpack").mode("append").save(dir)
-    retire(fs, new Path(dir), oldShards, hit.map(_.getPath))
+    val before = ShardpackDataSource.listShards(fs, new Path(dir))
+    val hit = affected(fs, dir, before, Some(keys))
+    if (hit.nonEmpty) rewrite(spark, fs, dir, before, hit, h => !col("key").isin(h.keys: _*))
   }
 
   /** Compact undersized shards into full-cap ones: the maintenance op for
     * the small-file backlog a streaming sink accumulates (one+ shard per
     * epoch×partition). Only shards below `minFill`·cap are read and
-    * rewritten — cost scales with the backlog, not the bucket — and the
-    * swap follows [[retire]]'s crash-safe order (new generation visible
-    * before old shards are dropped; a crash mid-swap leaves transient
-    * duplicates, never data loss). Readers are unaffected throughout:
+    * rewritten — cost scales with the backlog, not the bucket — grouped
+    * into ~cap-sized shards, and [[swap]]ped in: new generation visible
+    * before old shards are dropped, so a crash mid-swap leaves transient
+    * duplicates, never data loss. Readers are unaffected throughout:
     * shards are immutable and appear/disappear atomically via rename.
     *
     * The reference lists compaction-adjacent work (chunked writing, file
@@ -194,14 +201,8 @@ object ShardpackOps {
     if (small.length < 2) return 0 // one small shard compacts to itself
     // target partition count so each writer task fills ~one cap-sized shard
     val parts = math.max(1, (small.map(_.getLen).sum / shardCap).toInt + 1)
-    small.map(st => spark.read.format("shardpack").load(st.getPath.toString))
-      .reduce(_ union _)
-      .coalesce(parts)
-      .write.format("shardpack")
-      .option("compression", compression)
-      .option("shardCapBytes", shardCap)
-      .mode("append").save(dir)
-    retire(fs, new Path(dir), listed, small.map(_.getPath), graceMs)
+    swap(fs, dir, listed, small, small.map(read(spark, _)).reduce(_ union _).coalesce(parts),
+      Map("compression" -> compression, "shardCapBytes" -> shardCap.toString), graceMs)
     small.length
   }
 
@@ -224,19 +225,6 @@ object ShardpackOps {
         st.getPath.getName.startsWith(".graft-tombstones-tmp-")) &&
         st.getModificationTime < cutoff)
     stale.foreach(st => fs.delete(st.getPath, false))
-    // rewrite ops of earlier versions staged in a sibling
-    // `<dir>-<tag>-<uuid>` directory; one that crashed before its
-    // rename-in sweep left it behind: invisible to readers, but a disk
-    // leak — swept here under the same age guard
-    val parent = d.getParent
-    val stagingRe = (java.util.regex.Pattern.quote(d.getName) +
-      "-(rewrite|compact|merge)-[0-9a-f]{8}").r
-    val staleDirs =
-      if (parent == null) Array.empty[FileStatus]
-      else fs.listStatus(parent).filter(st =>
-        st.isDirectory && stagingRe.pattern.matcher(st.getPath.getName).matches() &&
-          st.getModificationTime < cutoff)
-    staleDirs.foreach(st => fs.delete(st.getPath, true))
     // expired tombstones: the grace deadline each entry carries is the
     // authority (it already encodes the retire-time grace), so vacuum
     // reclaims exactly the shards whose window has closed
@@ -251,7 +239,7 @@ object ShardpackOps {
       expired.keys.foreach(n => fs.delete(new Path(d, n), false))
       ShardpackDataSource.writeTombstones(fs, d, live)
     }
-    stale.length + staleDirs.length + expired.size
+    stale.length + expired.size
   }
 
   /** Sidecar-first bucket profile — the `stats` maintenance verb: one row
@@ -319,21 +307,17 @@ object ShardpackOps {
   /** Delete every record with `lo <= key < hi` (half-open, the retention
     * idiom: expire one day/prefix of a sorted bucket). Shard selection is
     * envelope-vs-range intersection — on a sorted layout exactly the shards
-    * covering the range are rewritten; everything else is untouched. Same
-    * crash-safe swap as [[deleteKeys]].
+    * covering the range are rewritten, each as one key-sorted shard of its
+    * rows outside the range ([[rewrite]], one job); the rest is untouched.
     */
   def deleteRange(spark: SparkSession, dir: String, lo: String, hi: String): Unit = {
     require(ShardpackFormat.KeyOrd.lt(lo, hi), s"deleteRange: empty range [$lo, $hi)")
     val fs = new Path(dir).getFileSystem(HadoopConfs.session())
-    val oldShards = ShardpackDataSource.listShards(fs, new Path(dir))
-    val hit = affected(fs, dir, oldShards, None,
-      Some(KeyRange(Some(lo), loInc = true, Some(hi), hiInc = false, None))).map(_._1)
-    if (hit.isEmpty) return
-    hit.map(st => spark.read.format("shardpack").load(st.getPath.toString))
-      .reduce(_ union _)
-      .filter(col("key") < lo || col("key") >= hi)
-      .write.format("shardpack").mode("append").save(dir)
-    retire(fs, new Path(dir), oldShards, hit.map(_.getPath))
+    val before = ShardpackDataSource.listShards(fs, new Path(dir))
+    val hit = affected(fs, dir, before, None,
+      Some(KeyRange(Some(lo), loInc = true, Some(hi), hiInc = false, None)))
+    if (hit.nonEmpty)
+      rewrite(spark, fs, dir, before, hit, _ => col("key") < lo || col("key") >= hi)
   }
 
   /** MERGE (upsert): rows of `updates` replace same-key records in the
@@ -355,7 +339,7 @@ object ShardpackOps {
     *     envelope that the Bloom rules out rewrites nothing. The rows are
     *     already materialized, so a self-referential update is safe. Each
     *     affected shard is rewritten as exactly one key-sorted shard
-    *     ([[rewriteSorted]]), so a single-key upsert on a sorted bucket is
+    *     ([[rewrite]]), so a single-key upsert on a sorted bucket is
     *     one job that replaces one shard by one, and the bucket stays
     *     sorted and disjoint.
     *   - Any other update (a streaming micro-batch, a derived frame) is
@@ -367,7 +351,7 @@ object ShardpackOps {
     *     partitions, never by the number of updates, and a merge batch can
     *     be any size. The affected shards' survivors (an anti-join on the
     *     update keys) and the updates are then written with the updates'
-    *     own partitioning.
+    *     own partitioning ([[swap]]).
     *
     * Unhit shards are untouched; stats-less shards (foreign writers) are
     * always affected. The swap follows [[retire]]'s crash-safe order and
@@ -378,29 +362,25 @@ object ShardpackOps {
       compression: String = ShardpackFormat.Codec.None): Unit = {
     import spark.implicits._
     val fs = new Path(dir).getFileSystem(HadoopConfs.session())
-    val oldShards = ShardpackDataSource.listShards(fs, new Path(dir))
+    val before = ShardpackDataSource.listShards(fs, new Path(dir))
     val unique = "merge: updates must be key-unique — dedupe upstream"
     val up = updates.select(col("key"), col("metadata"), col("entries"))
-    def read(st: FileStatus) = spark.read.format("shardpack").load(st.getPath.toString)
     up.queryExecution.optimizedPlan match {
       case _: LocalRelation =>
         val keys = up.select("key").as[String].collect().toSeq
         require(keys.toSet.size == keys.length, unique)
         if (keys.isEmpty) return
-        val hit = affected(fs, dir, oldShards, Some(keys.toSet), None)
+        val hit = affected(fs, dir, before, Some(keys))
         // each update goes to the first hit shard whose envelope holds it,
         // so a rewritten shard's envelope never grows
-        val routed = keys.groupBy(k => hit.indexWhere(h => holds(h._2, k)))
+        val routed = keys.groupBy(k => hit.indexWhere(h => holds(h.env, k)))
         def rows(ks: Seq[String]) = up.filter(col("key").isin(ks: _*))
-        rewriteSorted(fs, dir, oldShards, hit.map(_._1), compression,
-          hit.zipWithIndex.map { case ((st, env), i) =>
-            read(st).filter(!col("key").isin(keys.filter(holds(env, _)): _*))
-              .union(rows(routed.getOrElse(i, Nil)))
-          } ++ routed.get(-1).map(rows))
+        rewrite(spark, fs, dir, before, hit, h => !col("key").isin(h.keys: _*),
+          i => Some(rows(routed.getOrElse(i, Nil))), routed.get(-1).map(rows), compression)
       case _ =>
         up.persist()
         try {
-          val envs = ShardpackIndex.envelopes(fs, new Path(dir), oldShards)
+          val envs = ShardpackIndex.envelopes(fs, new Path(dir), before)
           val spans = spark.sparkContext.broadcast(envs.map(_._2).toArray)
           // per partition: (keys seen, duplicate seen, hit shards)
           val folds = try up.groupBy("key").count().as[(String, Long)].mapPartitions { it =>
@@ -419,12 +399,10 @@ object ShardpackOps {
           if (!folds.exists(_._1)) return
           val hitIdx = folds.flatMap(_._3).toSet
           val hit = envs.zipWithIndex.collect { case ((st, _), i) if hitIdx(i) => st }
-          val out = if (hit.isEmpty) up
-            else hit.map(read).reduce(_ union _)
-              .join(up.select("key"), Seq("key"), "left_anti").union(up)
-          out.write.format("shardpack").option("compression", compression)
-            .mode("append").save(dir)
-          retire(fs, new Path(dir), oldShards, hit.map(_.getPath))
+          swap(fs, dir, before, hit, if (hit.isEmpty) up
+            else hit.map(read(spark, _)).reduce(_ union _)
+              .join(up.select("key"), Seq("key"), "left_anti").union(up),
+            Map("compression" -> compression))
         } finally { up.unpersist(false); () }
     }
   }
@@ -432,24 +410,36 @@ object ShardpackOps {
   private def holds(env: Option[(String, String)], key: String): Boolean =
     ShardpackFormat.ShardStats.mayHold(env, Some(Set(key)), None)
 
-  /** Append each of `parts` as ONE key-sorted write partition, in one job,
-    * then [[retire]] the `hit` shards: one part per hit shard (its
-    * survivors plus the updates routed to it) and one for the pure
-    * inserts, so each hit shard is replaced by exactly one shard (more
-    * only past the shard cap). Only driver-resident updates take it: their
-    * insert part is a handful of rows, so one task writes it. The parts
-    * are unioned as RDDs, not DataFrames: Spark's `UnionExec` zips
-    * children that are each one partition into a single partition.
+  /** Each hit shard's rows that pass `keep`, plus the rows `routed` to its
+    * index, as ONE key-sorted write partition, and the pure `inserts` as
+    * one more, all written in one job, then [[swap]]: each hit shard is
+    * replaced by one sorted shard (more only past the cap, none if empty),
+    * so a sorted bucket stays sorted, disjoint and at its shard count. The
+    * routed and inserted rows are driver-resident, so one task writes the
+    * inserts. Parts are unioned as RDDs: Spark's `UnionExec` zips children
+    * that are each one partition into a single partition.
     */
-  private def rewriteSorted(fs: FileSystem, dir: String, before: Seq[FileStatus],
-      hit: Seq[FileStatus], compression: String, parts: Seq[DataFrame]): Unit = {
-    val sorted = parts.map(_.coalesce(1).sortWithinPartitions("key"))
-    val spark = sorted.head.sparkSession
-    Bridge.frame(spark, spark.sparkContext.union(sorted.map(_.queryExecution.toRdd)),
-        sorted.reduce(_ union _).schema)
-      .write.format("shardpack").option("compression", compression)
-      .mode("append").save(dir)
-    retire(fs, new Path(dir), before, hit.map(_.getPath))
+  private def rewrite(spark: SparkSession, fs: FileSystem, dir: String,
+      before: Seq[FileStatus], hit: Seq[Hit], keep: Hit => Column,
+      routed: Int => Option[DataFrame] = _ => None, inserts: Option[DataFrame] = None,
+      compression: String = ShardpackFormat.Codec.None): Unit = {
+    val parts = (hit.zipWithIndex.map { case (h, i) =>
+      val survivors = read(spark, h.st).filter(keep(h))
+      routed(i).fold(survivors)(survivors.union)
+    } ++ inserts).map(_.coalesce(1).sortWithinPartitions("key"))
+    swap(fs, dir, before, hit.map(_.st),
+      Bridge.frame(spark, spark.sparkContext.union(parts.map(_.queryExecution.toRdd)),
+        parts.reduce(_ union _).schema),
+      Map("compression" -> compression))
+  }
+
+  /** The write-and-retire tail of every keyed verb: append `out` to `dir`,
+    * then [[retire]] `old` against the pre-op listing `before`.
+    */
+  private def swap(fs: FileSystem, dir: String, before: Seq[FileStatus], old: Seq[FileStatus],
+      out: DataFrame, options: Map[String, String], graceMs: Long = 0L): Unit = {
+    out.write.format("shardpack").options(options).mode("append").save(dir)
+    retire(fs, new Path(dir), before, old.map(_.getPath), graceMs)
   }
 
   /** Join per-column shardpack tables on key, concatenating their entry

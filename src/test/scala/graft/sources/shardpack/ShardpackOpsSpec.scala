@@ -9,9 +9,11 @@ import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.SparkTestBase
+import graft.streaming.{FaultFileSystem, StreamFault}
 
 /** Tests for the bucket-level operations: directory packing (spec CLI),
-  * keyed delete via rewrite, columnar aligned join, and read-time overlay.
+  * keyed delete, merge and compaction via rewrite, columnar aligned join,
+  * and read-time overlay.
   */
 class ShardpackOpsSpec extends AnyFunSuite with SparkTestBase {
 
@@ -34,16 +36,35 @@ class ShardpackOpsSpec extends AnyFunSuite with SparkTestBase {
 
   private def key(i: Int) = f"k$i%04d"
 
-  /** 80 records `k0000`… in 4 key-sorted shards with disjoint envelopes,
-    * indexed.
+  private val pristine = (0 until 80).map(i => key(i) -> s"v0-$i")
+
+  /** [[pristine]]: 80 records `k0000`… in 4 key-sorted shards with disjoint
+    * envelopes, indexed, under `root` (a local path or a URI).
     */
-  private def sortedBucket(): String = {
-    val dir = tmp() + "/sorted"
-    docs((0 until 80).map(i => key(i) -> s"v0-$i")).write.format("shardpack")
+  private def sortedBucket(root: String = tmp()): String = {
+    val dir = root + "/sorted"
+    docs(pristine).write.format("shardpack")
       .option("sortedWrite", true).option("targetShards", 4).mode("append").save(dir)
     ShardpackIndex.build(spark, dir)
     dir
   }
+
+  /** A keyed verb on a fresh [[sortedBucket]]: the rows it leaves, how many
+    * of the 4 shards it retires, and a key a later lookup still finds.
+    */
+  private case class Verb(name: String, run: String => Unit,
+      rows: Seq[(String, String)], retired: Int, probe: String)
+
+  private val hitIds = Seq(3, 25, 61) // in three different shards
+
+  private def keyedVerbs: Seq[Verb] = Seq(
+    Verb("merge", ShardpackOps.merge(spark, _, docs(hitIds.map(i => key(i) -> s"v1-$i"))),
+      pristine.map { case (k, v) =>
+        k -> (if (hitIds.map(key).contains(k)) v.replace("v0", "v1") else v) }, 3, key(25)),
+    Verb("deleteKeys", ShardpackOps.deleteKeys(spark, _, hitIds.map(key)),
+      pristine.filterNot(r => hitIds.map(key).contains(r._1)), 3, key(26)),
+    Verb("deleteRange", ShardpackOps.deleteRange(spark, _, key(20), key(30)),
+      pristine.filterNot(r => r._1 >= key(20) && r._1 < key(30)), 1, key(31)))
 
   private case class Shard(mtime: Long, keys: Seq[String],
       env: Option[(String, String)])
@@ -61,8 +82,8 @@ class ShardpackOpsSpec extends AnyFunSuite with SparkTestBase {
     }.toMap
   }
 
-  private def sidecarBytes(dir: String): Seq[Byte] =
-    Files.readAllBytes(Paths.get(dir, ShardpackIndex.FileName)).toSeq
+  private def sidecarBytes(dir: String): Seq[Byte] = Files.readAllBytes(Paths.get(
+    new org.apache.hadoop.fs.Path(dir).toUri.getPath, ShardpackIndex.FileName)).toSeq
 
   private def bodies(dir: String): Seq[(String, String)] =
     spark.read.format("shardpack").load(dir)
@@ -92,13 +113,8 @@ class ShardpackOpsSpec extends AnyFunSuite with SparkTestBase {
     val dir = tmp() + "/docs"
     // single shard file → all keys co-located (the reference's delete would
     // have destroyed every record in the shard; bucket.rs:174-179)
-    import spark.implicits._
-    Seq(("k1", "one"), ("k2", "two"), ("k3", "three"), ("k4", "four"))
-      .toDF("key", "body")
+    docs(Seq(("k1", "one"), ("k2", "two"), ("k3", "three"), ("k4", "four")))
       .coalesce(1)
-      .select($"key", lit(null).cast("binary").as("metadata"),
-        array(struct(lit("body.txt").as("file_name"), lit("text/plain").as("content_type"),
-          lit("").as("encoding"), encode($"body", "UTF-8").as("data"))).as("entries"))
       .write.format("shardpack").mode("append").save(dir)
     ShardpackOps.deleteKeys(spark, dir, Seq("k2", "k4"))
     val left = spark.read.format("shardpack").load(dir)
@@ -111,24 +127,13 @@ class ShardpackOpsSpec extends AnyFunSuite with SparkTestBase {
     // two shards with disjoint key ranges (separate writes → separate files)
     writeDocs(dir, ("a1", "one"), ("a2", "two"))
     writeDocs(dir, ("z1", "three"), ("z2", "four"))
-    val fs = new org.apache.hadoop.fs.Path(dir).getFileSystem(HadoopConfs.session())
-    val before = ShardpackDataSource.listShards(fs, new org.apache.hadoop.fs.Path(dir))
-      .map(st => st.getPath.getName -> st.getModificationTime).toMap
-    val zShardsBefore = before.keySet.filter { name =>
-      val st = fs.getFileStatus(new org.apache.hadoop.fs.Path(dir, name))
-      val in = fs.open(st.getPath)
-      val f = try ShardpackFormat.readFooter(st.getLen, (pos, len) => {
-        val b = new Array[Byte](len); in.readFully(pos, b); b
-      }) finally in.close()
-      ShardpackFormat.ShardStats.unwrap(f.shardMetadata)._1.exists(_._1.startsWith("z"))
-    }
+    val zShardsBefore = shardsOf(dir).filter(_._2.env.exists(_._1.startsWith("z")))
     ShardpackOps.deleteKeys(spark, dir, Seq("a2"))
-    val after = ShardpackDataSource.listShards(fs, new org.apache.hadoop.fs.Path(dir))
-      .map(st => st.getPath.getName -> st.getModificationTime).toMap
+    val after = shardsOf(dir)
     // the z-range shard file is untouched (same name, same mtime)
-    zShardsBefore.foreach { name =>
+    zShardsBefore.foreach { case (name, z) =>
       assert(after.contains(name), s"unaffected shard $name was rewritten")
-      assert(after(name) == before(name), s"unaffected shard $name was modified")
+      assert(after(name).mtime == z.mtime, s"unaffected shard $name was modified")
     }
     val left = spark.read.format("shardpack").load(dir)
       .select("key").collect().map(_.getString(0)).sorted
@@ -250,78 +255,85 @@ class ShardpackOpsSpec extends AnyFunSuite with SparkTestBase {
     // two shards with disjoint key ranges (separate writes → separate files)
     writeDocs(dir, ("a1", "one"), ("a2", "two"))
     writeDocs(dir, ("z1", "three"), ("z2", "four"))
-    val fs = new org.apache.hadoop.fs.Path(dir).getFileSystem(HadoopConfs.session())
-    val before = ShardpackDataSource.listShards(fs, new org.apache.hadoop.fs.Path(dir))
-      .map(st => st.getPath.getName -> st.getModificationTime).toMap
-    val zShardsBefore = before.keySet.filter { name =>
-      val st = fs.getFileStatus(new org.apache.hadoop.fs.Path(dir, name))
-      val in = fs.open(st.getPath)
-      val f = try ShardpackFormat.readFooter(st.getLen, (pos, len) => {
-        val b = new Array[Byte](len); in.readFully(pos, b); b
-      }) finally in.close()
-      ShardpackFormat.ShardStats.unwrap(f.shardMetadata)._1.exists(_._1.startsWith("z"))
-    }
-    import spark.implicits._
-    def updateDf(rows: (String, String)*) = rows.toSeq.toDF("key", "body")
-      .select($"key", lit(null).cast("binary").as("metadata"),
-        array(struct(lit("body.txt").as("file_name"), lit("text/plain").as("content_type"),
-          lit("").as("encoding"), encode($"body", "UTF-8").as("data"))).as("entries"))
+    val zShardsBefore = shardsOf(dir).filter(_._2.env.exists(_._1.startsWith("z")))
     // a2 updated (hits the a-shard), m1 brand new (hits nothing)
-    ShardpackOps.merge(spark, dir, updateDf(("a2", "two-v2"), ("m1", "new")))
+    ShardpackOps.merge(spark, dir, docs(Seq(("a2", "two-v2"), ("m1", "new"))))
     val back = spark.read.format("shardpack").load(dir)
       .select(col("key"), col("entries").getItem(0).getField("data").cast("string").as("body"))
       .collect().map(r => (r.getString(0), r.getString(1))).sortBy(_._1)
     assert(back.toSeq == Seq(("a1", "one"), ("a2", "two-v2"), ("m1", "new"),
       ("z1", "three"), ("z2", "four")))
     // the z-range shard was never rewritten (same name, same mtime)
-    val after = ShardpackDataSource.listShards(fs, new org.apache.hadoop.fs.Path(dir))
-      .map(st => st.getPath.getName -> st.getModificationTime).toMap
-    zShardsBefore.foreach { name =>
+    val after = shardsOf(dir)
+    zShardsBefore.foreach { case (name, z) =>
       assert(after.contains(name), s"unhit shard $name was rewritten")
-      assert(after(name) == before(name), s"unhit shard $name was modified")
+      assert(after(name).mtime == z.mtime, s"unhit shard $name was modified")
     }
     // insert-only merge (no envelope hit) appends without touching anything
     val namesBefore = after.keySet
-    ShardpackOps.merge(spark, dir, updateDf(("m2", "new-2")))
-    val names2 = ShardpackDataSource
-      .listShards(fs, new org.apache.hadoop.fs.Path(dir)).map(_.getPath.getName).toSet
-    assert(namesBefore.subsetOf(names2))
+    ShardpackOps.merge(spark, dir, docs(Seq(("m2", "new-2"))))
+    assert(namesBefore.subsetOf(shardsOf(dir).keySet))
     assert(spark.read.format("shardpack").load(dir).count() == 6)
     // duplicate update keys are rejected loudly, bucket unchanged
     val ex = intercept[IllegalArgumentException] {
-      ShardpackOps.merge(spark, dir, updateDf(("d1", "x"), ("d1", "y")))
+      ShardpackOps.merge(spark, dir, docs(Seq(("d1", "x"), ("d1", "y"))))
     }
     assert(ex.getMessage.contains("key-unique"))
     assert(spark.read.format("shardpack").load(dir).count() == 6)
   }
 
   test("merge of driver-resident updates rewrites each hit shard of a sorted, indexed bucket as one sorted shard") {
-    val dir = sortedBucket()
-    val before = shardsOf(dir)
-    assert(before.size == 4)
-    val ids = Seq(3, 25, 61) // in three different shards
-    val (_, jobs) = jobsDuring(
-      ShardpackOps.merge(spark, dir, docs(ids.map(i => key(i) -> s"v1-$i"))))
-    assert(jobs == 1, s"merge ran $jobs jobs")
-    val after = shardsOf(dir)
-    assert(after.size == 4)
-    assert((before.keySet -- after.keySet).size == 3, "three hit shards retired")
-    after.values.foreach(s => assert(s.keys == s.keys.sorted, "unsorted shard"))
-    val envs = after.values.flatMap(_.env).toSeq.sorted
-    assert(envs.size == 4)
-    envs.zip(envs.tail).foreach { case ((_, hi), (lo, _)) =>
-      assert(hi < lo, s"overlapping envelopes $envs")
+    // and so do deleteKeys and deleteRange, each on a fresh bucket
+    keyedVerbs.foreach { v =>
+      val dir = sortedBucket()
+      val before = shardsOf(dir)
+      assert(before.size == 4)
+      val (_, jobs) = jobsDuring(v.run(dir))
+      assert(jobs == 1, s"${v.name} ran $jobs jobs")
+      val after = shardsOf(dir)
+      assert(after.size == 4, v.name)
+      assert((before.keySet -- after.keySet).size == v.retired, s"${v.name}: hit shards retired")
+      after.values.foreach { s =>
+        assert(s.keys.nonEmpty, s"${v.name}: zero-record shard")
+        assert(s.keys == s.keys.sorted, s"${v.name}: unsorted shard")
+      }
+      val envs = after.values.flatMap(_.env).toSeq.sorted
+      assert(envs.size == 4, v.name)
+      envs.zip(envs.tail).foreach { case ((_, hi), (lo, _)) =>
+        assert(hi < lo, s"${v.name}: overlapping envelopes $envs")
+      }
+      assert(bodies(dir) == v.rows, v.name)
+      // the carried sidecar still answers a lookup on the driver from one shard
+      val lookup = spark.read.format("shardpack").load(dir).filter(col("key") === v.probe)
+      assert(lookup.queryExecution.executedPlan.isInstanceOf[LocalTableScanExec], v.name)
+      val desc = lookup.queryExecution.optimizedPlan.collectFirst {
+        case r: org.apache.spark.sql.execution.datasources.v2.DataSourceV2ScanRelation =>
+          r.scan.description()
+      }
+      assert(desc.exists(_.contains("scan=local (1 candidate shards")), s"${v.name}: $desc")
     }
-    assert(bodies(dir) == (0 until 80).map(i =>
-      key(i) -> (if (ids.contains(i)) s"v1-$i" else s"v0-$i")))
-    // the carried sidecar still answers a lookup on the driver from one shard
-    val lookup = spark.read.format("shardpack").load(dir).filter(col("key") === key(25))
-    assert(lookup.queryExecution.executedPlan.isInstanceOf[LocalTableScanExec])
-    val desc = lookup.queryExecution.optimizedPlan.collectFirst {
-      case r: org.apache.spark.sql.execution.datasources.v2.DataSourceV2ScanRelation =>
-        r.scan.description()
+  }
+
+  test("a fault on the first promotion into the bucket leaves it as it was; a retry gives the model") {
+    spark.sparkContext.hadoopConfiguration
+      .set("fs.faultfs.impl", classOf[FaultFileSystem].getName)
+    val compact = Verb("compact", d => { ShardpackOps.compact(spark, d); () }, pristine, 4, key(0))
+    (keyedVerbs :+ compact).foreach { v =>
+      val dir = sortedBucket("faultfs://" + tmp())
+      val before = shardsOf(dir)
+      val index = sidecarBytes(dir)
+      // the batch commit's first rename of a staged shard into the bucket
+      StreamFault.renameFaultPrefix = new org.apache.hadoop.fs.Path(dir).toString + "/"
+      try {
+        intercept[Exception](v.run(dir))
+        assert(StreamFault.renameFaultPrefix == null, s"${v.name}: fault never hit")
+      } finally StreamFault.renameFaultPrefix = null
+      assert(shardsOf(dir) == before, v.name)
+      assert(sidecarBytes(dir) == index, v.name)
+      assert(bodies(dir) == pristine, v.name)
+      v.run(dir)
+      assert(bodies(dir) == v.rows, s"${v.name} retried")
     }
-    assert(desc.exists(_.contains("scan=local (1 candidate shards")), s"$desc")
   }
 
   test("merge of distributed updates: one deciding action, only hit shards retired, sidecar carried") {
@@ -397,47 +409,30 @@ class ShardpackOpsSpec extends AnyFunSuite with SparkTestBase {
     val dir = tmp() + "/ranged"
     writeDocs(dir, ("a1", "one"), ("a2", "two"), ("a3", "three"))
     writeDocs(dir, ("z1", "four"), ("z2", "five"))
-    val fs = new org.apache.hadoop.fs.Path(dir).getFileSystem(HadoopConfs.session())
-    val before = ShardpackDataSource.listShards(fs, new org.apache.hadoop.fs.Path(dir))
-      .map(st => st.getPath.getName -> st.getModificationTime).toMap
-    val zShards = before.keySet.filter { name =>
-      val st = fs.getFileStatus(new org.apache.hadoop.fs.Path(dir, name))
-      val in = fs.open(st.getPath)
-      val f = try ShardpackFormat.readFooter(st.getLen, (pos, len) => {
-        val b = new Array[Byte](len); in.readFully(pos, b); b
-      }) finally in.close()
-      ShardpackFormat.ShardStats.unwrap(f.shardMetadata)._1.exists(_._1.startsWith("z"))
-    }
+    val zShards = shardsOf(dir).filter(_._2.env.exists(_._1.startsWith("z")))
     ShardpackOps.deleteRange(spark, dir, "a2", "a4") // half-open: a2, a3 out; a1 stays
     val left = spark.read.format("shardpack").load(dir)
       .select("key").collect().map(_.getString(0)).sorted
     assert(left.toSeq == Seq("a1", "z1", "z2"))
-    val after = ShardpackDataSource.listShards(fs, new org.apache.hadoop.fs.Path(dir))
-      .map(st => st.getPath.getName -> st.getModificationTime).toMap
-    zShards.foreach { name =>
-      assert(after.contains(name) && after(name) == before(name),
+    val after = shardsOf(dir)
+    zShards.foreach { case (name, z) =>
+      assert(after.contains(name) && after(name).mtime == z.mtime,
         s"out-of-range shard $name was rewritten")
     }
     // a no-hit range touches nothing
     val names = after.keySet
     ShardpackOps.deleteRange(spark, dir, "m0", "m9")
-    assert(ShardpackDataSource.listShards(fs, new org.apache.hadoop.fs.Path(dir))
-      .map(_.getPath.getName).toSet == names)
+    assert(shardsOf(dir).keySet == names)
   }
 
   test("merge equals the keep∖updates ∪ updates model on random key sets (scalacheck)") {
     import org.scalacheck.Gen
     import org.scalacheck.rng.Seed
-    import spark.implicits._
     val keyGen = Gen.chooseNum(0, 30).map(i => f"k$i%02d")
     val gen = for {
       baseKeys <- Gen.containerOf[Set, String](keyGen)
       updKeys <- Gen.containerOf[Set, String](keyGen)
     } yield (baseKeys, updKeys)
-    def df(rows: Seq[(String, String)]) = rows.toDF("key", "body")
-      .select($"key", lit(null).cast("binary").as("metadata"),
-        array(struct(lit("b.txt").as("file_name"), lit("text/plain").as("content_type"),
-          lit("").as("encoding"), encode($"body", "UTF-8").as("data"))).as("entries"))
     // both deciders: updates on the driver, and the same rows made
     // non-local by a repartition
     val paths = Seq[(String, DataFrame => DataFrame)](
@@ -447,9 +442,9 @@ class ShardpackOpsSpec extends AnyFunSuite with SparkTestBase {
         paths.foreach { case (path, shape) =>
           val dir = tmp() + s"/m$i-$path"
           if (bk.nonEmpty)
-            df(bk.toSeq.sorted.map(k => k -> s"base-$k")).coalesce(2)
+            docs(bk.toSeq.sorted.map(k => k -> s"base-$k")).coalesce(2)
               .write.format("shardpack").mode("append").save(dir)
-          ShardpackOps.merge(spark, dir, shape(df(uk.toSeq.sorted.map(k => k -> s"upd-$k"))))
+          ShardpackOps.merge(spark, dir, shape(docs(uk.toSeq.sorted.map(k => k -> s"upd-$k"))))
           val expect = ((bk -- uk).map(k => k -> s"base-$k") ++
             uk.map(k => k -> s"upd-$k")).toSeq.sorted
           val back = if (bk.isEmpty && uk.isEmpty) Seq.empty else bodies(dir)
