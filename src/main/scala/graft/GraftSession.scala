@@ -5,8 +5,9 @@ import org.apache.spark.sql.SparkSession
 /** The one session factory for every main (Bench, Verify, PlanAudit, Ab,
   * GenScale, FormatBench, DedupBench, the shardpack CLI), so a plan
   * audited or A/B'd is the plan Bench runs. Test suites keep their own
-  * local[4] session (`SparkTestSession`): the sf0.01 sections of
-  * SHUFFLE_BUDGET.json and PLANS.json are recorded under it.
+  * local[4] session (`SparkTestSession`): SHUFFLE_BUDGET.json's
+  * `sf0.01@test` section and PLANS.json's `sf0.01` section are recorded
+  * under it.
   *
   * These are SESSION-level decisions deliberately kept out of query
   * handlers: a handler that mutates shared session conf either leaks the

@@ -18,11 +18,11 @@ import org.apache.spark.unsafe.types.UTF8String
   * explode-where-an-expression-fits anti-pattern; same playbook as
   * [[TextStats.bucketCounts]] / [[TextStats.wordBigrams]]). These kernels
   * compute the identical histograms in one codegen scan per document:
-  * distinct word trigrams ([[TextStats.wordTrigrams]] + a hash-set — the
-  * `array_distinct` the explode path applied), each hashed with
-  * [[CrossHash]]'s polynomial fold, bucketed mod 256 (per frame, through
-  * the seeded affine family, for video), counts clamped to
-  * `min(255, 16·count)` gray. The DuckDB oracle still runs the explode
+  * distinct word trigrams, each hashed with [[CrossHash]]'s polynomial
+  * fold ([[MinHash.shingleHashes]], the shingle set MinHash signs; its
+  * hash-set is the `array_distinct` the explode path applied), bucketed
+  * mod 256 (per frame, through the seeded affine family, for video),
+  * counts clamped to `min(255, 16·count)` gray. The DuckDB oracle still runs the explode
   * formulation, so the gate's hash equality proves the rewrite.
   *
   * Returns an EMPTY array for documents with fewer than three tokens —
@@ -34,40 +34,11 @@ object ImageRender {
   /** Pixels per rendered frame (16×16). */
   val Cells = 256
 
-  private def polyHash(s: String): Long = {
-    var h = 0L
-    var i = 0
-    while (i < s.length) {
-      val cp = s.codePointAt(i)
-      h = (h * 131L + cp) % CrossHash.P1
-      i += Character.charCount(cp)
-    }
-    h
-  }
-
-  /** Distinct-trigram polynomial hashes of the document (the shingle set
-    * every rendering buckets); empty when the doc has <3 tokens.
-    */
-  private def shingleHashes(s: String): Array[Long] = {
-    val tris = TextStats.wordTrigrams(s)
-    if (tris.isEmpty) return Array.emptyLongArray
-    val seen = new java.util.HashSet[UTF8String](tris.length * 2)
-    val out = new Array[Long](tris.length)
-    var n = 0
-    var i = 0
-    while (i < tris.length) {
-      val t = tris(i)
-      if (seen.add(t)) { out(n) = polyHash(t.toString); n += 1 }
-      i += 1
-    }
-    if (n == tris.length) out else java.util.Arrays.copyOf(out, n)
-  }
-
   /** 256 gray values: count distinct shingles per `hash % 256` bucket,
     * gray = min(255, 16·count). Empty array when the doc has no shingles.
     */
   def grayHist(s: String): Array[Int] = {
-    val hs = shingleHashes(s)
+    val hs = MinHash.shingleHashes(s)
     if (hs.isEmpty) return Array.emptyIntArray
     val cnt = new Array[Int](Cells)
     var i = 0
@@ -84,7 +55,7 @@ object ImageRender {
     * the doc has no shingles.
     */
   def videoGrayHist(s: String, frames: Int): Array[Int] = {
-    val hs = shingleHashes(s)
+    val hs = MinHash.shingleHashes(s)
     if (hs.isEmpty) return Array.emptyIntArray
     val cnt = new Array[Int](frames * Cells)
     var f = 0

@@ -38,8 +38,22 @@ case class PolyHash(child: Expression, base: Long, mod: Long)
   override def dataType: DataType = LongType
   override def prettyName: String = "poly_hash"
 
-  override def nullSafeEval(input: Any): Any = {
-    val s = input.asInstanceOf[UTF8String].toString
+  override def nullSafeEval(input: Any): Any =
+    PolyHash.fold(input.asInstanceOf[UTF8String].toString, base, mod)
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+    nullSafeCodeGen(ctx, ev, c =>
+      s"${ev.value} = graft.functions.PolyHash.fold($c.toString(), ${base}L, ${mod}L);")
+
+  override protected def withNewChildInternal(newChild: Expression): PolyHash =
+    copy(child = newChild)
+}
+
+object PolyHash {
+  /** The code-point fold itself — the one loop behind the interpreted
+    * and generated paths and the scalar callers ([[MinHash]]).
+    */
+  def fold(s: String, base: Long, mod: Long): Long = {
     var h = 0L
     var i = 0
     while (i < s.length) {
@@ -49,26 +63,4 @@ case class PolyHash(child: Expression, base: Long, mod: Long)
     }
     h
   }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c => {
-      val s = ctx.freshName("s")
-      val i = ctx.freshName("i")
-      val cp = ctx.freshName("cp")
-      val h = ctx.freshName("h")
-      s"""
-         |java.lang.String $s = $c.toString();
-         |long $h = 0L;
-         |int $i = 0;
-         |while ($i < $s.length()) {
-         |  int $cp = $s.codePointAt($i);
-         |  $h = ($h * ${base}L + $cp) % ${mod}L;
-         |  $i += java.lang.Character.charCount($cp);
-         |}
-         |${ev.value} = $h;
-       """.stripMargin
-    })
-
-  override protected def withNewChildInternal(newChild: Expression): PolyHash =
-    copy(child = newChild)
 }

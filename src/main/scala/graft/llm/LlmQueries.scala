@@ -1,7 +1,7 @@
 package graft.llm
 
 import graft.{Q, Tables}
-import graft.functions.VectorFns
+import graft.functions.{MinHash, VectorFns}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -86,6 +86,24 @@ object LlmQueries {
   private[llm] def shingleTok(docs: DataFrame): DataFrame =
     docs.select(col("doc_id"), explode(array_distinct(
       graft.functions.TextStats.wordTrigramsCol(col("text")))).as("w"))
+
+  /** DuckDB mirror of the MinHash signature ([[MinHash.signature]]): the
+    * h0..h31 select list of a `sig` CTE grouped over an `x` CTE of shingle
+    * hashes. The mirrors restate the arithmetic independently — they are
+    * the oracle's reference for the Spark side.
+    */
+  private def sqlSigCols: String = (0 until 32)
+    .map(i => s"min(${H.sqlAffine(i, "x")}) AS h$i").mkString(", ")
+
+  /** DuckDB mirror of [[MinHash.banded]]: `b` bands of `r` rows over `sig`. */
+  private def sqlBands(b: Int, r: Int): String = (0 until b).map(i =>
+      s"SELECT doc_id, $i AS band, " +
+        s"${H.sqlFoldHash((0 until r).map(j => s"h${i * r + j}"))} AS bh FROM sig")
+    .mkString(" UNION ALL ")
+
+  /** DuckDB: the number of signature slots on which `sa` and `sb` agree. */
+  private def sqlAgree: String = (0 until 32)
+    .map(i => s"CASE WHEN sa.h$i = sb.h$i THEN 1 ELSE 0 END").mkString(" + ")
 
   /** DuckDB mirror of [[shingleTok]] (docs with <3 words yield no rows in
     * both engines).
@@ -628,13 +646,13 @@ object LlmQueries {
     */
   private[graft] val minhashPairs = graft.Memo.frame("minhash_pairs") { (s, d) =>
     val sig = minhashSig(s, d)
-    // band rows are EXACTLY 8·docs (every doc emits one row per band),
-    // so the BandShjMinRows lower bound is decidable from the memoized
-    // doc count alone — below it the planner's broadcast wins and the
-    // bucket profile job would be pure overhead (measured: the profile
+    // band rows are EXACTLY Bands·docs (every doc emits one row per
+    // band), so the BandShjMinRows lower bound is decidable from the
+    // memoized doc count alone — below it the planner's broadcast wins and
+    // the bucket profile job would be pure overhead (measured: the profile
     // added ~2 s to build:minhash_pairs at sf0.1 where the gate then
     // kept the broadcast anyway)
-    val rows = 8L * docCount(s, d)
+    val rows = MinHash.Bands.toLong * docCount(s, d)
     val shj = rows >= BandShjMinRows && {
       // band-bucket profile for the shuffled-hash dispatch: one
       // vocab-sized map-combine aggregate over the (doc_id, band, bh)
@@ -642,7 +660,7 @@ object LlmQueries {
       // volume. maxBucket is the skew signal shjSafe needs: a near-dup
       // cluster of c docs is ONE (band, bh) key of c build rows, all of
       // which hash to a single partition of the build relation.
-      val prof = bandedFrame(sig).groupBy($"band", $"bh")
+      val prof = MinHash.banded(sig).groupBy($"band", $"bh")
         .agg(count(lit(1)).as("c"))
         .agg(max($"c").cast(LongType)).head()
       val maxBucket = if (prof.isNullAt(0)) 0L else prof.getLong(0)
@@ -786,7 +804,7 @@ object LlmQueries {
     */
   private[graft] val incrementalPairs = graft.Memo.frame("incremental_pairs") { (s, d) =>
     val sig = minhashSig(s, d)
-    val banded = bandedFrame(sig)
+    val banded = MinHash.banded(sig)
     val cand = banded.filter($"doc_id" % 2 === 1).as("b")
       .join(banded.filter($"doc_id" % 2 === 0).as("c"),
         col("b.band") === col("c.band") && col("b.bh") === col("c.bh"))
@@ -797,7 +815,7 @@ object LlmQueries {
       .join(sig.select($"doc_id".as("corpus_id"), $"sig".as("sb")), Seq("corpus_id"))
       .withColumn("est_jac",
         aggregate(zip_with($"sa", $"sb", (x, y) => when(x === y, 1).otherwise(0)),
-          lit(0), (acc, x) => acc + x).cast(DoubleType) / MinhashPerms)
+          lit(0), (acc, x) => acc + x).cast(DoubleType) / MinHash.Perms)
       .filter($"est_jac" >= 0.5)
       .select($"batch_id", $"corpus_id", $"est_jac")
   }
@@ -1073,12 +1091,6 @@ object LlmQueries {
     * exchanges once AQE broadcasts two of them). Lazy — nothing runs at
     * plan time; ~8 B + 256 B per doc cached.
     */
-  /** Signature width shared by [[minhashSigOf]], the band join's slot
-    * arithmetic ([[minhashPairsFrom]]) and the calibration configs —
-    * one constant, so the sig build and its consumers can't desync.
-    */
-  private[llm] val MinhashPerms = 32
-
   private[llm] def minhashSigOf(docsDf: DataFrame): DataFrame =
     graft.FrameRegistry.transient(docsDf.sparkSession, "minhash_sig_call",
       minhashSigRaw(docsDf))
@@ -1088,33 +1100,12 @@ object LlmQueries {
     * session), the per-call pipeline surface registers it in the bounded
     * transient family.
     */
-  private def minhashSigRaw(docsDf: DataFrame): DataFrame = {
-    val numHashes = MinhashPerms
-    val tok = shingleTok(docsDf).withColumn("x", H.wordHash($"w"))
-    val sigCols = (0 until numHashes).map(i => min(H.affine(i, $"x")).as(s"h$i"))
-    tok.groupBy($"doc_id")
-      .agg(sigCols.head, sigCols.tail: _*)
-      .select($"doc_id",
-        array((0 until numHashes).map(i => col(s"h$i")): _*).as("sig"))
-  }
+  private def minhashSigRaw(docsDf: DataFrame): DataFrame =
+    MinHash.signature(shingleTok(docsDf))
 
   private[llm] def minhashPairsFrom(sig: DataFrame): DataFrame =
     graft.FrameRegistry.transient(sig.sparkSession, "minhash_pairs_call",
       minhashPairsRaw(sig))
-
-  /** The narrow (doc_id, band, bh) frame feeding the band self-join —
-    * split out so [[minhashPairs]] can profile its bucket histogram for
-    * the shuffled-hash dispatch without duplicating the banding
-    * arithmetic.
-    */
-  private def bandedFrame(sig: DataFrame): DataFrame = {
-    val bands = 8
-    val rows = MinhashPerms / bands
-    sig.select($"doc_id",
-        posexplode(array((0 until bands).map(b =>
-          H.foldHash((0 until rows).map(r => col("sig")(b * rows + r)))): _*)))
-      .withColumnRenamed("pos", "band").withColumnRenamed("col", "bh")
-  }
 
   /** Named [[graft.Ab]] variants: the band self-join behind
     * `build:minhash_pairs` over the memoized signatures, with the
@@ -1131,7 +1122,6 @@ object LlmQueries {
     }
 
   private[llm] def minhashPairsRaw(sig: DataFrame, shj: Boolean = false): DataFrame = {
-      val numHashes = MinhashPerms
       // NARROW band join: the bucket shuffle carries only (doc_id, band,
       // bh) — 24 bytes/row — not the 32-long signature array (which
       // posexplode would duplicate ×8 bands). Candidates dedupe on the
@@ -1143,7 +1133,7 @@ object LlmQueries {
       // partition's build side fits the memory-derived cap (the gate in
       // [[minhashPairs]] — guide §3.1), hint the self-join to
       // shuffled-hash like inter_counts'.
-      val banded0 = bandedFrame(sig)
+      val banded0 = MinHash.banded(sig)
       val banded = if (shj) banded0.hint("SHUFFLE_HASH") else banded0
       val cand = banded.as("a").join(banded.as("b"),
           col("a.band") === col("b.band") && col("a.bh") === col("b.bh") &&
@@ -1155,7 +1145,7 @@ object LlmQueries {
         .join(sig.select($"doc_id".as("b_id"), $"sig".as("sb")), Seq("b_id"))
         .withColumn("est_jac",
           aggregate(zip_with($"sa", $"sb", (x, y) => when(x === y, 1).otherwise(0)),
-            lit(0), (acc, x) => acc + x).cast(DoubleType) / numHashes)
+            lit(0), (acc, x) => acc + x).cast(DoubleType) / MinHash.Perms)
         .filter($"est_jac" >= 0.5)
         .select($"a_id", $"b_id", $"est_jac")
   }
@@ -1165,25 +1155,17 @@ object LlmQueries {
     * as [[ClusterOracleSql]].
     */
   private[llm] lazy val MinhashClusterOracleSql: String = {
-    val sigColsSql = (0 until 32)
-      .map(i => s"min(${H.sqlAffine(i, "x")}) AS h$i").mkString(", ")
-    val bandSql = (0 until 8).map(b =>
-      s"SELECT doc_id, $b AS band, " +
-        s"${H.sqlFoldHash((0 until 4).map(r => s"h${b * 4 + r}"))} AS bh FROM sig")
-      .mkString(" UNION ALL ")
-    val agreeSql = (0 until 32)
-      .map(i => s"CASE WHEN sa.h$i = sb.h$i THEN 1 ELSE 0 END").mkString(" + ")
     s"""WITH RECURSIVE tok AS (
        |  ${sqlShingleTok("documents")}),
        |x AS (SELECT doc_id, ${H.sqlWordHash("w")} AS x FROM tok),
-       |sig AS (SELECT doc_id, $sigColsSql FROM x GROUP BY doc_id),
-       |band AS ($bandSql),
+       |sig AS (SELECT doc_id, $sqlSigCols FROM x GROUP BY doc_id),
+       |band AS (${sqlBands(8, 4)}),
        |cand AS (SELECT DISTINCT a.doc_id AS a_id, b.doc_id AS b_id
        |  FROM band a JOIN band b
        |  ON a.band = b.band AND a.bh = b.bh AND a.doc_id < b.doc_id),
        |good AS (SELECT a_id, b_id
        |  FROM cand JOIN sig sa ON sa.doc_id = a_id JOIN sig sb ON sb.doc_id = b_id
-       |  WHERE CAST(($agreeSql) AS DOUBLE) / 32 >= 0.5),
+       |  WHERE CAST(($sqlAgree) AS DOUBLE) / 32 >= 0.5),
        |edges AS (SELECT a_id AS u, b_id AS v FROM good
        |          UNION ALL SELECT b_id, a_id FROM good),
        |reach(u, label) AS (
@@ -1720,25 +1702,17 @@ object LlmQueries {
     // oracle replays signatures, banding, and the ≥16/32 (≈ Jaccard 0.5)
     // agreement filter exactly; LSH recall is property-tested in LlmSpec.
     Q("dedup_minhash", {
-      val sigColsSql = (0 until 32)
-        .map(i => s"min(${H.sqlAffine(i, "x")}) AS h$i").mkString(", ")
-      val bandSql = (0 until 8).map(b =>
-        s"SELECT doc_id, $b AS band, " +
-          s"${H.sqlFoldHash((0 until 4).map(r => s"h${b * 4 + r}"))} AS bh FROM sig")
-        .mkString(" UNION ALL ")
-      val agreeSql = (0 until 32)
-        .map(i => s"CASE WHEN sa.h$i = sb.h$i THEN 1 ELSE 0 END").mkString(" + ")
       s"""WITH tok AS (
          |  ${sqlShingleTok("documents")}),
          |x AS (SELECT doc_id, ${H.sqlWordHash("w")} AS x FROM tok),
-         |sig AS (SELECT doc_id, $sigColsSql FROM x GROUP BY doc_id),
-         |band AS ($bandSql),
+         |sig AS (SELECT doc_id, $sqlSigCols FROM x GROUP BY doc_id),
+         |band AS (${sqlBands(8, 4)}),
          |cand AS (SELECT DISTINCT a.doc_id AS a_id, b.doc_id AS b_id
          |  FROM band a JOIN band b
          |  ON a.band = b.band AND a.bh = b.bh AND a.doc_id < b.doc_id)
-         |SELECT a_id, b_id, CAST(($agreeSql) AS DOUBLE) / 32 AS est_jac
+         |SELECT a_id, b_id, CAST(($sqlAgree) AS DOUBLE) / 32 AS est_jac
          |FROM cand JOIN sig sa ON sa.doc_id = a_id JOIN sig sb ON sb.doc_id = b_id
-         |WHERE CAST(($agreeSql) AS DOUBLE) / 32 >= 0.5
+         |WHERE CAST(($sqlAgree) AS DOUBLE) / 32 >= 0.5
          |ORDER BY a_id, b_id""".stripMargin
     }) { (s, d) =>
       // pair computation lives in [[minhashPairs]] (memo-shared with
@@ -1775,12 +1749,6 @@ object LlmQueries {
     // the three counts are bounded driver actions (the recall_k
     // precedent), never a collected pair set.
     Q("dedup_minhash_curve", {
-      val sigColsSql = (0 until 32)
-        .map(i => s"min(${H.sqlAffine(i, "x")}) AS h$i").mkString(", ")
-      def bandSql(b: Int, r: Int) = (0 until b).map(i =>
-        s"SELECT doc_id, $i AS band, " +
-          s"${H.sqlFoldHash((0 until r).map(j => s"h${i * r + j}"))} AS bh FROM sig")
-        .mkString(" UNION ALL ")
       def cfgSql(b: Int, r: Int) =
         s"""SELECT $b AS bands, $r AS rows_per_band,
            |  (SELECT count(*) FROM cand$b) AS n_cand,
@@ -1793,7 +1761,7 @@ object LlmQueries {
       s"""WITH tok AS MATERIALIZED (
          |  ${sqlShingleTok("documents")}),
          |x AS MATERIALIZED (SELECT doc_id, ${H.sqlWordHash("w")} AS x FROM tok),
-         |sig AS MATERIALIZED (SELECT doc_id, $sigColsSql FROM x GROUP BY doc_id),
+         |sig AS MATERIALIZED (SELECT doc_id, $sqlSigCols FROM x GROUP BY doc_id),
          |cnt AS MATERIALIZED (SELECT doc_id, count(*) AS n FROM tok GROUP BY doc_id),
          |pair AS MATERIALIZED (
          |  SELECT a.doc_id AS a_id, b.doc_id AS b_id, count(*) AS inter
@@ -1802,15 +1770,15 @@ object LlmQueries {
          |truth AS MATERIALIZED (SELECT a_id, b_id FROM pair
          |  JOIN cnt ca ON ca.doc_id = a_id JOIN cnt cb ON cb.doc_id = b_id
          |  WHERE CAST(inter AS DOUBLE) / (ca.n + cb.n - inter) >= 0.5),
-         |band16 AS MATERIALIZED (${bandSql(16, 2)}),
+         |band16 AS MATERIALIZED (${sqlBands(16, 2)}),
          |cand16 AS MATERIALIZED (SELECT DISTINCT a.doc_id AS a_id, b.doc_id AS b_id
          |  FROM band16 a JOIN band16 b
          |  ON a.band = b.band AND a.bh = b.bh AND a.doc_id < b.doc_id),
-         |band8 AS MATERIALIZED (${bandSql(8, 4)}),
+         |band8 AS MATERIALIZED (${sqlBands(8, 4)}),
          |cand8 AS MATERIALIZED (SELECT DISTINCT a.doc_id AS a_id, b.doc_id AS b_id
          |  FROM band8 a JOIN band8 b
          |  ON a.band = b.band AND a.bh = b.bh AND a.doc_id < b.doc_id),
-         |band4 AS MATERIALIZED (${bandSql(4, 8)}),
+         |band4 AS MATERIALIZED (${sqlBands(4, 8)}),
          |cand4 AS MATERIALIZED (SELECT DISTINCT a.doc_id AS a_id, b.doc_id AS b_id
          |  FROM band4 a JOIN band4 b
          |  ON a.band = b.band AND a.bh = b.bh AND a.doc_id < b.doc_id),
@@ -1827,10 +1795,7 @@ object LlmQueries {
       val truth = goodPairs(s, d).select($"a_id", $"b_id")
       val nTruth = truth.count()
       val measured = Seq((16, 2), (8, 4), (4, 8)).map { case (b, r) =>
-        val banded = sig.select($"doc_id",
-            posexplode(array((0 until b).map(i =>
-              H.foldHash((0 until r).map(j => col("sig")(i * r + j)))): _*)))
-          .withColumnRenamed("pos", "band").withColumnRenamed("col", "bh")
+        val banded = MinHash.banded(sig, b, r)
         val cand = banded.as("a").join(banded.as("b"),
             col("a.band") === col("b.band") && col("a.bh") === col("b.bh") &&
               col("a.doc_id") < col("b.doc_id"))
@@ -3851,28 +3816,20 @@ object LlmQueries {
     // are doc_id parity over the same table; in production the corpus side's
     // band table is a PRECOMPUTED index that the batch probes.
     Q("dedup_incremental", {
-      val sigColsSql = (0 until 32)
-        .map(i => s"min(${H.sqlAffine(i, "x")}) AS h$i").mkString(", ")
-      val bandSql = (0 until 8).map(b =>
-        s"SELECT doc_id, $b AS band, " +
-          s"${H.sqlFoldHash((0 until 4).map(r => s"h${b * 4 + r}"))} AS bh FROM sig")
-        .mkString(" UNION ALL ")
-      val agreeSql = (0 until 32)
-        .map(i => s"CASE WHEN sa.h$i = sb.h$i THEN 1 ELSE 0 END").mkString(" + ")
       s"""WITH tok AS (
          |  ${sqlShingleTok("documents")}),
          |x AS (SELECT doc_id, ${H.sqlWordHash("w")} AS x FROM tok),
-         |sig AS (SELECT doc_id, $sigColsSql FROM x GROUP BY doc_id),
-         |band AS ($bandSql),
+         |sig AS (SELECT doc_id, $sqlSigCols FROM x GROUP BY doc_id),
+         |band AS (${sqlBands(8, 4)}),
          |cand AS (SELECT DISTINCT b.doc_id AS batch_id, c.doc_id AS corpus_id
          |  FROM band b JOIN band c
          |  ON b.band = c.band AND b.bh = c.bh
          |  AND b.doc_id % 2 = 1 AND c.doc_id % 2 = 0)
          |SELECT batch_id, corpus_id,
-         |  CAST(($agreeSql) AS DOUBLE) / 32 AS est_jac
+         |  CAST(($sqlAgree) AS DOUBLE) / 32 AS est_jac
          |FROM cand JOIN sig sa ON sa.doc_id = batch_id
          |JOIN sig sb ON sb.doc_id = corpus_id
-         |WHERE CAST(($agreeSql) AS DOUBLE) / 32 >= 0.5
+         |WHERE CAST(($sqlAgree) AS DOUBLE) / 32 >= 0.5
          |ORDER BY batch_id, corpus_id""".stripMargin
     }) { (s, d) =>
       incrementalPairs(s, d).orderBy($"batch_id", $"corpus_id")

@@ -1,5 +1,6 @@
 package graft.llm
 
+import graft.functions.MinHash
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -16,10 +17,11 @@ import org.apache.spark.sql.types._
   *
   * where the two dedup stages thread ACCUMULATED state across epochs: a
   * seen-hash table (first claimant per sha256) and a band-bucket claim
-  * table using the exact [[graft.streaming.StreamingOps.bandHashes]] slots
-  * the keyed-state `streamNearDupCandidates` operator banks — one
-  * arithmetic, two runtimes, pinned against each other in
-  * StreamingCurationSpec.
+  * table over the batch MinHash-LSH slots ([[MinHash.slots]]: 32
+  * permutations of distinct word trigrams, 8 bands of 4), the slots the
+  * keyed-state `streamNearDupCandidates` operator banks and the batch
+  * `dedup_minhash*` band join joins on — one signature, three runtimes,
+  * pinned in StreamingCurationSpec and MinHashSpec.
   *
   * The chain is built so that EPOCH SPLITS ARE INVISIBLE: every gate is a
   * pure per-doc map against frozen state, the exact stage keeps the
@@ -27,9 +29,9 @@ import org.apache.spark.sql.types._
   * associative min — so for an event-time-ordered replay, the union of
   * per-epoch kept sets equals the one-shot batch run's kept set exactly
   * (the parity StreamingCurationSpec pins). State is bounded by distinct
-  * ADMITTED content (≤ 1 row per seen hash, ≤ `bands` rows per admitted
-  * doc), never by stream length; at scale both tables live columnar and
-  * the merge is one narrow-key shuffle per epoch.
+  * ADMITTED content (≤ 1 row per seen hash, ≤ [[MinHash.Bands]] rows per
+  * admitted doc), never by stream length; at scale both tables live
+  * columnar and the merge is one narrow-key shuffle per epoch.
   *
   * ── REORDERED replay (events arriving out of event-time order) ──
   * The contract weakens deterministically (StreamingCurationSpec pins
@@ -63,14 +65,14 @@ import org.apache.spark.sql.types._
   * curation (a duplicate is a duplicate however long ago its original
   * arrived), so the capacity number must be explicit. Per admitted doc:
   * `seen` carries one (sha 32 B, ts 8 B, doc_id 8 B) row = 48 B of
-  * payload; `claims` carries `bands` (band 4 B, sig-slot 8 B, ts 8 B,
-  * doc_id 8 B) rows = 28·bands B — 112 B at the default 4 bands, 160 B
-  * total per admitted doc before columnar encoding (measured in
-  * StreamingCurationSpec: 134 B/doc in the deserialized cache at sf0.1,
-  * dictionary/RLE columnar at scale compresses below that). At 10⁹
-  * admitted docs that is ~160 GB cluster-wide — ~160 MB per executor on
-  * the 1000-executor reference deployment, held columnar and merged by
-  * one narrow-key shuffle per epoch; the tables never transit the driver.
+  * payload; `claims` carries up to [[MinHash.Bands]] = 8 (band 4 B,
+  * sig-slot 8 B, ts 8 B, doc_id 8 B) rows = 28·8 = 224 B, so 272 B per
+  * admitted doc before columnar encoding (measured in
+  * StreamingCurationSpec at sf0.1: 275 B per admitted doc in the cache,
+  * 238 seen + 1,889 claim rows). At 10⁹ admitted docs that is ~272 GB
+  * cluster-wide — ~272 MB per executor on the 1000-executor reference
+  * deployment, held columnar and merged by one narrow-key shuffle per
+  * epoch; the tables never transit the driver.
   * If the corpus outgrows memory, the EVICTION story is a dedup horizon,
   * not an LRU: drop claim/seen rows with `ts < watermark − horizon`
   * (both merges are (ts, doc_id)-min, so evicting only rows older than
@@ -93,12 +95,10 @@ object StreamingCuration {
       dsirZ: java.math.BigDecimal,
       dsirN: Long,
       dsirNum: Long,
-      dsirDen: Long,
-      numPerm: Int,
-      bands: Int)
+      dsirDen: Long)
 
   def freeze(build: DataFrame, target: DataFrame, num: Long = 1L,
-      den: Long = 10L, numPerm: Int = 16, bands: Int = 4): Model = {
+      den: Long = 10L): Model = {
     val stages = QualityDistill.trainCascade(build)
     val voc = TextRankQueries.dsirVocFrame(TextRankQueries.wordTok(build),
       TextRankQueries.wordTok(target)).persist()
@@ -106,7 +106,7 @@ object StreamingCuration {
     val scored =
       TextRankQueries.dsirScoreAgainst(TextRankQueries.wordTok(build), voc)
     val (z, n) = TextRankQueries.dsirZN(scored)
-    Model(stages, voc, z, n, num, den, numPerm, bands)
+    Model(stages, voc, z, n, num, den)
   }
 
   /** Dedup state threaded across epochs — both frames persisted (and,
@@ -145,6 +145,14 @@ object StreamingCuration {
     State(claims, seen)
   }
 
+  /** One (band, sig, ts, doc_id) row per MinHash slot of each doc. */
+  private def bandHits(docs: DataFrame): DataFrame = {
+    val slots = udf((text: String) => MinHash.slots(text))
+    docs.select(col("doc_id"), col("ts"), explode(slots(col("text"))).as("e"))
+      .select(col("e._1").as("band"), col("e._2").as("sig"),
+        col("ts"), col("doc_id"))
+  }
+
   /** One epoch of the chain, PURE batch: `(doc_id, ts, text)` in, kept
     * docs + advanced state out. Also the one-shot reference — running the
     * whole corpus as a single epoch from [[emptyState]] IS the batch
@@ -177,13 +185,7 @@ object StreamingCuration {
     // bucket has an earlier claimant drops. Claims accumulate from every
     // doc reaching this stage — dropped docs still claim their other
     // buckets, mirroring flatMapGroupsWithState's state update.
-    val numPerm = m.numPerm; val bands = m.bands
-    val slots = udf((text: String) =>
-      graft.streaming.StreamingOps.bandHashes(text, numPerm, bands))
-    val hits = exactKept
-      .select(col("doc_id"), col("ts"), explode(slots(col("text"))).as("e"))
-      .select(col("e._1").as("band"), col("e._2").as("sig"),
-        col("ts"), col("doc_id"))
+    val hits = bandHits(exactKept)
     val claimsNew = st.claims.unionAll(hits)
       .groupBy(col("band"), col("sig"))
       .agg(min(struct(col("ts"), col("doc_id"))).as("f"))
@@ -226,15 +228,8 @@ object StreamingCuration {
     * already saw every earlier claimant). One narrow band-keyed join;
     * runs at publication time (end of stream / window close).
     */
-  def resolveFinal(kept: DataFrame, st: State, m: Model): DataFrame = {
-    val numPerm = m.numPerm; val bands = m.bands
-    val slots = udf((text: String) =>
-      graft.streaming.StreamingOps.bandHashes(text, numPerm, bands))
-    val hits = kept
-      .select(col("doc_id"), col("ts"), explode(slots(col("text"))).as("e"))
-      .select(col("e._1").as("band"), col("e._2").as("sig"),
-        col("ts"), col("doc_id"))
-    val dropped = hits
+  def resolveFinal(kept: DataFrame, st: State): DataFrame = {
+    val dropped = bandHits(kept)
       .join(st.claims.select(col("band"), col("sig"),
         col("ts").as("__cts"), col("doc_id").as("__cdoc")), Seq("band", "sig"))
       .filter(struct(col("__cts"), col("__cdoc")) <

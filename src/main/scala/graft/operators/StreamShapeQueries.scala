@@ -1,15 +1,20 @@
 package graft.operators
 
 import graft.{Q, Tables}
+import graft.streaming.StreamingOps
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 
-/** Batch analogs of the Structured Streaming surface (SURVEY.md §2B
-  * "Streaming"): the same tumbling / sliding / session windows and keyed
-  * dedup run here in batch mode over `events` so the DuckDB oracle can
-  * hash-check the window semantics; the true incremental versions (watermarks,
-  * late-data drop, `dropDuplicatesWithinWatermark`) are exercised in
-  * `graft.streaming` scalatest suites with MemoryStream.
+/** The Structured Streaming shapes (SURVEY.md §2B "Streaming") run in
+  * batch mode over `events`, so the DuckDB oracle hash-checks them. The
+  * tumbling, sliding and session bodies ARE the [[StreamingOps]] window
+  * builders that StreamingSpec runs incrementally (watermarks, late-data
+  * drop) with MemoryStream: on a batch frame Spark's
+  * `EliminateEventTimeWatermark` drops the builders' watermark, so the
+  * plans are the ones a watermark-free body would give. `stream_dedup`
+  * stays its own body: `dropDuplicatesWithinWatermark` keeps the first row
+  * to arrive, which in batch is no stable choice, so the registry keeps
+  * the lowest `event_id` instead.
   *
   * The reference's "streaming" is sequential file streaming of record blocks
   * (`/root/reference/docs/draft.md:213-218`); event-time windowing is part of
@@ -27,10 +32,7 @@ object StreamShapeQueries {
         |       count(*) AS cnt,
         |       CAST(SUM(CAST(value AS DECIMAL(18,2))) AS DOUBLE) AS sum_value
         |FROM events GROUP BY win_start ORDER BY win_start""".stripMargin) { (s, d) =>
-      events(s, d)
-        .groupBy(window($"ts", "1 minute"))
-        .agg(count(lit(1)).as("cnt"), dsum($"value").as("sum_value"))
-        .select($"window.start".as("win_start"), $"cnt", $"sum_value")
+      StreamingOps.windowCounts(events(s, d), "1 minute", "1 minute")
         .orderBy($"win_start")
     },
 
@@ -44,10 +46,7 @@ object StreamShapeQueries {
         |         value
         |  FROM events CROSS JOIN (SELECT unnest([0,1,2,3,4]) AS j) offs)
         |GROUP BY win_start ORDER BY win_start""".stripMargin) { (s, d) =>
-      events(s, d)
-        .groupBy(window($"ts", "5 minutes", "1 minute"))
-        .agg(count(lit(1)).as("cnt"), dsum($"value").as("sum_value"))
-        .select($"window.start".as("win_start"), $"cnt", $"sum_value")
+      StreamingOps.windowCounts(events(s, d), "5 minutes", "1 minute")
         .orderBy($"win_start")
     },
 
@@ -70,11 +69,7 @@ object StreamShapeQueries {
         |           THEN 1 ELSE 0 END AS new_s
         |    FROM events) marks) sessions
         |GROUP BY user_id, sid ORDER BY user_id, sess_start""".stripMargin) { (s, d) =>
-      events(s, d)
-        .groupBy(session_window($"ts", "10 minutes"), $"user_id")
-        .agg(count(lit(1)).as("cnt"))
-        .select($"user_id", $"session_window.start".as("sess_start"),
-          $"session_window.end".as("sess_end"), $"cnt")
+      StreamingOps.sessionCounts(events(s, d), gap = "10 minutes")
         .orderBy($"user_id", $"sess_start")
     },
 

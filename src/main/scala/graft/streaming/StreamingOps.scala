@@ -1,5 +1,7 @@
 package graft.streaming
 
+import graft.Tables.dsum
+import graft.functions.MinHash
 import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
@@ -10,9 +12,15 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
   * (`/root/reference/docs/draft.md:213-218`); the north star extends that to
   * true incremental event-time processing. Each transform here takes a
   * (possibly streaming) DataFrame with an event-time column `ts` and returns
-  * the standard windowed shapes, identical in batch and streaming mode — the
-  * batch analogs are oracle-checked (graft.operators.StreamShapeQueries),
-  * these are exercised incrementally in StreamingSpec with MemoryStream.
+  * the standard windowed shapes, identical in batch and streaming mode. The
+  * window builders are written once: the registry's `stream_tumbling`,
+  * `stream_sliding` and `stream_session` (graft.operators.StreamShapeQueries)
+  * call [[windowCounts]] and [[sessionCounts]] on the batch `events` frame,
+  * where Spark drops the watermark, so the DuckDB oracle checks the code
+  * StreamingSpec runs incrementally with MemoryStream. Online near-dup
+  * ([[streamNearDupCandidates]]) bands the batch MinHash signature
+  * ([[graft.functions.MinHash.slots]]), so a pair it flags shares a band
+  * bucket in the batch `dedup_minhash*` band join.
   *
   * Scale notes: watermarks bound state size (state store holds only open
   * windows/sessions); keyed state in [[sessionizeWithState]] partitions by
@@ -21,15 +29,17 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
   */
 object StreamingOps {
 
-  /** Tumbling event-time window counts+sums with a watermark; late rows
-    * beyond `watermark` are dropped (append mode emits only finalized
-    * windows).
+  /** Event-time window counts and exact sums with a watermark: windows of
+    * `width` starting every `slide` (slide = width is a tumbling window).
+    * `value` sums through DECIMAL ([[graft.Tables.dsum]]), so the sum held
+    * in streaming state is exact. Late rows beyond `watermark` are dropped
+    * (append mode emits only finalized windows).
     */
-  def tumblingCounts(events: DataFrame, watermark: String = "10 minutes",
-      window_ : String = "1 minute"): DataFrame =
+  def windowCounts(events: DataFrame, width: String, slide: String,
+      watermark: String = "10 minutes"): DataFrame =
     events.withWatermark("ts", watermark)
-      .groupBy(window(col("ts"), window_))
-      .agg(count(lit(1)).as("cnt"), sum(col("value")).as("sum_value"))
+      .groupBy(window(col("ts"), width, slide))
+      .agg(count(lit(1)).as("cnt"), dsum(col("value")).as("sum_value"))
       .select(col("window.start").as("win_start"), col("cnt"), col("sum_value"))
 
   /** Gap-based session windows per user (built-in session_window). */
@@ -160,80 +170,26 @@ object StreamingOps {
       .transformWithState(new UserProfileProcessor,
         org.apache.spark.sql.streaming.TimeMode.None(), OutputMode.Update())
   }
+
   final case class SessionState(start: Long, last: Long, n: Int)
   final case class SessionOut(user_id: Long, sess_start: java.sql.Timestamp,
       sess_end: java.sql.Timestamp, cnt: Int)
 
-  /** Custom stateful sessionization via flatMapGroupsWithState — the escape
-    * hatch for session semantics the built-in can't express. A session
-    * closes after `gapMs` of event-time silence; an EVENT-TIME timeout at
-    * `last + gapMs` flushes each user's trailing session and removes its
-    * state once the watermark passes the gap, so a user who goes quiet
-    * neither loses their last session nor leaks a state-store entry.
-    * (Processing-time timeouts would busy-loop empty micro-batches; event
-    * time fires only as the watermark advances.)
-    */
   final case class Doc(doc_id: Long, ts: java.sql.Timestamp, text: String)
   final case class BandHit(band: Int, sig: Long, doc_id: Long, ts: java.sql.Timestamp)
   final case class BucketState(firstDoc: Long)
   final case class DupCandidate(doc_id: Long, dup_of: Long, band: Int)
 
-  /** MinHash signature of `text`: character 5-gram shingles through
-    * `numPerm` affine permutations of a 64-bit char-polynomial hash. Pure
-    * and deterministic (fixed odd multipliers — each permutation is a
-    * bijection on Z/2^64), so every executor and every restart computes the
-    * same signature.
-    */
-  def minhashSig(text: String, numPerm: Int): Array[Long] = {
-    val sig = Array.fill(numPerm)(Long.MaxValue)
-    var i = 0
-    while (i + 5 <= text.length) {
-      var h = 1125899906842597L
-      var j = i
-      while (j < i + 5) { h = h * 31 + text.charAt(j); j += 1 }
-      var p = 0
-      while (p < numPerm) {
-        val v = h * (2 * p + 1) + p * 0x9E3779B97F4A7C15L
-        if (v < sig(p)) sig(p) = v
-        p += 1
-      }
-      i += 1
-    }
-    sig
-  }
-
-  /** The (band, bucket-hash) slots of one document — ONE definition shared
-    * by the [[streamNearDupCandidates]] keyed-state operator and
-    * [[graft.llm.StreamingCuration]]'s micro-batch claim table, so the two
-    * surfaces cannot drift. Shingle-less docs (< 1 shingle of text) emit
-    * no slots and can never near-dup — emitting their all-sentinel
-    * signature would collapse EVERY tiny doc into one bucket (batch
-    * dedup_minhash likewise drops them: no shingles → no sig row → no
-    * pairs).
-    */
-  def bandHashes(text: String, numPerm: Int, bands: Int): Seq[(Int, Long)] =
-    if (text.length < 5) Seq.empty
-    else {
-      val rowsPerBand = numPerm / bands
-      val sig = minhashSig(text, numPerm)
-      (0 until bands).map { b =>
-        var h = 1125899906842597L
-        var r = b * rowsPerBand
-        while (r < (b + 1) * rowsPerBand) {
-          h = h * 6364136223846793005L + sig(r); r += 1
-        }
-        (b, h)
-      }
-    }
-
   /** Streaming near-dup candidate detection — the online counterpart of the
     * batch MinHash-LSH pair stage (`dedup_minhash`): each incoming
-    * document's signature is split into `bands` LSH bands; the FIRST
-    * document to claim a band bucket registers it, and every later document
-    * hashing into the same bucket emits a `(doc_id, dup_of, band)`
-    * candidate. An ingest pipeline can thus filter near-dups ONLINE against
-    * everything already admitted, instead of re-running batch dedup over
-    * the full corpus per batch of arrivals.
+    * document's (band, bucket) slots are the batch band join's
+    * ([[graft.functions.MinHash.slots]]); the FIRST document to claim a
+    * bucket registers it, and every later document hashing into the same
+    * bucket emits a `(doc_id, dup_of, band)` candidate. Documents under
+    * three words have no shingles and never pair, as in batch. An ingest
+    * pipeline can thus filter near-dups ONLINE against everything already
+    * admitted, instead of re-running batch dedup over the full corpus per
+    * batch of arrivals.
     *
     * State is one entry per OCCUPIED bucket (the first claimant's id) —
     * proportional to distinct admitted content, not to stream length; an
@@ -242,17 +198,16 @@ object StreamingOps {
     * 100 TB/day the buckets shard across executors with the groupByKey
     * shuffle and live in the RocksDB state store.
     */
-  def streamNearDupCandidates(docs: Dataset[Doc], numPerm: Int = 16,
-      bands: Int = 4, watermark: String = "10 minutes",
+  def streamNearDupCandidates(docs: Dataset[Doc],
+      watermark: String = "10 minutes",
       retentionMs: Long = 60L * 60 * 1000): Dataset[DupCandidate] = {
-    require(numPerm % bands == 0, s"numPerm=$numPerm not divisible by bands=$bands")
     import docs.sparkSession.implicits._
     // band the signature BEFORE the watermark: typed flatMap re-creates the
     // ts attribute, so the watermark must be declared on the banded frame
-    // that actually feeds the stateful operator
+    // that actually feeds the stateful operator (a doc with no slots
+    // therefore does not advance event time)
     docs.flatMap { d =>
-        bandHashes(d.text, numPerm, bands)
-          .map { case (b, h) => BandHit(b, h, d.doc_id, d.ts) }
+        MinHash.slots(d.text).map { case (b, h) => BandHit(b, h, d.doc_id, d.ts) }
       }
       .withWatermark("ts", watermark)
       .groupByKey(h => (h.band, h.sig))
@@ -284,6 +239,15 @@ object StreamingOps {
       }
   }
 
+  /** Custom stateful sessionization via flatMapGroupsWithState — the escape
+    * hatch for session semantics the built-in can't express. A session
+    * closes after `gapMs` of event-time silence; an EVENT-TIME timeout at
+    * `last + gapMs` flushes each user's trailing session and removes its
+    * state once the watermark passes the gap, so a user who goes quiet
+    * neither loses their last session nor leaks a state-store entry.
+    * (Processing-time timeouts would busy-loop empty micro-batches; event
+    * time fires only as the watermark advances.)
+    */
   def sessionizeWithState(events: Dataset[Event], gapMs: Long,
       watermark: String = "10 minutes"): Dataset[SessionOut] = {
     import events.sparkSession.implicits._

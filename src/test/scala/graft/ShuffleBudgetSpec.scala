@@ -5,7 +5,7 @@ import java.util.concurrent.atomic.AtomicLong
 import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
 import org.scalatest.funsuite.AnyFunSuite
 
-/** The everyday enforcer for [[ShuffleBudget]]'s `"sf0.01"` section: every
+/** The everyday enforcer for [[ShuffleBudget]]'s [[ShuffleBudget.TestSection]]: every
   * registered query runs twice against sf0.01 under the shared test session
   * (local[4], 4 shuffle partitions) — a warm pass so memoized intermediates
   * (goodPairs, minhash signatures) reach the same steady state Bench
@@ -16,8 +16,8 @@ import org.scalatest.funsuite.AnyFunSuite
   *
   * Rebaseline after a DELIBERATE plan change with:
   * {{{ SPARK_GRAFT_REGEN_BUDGET=1 sbt "testOnly graft.ShuffleBudgetSpec" }}}
-  * which rewrites only this section of SHUFFLE_BUDGET.json (Bench owns
-  * `"sf0.1"`). A query with no budget entry fails too: adding a query
+  * which rewrites only this section of SHUFFLE_BUDGET.json (Bench owns the
+  * sections named after its data dirs, `"sf0.1"` and up). A query with no budget entry fails too: adding a query
   * without recording its shuffle cost must be loud, not a silent widening.
   */
 class ShuffleBudgetSpec extends AnyFunSuite with SparkTestBase {
@@ -45,10 +45,10 @@ class ShuffleBudgetSpec extends AnyFunSuite with SparkTestBase {
         q.name -> (drained() - s0) / 1e6
       }.toMap
       if (sys.env.get("SPARK_GRAFT_REGEN_BUDGET").contains("1")) {
-        ShuffleBudget.saveSection("sf0.01", measured)
-        info(s"rebaselined sf0.01 section of ${ShuffleBudget.DefaultPath}")
+        ShuffleBudget.saveSection(ShuffleBudget.TestSection, measured)
+        info(s"rebaselined ${ShuffleBudget.TestSection} section of ${ShuffleBudget.DefaultPath}")
       } else {
-        val breaches = ShuffleBudget.check("sf0.01", measured)
+        val breaches = ShuffleBudget.check(ShuffleBudget.TestSection, measured)
         assert(breaches.isEmpty,
           "shuffle budget breached (query, measured_mb, budget_mb; budget " +
             "-1 = no entry — rebaseline with SPARK_GRAFT_REGEN_BUDGET=1 " +

@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.SparkTestBase
+import graft.functions.MinHash
 
 /** End-to-end streaming curation (VERDICT r9 #4): the epoch kernel must
   * make micro-batch splits invisible — the union of per-epoch kept sets
@@ -57,13 +58,13 @@ class StreamingCurationSpec extends AnyFunSuite with SparkTestBase {
         s"only-batch=${(oneShotKept -- streamed).take(5)}")
     // bounded by distinct admitted content, not stream length
     assert(seenRows <= n)
-    assert(claimRows <= 4 * seenRows)
+    assert(claimRows <= MinHash.Bands * seenRows)
     st.claims.unpersist(); st.seen.unpersist()
   }
 
   test("claim-state capacity: measured bytes per admitted doc at sf0.1") {
-    // the module doc's 10⁹-doc arithmetic (≈160 B/doc payload across the
-    // seen + 4-band claim tables), measured: stream sf0.1 in two epochs
+    // the module doc's 10⁹-doc arithmetic (≈272 B/doc payload across the
+    // seen + 8-band claim tables), measured: stream sf0.1 in two epochs
     // and read the two state frames' cached size from the storage layer.
     val d01 = graft.Tables.documents(spark, "/root/testdata/sf0.1")
       .select(col("doc_id"),
@@ -92,9 +93,9 @@ class StreamingCurationSpec extends AnyFunSuite with SparkTestBase {
     info(f"state: $seenRows seen + $claimRows claims = $stateBytes bytes " +
       f"cached ($perDoc%.0f B per admitted doc)")
     st.claims.unpersist(); st.seen.unpersist()
-    assert(claimRows <= m01.bands.toLong * seenRows)
-    // the capacity arithmetic must stay honest: within 4x of the 160 B/doc
-    // figure the module doc quotes (deserialized cache overhead included)
+    assert(claimRows <= MinHash.Bands.toLong * seenRows)
+    // the capacity arithmetic must stay honest: the module doc quotes
+    // 272 B/doc of payload and 275 B/doc measured in the cache
     assert(perDoc > 0 && perDoc < 640,
       f"state bytes/doc drifted to $perDoc%.0f — update the module doc arithmetic")
   }
@@ -128,7 +129,6 @@ class StreamingCurationSpec extends AnyFunSuite with SparkTestBase {
   }
 
   test("REORDERED replay: sha-class parity, justified drops, converged re-resolution") {
-    import graft.streaming.StreamingOps
     // route docs to epochs by doc_id % 3 — event-time order is violated
     // both within and across epochs (epoch 0 contains later-ts docs than
     // epoch 1's earliest)
@@ -159,7 +159,7 @@ class StreamingCurationSpec extends AnyFunSuite with SparkTestBase {
     val texts = input.collect()
       .map(r => r.getLong(0) -> (r.getTimestamp(1), r.getString(2))).toMap
     val buckets = winners.keys.map { id =>
-      id -> StreamingOps.bandHashes(texts(id)._2, model.numPerm, model.bands).toSet
+      id -> MinHash.slots(texts(id)._2).toSet
     }.toMap
     val minClaim = buckets.toSeq
       .flatMap { case (id, bs) => bs.map(b => b -> ((winners(id).getTime, id))) }
@@ -173,7 +173,7 @@ class StreamingCurationSpec extends AnyFunSuite with SparkTestBase {
 
     // clause 3 — resolveFinal == one-shot batch near-dup decision over
     // the streamed exact-stage winners (the replica below)
-    val resolved = StreamingCuration.resolveFinal(keptUnion, st, model)
+    val resolved = StreamingCuration.resolveFinal(keptUnion, st)
       .select(col("doc_id")).collect().map(_.getLong(0)).toSet
     val replicaKept = winners.keySet.filter { id =>
       val key = (winners(id).getTime, id)
@@ -238,7 +238,7 @@ class StreamingCurationSpec extends AnyFunSuite with SparkTestBase {
     val rows = input.orderBy(col("doc_id")).collect()
       .map(r => (r.getLong(0), r.getTimestamp(1), r.getString(2)))
     val hits = rows.flatMap { case (id, ts, text) =>
-      StreamingOps.bandHashes(text, 16, 4).map { case (b, h) => (b, h, ts, id) }
+      MinHash.slots(text).map { case (b, h) => (b, h, ts, id) }
     }
     val claimant = hits.groupBy(h => (h._1, h._2)).view
       .mapValues(_.minBy(h => (h._3.getTime, h._4))._4).toMap

@@ -30,10 +30,13 @@ class StreamingSpec extends AnyFunSuite with SparkTestBase {
     implicit val sq = spark.sqlContext
     import spark.implicits._
     val in = MemoryStream[Event]
-    val q = tumblingCounts(in.toDF(), watermark = "2 minutes", window_ = "1 minute")
+    val q = windowCounts(in.toDF(), "1 minute", "1 minute", watermark = "2 minutes")
       .writeStream.format("memory").queryName("tumbling").outputMode(OutputMode.Append).start()
     try {
-      in.addData(ev(1, ts(0, 10)), ev(2, ts(0, 40)), ev(3, ts(1, 10)))
+      // 0.1 + 0.2 is 0.30000000000000004 in double arithmetic; the window
+      // state sums DECIMAL, so the finalized sum is exactly 0.3
+      in.addData(ev(1, ts(0, 10), value = 0.1), ev(2, ts(0, 40), value = 0.2),
+        ev(3, ts(1, 10), value = 2.75))
       q.processAllAvailable()
       // watermark = max(ts)-2min = 09:59 → nothing finalized yet
       assert(spark.table("tumbling").count() == 0)
@@ -42,10 +45,13 @@ class StreamingSpec extends AnyFunSuite with SparkTestBase {
       val rows = spark.table("tumbling").orderBy("win_start").collect()
       assert(rows.map(r => (r.getTimestamp(0), r.getLong(1))).toSeq ==
         Seq((ts(0, 0), 2L), (ts(1, 0), 1L)))
+      assert(rows.map(_.getAs[Double]("sum_value")).toSeq == Seq(0.3, 2.75))
       // a late event inside an already-finalized window is dropped
       in.addData(ev(5, ts(0, 50)))
       q.processAllAvailable()
       assert(spark.table("tumbling").agg(sum("cnt")).head().getLong(0) == 3L)
+      assert(spark.table("tumbling").orderBy("win_start").collect()
+        .map(_.getAs[Double]("sum_value")).toSeq == Seq(0.3, 2.75))
     } finally q.stop()
   }
 
@@ -108,7 +114,7 @@ class StreamingSpec extends AnyFunSuite with SparkTestBase {
     implicit val sq = spark.sqlContext
     import spark.implicits._
     val in = MemoryStream[Doc]
-    val q = streamNearDupCandidates(in.toDS(), numPerm = 16, bands = 4,
+    val q = streamNearDupCandidates(in.toDS(),
         watermark = "2 minutes", retentionMs = 60L * 60 * 1000)
       .writeStream.format("memory").queryName("neardup").outputMode(OutputMode.Append).start()
     try {
@@ -125,8 +131,10 @@ class StreamingSpec extends AnyFunSuite with SparkTestBase {
         .map(r => (r.getLong(0), r.getLong(1))).distinct.toSeq
       assert(pairs == Seq((2L, 1L)))
       // watermark passes retention → buckets reclaimed; the same text then
-      // claims FRESH buckets and reports nothing (state really was removed)
-      in.addData(Doc(8, Timestamp.valueOf("2024-01-01 12:00:00"), "watermark advancer"))
+      // claims FRESH buckets and reports nothing (state really was removed).
+      // The advancer needs ≥ 3 words: event time reaches the watermark only
+      // through a doc's band hits, and a shorter doc has none.
+      in.addData(Doc(8, Timestamp.valueOf("2024-01-01 12:00:00"), "a watermark advancer"))
       q.processAllAvailable()
       val before = spark.table("neardup").count()
       in.addData(Doc(9, Timestamp.valueOf("2024-01-01 12:00:30"), base))
@@ -161,7 +169,7 @@ class StreamingSpec extends AnyFunSuite with SparkTestBase {
         (lit(1704103200L) + substring($"key", 5, 5).cast("long")).cast("timestamp").as("ts"),
         $"entries".getItem(0).getField("data").cast("string").as("text"))
       .as[Doc]
-    val q = streamNearDupCandidates(docs, numPerm = 16, bands = 4,
+    val q = streamNearDupCandidates(docs,
         watermark = "10 minutes", retentionMs = 60L * 60 * 1000)
       .select(format_string("dup_%05d_%05d_b%d", $"doc_id", $"dup_of", $"band").as("key"),
         lit(Array.empty[Byte]).as("metadata"),
@@ -206,7 +214,7 @@ class StreamingSpec extends AnyFunSuite with SparkTestBase {
           (lit(1704103200L) + substring($"key", 5, 5).cast("long")).cast("timestamp").as("ts"),
           $"entries".getItem(0).getField("data").cast("string").as("text"))
         .as[Doc]
-      streamNearDupCandidates(docs, numPerm = 16, bands = 4,
+      streamNearDupCandidates(docs,
           watermark = "10 minutes", retentionMs = 60L * 60 * 1000)
         .select(format_string("dup_%05d_%05d_b%d", $"doc_id", $"dup_of", $"band").as("key"),
           lit(Array.empty[Byte]).as("metadata"),
@@ -432,7 +440,7 @@ class StreamingSpec extends AnyFunSuite with SparkTestBase {
       "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
     try {
       val in = MemoryStream[Event]
-      val q = tumblingCounts(in.toDF(), watermark = "2 minutes", window_ = "1 minute")
+      val q = windowCounts(in.toDF(), "1 minute", "1 minute", watermark = "2 minutes")
         .writeStream.format("memory").queryName("rocks").outputMode(OutputMode.Append).start()
       try {
         in.addData(ev(1, ts(0, 10)), ev(2, ts(0, 40)))
