@@ -53,6 +53,9 @@ object CrossHash {
   /** Spark: i-th affine hash of a non-negative BIGINT column. */
   def affine(i: Int, x: Column): Column = (x * affineA(i) + affineB(i)) % P1
 
+  /** Scalar form of [[affine]], for code that hashes outside a plan. */
+  def affine(i: Int, x: Long): Long = (x * affineA(i) + affineB(i)) % P1
+
   /** DuckDB mirror of [[affine]]. */
   def sqlAffine(i: Int, x: String): String =
     s"($x * ${affineA(i)} + ${affineB(i)}) % $P1"
@@ -62,6 +65,9 @@ object CrossHash {
     */
   def foldHash(vs: Seq[Column]): Column =
     vs.foldLeft(lit(0L): Column)((acc, v) => (acc * 131L + v) % P1)
+
+  /** Scalar step of [[foldHash]]: one value folded into the accumulator. */
+  def fold(acc: Long, v: Long): Long = (acc * 131L + v) % P1
 
   /** DuckDB mirror of [[foldHash]] over SQL fragments. */
   def sqlFoldHash(vs: Seq[String]): String =

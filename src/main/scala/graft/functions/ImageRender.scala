@@ -60,12 +60,10 @@ object ImageRender {
     val cnt = new Array[Int](frames * Cells)
     var f = 0
     while (f < frames) {
-      val a = CrossHash.affineA(f)
-      val b = CrossHash.affineB(f)
       val base = f * Cells
       var i = 0
       while (i < hs.length) {
-        cnt(base + (((hs(i) * a + b) % CrossHash.P1) % Cells).toInt) += 1
+        cnt(base + (CrossHash.affine(f, hs(i)) % Cells).toInt) += 1
         i += 1
       }
       f += 1

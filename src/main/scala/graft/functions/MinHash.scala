@@ -2,7 +2,6 @@ package graft.functions
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.apache.spark.unsafe.types.UTF8String
 
 /** The one MinHash-LSH signature of the dedup family, in the two forms its
   * runtimes need:
@@ -10,8 +9,8 @@ import org.apache.spark.unsafe.types.UTF8String
   *  - the Column form ([[signature]], [[banded]]) builds the batch
   *    `dedup_minhash*` stages' (doc_id, sig) and (doc_id, band, bh)
   *    frames;
-  *  - the scalar form ([[slots]]) gives one document's (band, bh) slots
-  *    for the online near-dup paths (`StreamingOps.streamNearDupCandidates`
+  *  - the scalar form ([[slots]]) gives one document's (band, bh, mins)
+  *    slots for the online near-dup paths (`StreamingOps.streamNearDupCandidates`
   *    and `graft.llm.StreamingCuration`).
   *
   * Both sign the distinct word trigrams of the text
@@ -60,47 +59,26 @@ object MinHash {
     * the signature is taken over (and `ImageRender`'s frames project);
     * empty when the text has fewer than three words.
     */
-  def shingleHashes(s: String): Array[Long] = {
-    val tris = TextStats.wordTrigrams(s)
-    if (tris.isEmpty) return Array.emptyLongArray
-    val seen = new java.util.HashSet[UTF8String](tris.length * 2)
-    val out = new Array[Long](tris.length)
-    var n = 0
-    var i = 0
-    while (i < tris.length) {
-      val t = tris(i)
-      if (seen.add(t)) { out(n) = PolyHash.fold(t.toString, 131L, CrossHash.P1); n += 1 }
-      i += 1
-    }
-    if (n == tris.length) out else java.util.Arrays.copyOf(out, n)
-  }
+  def shingleHashes(s: String): Array[Long] =
+    TextStats.wordTrigrams(s).distinct.map(t => PolyHash.fold(t.toString, 131L, CrossHash.P1))
 
-  private val affA = Array.tabulate(Perms)(CrossHash.affineA)
-  private val affB = Array.tabulate(Perms)(CrossHash.affineB)
-
-  /** Scalar form: the (band, bh) slots of one document, equal to its rows
-    * of `banded(signature(...))`; empty for null text or text under three
-    * words.
+  /** One band of a signature: the bucket `bh` the batch band join keys on
+    * and the [[Rows]] minima it folds. `bh` is reduced mod ~2^30, so the
+    * online paths, which lack batch's est_jac filter, key on `mins` too.
     */
-  def slots(text: String): Seq[(Int, Long)] = {
+  final case class Slot(band: Int, bh: Long, mins: Seq[Long])
+
+  /** Scalar form: the slots of one document, one per band, whose
+    * (band, bh) equal its rows of `banded(signature(...))`; empty for null
+    * text or text under three words.
+    */
+  def slots(text: String): Seq[Slot] = {
     val hs = if (text == null) Array.emptyLongArray else shingleHashes(text)
     if (hs.isEmpty) return Seq.empty
-    val sig = Array.fill(Perms)(Long.MaxValue)
-    var i = 0
-    while (i < hs.length) {
-      var p = 0
-      while (p < Perms) {
-        val v = (hs(i) * affA(p) + affB(p)) % CrossHash.P1
-        if (v < sig(p)) sig(p) = v
-        p += 1
-      }
-      i += 1
-    }
+    val sig = Array.tabulate(Perms)(p => hs.iterator.map(CrossHash.affine(p, _)).min)
     (0 until Bands).map { b =>
-      var h = 0L
-      var r = 0
-      while (r < Rows) { h = (h * 131L + sig(b * Rows + r)) % CrossHash.P1; r += 1 }
-      (b, h)
+      val mins = sig.slice(b * Rows, (b + 1) * Rows).toSeq
+      Slot(b, mins.foldLeft(0L)(CrossHash.fold), mins)
     }
   }
 }

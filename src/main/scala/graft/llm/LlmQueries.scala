@@ -34,7 +34,7 @@ object LlmQueries {
     */
   private val AnnSigns: Seq[Array[Long]] = (0 until 12).map { p =>
     Array.tabulate(64) { i =>
-      if ((H.affineA(64 + p) * (i + 1) + H.affineB(64 + p)) % H.P1 % 2 == 0) 1L else -1L
+      if (H.affine(64 + p, i + 1L) % 2 == 0) 1L else -1L
     }
   }
 
@@ -3539,7 +3539,7 @@ object LlmQueries {
     }) { (s, d) =>
       val featUdf = udf((docId: Long) => {
         val frames = (0 until VideoFrames).map { f =>
-          val bucket = ((docId * H.affineA(200 + f) + H.affineB(200 + f)) % H.P1 % 8).toInt
+          val bucket = (H.affine(200 + f, docId) % 8).toInt
           Array.fill(256)(16 + 32 * bucket)
         }
         val mp4 = Multimodal.encodeMp4Mjpeg(16, 16, Mp4Timescale, Mp4SampleDelta, frames)

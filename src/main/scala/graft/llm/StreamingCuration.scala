@@ -21,7 +21,9 @@ import org.apache.spark.sql.types._
   * permutations of distinct word trigrams, 8 bands of 4), the slots the
   * keyed-state `streamNearDupCandidates` operator banks and the batch
   * `dedup_minhash*` band join joins on — one signature, three runtimes,
-  * pinned in StreamingCurationSpec and MinHashSpec.
+  * pinned in StreamingCurationSpec and MinHashSpec. Claims are keyed on
+  * the band's minima too: on the ~2^30 band hash alone, ~8% of unrelated
+  * docs would drop on a collision once 10⁷ docs are admitted.
   *
   * The chain is built so that EPOCH SPLITS ARE INVISIBLE: every gate is a
   * pure per-doc map against frozen state, the exact stage keeps the
@@ -66,11 +68,11 @@ import org.apache.spark.sql.types._
   * arrived), so the capacity number must be explicit. Per admitted doc:
   * `seen` carries one (sha 32 B, ts 8 B, doc_id 8 B) row = 48 B of
   * payload; `claims` carries up to [[MinHash.Bands]] = 8 (band 4 B,
-  * sig-slot 8 B, ts 8 B, doc_id 8 B) rows = 28·8 = 224 B, so 272 B per
-  * admitted doc before columnar encoding (measured in
-  * StreamingCurationSpec at sf0.1: 275 B per admitted doc in the cache,
-  * 238 seen + 1,889 claim rows). At 10⁹ admitted docs that is ~272 GB
-  * cluster-wide — ~272 MB per executor on the 1000-executor reference
+  * band hash 8 B, four minima 32 B, ts 8 B, doc_id 8 B) rows = 60·8 =
+  * 480 B, so 528 B per admitted doc before columnar encoding (measured in
+  * StreamingCurationSpec at sf0.1: 539 B per admitted doc in the cache,
+  * 238 seen + 1,889 claim rows). At 10⁹ admitted docs that is ~528 GB
+  * cluster-wide — ~528 MB per executor on the 1000-executor reference
   * deployment, held columnar and merged by one narrow-key shuffle per
   * epoch; the tables never transit the driver.
   * If the corpus outgrows memory, the EVICTION story is a dedup horizon,
@@ -135,9 +137,9 @@ object StreamingCuration {
   def emptyState(spark: SparkSession): State = {
     val claims = spark.createDataFrame(
       spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-      StructType(Seq(StructField("band", IntegerType),
-        StructField("sig", LongType), StructField("ts", TimestampType),
-        StructField("doc_id", LongType))))
+      StructType(StructField("band", IntegerType) +:
+        Bucket.tail.map(StructField(_, LongType)) :+
+        StructField("ts", TimestampType) :+ StructField("doc_id", LongType)))
     val seen = spark.createDataFrame(
       spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
       StructType(Seq(StructField("sha", StringType),
@@ -145,13 +147,28 @@ object StreamingCuration {
     State(claims, seen)
   }
 
-  /** One (band, sig, ts, doc_id) row per MinHash slot of each doc. */
+  /** A claim's bucket: band, band hash and its minima as flat columns
+    * (fixed-width rows), so a band-hash collision is not a claim hit.
+    */
+  private val Bucket = Seq("band", "sig") ++ (0 until MinHash.Rows).map(r => s"m$r")
+
+  /** One (band, sig, m0…, ts, doc_id) row per MinHash slot of each doc. */
   private def bandHits(docs: DataFrame): DataFrame = {
     val slots = udf((text: String) => MinHash.slots(text))
     docs.select(col("doc_id"), col("ts"), explode(slots(col("text"))).as("e"))
-      .select(col("e._1").as("band"), col("e._2").as("sig"),
-        col("ts"), col("doc_id"))
+      .select(Seq(col("e.band"), col("e.bh").as("sig")) ++
+        (0 until MinHash.Rows).map(r => col("e.mins")(r).as(s"m$r")) ++
+        Seq(col("ts"), col("doc_id")): _*)
   }
+
+  /** Docs of `hits` that some bucket of `claims` saw claimed earlier. */
+  private def outclaimed(hits: DataFrame, claims: DataFrame): DataFrame =
+    hits
+      .join(claims.select(Bucket.map(col) ++ Seq(
+        col("ts").as("__cts"), col("doc_id").as("__cdoc")): _*), Bucket)
+      .filter(struct(col("__cts"), col("__cdoc")) <
+        struct(col("ts"), col("doc_id")))
+      .select(col("doc_id")).distinct()
 
   /** One epoch of the chain, PURE batch: `(doc_id, ts, text)` in, kept
     * docs + advanced state out. Also the one-shot reference — running the
@@ -187,17 +204,11 @@ object StreamingCuration {
     // buckets, mirroring flatMapGroupsWithState's state update.
     val hits = bandHits(exactKept)
     val claimsNew = st.claims.unionAll(hits)
-      .groupBy(col("band"), col("sig"))
+      .groupBy(Bucket.map(col): _*)
       .agg(min(struct(col("ts"), col("doc_id"))).as("f"))
-      .select(col("band"), col("sig"),
-        col("f").getField("ts").as("ts"), col("f").getField("doc_id").as("doc_id"))
-    val dropped = hits
-      .join(claimsNew.select(col("band"), col("sig"),
-        col("ts").as("__cts"), col("doc_id").as("__cdoc")), Seq("band", "sig"))
-      .filter(struct(col("__cts"), col("__cdoc")) <
-        struct(col("ts"), col("doc_id")))
-      .select(col("doc_id")).distinct()
-    val kept = exactKept.join(dropped, Seq("doc_id"), "left_anti")
+      .select(Bucket.map(col) ++ Seq(
+        col("f").getField("ts").as("ts"), col("f").getField("doc_id").as("doc_id")): _*)
+    val kept = exactKept.join(outclaimed(hits, claimsNew), Seq("doc_id"), "left_anti")
       .drop("__sha").persist()
     // materialize the new generation BEFORE releasing the old one — the
     // kept frame and both state frames must never re-execute prior
@@ -228,15 +239,8 @@ object StreamingCuration {
     * already saw every earlier claimant). One narrow band-keyed join;
     * runs at publication time (end of stream / window close).
     */
-  def resolveFinal(kept: DataFrame, st: State): DataFrame = {
-    val dropped = bandHits(kept)
-      .join(st.claims.select(col("band"), col("sig"),
-        col("ts").as("__cts"), col("doc_id").as("__cdoc")), Seq("band", "sig"))
-      .filter(struct(col("__cts"), col("__cdoc")) <
-        struct(col("ts"), col("doc_id")))
-      .select(col("doc_id")).distinct()
-    kept.join(dropped, Seq("doc_id"), "left_anti")
-  }
+  def resolveFinal(kept: DataFrame, st: State): DataFrame =
+    kept.join(outclaimed(bandHits(kept), st.claims), Seq("doc_id"), "left_anti")
 
   /** The streaming wrapper: run [[epoch]] per micro-batch via
     * `foreachBatch`, threading the state, handing each epoch's kept docs

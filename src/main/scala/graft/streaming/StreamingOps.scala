@@ -176,7 +176,9 @@ object StreamingOps {
       sess_end: java.sql.Timestamp, cnt: Int)
 
   final case class Doc(doc_id: Long, ts: java.sql.Timestamp, text: String)
-  final case class BandHit(band: Int, sig: Long, doc_id: Long, ts: java.sql.Timestamp)
+  // one MinHash.Slot of a doc; band -1 marks a slot-less doc (event time only)
+  final case class BandHit(band: Int, sig: Long, mins: Seq[Long], doc_id: Long,
+      ts: java.sql.Timestamp)
   final case class BucketState(firstDoc: Long)
   final case class DupCandidate(doc_id: Long, dup_of: Long, band: Int)
 
@@ -185,11 +187,13 @@ object StreamingOps {
     * document's (band, bucket) slots are the batch band join's
     * ([[graft.functions.MinHash.slots]]); the FIRST document to claim a
     * bucket registers it, and every later document hashing into the same
-    * bucket emits a `(doc_id, dup_of, band)` candidate. Documents under
-    * three words have no shingles and never pair, as in batch. An ingest
-    * pipeline can thus filter near-dups ONLINE against everything already
-    * admitted, instead of re-running batch dedup over the full corpus per
-    * batch of arrivals.
+    * bucket emits a `(doc_id, dup_of, band)` candidate. Buckets are keyed on
+    * the band's minima too, so a pair agrees exactly on one band (a subset
+    * of the batch band join's candidates, never a band-hash collision).
+    * Documents under three words have no shingles and never pair, as in
+    * batch. An ingest pipeline can thus filter near-dups ONLINE against
+    * everything already admitted, instead of re-running batch dedup over
+    * the full corpus per batch of arrivals.
     *
     * State is one entry per OCCUPIED bucket (the first claimant's id) —
     * proportional to distinct admitted content, not to stream length; an
@@ -204,17 +208,20 @@ object StreamingOps {
     import docs.sparkSession.implicits._
     // band the signature BEFORE the watermark: typed flatMap re-creates the
     // ts attribute, so the watermark must be declared on the banded frame
-    // that actually feeds the stateful operator (a doc with no slots
-    // therefore does not advance event time)
+    // that actually feeds the stateful operator; a doc without slots emits
+    // one band -1 marker so that every doc advances event time
     docs.flatMap { d =>
-        MinHash.slots(d.text).map { case (b, h) => BandHit(b, h, d.doc_id, d.ts) }
+        val hits = MinHash.slots(d.text).map(s => BandHit(s.band, s.bh, s.mins, d.doc_id, d.ts))
+        if (hits.isEmpty) Seq(BandHit(-1, 0L, Seq.empty, d.doc_id, d.ts)) else hits
       }
       .withWatermark("ts", watermark)
-      .groupByKey(h => (h.band, h.sig))
+      .groupByKey(h => (h.band, h.sig, h.mins))
       .flatMapGroupsWithState[BucketState, DupCandidate](
         OutputMode.Append(), GroupStateTimeout.EventTimeTimeout()) {
-        (key: (Int, Long), rows: Iterator[BandHit], state: GroupState[BucketState]) =>
-          if (state.hasTimedOut) {
+        (key: (Int, Long, Seq[Long]), rows: Iterator[BandHit],
+            state: GroupState[BucketState]) =>
+          if (key._1 < 0) Iterator.empty // markers hold no state
+          else if (state.hasTimedOut) {
             // retention elapsed with no new hits: reclaim the bucket
             state.remove()
             Iterator.empty

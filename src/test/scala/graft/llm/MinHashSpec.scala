@@ -30,7 +30,7 @@ class MinHashSpec extends AnyFunSuite with SparkTestBase {
       .groupBy(_._1).view.mapValues(_.map(_._2).toSeq.sorted).toMap
     assert(texts.size == 502)
     val differ = texts.keys.filter { id =>
-      MinHash.slots(texts(id)).sorted != batch.getOrElse(id, Seq.empty)
+      MinHash.slots(texts(id)).map(s => (s.band, s.bh)).sorted != batch.getOrElse(id, Seq.empty)
     }
     assert(differ.isEmpty, s"slots differ on docs ${differ.take(5).mkString(", ")}")
     // every sf0.01 doc has ≥ 3 words: one row per band; the extras none
@@ -68,12 +68,64 @@ class MinHashSpec extends AnyFunSuite with SparkTestBase {
     assert(foreign.isEmpty, s"not a batch band-join pair: ${foreign.take(5).mkString(", ")}")
     // in event-time order each bucket's first claimant is its min doc_id,
     // so the stream emits exactly (doc, min doc of the bucket, band) for
-    // every other doc of every shared bucket
+    // every other doc of every shared bucket (no two sf0.01 bands with
+    // different minima share a band hash)
     val expected = bucket.toSeq.groupBy { case ((_, band), bh) => (band, bh) }
       .toSeq.flatMap { case ((band, _), members) =>
         val ids = members.map(_._1._1)
         ids.filter(_ != ids.min).map(id => StreamingOps.DupCandidate(id, ids.min, band))
       }.toSet
     assert(got.toSet == expected)
+  }
+
+  test("a band-hash collision between differing minima is not an online hit") {
+    implicit val sq = spark.sqlContext
+    import spark.implicits._
+    // birthday search over five-word texts (three trigrams each) for two
+    // whose slot in some band has the same bh but different minima: bh is
+    // reduced mod P1 (~2^30), so ~16k texts × 8 bands give one collision.
+    // (A one-trigram text's bh is an affine function of its one shingle
+    // hash, so those only collide when the shingles do.)
+    val seen = scala.collection.mutable.HashMap.empty[(Int, Long), (String, Seq[Long])]
+    val found = Iterator.range(0, 200000).map(i => s"alpha$i beta$i gamma$i delta$i epsilon$i")
+      .flatMap { t =>
+        MinHash.slots(t).flatMap { s =>
+          seen.get((s.band, s.bh)) match {
+            case Some((u, mins)) if mins != s.mins => Some((u, t, s.band))
+            case _ => seen((s.band, s.bh)) = (t, s.mins); None
+          }
+        }
+      }.nextOption()
+    assert(found.isDefined, "no band-hash collision among 200k texts")
+    val (textA, textB, band) = found.get
+    info(s"'$textA' and '$textB' share band $band's hash")
+    val t0 = new Timestamp(1700000000000L)
+    val t1 = new Timestamp(1700000001000L)
+    // the batch band join pairs them (its est_jac filter then drops them)
+    val docs = Seq((1L, textA), (2L, textB)).toDF("doc_id", "text")
+    val pairedBands = MinHash.banded(MinHash.signature(LlmQueries.shingleTok(docs)))
+      .groupBy($"band", $"bh").count().filter($"count" === 2)
+      .select($"band").as[Int].collect().toSeq
+    assert(pairedBands == Seq(band))
+    // the keyed-state operator does not
+    val in = MemoryStream[StreamingOps.Doc]
+    val q = StreamingOps.streamNearDupCandidates(in.toDS())
+      .writeStream.format("memory").queryName("minhash_collision_cands")
+      .outputMode("append").start()
+    try {
+      in.addData(StreamingOps.Doc(1L, t0, textA))
+      q.processAllAvailable()
+      in.addData(StreamingOps.Doc(2L, t1, textB))
+      q.processAllAvailable()
+      assert(spark.table("minhash_collision_cands").count() == 0)
+    } finally q.stop()
+    // nor does the curation claim table: both docs survive resolveFinal
+    val kept = Seq((1L, t0, textA), (2L, t1, textB)).toDF("doc_id", "ts", "text")
+    val claims = Seq((1L, t0, textA), (2L, t1, textB)).flatMap { case (id, ts, text) =>
+      MinHash.slots(text).map(s => (s.band, s.bh, s.mins(0), s.mins(1), s.mins(2), s.mins(3), ts, id))
+    }.toDF("band", "sig", "m0", "m1", "m2", "m3", "ts", "doc_id")
+    val st = StreamingCuration.emptyState(spark).copy(claims = claims)
+    assert(StreamingCuration.resolveFinal(kept, st).select($"doc_id").as[Long]
+      .collect().sorted.toSeq == Seq(1L, 2L))
   }
 }

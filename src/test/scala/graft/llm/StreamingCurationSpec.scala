@@ -63,7 +63,7 @@ class StreamingCurationSpec extends AnyFunSuite with SparkTestBase {
   }
 
   test("claim-state capacity: measured bytes per admitted doc at sf0.1") {
-    // the module doc's 10⁹-doc arithmetic (≈272 B/doc payload across the
+    // the module doc's 10⁹-doc arithmetic (≈528 B/doc payload across the
     // seen + 8-band claim tables), measured: stream sf0.1 in two epochs
     // and read the two state frames' cached size from the storage layer.
     val d01 = graft.Tables.documents(spark, "/root/testdata/sf0.1")
@@ -95,7 +95,7 @@ class StreamingCurationSpec extends AnyFunSuite with SparkTestBase {
     st.claims.unpersist(); st.seen.unpersist()
     assert(claimRows <= MinHash.Bands.toLong * seenRows)
     // the capacity arithmetic must stay honest: the module doc quotes
-    // 272 B/doc of payload and 275 B/doc measured in the cache
+    // 528 B/doc of payload and 539 B/doc measured in the cache
     assert(perDoc > 0 && perDoc < 640,
       f"state bytes/doc drifted to $perDoc%.0f — update the module doc arithmetic")
   }
@@ -238,12 +238,12 @@ class StreamingCurationSpec extends AnyFunSuite with SparkTestBase {
     val rows = input.orderBy(col("doc_id")).collect()
       .map(r => (r.getLong(0), r.getTimestamp(1), r.getString(2)))
     val hits = rows.flatMap { case (id, ts, text) =>
-      MinHash.slots(text).map { case (b, h) => (b, h, ts, id) }
+      MinHash.slots(text).map(s => (s, ts, id))
     }
-    val claimant = hits.groupBy(h => (h._1, h._2)).view
-      .mapValues(_.minBy(h => (h._3.getTime, h._4))._4).toMap
+    val claimant = hits.groupBy(_._1).view
+      .mapValues(_.minBy(h => (h._2.getTime, h._3))._3).toMap
     val replicaDropped = hits
-      .filter(h => claimant((h._1, h._2)) != h._4).map(_._4).toSet
+      .filter(h => claimant(h._1) != h._3).map(_._3).toSet
     val in = MemoryStream[StreamingOps.Doc]
     val cands = StreamingOps.streamNearDupCandidates(in.toDS())
     val q = cands.writeStream.format("memory").queryName("curation_cands")
