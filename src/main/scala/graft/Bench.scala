@@ -1,6 +1,12 @@
 package graft
 import org.apache.spark.sql.DataFrame
 object Bench {
+  /** One entry's numbers: its (min) time, the part of that run spent
+    * inside its builder, its shuffle-read bytes, and whether it threw.
+    */
+  private final case class Entry(sec: Double, planS: Double,
+      shuffleBytes: Long, failed: Boolean)
+
   /** SPARK_GRAFT_BENCH_FORCE: unset or `1` drives every output row, `0`
     * drives `count()`. Anything else fails before a session starts — a
     * typo must not silently pick the measurement semantics.
@@ -68,39 +74,44 @@ object Bench {
     // dedup_minhash_cluster reported 0.1 s vs 8.2 s across artifacts on
     // memo-fill ordering alone). Builds run exactly once: they are
     // idempotent cache fills, and a second run would measure the cache.
+    // A build's whole fill runs inside its call, so its plan_s is its time.
     val buildResults = SparkEntry.builds.map { case (name, f) =>
       val ((sec, failed), t) = meter.measure {
         val t0 = System.nanoTime()
         val failed = try { f(spark, sfDir); false } catch { case _: Throwable => true }
         ((System.nanoTime() - t0) / 1e9, failed)
       }
-      name -> ((sec, t.shuffleReadBytes, failed))
+      name -> Entry(sec, sec, t.shuffleReadBytes, failed)
     }
     // registry order (not Map hash order): run-to-run and round-to-round
-    // timings stay comparable per query
+    // timings stay comparable per query. plan_s is the time inside `q.fn`
+    // (plan construction and the builder's driver jobs) of the run that
+    // gave the min time; the rest of that run is the drive.
     val results = buildResults ++ SparkEntry.all.map { q =>
       var failed = false
       val timed = (1 to runs).map { _ =>
         meter.measure {
           val t0 = System.nanoTime()
-          try drive(q.fn(spark, sfDir), force)
+          var t1 = t0
+          try { val df = q.fn(spark, sfDir); t1 = System.nanoTime(); drive(df, force) }
           catch { case _: Throwable => failed = true }
-          (System.nanoTime() - t0) / 1e9
+          ((System.nanoTime() - t0) / 1e9, (t1 - t0) / 1e9)
         }
       }
-      q.name -> ((timed.map(_._1).min, timed.last._2.shuffleReadBytes, failed))
+      val (sec, planS) = timed.map(_._1).minBy(_._1)
+      q.name -> Entry(sec, planS, timed.last._2.shuffleReadBytes, failed)
     }
     // a throwing query is reported as "failed", never min-folded into the
     // timing map: a broken query's wall-clock is not a benchmark number
-    val ok = results.filter(!_._2._3)
-    val qs = ok.map { case (k, (v, _, _)) => s"\"" + k + "\":" + v }
-      .mkString("{", ",", "}")
-    val sh = ok.map { case (k, (_, b, _)) =>
-      s"\"" + k + "\":" + (math.round(b / 1e5) / 10.0)
-    }.mkString("{", ",", "}")
-    val fails = results.filter(_._2._3).map(k => s"\"" + k._1 + "\"")
+    val ok = results.filter(!_._2.failed)
+    def perEntry(v: Entry => Double): String =
+      ok.map { case (k, e) => s"\"" + k + "\":" + v(e) }.mkString("{", ",", "}")
+    val qs = perEntry(_.sec)
+    val planS = perEntry(_.planS)
+    val sh = perEntry(e => math.round(e.shuffleBytes / 1e5) / 10.0)
+    val fails = results.filter(_._2.failed).map(k => s"\"" + k._1 + "\"")
       .mkString("[", ",", "]")
-    val total = ok.map(_._2._1).sum
+    val total = ok.map(_._2.sec).sum
     // shuffle-budget gate (ShuffleBudget scaladoc): Bench owns the section
     // named after the SF dir it ran against ("sf0.1", "testdata-sf1", …) —
     // regenerate with SPARK_GRAFT_REGEN_BUDGET=1 after a deliberate plan
@@ -111,7 +122,7 @@ object Bench {
     // matters beyond proportional volume: it is the scale where plan SHAPE
     // changes surface (AQE broadcast→shuffle demotions cross their size
     // thresholds between sf0.1 and sf1).
-    val shuffleMb = ok.map { case (k, (_, b, _)) => k -> b / 1e6 }.toMap
+    val shuffleMb = ok.map { case (k, e) => k -> e.shuffleBytes / 1e6 }.toMap
     val scale = new java.io.File(sfDir).getName
     val over =
       if (sys.env.get("SPARK_GRAFT_REGEN_BUDGET").contains("1")) {
@@ -127,7 +138,7 @@ object Bench {
     // record it alongside time and shuffle so a leaking family shows up
     // as a number, not an OOM two decades later
     val persistedMb = math.round(FrameRegistry.totalPersistedMb(spark) * 10) / 10.0
-    val json = s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"shuffle_mb":$sh,"failed":$fails,"shuffle_over_budget":$overJson,"persisted_mb":$persistedMb,"sf":"$sfDir","runs_per_query":$runs,"agg":"min"}"""
+    val json = s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"plan_s":$planS,"shuffle_mb":$sh,"failed":$fails,"shuffle_over_budget":$overJson,"persisted_mb":$persistedMb,"sf":"$sfDir","runs_per_query":$runs,"agg":"min"}"""
     println(json)
     // also persist the full line: the driver's committed BENCH_rN.json is a
     // 2000-char log tail that truncates mid-JSON on a 186-query registry

@@ -1,5 +1,7 @@
 package graft
 
+import java.util.concurrent.ConcurrentHashMap
+
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -15,16 +17,39 @@ import org.apache.spark.sql.types._
   */
 object Tables {
 
+  /** Per (session, dir): each table's schema, inferred by the first
+    * [[t]] that opens it.
+    */
+  private val schemas = Memo.value("table_schemas") { (_, _) =>
+    new ConcurrentHashMap[String, StructType]()
+  }
+
   /** Read one driver table (TESTDATA.md: region nation customer supplier part
     * orders lineitem events documents embeddings).
+    *
+    * The schema is inferred once per (session, dir, table): the first call
+    * runs Spark's Parquet schema inference (one footer-read job), every
+    * later call reads with that schema and runs no job. The file is still
+    * listed on every call, and every call is its own relation with fresh
+    * attribute ids, so self-joins and temp views behave as with a bare
+    * `spark.read.parquet`. Sound because a dir is an immutable table set
+    * ([[Memo]]). A dir the program writes and then reads back
+    * (`CurationPipeline.checkpointTo`, `VectorIndex.readProbed`) is not a
+    * table dir and is read uncached at its own call site.
     */
-  def t(spark: SparkSession, dir: String, name: String): DataFrame =
-    spark.read.parquet(s"$dir/$name.parquet")
+  def t(spark: SparkSession, dir: String, name: String): DataFrame = {
+    val path = s"$dir/$name.parquet"
+    val schema = schemas(spark, dir)
+      .computeIfAbsent(name, _ => spark.read.parquet(path).schema)
+    spark.read.schema(schema).parquet(path)
+  }
 
   /** `events.ts` is parquet timestamp[ns]; Spark's vectorized reader may
     * surface TIMESTAMP(NANOS) as LongType (legacy nanosAsLong) or not at all.
     * Normalize to TimestampType (microseconds, truncated — matching DuckDB
     * 1.0's ns→µs truncation on read) so both engines see identical values.
+    * The conf is set before [[t]], so the table's one schema inference runs
+    * under it.
     */
   def events(spark: SparkSession, dir: String): DataFrame = {
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
