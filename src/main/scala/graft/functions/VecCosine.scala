@@ -5,7 +5,7 @@ import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, FloatType}
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.graftbridge.Bridge
 
 /** Native Catalyst expression: cosine similarity of two `ARRAY<FLOAT>`
@@ -83,51 +83,4 @@ object VecCosine {
   /** Column-API entry point. */
   def vec_cosine(a: Column, b: Column): Column =
     Bridge.column(VecCosine(Bridge.expression(a), Bridge.expression(b)))
-
-  /** Register `vec_cosine` for SQL use on an existing session. */
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "vec_cosine", exprs => VecCosine(exprs.head, exprs(1)), "built-in")
-}
-
-/** Session registration for the exact-integer kernels, mirroring
-  * [[VecCosine.register]] — `qvec_dot` / `qvec_norm2` / `qvec_dist2` over
-  * `ARRAY<BIGINT>` in pure SQL.
-  */
-object QVecSql {
-  def register(spark: SparkSession): Unit = {
-    val reg = spark.sessionState.functionRegistry
-    reg.createOrReplaceTempFunction(
-      "qvec_dot", exprs => QVecDot(exprs.head, exprs(1)), "built-in")
-    reg.createOrReplaceTempFunction(
-      "qvec_norm2", exprs => QVecNorm2(exprs.head), "built-in")
-    reg.createOrReplaceTempFunction(
-      "qvec_dist2", exprs => QVecDist2(exprs.head, exprs(1)), "built-in")
-  }
-}
-
-/** SparkSessionExtensions hook: `--conf spark.sql.extensions=
-  * graft.functions.GraftExtensions` (or `.withExtensions`) injects the
-  * engine's native functions into every session.
-  */
-class GraftExtensions extends (org.apache.spark.sql.SparkSessionExtensions => Unit) {
-  override def apply(e: org.apache.spark.sql.SparkSessionExtensions): Unit = {
-    import org.apache.spark.sql.catalyst.FunctionIdentifier
-    import org.apache.spark.sql.catalyst.expressions.ExpressionInfo
-    e.injectFunction((
-      FunctionIdentifier("vec_cosine"),
-      new ExpressionInfo(classOf[VecCosine].getName, "vec_cosine"),
-      (exprs: Seq[Expression]) => VecCosine(exprs.head, exprs(1))))
-    Seq(
-      ("qvec_dot", classOf[QVecDot].getName,
-        (exprs: Seq[Expression]) => QVecDot(exprs.head, exprs(1))),
-      ("qvec_norm2", classOf[QVecNorm2].getName,
-        (exprs: Seq[Expression]) => QVecNorm2(exprs.head)),
-      ("qvec_dist2", classOf[QVecDist2].getName,
-        (exprs: Seq[Expression]) => QVecDist2(exprs.head, exprs(1)))
-    ).foreach { case (name, cls, builder) =>
-      e.injectFunction((FunctionIdentifier(name),
-        new ExpressionInfo(cls, name), builder))
-    }
-  }
 }

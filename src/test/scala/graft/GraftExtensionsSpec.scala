@@ -1,11 +1,18 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import java.util.ServiceLoader
+
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.sql.{SparkSession, SparkSessionExtensionsProvider}
+import org.apache.spark.sql.catalyst.FunctionIdentifier
+import org.apache.spark.sql.functions.desc
 import org.scalatest.funsuite.AnyFunSuite
 
 /** `vec_cosine` reaches pure SQL through SparkSessionExtensions: a session
   * built with the extension resolves the function in `spark.sql`, on the
-  * same SparkContext as the shared test session.
+  * same SparkContext as the shared test session. The class is a service
+  * provider, so a plain builder session loads it with no `withExtensions`.
   */
 class GraftExtensionsSpec extends AnyFunSuite with SparkTestBase {
 
@@ -35,6 +42,32 @@ class GraftExtensionsSpec extends AnyFunSuite with SparkTestBase {
       // (no cross-session isolation assert: VecCosineSpec may have
       // registered the same name on the shared session in a full run)
       assert(base ne extended)
+    } finally {
+      prior.foreach(SparkSession.setDefaultSession)
+      prior.foreach(SparkSession.setActiveSession)
+    }
+  }
+
+  test("service-loaded once: a plain builder session resolves the functions and the rule") {
+    val found = ServiceLoader.load(classOf[SparkSessionExtensionsProvider]).asScala
+      .count(_.getClass == classOf[GraftExtensions])
+    assert(found == 1)
+    spark // ensure the shared context exists
+    val prior = SparkSession.getDefaultSession
+    try {
+      SparkSession.clearDefaultSession()
+      SparkSession.clearActiveSession()
+      val plain = SparkSession.builder().master("local[2]").getOrCreate()
+      assert(plain ne spark)
+      Seq("vec_cosine", "poly_hash", "qvec_dot").foreach { f =>
+        assert(plain.sessionState.functionRegistry.functionExists(FunctionIdentifier(f)), f)
+      }
+      val r = plain.sql("SELECT qvec_dot(array(1L, 2L), array(3L, 4L)) AS d").head()
+      assert(r.getLong(0) == 11L)
+      // FinalSort: the small sort's exchange is one partition, not a range
+      val plan = plain.range(100).selectExpr("id % 7 AS k").orderBy(desc("k"))
+        .queryExecution.executedPlan.toString
+      assert(plan.contains("Exchange SinglePartition") && !plan.contains("rangepartitioning"), plan)
     } finally {
       prior.foreach(SparkSession.setDefaultSession)
       prior.foreach(SparkSession.setActiveSession)

@@ -92,7 +92,6 @@ class QVecCodegenSpec extends AnyFunSuite with SparkTestBase {
       // length mismatch and null ELEMENTS both yield null, from generated
       // code, including the pure-SQL literal case ADVICE flagged (non-null
       // children + nullable result used to emit `false = true;` pre-fix)
-      QVecSql.register(spark)
       val r = spark.sql(
         "SELECT qvec_dot(array(1L,2L), array(1L,2L,3L)) AS mm, " +
           "qvec_dot(array(1L, CAST(null AS BIGINT)), array(3L,4L)) AS ne, " +

@@ -98,7 +98,6 @@ class QVecOpsSpec extends AnyFunSuite with SparkTestBase {
   }
 
   test("kernels are usable from pure SQL via GraftExtensions registration") {
-    QVecSql.register(spark)
     val r = spark.sql(
       "SELECT qvec_dot(array(1L,2L), array(3L,4L)) AS d, " +
         "qvec_norm2(array(3L,4L)) AS n, qvec_dist2(array(1L,2L), array(3L,4L)) AS l"

@@ -3,7 +3,7 @@ package graft.functions
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.SparkTestBase
+import graft.{GraftExtensions, SparkTestBase}
 
 /** Native codegen'd cosine expression: correctness vs the higher-order
   * function formulation, null/mismatch semantics, SQL registration, and
@@ -41,7 +41,6 @@ class VecCosineSpec extends AnyFunSuite with SparkTestBase {
   }
 
   test("registered for SQL via functionRegistry and via GraftExtensions") {
-    VecCosine.register(spark)
     emb.limit(5).createOrReplaceTempView("emb5")
     val n = spark.sql(
       "SELECT vec_cosine(embedding, embedding) AS c FROM emb5").collect()
